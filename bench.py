@@ -534,7 +534,7 @@ def _ab_records(here: str) -> list[tuple[str, dict]]:
     """All SCALE_AB*.json records at the repo root, newest-mtime first.
 
     These are the committed same-box interleaved A/B adjudications
-    (scripts/ab_bench.py / ab_sweep.py / ab_stream.py). Tolerates both the
+    (scripts/ab.py and its predecessors). Tolerates both the
     current baseline-labelled shape and the pre-r13 records whose keys
     carry the historical tree names (r9/r10)."""
     import glob as _glob
@@ -601,11 +601,15 @@ def _ab_adjudication(query: str, here: str, head_sha: str | None) -> dict | None
 
 
 def _sweep_ab_summary(here: str) -> dict | None:
-    """Newest sweep-shaped A/B record (scripts/ab_sweep.py), reduced to the
+    """Newest sweep A/B record (`scripts/ab.py <sha> sweep`), reduced to the
     matched-set verdict the trained-tier line cites: the shared-set delta is
     the only sweep number measured interleaved/best-of-3, so it adjudicates
-    the single-run raw/normalized tier deltas."""
+    the single-run raw/normalized tier deltas. Records without a `set` key
+    predate ab.py and only sweep records carried a shared-set delta then;
+    ab.py writes that delta for every set, so its other sets are skipped."""
     for fname, rec in _ab_records(here):
+        if rec.get("set", "sweep") != "sweep":
+            continue
         for key in ("head_over_baseline_pct_shared", "head_over_r10_pct_shared"):
             if isinstance(rec.get(key), (int, float)):
                 lbl = _ab_baseline_label(rec)
@@ -641,7 +645,7 @@ def _git_head_sha(here: str) -> str | None:
 def _round_tree_sha(here: str, rnd) -> str | None:
     """Short sha of the commit that recorded round `rnd`'s bench file —
     i.e. the committed tree the round-over-round comparison is against,
-    which is exactly the baseline argument scripts/ab_*.py need."""
+    which is exactly the baseline argument scripts/ab.py needs."""
     import subprocess
 
     if not isinstance(rnd, int):
@@ -668,12 +672,17 @@ def _round_tree_sha(here: str, rnd) -> str | None:
         return None
 
 
-def main() -> None:
+def data_dir() -> str:
+    """The fixture directory every harness measures: $SPARK_GRAFT_SF_DIR."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-    spark = get_spark(app_name="ctdp-spark-bench")
-    spark.sparkContext.setLogLevel("WARN")
+    return sf_dir
 
+
+def warm_up(spark, sf_dir: str, first_query: str | None) -> None:
+    """Session warm-up run before any timed query: fixture scans, the noop
+    sink, the Python/Arrow worker pool, the binary Arrow path and, when
+    given, one untimed run of the first measured query. bench.main() and
+    scripts/ab.py both call it, so every measured tree is warmed alike."""
     # Warm the JVM + parquet footers once so per-query numbers measure the
     # queries, not session spin-up (first-ever query otherwise pays codegen
     # compiler + footer reads for every table it touches).
@@ -684,8 +693,6 @@ def main() -> None:
     # Warm the noop-sink write path too, so the first measured query isn't
     # charged for committer/sink initialization.
     spark.range(8).write.mode("overwrite").format("noop").save()
-
-    names = [n for n in HEADLINE if n in REGISTRY]
 
     # Two residual first-touch costs still leaked into run 1 of whichever
     # query hit them first (r6: q_ohlcv_1min spread 5.08x, q_media_roundtrip
@@ -729,13 +736,23 @@ def main() -> None:
         ).format("noop").save()
     except Exception:  # noqa: BLE001 — warm-up must never kill the bench
         pass
-    if names:
+    if first_query:
         try:
-            REGISTRY[names[0]].fn(spark, sf_dir).write.mode("overwrite").format(
+            REGISTRY[first_query].fn(spark, sf_dir).write.mode("overwrite").format(
                 "noop"
             ).save()
         except Exception:  # noqa: BLE001 — warm-up must never kill the bench
             pass
+
+
+def main() -> None:
+    sf_dir = data_dir()
+    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+    spark = get_spark(app_name="ctdp-spark-bench")
+    spark.sparkContext.setLogLevel("WARN")
+
+    names = [n for n in HEADLINE if n in REGISTRY]
+    warm_up(spark, sf_dir, names[0] if names else None)
     # Run 1 pays one-time whole-stage-codegen compilation for that plan
     # shape (a fixed cost, irrelevant at scale); later runs measure the
     # steady-state engine cost we actually optimize.
@@ -878,7 +895,7 @@ def main() -> None:
     # the interleaved same-box A/B measured +10.1% between two trees running
     # BYTE-IDENTICAL streaming code — this box's identical-code noise band
     # exceeds the 15% gate threshold's margin over typical deltas, so a
-    # flip here is a TRIPWIRE that orders the A/B (scripts/ab_stream.py),
+    # flip here is a TRIPWIRE that orders the A/B (scripts/ab.py <sha> stream),
     # not itself evidence of a code regression (the r11 -5.8% flip was
     # host; the code closure hadn't changed a byte).
     # Two verdicts, mirroring the per-query gate (r9
@@ -911,9 +928,9 @@ def main() -> None:
             # (r12 verdict #5): the exact same-box interleaved A/B command,
             # baseline = the committed tree the comparison was against.
             streaming_ab_command = (
-                f"python scripts/ab_stream.py {_prev_tree_sha}"
+                f"python scripts/ab.py {_prev_tree_sha} stream"
                 if _prev_tree_sha
-                else "python scripts/ab_stream.py <prev-round tree sha>"
+                else "python scripts/ab.py <prev-round tree sha> stream"
             )
 
     record = {
@@ -1139,7 +1156,7 @@ def main() -> None:
     # ruler does not transfer to this single-run, scheduler/trainer-bound
     # sweep (r11 read +33.9% normalized; the interleaved matched-set A/B
     # measured +0.49%). Treat a spike here as a TRIPWIRE that orders
-    # scripts/ab_sweep.py — shared-set, best-of-3, interleaved — never
+    # `scripts/ab.py <sha> sweep` — shared-set, best-of-3, interleaved — never
     # as standalone evidence of a code regression.
     _cal = calib_ratio if isinstance(calib_ratio, (int, float)) else 1.0
 

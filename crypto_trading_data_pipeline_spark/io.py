@@ -128,26 +128,29 @@ def parquet_row_count(sf_dir: str, name: str) -> int | None:
         return None
 
 
-#: In-process cache of INFERRED parquet schemas, keyed by (path, mtime).
+#: In-process cache of INFERRED parquet schemas, keyed by (path, mtime_ns, size).
 #: Metadata only — a StructType, never data: every query still computes
 #: from the parquet files on every invocation. Footer schema inference +
 #: file-index setup cost ~0.10-0.13 s of driver time PER spark.read call
 #: (FLOOR_PROBE.json: infer 0.099 s vs 0.020 s with an explicit schema),
 #: and the bench re-reads each fixture hundreds of times; production
 #: engines never re-infer either — the catalog carries the schema
-#: (spark.read.table). The mtime key invalidates the entry when a test or
-#: probe overwrites the path with a re-written table (overwrite recreates
-#: the file/dir, bumping mtime).
-_SCHEMA_CACHE: dict[tuple[str, float], "object"] = {}
+#: (spark.read.table). The key invalidates the entry when a test or probe
+#: overwrites the path with a re-written table (overwrite recreates the
+#: file/dir, bumping mtime). Integer nanoseconds plus the size, from one
+#: stat: a float mtime can round two writes to one value, and a rewrite
+#: that keeps (or restores) the mtime is still caught when its size differs.
+_SCHEMA_CACHE: dict[tuple[str, int, int], "object"] = {}
 
 
 def _read_parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:
     import os as _os
 
     try:
-        key = (path, _os.path.getmtime(path))
+        st = _os.stat(path)
     except OSError:
         return spark.read.parquet(path)  # missing path: let Spark error out
+    key = (path, st.st_mtime_ns, st.st_size)
     sch = _SCHEMA_CACHE.get(key)
     if sch is None:
         df = spark.read.parquet(path)

@@ -177,6 +177,7 @@ _CODE_CHANGED_RECHECK: tuple[tuple[str, int], ...] = (
     ("q_simhash", 13),
     ("q_simhash_pairs", 13),
     ("q_contamination", 13),
+    ("q_containment", 13),
     ("q_ngram_jaccard", 13),
     # r14 split-once pair streams, PQ-encode SQL text, loop job fusion:
     ("q_cooccur_ppmi", 13),

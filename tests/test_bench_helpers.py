@@ -1,10 +1,16 @@
 """Pure-driver tests for bench.py's A/B self-adjudication lookups (r12
-verdict #3) and the one-string SQL literal renderer (r12 verdict #7) —
-no SparkSession needed."""
+verdict #3), the records scripts/ab.py writes for them, the one-string SQL
+literal renderer (r12 verdict #7) and the scripts' importability — no
+SparkSession needed."""
 
 from __future__ import annotations
 
+import importlib.util
 import json
+import os
+import pathlib
+import subprocess
+import sys
 
 import pytest
 
@@ -103,4 +109,93 @@ def test_ab_adjudication_prefers_worst_deltas_and_head_sha(tmp_path):
         "head_over_baseline_pct_shared": 0.5,
         "shared_n": 10,
         "baseline_sha": "96e2d8e",
+    }
+
+
+SCRIPTS = pathlib.Path(__file__).resolve().parents[1] / "scripts"
+
+
+def _load_script(stem):
+    spec = importlib.util.spec_from_file_location(f"_script_{stem}", SCRIPTS / f"{stem}.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@pytest.mark.parametrize(
+    "stem", sorted(p.stem for p in SCRIPTS.glob("*.py") if p.stem != "__init__")
+)
+def test_script_imports(stem):
+    # Importing runs every module-level import, so a script still pointing
+    # at a deleted helper or a renamed bench.py name fails here.
+    _load_script(stem)
+
+
+def test_ab_help_exits_zero():
+    r = subprocess.run(
+        [sys.executable, str(SCRIPTS / "ab.py"), "--help"],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert r.returncode == 0, r.stderr
+    assert "--runs" in r.stdout and "--child" not in r.stdout
+
+
+def _slot(calib, **walls):
+    return {
+        "calib_sec": calib,
+        "errors": {},
+        "queries": {
+            q: {"total": t, "construct": round(t / 4, 3), "action": round(t - t / 4, 3)}
+            for q, t in walls.items()
+        },
+    }
+
+
+def test_ab_record_feeds_adjudication_and_sweep_summary(tmp_path):
+    import bench
+
+    ab = _load_script("ab")
+    slots = [
+        ("head", _slot(1.0, q_x=1.2, q_new=0.5)),
+        ("baseline", _slot(1.1, q_x=2.4)),
+        ("baseline", _slot(1.2, q_x=2.0)),
+        ("head", _slot(1.3, q_x=1.0, q_new=0.4)),
+        ("head", _slot(1.4, q_x=1.6, q_new=0.6)),
+        ("baseline", _slot(1.5, q_x=2.2)),
+    ]
+    meta = {"baseline_sha": "62ee5a9", "head_sha": "feedf00", "runs_per_slot": 3}
+    headline = ab.ab_record(slots, set="headline", **meta)
+    # Per tree: each query's fastest run across its slots, split kept.
+    assert headline["head"]["queries_best"] == {"q_x": 1.0, "q_new": 0.4}
+    assert headline["head"]["best_runs"]["q_x"] == {
+        "total": 1.0, "construct": 0.25, "action": 0.75,
+    }
+    assert headline["baseline"]["calibs"] == [1.1, 1.2, 1.5]
+    # Totals and deltas cover only the queries both trees ran.
+    assert headline["shared_n"] == 1 and headline["unshared"] == ["q_new"]
+    assert headline["head"]["best_total"] == 1.0
+    assert headline["baseline"]["best_total"] == 2.0
+    assert headline["head_over_baseline_pct_shared"] == -50.0
+    assert headline["worst_deltas"] == [
+        {"q": "q_x", "head": 1.0, "baseline": 2.0, "delta": -1.0}
+    ]
+
+    _write(tmp_path, "SCALE_AB_HEADLINE_62ee5a9.json", headline)
+    assert bench._ab_adjudication("q_x", str(tmp_path), "feedf00") == {
+        "file": "SCALE_AB_HEADLINE_62ee5a9.json",
+        "head_best_sec": 1.0,
+        "baseline_best_sec": 2.0,
+        "baseline_sha": "62ee5a9",
+        "ab_is_current_head": True,
+    }
+    # A headline record is never taken for the sweep adjudication ...
+    assert bench._sweep_ab_summary(str(tmp_path)) is None
+    # ... even when it is newer than the sweep record.
+    _write(tmp_path, "SCALE_AB_SWEEP_62ee5a9.json", ab.ab_record(slots, set="sweep", **meta))
+    os.utime(tmp_path / "SCALE_AB_SWEEP_62ee5a9.json", (1, 1))
+    assert bench._sweep_ab_summary(str(tmp_path)) == {
+        "file": "SCALE_AB_SWEEP_62ee5a9.json",
+        "head_over_baseline_pct_shared": -50.0,
+        "shared_n": 1,
+        "baseline_sha": "62ee5a9",
     }

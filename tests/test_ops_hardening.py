@@ -366,6 +366,29 @@ def test_read_table_schema_cache_invalidates_on_rewrite(spark, tmp_path):
     assert rewritten.count() == 3
 
 
+def test_read_table_schema_cache_sees_rewrite_with_restored_mtime(spark, tmp_path):
+    """A rewrite that leaves the mtime unchanged (restored here, as a copy
+    tool or a coarse clock can) must still miss the schema cache: the key
+    includes the file size."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from crypto_trading_data_pipeline_spark.io import read_table
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2, 3]}), path)
+    assert read_table(spark, str(tmp_path), "t").columns == ["a"]
+    st = os.stat(path)
+    pq.write_table(pa.table({"b": ["x", "y"], "c": [0.5, 1.5]}), path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert os.stat(path).st_mtime_ns == st.st_mtime_ns
+    rewritten = read_table(spark, str(tmp_path), "t")
+    assert rewritten.columns == ["b", "c"]
+    assert rewritten.count() == 2
+
+
 def test_runtime_conf_fast_path_repins_hostile_timezone(spark):
     """apply_runtime_conf's one-round-trip fast path must NOT survive a
     hostile mid-process timezone flip: the canary probe re-applies the

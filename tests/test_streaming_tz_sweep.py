@@ -22,6 +22,7 @@ divergence, not a display artifact.
 
 from __future__ import annotations
 
+import os
 from datetime import datetime, timezone
 
 import pytest
@@ -43,9 +44,16 @@ def _drain(spark, tmpdir, batches, schema, make_stream, collect_row_key):
         for r in df.collect():
             latest[collect_row_key(r)] = tuple(r)
 
-    spark.createDataFrame(batches[0], schema).write.parquet(
-        str(indir / "b0.parquet")
-    )
+    def land(i, rows):
+        # Write outside the watched glob, then rename in: the rename is
+        # atomic, so a background trigger never lists a half-committed
+        # batch and splits it over two micro-batches (index_append's
+        # n_new column depends on the batch boundaries).
+        staged = tmpdir / "staging" / f"b{i}.parquet"
+        spark.createDataFrame(rows, schema).write.parquet(str(staged))
+        os.rename(staged, indir / f"b{i}.parquet")
+
+    land(0, batches[0])
     stream = spark.readStream.schema(schema).parquet(str(indir / "*.parquet"))
     q = (
         make_stream(stream)
@@ -57,9 +65,7 @@ def _drain(spark, tmpdir, batches, schema, make_stream, collect_row_key):
     try:
         q.processAllAvailable()
         for i, b in enumerate(batches[1:], start=1):
-            spark.createDataFrame(b, schema).write.parquet(
-                str(indir / f"b{i}.parquet")
-            )
+            land(i, b)
             q.processAllAvailable()
     finally:
         q.stop()
