@@ -19,8 +19,10 @@ O(n * bands) + a self-join on (band_id, band_hash) buckets — the join key
 is a 128-bit digest, so bucket skew only appears if the corpus truly
 contains thousands of copies of one document (then: salt the band key).
 
-The same constants generate both the Spark Columns and the DuckDB oracle
-SQL (single source of truth — see sql_* helpers).
+The same constants generate two text families from one source of truth:
+Spark-SQL text (sparksql_*) for the engine and DuckDB SQL (sql_*) for the
+oracles. ``token_hash`` is the one Column primitive, kept for the
+``F.transform`` lambdas that hash tokens inline.
 """
 
 from __future__ import annotations
@@ -62,7 +64,7 @@ SIMHASH_BITS = 32
 
 
 # ---------------------------------------------------------------------------
-# Spark side
+# Column primitive (hashes tokens inside F.transform lambdas)
 # ---------------------------------------------------------------------------
 
 
@@ -72,75 +74,13 @@ def token_hash(c: Column) -> Column:
     return h60 % MINHASH_P
 
 
-def word_shingles(text: Column, k: int = 3) -> Column:
-    """Distinct k-token shingles (word k-grams) of a whitespace-tokenized
-    text; empty array when the text has fewer than k tokens."""
-    toks = F.split(text, " ")
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), n - (k - 1))  # 1-based, matches DuckDB
-    shingle = lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(k)])  # noqa: E731
-    return F.when(n >= k, F.array_distinct(F.transform(idx, shingle))).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def minhash_signature(hashes: Column) -> list[Column]:
-    """16 MinHash values (one per permutation); NULL for empty shingle sets.
-
-    ``hashes`` must be a MATERIALIZED column of token hashes (build it with
-    ``withColumn('hs', F.transform(shingles, token_hash))`` first): passing
-    the hash expression tree directly would duplicate the md5 work into all
-    16 permutation expressions — a 16x slowdown measured at sf0.1.
-
-    Alternative considered and rejected: folding all 16 minima in one
-    array traversal (16-wide accumulator via aggregate + zip_with/least).
-    Measured SLOWER than 16 independent array_min passes on the full
-    query (1.07 s vs 0.87 s warm at sf0.1) — the per-element accumulator
-    array allocation outweighs the saved traversals, and the independent
-    passes stay simple codegen loops.
-    """
-    return [
-        F.array_min(F.transform(hashes, lambda h: (F.lit(a) * h + F.lit(b)) % MINHASH_P)).alias(
-            f"m{i}"
-        )
-        for i, (a, b) in enumerate(MINHASH_PERMS)
-    ]
-
-
-def band_hashes(sig_cols: list[str]) -> list[Column]:
-    """Group the 16 signature columns into LSH band digests."""
-    out = []
-    for band in range(LSH_BANDS):
-        cols = sig_cols[band * LSH_ROWS_PER_BAND : (band + 1) * LSH_ROWS_PER_BAND]
-        out.append(
-            F.md5(
-                F.concat_ws(",", *[F.col(c).cast("string") for c in cols]).cast("binary")
-            ).alias(f"band{band}")
-        )
-    return out
-
-
-def simhash(hashes: Column, bits: int = SIMHASH_BITS) -> Column:
-    """SimHash over a MATERIALIZED token-hash array column: bit j of the
-    result is the majority vote of bit j across all token hashes (ties -> 0).
-    Row-local, no shuffle. Like minhash_signature, requires the hash array
-    as a real column — an expression tree would recompute md5 per bit."""
-    n = F.size(hashes)
-    acc = F.lit(0).cast("long")
-    for j in range(bits):
-        ones = F.size(F.filter(hashes, lambda h: h.bitwiseAND(F.lit(1 << j)) != 0))
-        acc = acc + F.when(ones * 2 > n, F.lit(1 << j)).otherwise(F.lit(0))
-    return acc
-
-
 # ---------------------------------------------------------------------------
-# Spark-SQL text generators (r14 fixed-floor work). Building the MinHash/LSH
-# expression forest as Column objects costs hundreds of ~2 ms py4j round
-# trips PER QUERY CONSTRUCTION (profiled in OPTIMIZATION_r14.md); rendering
-# the SAME expressions as SQL text parsed JVM-side cuts that to a handful of
-# selectExpr calls. These mirror the Column builders above expression by
-# expression — keep all three families (Column / Spark SQL / DuckDB SQL) in
-# lockstep.
+# Spark-SQL text. Building the MinHash/LSH expression forest as Column
+# objects costs hundreds of ~2 ms py4j round trips PER QUERY CONSTRUCTION
+# (profiled in OPTIMIZATION_r14.md); the SQL text is parsed JVM-side in a
+# handful of selectExpr calls. Each generator mirrors its DuckDB twin below
+# expression by expression — keep the two families in lockstep
+# (tests/test_properties.py checks both against a pure-Python mirror).
 # ---------------------------------------------------------------------------
 
 
@@ -153,7 +93,9 @@ def sparksql_token_hash(expr: str) -> str:
 
 
 def sparksql_word_shingles(text_expr: str, k: int = 3) -> str:
-    """Spark-SQL text of ``word_shingles`` over ``text_expr``."""
+    """Distinct k-token shingles (word k-grams) of a whitespace-tokenized
+    text; an empty array when the text has fewer than k tokens. Element
+    indices are 1-based, as in DuckDB."""
     toks = f"split({text_expr}, ' ')"
     parts = ", ".join(f"element_at({toks}, i + {j})" for j in range(k))
     return (
@@ -165,8 +107,20 @@ def sparksql_word_shingles(text_expr: str, k: int = 3) -> str:
 
 
 def sparksql_minhash_signature(hs_expr: str = "hs") -> list[str]:
-    """Spark-SQL text of ``minhash_signature`` (16 aliased items) over a
-    materialized hash-array column."""
+    """16 MinHash values (one per permutation, aliased m0..m15); NULL for
+    empty shingle sets.
+
+    ``hs_expr`` must name a MATERIALIZED column of token hashes: passing
+    the hash expression itself would duplicate the md5 work into all 16
+    permutation expressions — a 16x slowdown measured at sf0.1.
+
+    Alternative considered and rejected: folding all 16 minima in one
+    array traversal (16-wide accumulator via aggregate + zip_with/least).
+    Measured SLOWER than 16 independent array_min passes on the full
+    query (1.07 s vs 0.87 s warm at sf0.1) — the per-element accumulator
+    array allocation outweighs the saved traversals, and the independent
+    passes stay simple codegen loops.
+    """
     return [
         f"array_min(transform({hs_expr}, h -> (({a} * h + {b}) % {MINHASH_P}))) AS m{i}"
         for i, (a, b) in enumerate(MINHASH_PERMS)
@@ -179,8 +133,10 @@ def sparksql_token_hash_list(toks_expr: str) -> str:
 
 
 def sparksql_simhash(hs_col: str, bits: int = SIMHASH_BITS) -> str:
-    """Spark-SQL text of ``simhash`` over a materialized hash-array column.
-    The Column form folds 32 majority-vote terms (~8 py4j calls each)."""
+    """SimHash over a materialized hash-array column: bit j of the result
+    is the majority vote of bit j across all token hashes (ties -> 0).
+    Row-local, no shuffle; like the MinHash signature, it needs the hash
+    array as a real column or md5 is recomputed per bit."""
     terms = " + ".join(
         f"(CASE WHEN size(filter({hs_col}, h -> (h & {1 << j}) != 0)) * 2 "
         f"> size({hs_col}) THEN {1 << j} ELSE 0 END)"
@@ -190,7 +146,7 @@ def sparksql_simhash(hs_col: str, bits: int = SIMHASH_BITS) -> str:
 
 
 def sparksql_band_hashes(sig_cols: list[str]) -> list[str]:
-    """Spark-SQL text of ``band_hashes`` (un-aliased band digests)."""
+    """LSH band digests (un-aliased) over the 16 signature columns."""
     out = []
     for band in range(LSH_BANDS):
         cols = sig_cols[band * LSH_ROWS_PER_BAND : (band + 1) * LSH_ROWS_PER_BAND]
@@ -200,7 +156,7 @@ def sparksql_band_hashes(sig_cols: list[str]) -> list[str]:
 
 
 # ---------------------------------------------------------------------------
-# DuckDB-side SQL generators (same constants — keep in lockstep with above)
+# DuckDB SQL for the oracles (same constants — keep in lockstep with above)
 # ---------------------------------------------------------------------------
 
 

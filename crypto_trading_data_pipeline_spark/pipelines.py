@@ -225,14 +225,17 @@ def training_release(
     # Near-dup screen over quality+exact survivors with non-empty shingle
     # sets (empty-shingle docs would all collide on the empty-signature
     # band digest and mass-flag each other).
-    surv = base.filter(~low & ~exact_dup).select(
-        id_col, dedup_hash.word_shingles(text).alias("sh")
+    surv = base.filter(~low & ~exact_dup).selectExpr(
+        id_col, f"{dedup_hash.sparksql_word_shingles(text_col)} AS sh"
     ).filter(F.size("sh") > 0)
-    hashed = surv.withColumn(
-        "hs", F.transform("sh", dedup_hash.token_hash)
-    ).select(id_col, *dedup_hash.minhash_signature(F.col("hs")))
+    hashed = surv.selectExpr(
+        id_col, f"{dedup_hash.sparksql_token_hash_list('sh')} AS hs"
+    ).selectExpr(id_col, *dedup_hash.sparksql_minhash_signature("hs"))
     sig_cols = [f"m{i}" for i in range(len(dedup_hash.MINHASH_PERMS))]
-    banded = hashed.select(id_col, *dedup_hash.band_hashes(sig_cols))
+    banded = hashed.selectExpr(
+        id_col,
+        *(f"{d} AS band{b}" for b, d in enumerate(dedup_hash.sparksql_band_hashes(sig_cols))),
+    )
     melt = banded.select(
         id_col,
         F.explode(
@@ -257,7 +260,7 @@ def training_release(
 
     bench_shingles = (
         benchmark.select(
-            F.explode(dedup_hash.word_shingles(F.col(text_col), k=contam_k)).alias("g")
+            F.explode(F.expr(dedup_hash.sparksql_word_shingles(text_col, contam_k))).alias("g")
         )
         .distinct()
     )
@@ -265,7 +268,9 @@ def training_release(
         base.filter(~low & ~exact_dup)
         .select(
             id_col,
-            F.explode_outer(dedup_hash.word_shingles(text, k=contam_k)).alias("g"),
+            F.explode_outer(
+                F.expr(dedup_hash.sparksql_word_shingles(text_col, contam_k))
+            ).alias("g"),
         )
         .join(F.broadcast(bench_shingles), "g", "left_semi")
         .select(id_col)

@@ -22,8 +22,13 @@ Oracle-matching conventions (SURVEY.md §5):
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import ast
+import hashlib
+import json
+import sys
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -71,9 +76,10 @@ from . import ml  # noqa: E402,F401
 # Driver correctness-window rotation.
 #
 # The driver hash-checks only the FIRST 50 registry entries per round, so
-# the window is COMPUTED from the committed CORRECTNESS_r*.json evidence at
-# import time (no frozen name lists — the r3..r5 frozen-list approach left
-# six queries unchecked for two rounds):
+# the window is COMPUTED at import time from the committed
+# CORRECTNESS_r*.json evidence and ORACLE_FPS.json — no hand-kept name
+# lists (the r3..r5 frozen lists left six queries unchecked for two rounds;
+# the hand-appended re-check list missed q_containment in r14):
 #
 #   1. queries whose registered oracle has NEVER been hash-run (rows-only
 #      history + an oracle now registered) — they were registered in an
@@ -81,10 +87,11 @@ from . import ml  # noqa: E402,F401
 #      row, so they outrank brand-new entries (the r6→r7 q_kmeans_ivf case:
 #      with upgraded ranked after never-checked, any round that registers
 #      ≥50 new queries starves an upgraded oracle forever),
-#   2. queries whose ORACLE TEXT changed since their last driver check
-#      (_changed_oracles) or whose SPARK CODE was rewritten with the oracle
-#      left untouched (_CODE_CHANGED_RECHECK) — green evidence against old
-#      code/oracle text proves nothing about the rewrite,
+#   2. queries whose oracle text OR Spark code changed since their last
+#      driver row (_changed_since_checked: the live fingerprints differ from
+#      the ones ORACLE_FPS.json records for that row, or it records none) —
+#      green evidence against old code or oracle text proves nothing about
+#      the rewrite,
 #   3. rows-only/twin pairs whose rows-only evidence is >= _ROWS_ONLY_CADENCE
 #      rounds old (the pair re-greens together — see _ROWS_ONLY_TWINS),
 #   4. queries with no driver row in ANY round (anything newly registered
@@ -92,12 +99,15 @@ from . import ml  # noqa: E402,F401
 #   5. padded to 50 with the stalest-checked queries (ascending last-checked
 #      round, registry order as tiebreak).
 #
-# Queries outside the window retain the identical DuckDB-oracle check in
-# tests/test_oracle_parity.py.
-# tests/test_properties.py::test_driver_window_holds_rotated_queries asserts
-# the INVARIANT (never-checked first, then staleness order), not a name list.
+# An edit re-enters the window by itself: the code fingerprint covers the
+# query function and every same-module name it reaches, so a rewritten
+# helper brings back each caller, while docstring, comment and layout edits
+# change nothing. Every query keeps the identical DuckDB-oracle check in
+# tests/test_oracle_parity.py; tests/test_properties.py asserts the tier
+# INVARIANT, not a name list.
 # ---------------------------------------------------------------------------
 _WINDOW_SIZE = 50
+_REPO_ROOT = Path(__file__).resolve().parents[2]
 
 # Rows-only queries (oracle=None) carry the weakest driver evidence — no
 # value hash, just a row count — so each one is DECLARED with an
@@ -113,85 +123,6 @@ _ROWS_ONLY_TWINS = {
     "q_hll_union": "q_hll_portable",  # portable integer-HLL hash twin
 }
 _ROWS_ONLY_CADENCE = 3
-
-# Spark-side rewrites that leave the ORACLE text untouched carry no
-# fingerprint signal (_changed_oracles keys on oracle text), but the
-# query's existing driver evidence still references the OLD implementation.
-# A session that rewrites a query's Spark code without touching its oracle
-# appends (name, latest_evidence_round_at_change) here; the query then
-# re-enters the window until a NEWER driver row lands (latest > recorded
-# round), after which the entry is inert and can be dropped at the next
-# cleanup. Complements tests/oracle_util.git_at_risk_queries, which
-# re-checks the same set in pytest but cannot put them in front of the
-# driver.
-_CODE_CHANGED_RECHECK: tuple[tuple[str, int], ...] = (
-    # r13 OPTIMIZATION round rewrites (oracle text untouched, Spark plans
-    # reshaped — shared-signature LSH chain, CC convergence fold /
-    # star-loop distinct removal, logreg one-action gradient,
-    # parameterized repartitions; OPTIMIZATION_r13.md):
-    ("q_minhash_est_jaccard", 10),
-    ("q_lsh_pairs", 10),
-    ("q_neardup_dedup", 10),
-    ("q_neardup_threshold_sweep", 7),
-    ("q_neardup_components", 10),
-    ("q_neardup_components_star", 11),
-    ("q_neardup_incremental", 12),
-    ("q_simhash_pairs", 10),
-    ("q_logreg_train", 8),
-    ("q_pagerank", 11),
-    ("q_label_propagation", 12),
-    ("q_kcore", 12),
-    ("q_bfs_reach", 12),
-    ("q_mrr", 9),
-    ("q_kneser_ney", 7),
-    ("q_bigram_lm", 7),
-    ("q_triangle_count", 11),
-    # r13 joint pq_train trainer (bit-identical by test):
-    ("q_pq_train", 12),
-    ("q_ann_pq_trained", 12),
-    # r13 one-literal rendering / trainer localCheckpoint / probe-support
-    # edits — every remaining query whose function AST differs from its
-    # latest-evidence commit (the tier-1 git_at_risk set on 6ff213e; the
-    # r07-aged members already ride the staleness tier):
-    ("q_ann_incremental", 12),
-    ("q_ann_lsh", 12),
-    ("q_cooccur_ppmi_pruned", 12),
-    ("q_dup_span_stats", 12),
-    ("q_kmeans_assign", 12),
-    ("q_pca_power", 12),
-    ("q_rolling_median", 12),
-    ("q_silhouette", 12),
-    # r14 OPTIMIZATION round rewrites (oracle text untouched; plans/values
-    # verified identical at change time — OPTIMIZATION_r14.md):
-    ("q_neardup_incremental", 13),
-    ("q_bootstrap_ci", 13),
-    # r14 SQL-text constructor rendering (identical plans, py4j chatter cut):
-    ("q_lsh_pairs", 13),
-    ("q_lsh_bucket_stats", 13),
-    ("q_neardup_dedup", 13),
-    ("q_neardup_threshold_sweep", 13),
-    ("q_neardup_components", 13),
-    ("q_neardup_components_star", 13),
-    ("q_minhash_sig", 13),
-    ("q_minhash_est_jaccard", 13),
-    ("q_simhash", 13),
-    ("q_simhash_pairs", 13),
-    ("q_contamination", 13),
-    ("q_containment", 13),
-    ("q_ngram_jaccard", 13),
-    # r14 split-once pair streams, PQ-encode SQL text, loop job fusion:
-    ("q_cooccur_ppmi", 13),
-    ("q_cooccur_ppmi_pruned", 13),
-    ("q_bigram_lm", 13),
-    ("q_kneser_ney", 13),
-    ("q_ann_ivfpq", 13),
-    ("q_ann_ivfpq_probe3", 13),
-    ("q_ann_rerank", 13),
-    ("q_ann_pq_trained", 13),
-    ("q_logreg_train", 13),
-    ("q_kcore", 13),
-    ("q_mutual_info", 13),
-)
 
 
 def driver_annotations() -> dict[str, dict]:
@@ -229,13 +160,9 @@ def _driver_check_rounds() -> tuple[dict[str, int], set[str]]:
     oracle is as unproven as a brand-new one and must re-enter the
     window (r6 case: q_kmeans_ivf gained a hash oracle after its r2
     rows-only row)."""
-    import json
-    from pathlib import Path
-
     latest: dict[str, int] = {}
     hash_checked: set[str] = set()
-    repo_root = Path(__file__).resolve().parents[2]
-    for f in sorted(repo_root.glob("CORRECTNESS_r*.json")):
+    for f in sorted(_REPO_ROOT.glob("CORRECTNESS_r*.json")):
         try:
             rnd = int(f.stem.split("_r")[1])
             rows = json.loads(f.read_text())
@@ -248,31 +175,124 @@ def _driver_check_rounds() -> tuple[dict[str, int], set[str]]:
     return latest, hash_checked
 
 
-def _changed_oracles() -> set[str]:
-    """Queries whose ORACLE TEXT differs from the fingerprint recorded at
-    the last driver check (ORACLE_FPS.json, refreshed at session start
-    after the driver's round-end run). A green driver row proven against
-    an OLD oracle says nothing about the rewritten one — the r8 case:
-    q_silhouette's d2 quantization and q_semdedup's two-level quantizer
-    changed both engines' outputs after their r7 rows landed. Absent or
-    unreadable file => empty set (the signal is additive, never load-
-    bearing)."""
-    import hashlib
-    import json
-    from pathlib import Path
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
-    f = Path(__file__).resolve().parents[2] / "ORACLE_FPS.json"
+
+def _strip_inert(node: ast.AST) -> None:
+    """Drop a definition's docstring and its @query decorator."""
+    if not isinstance(node, _DEFS):
+        return
+    first = node.body[0] if node.body else None
+    if (
+        isinstance(first, ast.Expr)
+        and isinstance(first.value, ast.Constant)
+        and isinstance(first.value.value, str)
+    ):
+        node.body = node.body[1:]
+    node.decorator_list = [
+        d
+        for d in node.decorator_list
+        if not (isinstance(d, ast.Call) and isinstance(d.func, ast.Name) and d.func.id == "query")
+    ]
+
+
+def _bound_names(stmt: ast.stmt) -> list[str]:
+    if isinstance(stmt, _DEFS):
+        return [stmt.name]
+    if isinstance(stmt, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+        targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+        return [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+    return []
+
+
+def code_fingerprints(source: str, names: list[str]) -> dict[str, str]:
+    """{name: md5} for each named top-level function of a module's source.
+
+    The digest covers the function and every module-level name it
+    references, followed transitively, hashed in name order without line
+    numbers — so moving a helper leaves it unchanged, while editing a
+    helper changes the digest of each caller. Docstrings and the @query
+    decorator (the oracle text has its own fingerprint) are left out.
+    Names imported from other modules are not followed: a shared operator
+    sits in nearly every closure and would flag the whole registry."""
+    tree = ast.parse(source)
+    defs: dict[str, list[ast.stmt]] = {}
+    for stmt in tree.body:
+        for n in _bound_names(stmt):
+            defs.setdefault(n, []).append(stmt)
+    memo: dict[str, tuple[str, set[str]]] = {}
+
+    def member(n: str) -> tuple[str, set[str]]:
+        if n not in memo:
+            refs = set()
+            for stmt in defs[n]:
+                _strip_inert(stmt)  # before the walk queues what it drops
+                for x in ast.walk(stmt):
+                    if isinstance(x, ast.Name):
+                        refs.add(x.id)
+                    elif x is not stmt:
+                        _strip_inert(x)
+            memo[n] = ("".join(ast.dump(stmt) for stmt in defs[n]), refs & defs.keys())
+        return memo[n]
+
+    out: dict[str, str] = {}
+    for name in names:
+        if name not in defs:
+            continue
+        closure, todo = set(), [name]
+        while todo:
+            n = todo.pop()
+            if n not in closure:
+                closure.add(n)
+                todo.extend(member(n)[1])
+        h = hashlib.md5()
+        for n in sorted(closure):
+            h.update(member(n)[0].encode())
+        out[name] = h.hexdigest()
+    return out
+
+
+def _fingerprints() -> dict[str, dict[str, str | None]]:
+    """{name: {"code": …, "oracle": …}} for the live registry, in the
+    ORACLE_FPS.json entry format (oracle None for rows-only queries)."""
+    by_module: dict[str, list[str]] = {}
+    for n, s in REGISTRY.items():
+        by_module.setdefault(s.fn.__module__, []).append(n)
+    out: dict[str, dict[str, str | None]] = {}
+    for mod, names in by_module.items():
+        code = code_fingerprints(Path(sys.modules[mod].__file__).read_text(), names)
+        for n in names:
+            oracle = REGISTRY[n].oracle
+            out[n] = {
+                "code": code.get(n),
+                "oracle": oracle and hashlib.md5(oracle.encode()).hexdigest(),
+            }
+    return out
+
+
+def changed_since_checked(
+    recorded: dict[str, dict], current: dict[str, dict], checked: Iterable[str]
+) -> set[str]:
+    """The ``checked`` names (queries with a driver row) whose current
+    fingerprint differs from the one recorded for that row. A missing
+    entry counts as changed: evidence that cannot be tied to the code and
+    oracle it proved is stale."""
+    return {n for n in checked if n in current and recorded.get(n) != current[n]}
+
+
+def _changed_since_checked(checked: Iterable[str]) -> set[str]:
+    """Queries whose oracle text or Spark code changed since their last
+    driver row, against ORACLE_FPS.json (rebuilt from git history by
+    scripts/refresh_oracle_fps.py). A green row proven against an old
+    oracle or old code says nothing about the rewrite — the r8 case:
+    q_silhouette's d2 quantization changed both engines' outputs after its
+    r7 row landed. An absent or unreadable file fails closed: every
+    checked query counts as changed."""
     try:
-        fps = json.loads(f.read_text())
+        recorded = json.loads((_REPO_ROOT / "ORACLE_FPS.json").read_text())
     except (OSError, json.JSONDecodeError):
-        return set()
-    return {
-        n
-        for n, s in REGISTRY.items()
-        if s.oracle is not None
-        and n in fps
-        and hashlib.md5(s.oracle.encode()).hexdigest() != fps[n]
-    }
+        recorded = {}
+    return changed_since_checked(recorded, _fingerprints(), checked)
 
 
 def _compute_window(size: int = _WINDOW_SIZE) -> list[str]:
@@ -286,14 +306,9 @@ def _compute_window(size: int = _WINDOW_SIZE) -> list[str]:
         for n in REGISTRY
         if n in latest and n not in hash_checked and REGISTRY[n].oracle is not None
     ]
-    # Oracle text rewritten since its last driver check: as unproven as
-    # an upgrade, for the same reason.
-    changed = [
-        n
-        for n in _changed_oracles()
-        if n in latest and n not in upgraded
-    ]
-    changed.sort(key=lambda n: order[n])
+    # Oracle text or Spark code changed since its last driver check: as
+    # unproven as an upgrade, for the same reason.
+    changed = sorted(_changed_since_checked(latest) - set(upgraded), key=lambda n: order[n])
     # Aged rows-only pairs: rows-only evidence >= cadence rounds old =>
     # the pair (rows-only query + its hash twin) re-greens together.
     max_round = max(latest.values(), default=0)
@@ -306,17 +321,7 @@ def _compute_window(size: int = _WINDOW_SIZE) -> list[str]:
             and max_round - latest[ro] >= _ROWS_ONLY_CADENCE
         ):
             aged_pairs.extend(n for n in (ro, twin) if n not in aged_pairs)
-    # Spark-side rewrite with an unchanged oracle: the committed evidence
-    # predates the code it vouches for — re-check until a newer row lands.
-    code_changed = [
-        n
-        for n, rnd in _CODE_CHANGED_RECHECK
-        if n in REGISTRY
-        and latest.get(n, 0) <= rnd
-        and n not in upgraded
-        and n not in changed
-    ]
-    head = upgraded + changed + code_changed
+    head = upgraded + changed
     head += [n for n in aged_pairs if n not in head]
     # A never-checked twin of an aged rows-only pair lands in BOTH head
     # (via aged_pairs) and never; dedupe so the 50-slot window never

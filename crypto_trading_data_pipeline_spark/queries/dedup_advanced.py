@@ -43,11 +43,11 @@ def _shingle_hashes(docs):
     fan_out first: the md5-per-shingle cost dominates the scan, so
     parallelism must come from cores, not input splits (see scale.fan_out).
     """
-    # SQL-text construction (r14 fixed-floor work): identical expressions
-    # to the Column builders (dh.word_shingles / dh.token_hash), rendered
-    # JVM-side in two selectExpr calls instead of ~100 py4j round trips —
-    # this helper sits under SIX near-dup queries, so its construction
-    # chatter multiplied across the whole family.
+    # SQL-text construction (r14 fixed-floor work): the shingle and
+    # token-hash expressions are rendered JVM-side in two selectExpr calls
+    # instead of ~100 py4j round trips — this helper sits under SIX
+    # near-dup queries, so its construction chatter multiplied across the
+    # whole family.
     return (
         fan_out(docs.select("doc_id", "text"))
         .filter(F.size(F.split(F.col("text"), " ")) >= 3)

@@ -1104,7 +1104,7 @@ def _novelty_shingles(docs):
         .select(
             "doc_id",
             F.explode_outer(
-                F.array_distinct(dedup_hash.word_shingles(F.col("text"), 3))
+                F.array_distinct(F.expr(dedup_hash.sparksql_word_shingles("text", 3)))
             ).alias("sh"),
         )
         .filter(F.col("sh").isNotNull())
@@ -1168,7 +1168,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str):
     )
     per_doc = docs.filter(F.size(toks) >= 3).select(
         "doc_id",
-        F.size(F.array_distinct(dedup_hash.word_shingles(F.col("text"), 3)))
+        F.size(F.array_distinct(F.expr(dedup_hash.sparksql_word_shingles("text", 3))))
         .cast("bigint")
         .alias("n_shingles"),
     )

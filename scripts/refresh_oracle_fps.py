@@ -1,26 +1,29 @@
 """Rebuild ORACLE_FPS.json from GIT HISTORY — run-order independent.
 
-Each query's fingerprint is the md5 of its oracle text AS OF THE DRIVER
-COMMIT of that query's own LATEST CORRECTNESS row (the "round N:
-verdict/..." commit only adds result files, so its oracle sources are
-exactly the tree the driver tested). That is the faithful per-row
-fingerprint: the file now records what the driver ACTUALLY verified, so
-- running this script at any point in a session is safe (it never reads
-  the working tree's oracle texts), closing the r8 ADVICE fragility
-  where a refresh run AFTER an oracle edit silently erased the
-  needs-recheck marker; and
-- an oracle edited in round N but NOT driver-checked that round (it
-  missed the 50-slot window) keeps the fingerprint of the text its last
-  row really proved, so it still re-enters the window.
+Each query's entry is {"code": …, "oracle": …} AS OF THE DRIVER COMMIT of
+that query's own LATEST CORRECTNESS row (the "round N: verdict/..." commit
+only adds result files, so its sources are exactly the tree the driver
+tested):
+- "oracle" is the md5 of the registered oracle text (null for rows-only
+  queries), dumped by importing that commit's registry in a subprocess;
+- "code" is queries.code_fingerprints over `git show <sha>:<module>` of
+  the module that defined the query at that commit, computed in this
+  process with the same function the package applies to the live tree.
 
-Mechanics: for every round r with a CORRECTNESS_r{r}.json, find the
-commit that last touched that file, materialize it in a throwaway git
-worktree, import the registry there in a subprocess, and dump
-{name: md5(oracle)}. Then fps[q] = dump[latest_round[q]][q]. Queries
-whose exact-round dump is unavailable are OMITTED (never-fingerprinted
-=> they re-enter the driver window; falling back to a newer round could
-mask an unverified oracle edit); queries with no driver row are omitted
-(they are never-checked and windowed regardless).
+The file records what the driver ACTUALLY verified, so
+- running this script at any point in a session is safe (it never reads
+  the working tree's sources), and an edit made before or after a run
+  still re-enters the driver window; and
+- a query edited in round N but NOT driver-checked that round (it missed
+  the 50-slot window) keeps the fingerprints of the code its last row
+  really proved, so it still re-enters the window.
+
+Historical trees come from scripts/ab.checkout (cached under
+.worktrees/ab_<sha>). Queries whose exact-round dump is unavailable are
+OMITTED, and an omitted query counts as changed, so it re-enters the
+driver window (falling back to a newer round could mask an unverified
+edit); queries with no driver row are omitted (they are never-checked and
+windowed regardless).
 
 Usage: python scripts/refresh_oracle_fps.py   (any time; idempotent)
 """
@@ -31,83 +34,64 @@ import json
 import os
 import subprocess
 import sys
-import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from crypto_trading_data_pipeline_spark.queries import (  # noqa: E402
+    _driver_check_rounds,
+    code_fingerprints,
+)
+from scripts.ab import _git, checkout  # noqa: E402
 
 _DUMP_SNIPPET = (
-    "import sys, json, hashlib; sys.path.insert(0, '.'); "
+    "import sys, os, json, hashlib; sys.path.insert(0, '.'); "
     "from crypto_trading_data_pipeline_spark.queries import REGISTRY; "
-    "print(json.dumps({n: hashlib.md5(s.oracle.encode()).hexdigest() "
-    "for n, s in REGISTRY.items() if s.oracle is not None}))"
+    "print(json.dumps({n: [s.oracle and hashlib.md5(s.oracle.encode()).hexdigest(), "
+    "os.path.relpath(s.fn.__code__.co_filename)] for n, s in REGISTRY.items()}))"
 )
 
 
-def _latest_round_per_query() -> dict[str, int]:
-    latest: dict[str, int] = {}
-    import glob
-
-    for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        try:
-            rnd = int(os.path.basename(f).split("_r")[1].split(".")[0])
-            rows = json.load(open(f))
-        except (ValueError, IndexError, OSError, json.JSONDecodeError):
-            continue
-        for q in rows if isinstance(rows, dict) else []:
-            latest[q] = max(latest.get(q, 0), rnd)
-    return latest
-
-
 def _driver_commit(rnd: int) -> str | None:
-    rel = f"CORRECTNESS_r{rnd:02d}.json"
     out = subprocess.run(
-        ["git", "log", "-n1", "--format=%H", "--", rel],
+        ["git", "log", "-n1", "--format=%H", "--", f"CORRECTNESS_r{rnd:02d}.json"],
         cwd=REPO,
         capture_output=True,
         text=True,
     )
-    sha = out.stdout.strip()
-    return sha or None
+    return out.stdout.strip() or None
 
 
-def _fps_at_commit(sha: str) -> dict[str, str] | None:
-    wt = tempfile.mkdtemp(prefix="oracle_fps_wt_")
-    os.rmdir(wt)  # git worktree add wants to create it
-    try:
-        subprocess.run(
-            ["git", "worktree", "add", "--detach", "-q", wt, sha],
-            cwd=REPO,
-            check=True,
-            capture_output=True,
+def _fps_at_commit(sha: str) -> dict[str, dict] | None:
+    out = subprocess.run(
+        [sys.executable, "-c", _DUMP_SNIPPET],
+        cwd=checkout(sha),
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    if out.returncode != 0:
+        err = out.stderr.strip().splitlines()
+        print(
+            f"warn: registry import failed at {sha[:9]}: {err[-1] if err else '?'}",
+            file=sys.stderr,
         )
-        out = subprocess.run(
-            [sys.executable, "-c", _DUMP_SNIPPET],
-            cwd=wt,
-            capture_output=True,
-            text=True,
-            timeout=300,
-        )
-        if out.returncode != 0:
-            print(
-                f"warn: registry import failed at {sha[:9]}: "
-                f"{out.stderr.strip().splitlines()[-1] if out.stderr.strip() else '?'}",
-                file=sys.stderr,
-            )
-            return None
-        return json.loads(out.stdout.strip().splitlines()[-1])
-    finally:
-        subprocess.run(
-            ["git", "worktree", "remove", "--force", wt],
-            cwd=REPO,
-            capture_output=True,
-        )
+        return None
+    dump = json.loads(out.stdout.strip().splitlines()[-1])
+    by_module: dict[str, list[str]] = {}
+    for n, (_, rel) in dump.items():
+        by_module.setdefault(rel, []).append(n)
+    fps: dict[str, dict] = {}
+    for rel, names in by_module.items():
+        code = code_fingerprints(_git("show", f"{sha}:{rel}"), names)
+        fps.update({n: {"code": code[n], "oracle": dump[n][0]} for n in names if n in code})
+    return fps
 
 
 if __name__ == "__main__":
-    latest = _latest_round_per_query()
-    rounds = sorted({r for r in latest.values()})
-    dumps: dict[int, dict[str, str]] = {}
-    for r in rounds:
+    latest, _ = _driver_check_rounds()
+    dumps: dict[int, dict[str, dict]] = {}
+    for r in sorted(set(latest.values())):
         sha = _driver_commit(r)
         if sha is None:
             print(f"warn: no commit found for round {r}", file=sys.stderr)
@@ -116,19 +100,10 @@ if __name__ == "__main__":
         if fps is not None:
             dumps[r] = fps
 
-    fps_out: dict[str, str] = {}
-    omitted = 0
-    for q, r in sorted(latest.items()):
-        # EXACT round only. Falling back to a newer round's tree is unsound:
-        # if the oracle was edited after its last driver check, the newer
-        # tree's text matches the working tree and the fingerprint would
-        # silently erase the needs-recheck marker (r9 ADVICE). An omitted
-        # query is treated as never-fingerprinted, so it re-enters the
-        # driver window — the safe direction.
-        if r in dumps and q in dumps[r]:
-            fps_out[q] = dumps[r][q]
-        else:
-            omitted += 1
+    # EXACT round only: a newer round's tree may already hold the edit
+    # the query's last row never proved.
+    fps_out = {q: dumps[r][q] for q, r in latest.items() if q in dumps.get(r, {})}
+    omitted = len(latest) - len(fps_out)
 
     out = os.path.join(REPO, "ORACLE_FPS.json")
     with open(out, "w") as f:

@@ -81,155 +81,3 @@ def compare_query(spark, sf_dir: str, name: str, fn, oracle: str) -> None:
                     f"{name}.{c}[{idx}]: spark={g.iloc[idx]!r} duck={w.iloc[idx]!r}"
                 )
 
-
-# ---------------------------------------------------------------------------
-# Changed-since-checked AT-RISK selection (r11 verdict #4).
-#
-# A driver hash-match proves the query AS OF the commit the driver ran
-# against. If the query's defining source file gains a newer commit (or
-# uncommitted edits), that evidence is stale — five r11 refactors rode on
-# r6-r8 driver rows and only a manual parity run covered them. The rule is
-# pure (unit-testable on synthetic inputs); the git wrapper below feeds it.
-# ---------------------------------------------------------------------------
-
-
-def at_risk_since_checked(
-    latest_round: dict[str, int],
-    query_file: dict[str, str],
-    file_commit_ts: dict[str, float],
-    round_commit_ts: dict[int, float],
-    dirty_files: set[str],
-) -> set[str]:
-    """Queries whose defining source file changed AFTER their latest
-    driver-check round landed.
-
-    - ``latest_round``: query -> latest round with a driver CORRECTNESS row.
-    - ``query_file``: query -> absolute path of its defining module.
-    - ``file_commit_ts``: file -> unix time of its newest commit.
-    - ``round_commit_ts``: round -> unix time of that CORRECTNESS file's
-      newest commit (the moment the evidence was recorded).
-    - ``dirty_files``: files with uncommitted modifications — always at
-      risk (the working tree is newer than ANY committed evidence).
-
-    Queries with no driver row are excluded here — the window/never-checked
-    tiers already cover them.
-    """
-    out: set[str] = set()
-    for q, rnd in latest_round.items():
-        f = query_file.get(q)
-        if f is None:
-            continue
-        if f in dirty_files:
-            out.add(q)
-            continue
-        fts = file_commit_ts.get(f)
-        rts = round_commit_ts.get(rnd)
-        if fts is not None and rts is not None and fts > rts:
-            out.add(q)
-    return out
-
-
-def git_at_risk_queries(registry, sample_mod: int = 4) -> set[str]:
-    """Gather the at-risk set from git for the live REGISTRY.
-
-    Two tiers, both derived from the coarse file-level rule above:
-
-    1. FUNCTION-CHANGED (always included): the query function's AST in the
-       current working tree differs from its AST at the commit that
-       recorded the query's latest driver round (``git show <round_sha>:
-       <file>``). This is the r11 refactored-out-from-under case, caught
-       precisely — call-site edits, logic changes, decorator moves.
-    2. FILE-CHANGED remainder (rotating 1/``sample_mod`` sample, keyed on
-       name + evidence round so membership rotates as evidence advances):
-       the file was committed after the check but THIS function's AST is
-       unchanged — at risk only through module-level helpers it may call.
-       A full sweep still covers these every /verify session.
-
-    Any git failure returns the empty set — the signal is additive (the
-    window + never-checked + canary tiers remain), never load-bearing.
-    """
-    import ast
-    import subprocess
-    import zlib
-    from pathlib import Path
-
-    from crypto_trading_data_pipeline_spark.queries import _driver_check_rounds
-
-    repo_root = Path(__file__).resolve().parents[1]
-
-    def _git(*args: str) -> str:
-        return subprocess.run(
-            ["git", *args], cwd=repo_root, capture_output=True, text=True, timeout=30
-        ).stdout.strip()
-
-    def _fn_ast(src: str, name: str) -> str | None:
-        try:
-            tree = ast.parse(src)
-        except SyntaxError:
-            return None
-        for node in ast.walk(tree):
-            if isinstance(node, ast.FunctionDef) and node.name == name:
-                return ast.dump(node)
-        return None
-
-    try:
-        latest, _ = _driver_check_rounds()
-        query_file = {
-            q: str(Path(spec.fn.__code__.co_filename).resolve())
-            for q, spec in registry.items()
-        }
-        round_commit_ts: dict[int, float] = {}
-        round_sha: dict[int, str] = {}
-        for rnd in set(latest.values()):
-            line = _git(
-                "log", "-1", "--format=%H %ct", "--", f"CORRECTNESS_r{rnd:02d}.json"
-            )
-            if line:
-                sha, ts = line.split()
-                round_sha[rnd] = sha
-                round_commit_ts[rnd] = float(ts)
-        file_commit_ts: dict[str, float] = {}
-        for f in set(query_file.values()):
-            ts = _git("log", "-1", "--format=%ct", "--", f)
-            if ts:
-                file_commit_ts[f] = float(ts)
-        dirty = {
-            str((repo_root / line).resolve())
-            for line in _git("diff", "--name-only", "HEAD").splitlines()
-            if line
-        }
-        coarse = at_risk_since_checked(
-            latest, query_file, file_commit_ts, round_commit_ts, dirty
-        )
-
-        old_src: dict[tuple[str, str], str] = {}
-        out: set[str] = set()
-        for q in coarse:
-            # Per-item fail-closed (r12 ADVICE): one query whose comparison
-            # raises (e.g. a module outside the repo root breaking
-            # relative_to) must flag ITSELF at-risk, not zero out the
-            # whole tier via the outer except.
-            try:
-                f = query_file[q]
-                rel = str(Path(f).relative_to(repo_root))
-                sha = round_sha.get(latest[q])
-                if sha is None:
-                    out.add(q)  # evidence commit unresolvable: fail closed
-                    continue
-                key = (sha, rel)
-                if key not in old_src:
-                    old_src[key] = _git("show", f"{sha}:{rel}")
-                old = _fn_ast(old_src[key], q)
-                try:
-                    new = _fn_ast(Path(f).read_text(), q)
-                except OSError:
-                    new = None
-                if old is None or new is None or old != new:
-                    out.add(q)  # tier 1: function changed (or unresolvable)
-                elif zlib.crc32(f"{q}:{latest[q]}".encode()) % sample_mod == 0:
-                    out.add(q)  # tier 2: rotating sample of file-level-only
-            except Exception:  # noqa: BLE001 — fail closed per item
-                out.add(q)
-        return out
-    except Exception:  # noqa: BLE001 — additive signal, never load-bearing
-        return set()

@@ -1,53 +1,21 @@
 """Every registered query with an oracle must match DuckDB exactly —
 the local twin of the driver's t2 correctness gate.
 
-Default runs check the AT-RISK set in full — every query whose oracle has
-NEVER been driver-hash-checked (computed from CORRECTNESS_r*.json exactly
-like the window rotation, so it INCLUDES never-checked queries that
-overflow the 50-slot driver window — a gap the window-only definition had
-once the backlog exceeded 50) plus the computed driver window — padded
-with a deterministic sixteenth of the stable tail (third -> sixth ->
-eighth -> sixteenth as the registry grew; the stable tail is re-proven in
-full by the /verify driver-contract sweep each session, so the sample
-here is a canary, not the coverage). The tail sample is keyed on the
-query name, so membership is stable within a round but rotates as the
-window rotates. Set SPARK_GRAFT_PARITY_FULL=1 for the exhaustive sweep
-(the /verify driver-contract script always runs the full set
-regardless)."""
+Every run checks the whole registry (about four minutes at sf0.001 on four
+cores). The driver checks only its 50-slot window per round; the queries
+whose oracle or code changed since their last driver row lead that window
+(queries._changed_since_checked), and this sweep covers the rest, so no
+query rides on evidence about code it no longer runs."""
 
 from __future__ import annotations
 
-import os
-import zlib
-
 import pytest
 
-from crypto_trading_data_pipeline_spark.queries import (
-    _DRIVER_WINDOW,
-    _driver_check_rounds,
-    REGISTRY,
-)
+from crypto_trading_data_pipeline_spark.queries import REGISTRY
 
-from .oracle_util import compare_query, git_at_risk_queries
+from .oracle_util import compare_query
 
-_ALL_ORACLE = sorted(n for n, s in REGISTRY.items() if s.oracle is not None)
-if os.environ.get("SPARK_GRAFT_PARITY_FULL"):
-    ORACLE_QUERIES = _ALL_ORACLE
-else:
-    _window = set(_DRIVER_WINDOW)
-    _, _hash_checked = _driver_check_rounds()
-    # changed-since-checked (r11 verdict #4): a query whose defining source
-    # file has a commit (or uncommitted edit) NEWER than its latest driver
-    # check rides the parity set automatically — driver evidence proves the
-    # code as of the round it ran, not the refactor that landed after it.
-    _stale_evidence = git_at_risk_queries(REGISTRY)
-    ORACLE_QUERIES = [
-        n for n in _ALL_ORACLE
-        if n in _window
-        or n not in _hash_checked
-        or n in _stale_evidence
-        or zlib.crc32(n.encode()) % 16 == 0
-    ]
+ORACLE_QUERIES = sorted(n for n, s in REGISTRY.items() if s.oracle is not None)
 ROWS_ONLY_QUERIES = sorted(n for n, s in REGISTRY.items() if s.oracle is None)
 
 

@@ -14,6 +14,7 @@ import hashlib
 import math
 from datetime import datetime, timezone
 
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -52,16 +53,28 @@ doc = st.lists(token, min_size=0, max_size=12).map(lambda ts: " ".join(ts))
 @settings(max_examples=8, deadline=None)
 @given(st.lists(doc, min_size=1, max_size=24))
 def test_minhash_matches_python_mirror(spark, texts):
+    """Both generated families — Spark-SQL text for the engine, DuckDB SQL
+    for the oracles — equal the Python mirror on the same documents."""
+    import duckdb
+    import pandas as pd
+
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], ["doc_id", "text"])
-    hs = F.transform(dh.word_shingles(F.col("text"), 3), dh.token_hash)
+    hs = dh.sparksql_token_hash_list(dh.sparksql_word_shingles("text", 3))
+    sig = [f"m{i}" for i in range(len(dh.MINHASH_PERMS))]
     got = {
-        r.doc_id: [r[f"m{i}"] for i in range(len(dh.MINHASH_PERMS))]
-        for r in df.select(
-            "doc_id", *dh.minhash_signature(F.array_compact(hs))
-        ).collect()
+        r.doc_id: [r[m] for m in sig]
+        for r in df.selectExpr("doc_id", f"{hs} AS hs")
+        .selectExpr("doc_id", *dh.sparksql_minhash_signature("hs"))
+        .collect()
     }
+    con = duckdb.connect()
+    con.register("docs", pd.DataFrame({"doc_id": range(len(texts)), "text": texts}))
+    duck_sig = ", ".join(dh.sql_minhash_values(dh.sql_word_shingles("text", 3)))
+    duck = {r[0]: list(r[1:]) for r in con.execute(f"SELECT doc_id, {duck_sig} FROM docs").fetchall()}
+    con.close()
     for i, t in enumerate(texts):
         assert got[i] == py_minhash(t), (i, t)
+        assert duck[i] == py_minhash(t), (i, t)
 
 
 @settings(max_examples=8, deadline=None)
@@ -184,15 +197,16 @@ def test_connected_components_matches_union_find(spark, edges):
 
 def test_driver_window_holds_rotated_queries():
     """The driver hash-checks only the FIRST 50 registry entries. The window
-    is computed from CORRECTNESS_r*.json evidence; this asserts the
-    INVARIANT — every never-driver-checked query (incl. anything newly
-    registered) comes first, the rest pad in ascending staleness — rather
-    than a frozen name list (the frozen r3 list left six r5 queries
+    is computed from CORRECTNESS_r*.json evidence and ORACLE_FPS.json; this
+    asserts the INVARIANT — the priority tiers (upgraded oracles, oracle or
+    code changed since the last driver row, aged rows-only pairs, never
+    driver-checked) come first, the rest pad in ascending staleness —
+    rather than a frozen name list (the frozen r3 list left six r5 queries
     unchecked for two rounds)."""
     from crypto_trading_data_pipeline_spark.queries import (
         _DRIVER_WINDOW,
         _WINDOW_SIZE,
-        _changed_oracles,
+        _changed_since_checked,
         _driver_check_rounds,
         REGISTRY,
     )
@@ -209,12 +223,13 @@ def test_driver_window_holds_rotated_queries():
         for n in REGISTRY
         if n in latest and n not in hash_checked and REGISTRY[n].oracle is not None
     ]
-    # Oracle text rewritten since its last driver check (ORACLE_FPS.json
-    # fingerprint mismatch): the old green row proves nothing about the
-    # new text, so these rank right after upgrades.
+    # Oracle text or Spark code changed since its last driver check
+    # (ORACLE_FPS.json fingerprint mismatch or missing entry): the old
+    # green row proves nothing about the rewrite, so these rank right
+    # after upgrades.
     reg_order = {n: i for i, n in enumerate(REGISTRY)}
     changed = sorted(
-        (n for n in _changed_oracles() if n in latest and n not in upgraded),
+        (n for n in _changed_since_checked(latest) if n not in upgraded),
         key=lambda n: reg_order[n],
     )
     # Aged rows-only pairs (r11 verdict #8): rows-only evidence >=
@@ -235,27 +250,11 @@ def test_driver_window_holds_rotated_queries():
             and max_round - latest[ro] >= _ROWS_ONLY_CADENCE
         ):
             aged_pairs.extend(n for n in (ro, twin) if n not in aged_pairs)
-    # Spark-side rewrites with an unchanged oracle (declared list): rank
-    # with the changed-oracle tier until a newer driver row lands.
-    from crypto_trading_data_pipeline_spark.queries import _CODE_CHANGED_RECHECK
-
-    code_changed = [
-        n
-        for n, rnd in _CODE_CHANGED_RECHECK
-        if n in REGISTRY
-        and latest.get(n, 0) <= rnd
-        and n not in upgraded
-        and n not in changed
-    ]
-    aged_pairs = [n for n in aged_pairs if n not in upgraded + changed + code_changed]
-    priority = (
-        set(never) | set(upgraded) | set(changed) | set(code_changed) | set(aged_pairs)
-    )
+    aged_pairs = [n for n in aged_pairs if n not in upgraded + changed]
+    priority = set(never) | set(upgraded) | set(changed) | set(aged_pairs)
     # Upgraded oracles outrank never-checked: they registered in an earlier
     # round and have already waited >= 1 full round for their hash row.
-    priority_list = (
-        upgraded + changed + code_changed + aged_pairs + never
-    )  # registry order per tier
+    priority_list = upgraded + changed + aged_pairs + never  # registry order per tier
     if len(priority_list) >= _WINDOW_SIZE:
         # More unproven queries than slots: the window is exactly the first
         # WINDOW_SIZE priority entries; the overflow is never silently
@@ -275,6 +274,111 @@ def test_driver_window_holds_rotated_queries():
         # The padded tail is ordered by staleness (ascending last-checked round).
         tail_rounds = [latest[n] for n in window[len(priority):]]
         assert tail_rounds == sorted(tail_rounds), f"window tail not staleness-ordered: {tail_rounds}"
+
+
+def test_changed_since_checked_fails_closed():
+    """A query with a driver row is stale when its recorded fingerprint
+    differs in either field — or when no entry was recorded at all."""
+    from crypto_trading_data_pipeline_spark.queries import changed_since_checked
+
+    def fp(code, oracle="o"):
+        return {"code": code, "oracle": oracle}
+
+    recorded = {"q_same": fp("a"), "q_code": fp("a"), "q_oracle": fp("a"), "q_new": fp("x")}
+    current = {
+        "q_same": fp("a"),
+        "q_code": fp("b"),
+        "q_oracle": fp("a", "p"),
+        "q_unrecorded": fp("a"),
+        "q_new": fp("y"),  # no driver row: the never-checked tier owns it
+    }
+    checked = {"q_same", "q_code", "q_oracle", "q_unrecorded"}
+    assert changed_since_checked(recorded, current, checked) == {
+        "q_code",
+        "q_oracle",
+        "q_unrecorded",
+    }
+
+
+# Edits to a copy of queries/finance.py: (edited object, edit, queries
+# that must then lead the driver window). _ret_bp is a helper shared by
+# three queries, so editing it must bring back all three callers.
+_WINDOW_EDITS = {
+    "query_body": ("q_amihud", "append", {"q_amihud"}),
+    "helper_body": ("_ret_bp", "append", {"q_cross_corr", "q_cusum", "q_risk_metrics"}),
+    "helper_docstring": ("_ret_bp", "docstring", set()),
+    "helper_comment": ("_ret_bp", "comment", set()),
+    "helper_moved": ("_ret_bp", "move", set()),
+}
+
+
+@pytest.mark.parametrize("edit", sorted(_WINDOW_EDITS))
+def test_edit_reenters_driver_window(tmp_path, edit):
+    """Editing a query or a same-module helper puts exactly the affected
+    queries at the head of the driver window with no manual step, while
+    docstring, comment and layout edits leave the window as it was. The
+    package is copied with its evidence files and imported in a fresh
+    interpreter, as the driver would import an edited tree."""
+    import inspect
+    import json
+    import shutil
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    from crypto_trading_data_pipeline_spark.queries import (
+        _DRIVER_WINDOW,
+        _changed_since_checked,
+        _driver_check_rounds,
+        finance,
+        REGISTRY,
+    )
+
+    root = Path(__file__).resolve().parents[1]
+    pkg = "crypto_trading_data_pipeline_spark"
+    shutil.copytree(root / pkg, tmp_path / pkg, ignore=shutil.ignore_patterns("__pycache__"))
+    for f in [*root.glob("CORRECTNESS_r*.json"), root / "ORACLE_FPS.json"]:
+        shutil.copy(f, tmp_path)
+
+    name, kind, targets = _WINDOW_EDITS[edit]
+    obj = getattr(finance, name)
+    lines, start = inspect.getsourcelines(obj)
+    i, j = start - 1, start - 1 + len(lines)
+    module = tmp_path / pkg / "queries" / "finance.py"
+    src = module.read_text().splitlines(keepends=True)
+    if kind == "append":
+        src[j:j] = ["    _ = None\n"]
+    elif kind == "comment":
+        src[i + 1 : i + 1] = ["    # a comment-only edit\n"]
+    elif kind == "docstring":
+        first = obj.__doc__.strip().splitlines()[0]
+        body = "".join(src[i:j]).replace(first, first + " Reworded.", 1)
+        src[i:j] = [body]
+    else:  # move to the end of the module
+        src = src[:i] + src[j:] + ["\n\n"] + src[i:j]
+    module.write_text("".join(src))
+
+    probe = (
+        "import json, sys; sys.path.insert(0, '.'); "
+        f"import {pkg}.queries as Q; "
+        "print(json.dumps({'root': str(Q._REPO_ROOT), 'window': Q._DRIVER_WINDOW, "
+        "'changed': sorted(Q._changed_since_checked(Q._driver_check_rounds()[0]))}))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=tmp_path, capture_output=True, text=True, check=True
+    )
+    after = json.loads(out.stdout.splitlines()[-1])
+    assert Path(after["root"]) == tmp_path.resolve()
+
+    latest, hash_checked = _driver_check_rounds()
+    before = _changed_since_checked(latest)
+    assert set(after["changed"]) == before | targets
+    if not targets:
+        assert after["window"] == _DRIVER_WINDOW
+    n_upgraded = sum(
+        1 for n, s in REGISTRY.items() if n in latest and n not in hash_checked and s.oracle
+    )
+    assert targets <= set(after["window"][: n_upgraded + len(after["changed"])])
 
 
 def test_pack_greedy_conserves_tokens(spark, sf_dir):

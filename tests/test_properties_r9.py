@@ -352,13 +352,12 @@ def test_ann_incremental_replica(spark):
 
 def test_oracle_fps_reproducible_from_git():
     """The committed ORACLE_FPS.json must be reproducible from git
-    history — the run-order-independence contract of the r9 refresh
-    script. Sampled, not exhaustive (a full rebuild imports the
-    registry at six historical commits, ~40 s): rebuild the NEWEST
-    round's fingerprint dump in one throwaway worktree and assert every
-    query whose latest driver row is that round matches the committed
-    file byte-for-byte. Any drift means someone hand-edited the file or
-    the script's commit resolution broke."""
+    history — the run-order-independence contract of the refresh script.
+    Sampled, not exhaustive (a full rebuild imports the registry at seven
+    historical commits): rebuild the NEWEST round's fingerprints — oracle
+    and code fields — and assert every query whose latest driver row is
+    that round matches the committed file exactly. Any drift means someone
+    hand-edited the file or the script's commit resolution broke."""
     import json
     import os
     import sys
@@ -366,9 +365,11 @@ def test_oracle_fps_reproducible_from_git():
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import importlib
 
+    from crypto_trading_data_pipeline_spark.queries import _driver_check_rounds
+
     mod = importlib.import_module("scripts.refresh_oracle_fps")
 
-    latest = mod._latest_round_per_query()
+    latest, _ = _driver_check_rounds()
     # Newest round WITH a driver commit: a brand-new CORRECTNESS file
     # the driver has written but not yet committed (the window between
     # its check run and its round-end commit) has no history to rebuild
@@ -385,8 +386,7 @@ def test_oracle_fps_reproducible_from_git():
 
     committed = json.load(open(os.path.join(mod.REPO, "ORACLE_FPS.json")))
     checked = [q for q, r in latest.items() if r == newest and q in dump]
-    assert len(checked) >= 25  # the driver window holds 50; most have oracles
-    mismatched = [
-        q for q in checked if committed.get(q) != dump[q]
-    ]
+    assert len(checked) >= 25  # the driver window holds 50
+    assert all(set(dump[q]) == {"code", "oracle"} and dump[q]["code"] for q in checked)
+    mismatched = [q for q in checked if committed.get(q) != dump[q]]
     assert not mismatched, f"ORACLE_FPS drift vs git for: {mismatched[:5]}"
