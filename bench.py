@@ -16,8 +16,11 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
+import urllib.request
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -313,12 +316,6 @@ def bench_streaming(spark, sf_dir: str) -> dict:
         shutil.rmtree(workdir, ignore_errors=True)
 
 
-#: (r6) Every query now gets 3 runs unconditionally — see the run loop;
-#: the old conditional-third-run thresholds are retired because a
-#: contended box slows BOTH runs similarly, keeping spread low while the
-#: best-of is 10x off (the r5 driver-vs-local divergence).
-
-
 def _loadavg() -> list[float] | None:
     """1/5/15-min system load — contention evidence for the bench record."""
     try:
@@ -476,11 +473,9 @@ def _calibration_sec(spark) -> float:
     machine-speed ruler: a calibration ratio ≈ the uniform drift says
     'environment', a flat calibration with real per-query deltas says
     'code'."""
-    import time as _time
-
     best = float("inf")
     for _ in range(3):
-        t0 = _time.time()
+        t0 = time.time()
         (
             spark.range(0, 20_000_000, 1, 32)
             .selectExpr("id % 9973 AS k", "(id * 2654435761) % 1000003 AS v")
@@ -490,7 +485,7 @@ def _calibration_sec(spark) -> float:
             .format("noop")
             .save()
         )
-        best = min(best, _time.time() - t0)
+        best = min(best, time.time() - t0)
     return round(best, 3)
 
 
@@ -624,17 +619,16 @@ def _sweep_ab_summary(here: str) -> dict | None:
     return None
 
 
-def _git_head_sha(here: str) -> str | None:
+def _git_line(here: str, *args: str) -> str | None:
+    """A git command's stripped stdout in `here`; None when it is empty or
+    git fails — the adjudication lookups are additive and never fail the
+    bench."""
     import subprocess
 
     try:
         return (
             subprocess.run(
-                ["git", "rev-parse", "--short", "HEAD"],
-                cwd=here,
-                capture_output=True,
-                text=True,
-                timeout=10,
+                ["git", *args], cwd=here, capture_output=True, text=True, timeout=10
             ).stdout.strip()
             or None
         )
@@ -642,40 +636,106 @@ def _git_head_sha(here: str) -> str | None:
         return None
 
 
-def _round_tree_sha(here: str, rnd) -> str | None:
-    """Short sha of the commit that recorded round `rnd`'s bench file —
-    i.e. the committed tree the round-over-round comparison is against,
-    which is exactly the baseline argument scripts/ab.py needs."""
-    import subprocess
-
-    if not isinstance(rnd, int):
-        return None
-    try:
-        return (
-            subprocess.run(
-                [
-                    "git",
-                    "log",
-                    "-1",
-                    "--format=%h",
-                    "--",
-                    f"BENCH_r{rnd:02d}.json",
-                ],
-                cwd=here,
-                capture_output=True,
-                text=True,
-                timeout=10,
-            ).stdout.strip()
-            or None
-        )
-    except Exception:  # noqa: BLE001
-        return None
-
-
 def data_dir() -> str:
     """The fixture directory every harness measures: $SPARK_GRAFT_SF_DIR."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    return sf_dir
+    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def scale_factor(sf_dir: str) -> float:
+    """The scale factor a data dir's basename names (`sf0.1` -> 0.1), or
+    -1.0 when the basename is not exactly sf<number> (a synthesized
+    `sf0.1_x10` tier, any other dir), so its walls never match a real
+    scale factor's previous round."""
+    m = re.fullmatch(r"sf(\d+(?:\.\d+)?)", os.path.basename(sf_dir.rstrip("/")))
+    return float(m.group(1)) if m else -1.0
+
+
+def error_line(exc: BaseException) -> str:
+    """How every harness records a failure: the exception type and the first
+    line of its message, cut to 200 characters. `or [""]`: an empty message
+    must not IndexError inside the handler that keeps the run alive."""
+    return f"{type(exc).__name__}: {(str(exc).splitlines() or [''])[0][:200]}"
+
+
+_JOB_GROUP = "spark.jobGroup.id"
+
+
+def run_query(spark, fn, sf_dir: str, runs: int) -> dict:
+    """Time a registry query function `runs` times; keep the fastest run.
+
+    Each run goes under its own job group and is timed in two parts:
+    construct (`fn(spark, sf_dir)` builds the DataFrame) and action (the
+    noop write runs the whole plan). Returns the fastest run's `total`,
+    `construct` and `action`, every run's total under `runs`, and under
+    `stages` the fastest run's stage ids, read back from its job group
+    through the status tracker, so jobs run while constructing (eager
+    checkpoints) count. A failing run ends the query and the result is
+    only `error` (see error_line): the runner never raises for a query's
+    failure."""
+    sc = spark.sparkContext
+    caller_group = sc.getLocalProperty(_JOB_GROUP)
+    tag = f"run_query-{uuid.uuid4().hex[:12]}"
+    totals: list[float] = []
+    best = None
+    try:
+        for i in range(runs):
+            group = f"{tag}-{i}"
+            sc.setLocalProperty(_JOB_GROUP, group)
+            t0 = time.perf_counter()
+            df = fn(spark, sf_dir)
+            t1 = time.perf_counter()
+            df.write.mode("overwrite").format("noop").save()
+            t2 = time.perf_counter()
+            totals.append(round(t2 - t0, 3))
+            if best is None or t2 - t0 < best[0]:
+                best = (t2 - t0, t1 - t0, t2 - t1, group)
+    except Exception as exc:  # noqa: BLE001 — the caller records the failure
+        return {"error": error_line(exc)}
+    finally:
+        sc.setLocalProperty(_JOB_GROUP, caller_group)
+    tracker = sc.statusTracker()
+    jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(best[3])]
+    return {
+        **{k: round(v, 3) for k, v in zip(("total", "construct", "action"), best)},
+        "runs": totals,
+        "stages": sorted({sid for job in jobs if job for sid in job.stageIds}),
+    }
+
+
+def stage_stats(spark, stage_ids) -> dict[int, dict]:
+    """Per-stage statistics from the status REST API, one call per stage:
+    completed `tasks` and `executor_run_sec` summed over the stage's
+    attempts, and the median and max task duration (`task_sec_p50`,
+    `task_sec_max`, None when no task ran) of the attempt with the slowest
+    task. Empty when the UI, and with it the API, is off; a stage the API
+    cannot return is left out."""
+    sc = spark.sparkContext
+    if not sc.uiWebUrl:
+        return {}
+    api = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/stages"
+    out: dict[int, dict] = {}
+    for sid in stage_ids:
+        try:
+            with urllib.request.urlopen(
+                f"{api}/{sid}?withSummaries=true&quantiles=0.5,1.0", timeout=10
+            ) as r:
+                attempts = json.load(r)
+        except (OSError, ValueError):
+            continue
+        med = slowest = None
+        for a in attempts:
+            dur = (a.get("taskMetricsDistributions") or {}).get("duration")
+            if dur and (slowest is None or dur[1] > slowest):
+                med, slowest = dur
+        out[sid] = {
+            "tasks": sum(a.get("numCompleteTasks", 0) for a in attempts),
+            "executor_run_sec": round(
+                sum(a.get("executorRunTime", 0) for a in attempts) / 1000, 3
+            ),
+            "task_sec_p50": None if med is None else round(med / 1000, 3),
+            "task_sec_max": None if slowest is None else round(slowest / 1000, 3),
+        }
+    return out
 
 
 def warm_up(spark, sf_dir: str, first_query: str | None) -> None:
@@ -737,17 +797,12 @@ def warm_up(spark, sf_dir: str, first_query: str | None) -> None:
     except Exception:  # noqa: BLE001 — warm-up must never kill the bench
         pass
     if first_query:
-        try:
-            REGISTRY[first_query].fn(spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-        except Exception:  # noqa: BLE001 — warm-up must never kill the bench
-            pass
+        run_query(spark, REGISTRY[first_query].fn, sf_dir, 1)
 
 
 def main() -> None:
     sf_dir = data_dir()
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+    sf = scale_factor(sf_dir)
     spark = get_spark(app_name="ctdp-spark-bench")
     spark.sparkContext.setLogLevel("WARN")
 
@@ -758,42 +813,34 @@ def main() -> None:
     # steady-state engine cost we actually optimize.
     # One broken query must cost one missing number, not the whole run:
     # round 4 shipped ZERO timings because a single plan-time
-    # AnalysisException propagated out of the loop. Errors are recorded
-    # (first line of the exception) and measurement continues.
+    # AnalysisException propagated out of the loop. run_query records the
+    # error and measurement continues.
     load_before = _loadavg()
     timings: dict[str, float] = {}
+    splits: dict[str, dict[str, float]] = {}
     spreads: dict[str, float] = {}
     spreads_steady: dict[str, float] = {}
     errors: dict[str, str] = {}
     for name in names:
-        fn = REGISTRY[name].fn
-        run_secs: list[float] = []
-        try:
-            # Always 3 runs. Two-run best-of used to skip the third run for
-            # quiet multi-second queries, but a CONTENDED box slows both
-            # runs similarly (spread stays low), so best-of-2 can record a
-            # 10x outlier as real — exactly the r5 driver-vs-local 14.9x
-            # divergence on q_lsh_pairs. The heavy family is where a bad
-            # number distorts the round most, so it gets the third run too;
-            # the extra cost is ~20 s per bench.
-            while len(run_secs) < 3:
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-                run_secs.append(time.perf_counter() - t0)
-            timings[name] = round(min(run_secs), 3)
-            spreads[name] = round(max(run_secs) / max(min(run_secs), 1e-9), 2)
-            # Steady-state spread excludes run 1 (every plan pays its own
-            # whole-stage-codegen compile there — a per-query constant the
-            # all-runs spread deliberately still exposes). >2 HERE with
-            # high load is the unambiguous contended-measurement signal.
-            steady = run_secs[1:]
-            spreads_steady[name] = round(
-                max(steady) / max(min(steady), 1e-9), 2
-            )
-        except Exception as exc:  # noqa: BLE001 — record and keep measuring
-            # `or [""]`: an empty exception message must not IndexError
-            # inside the very handler that keeps the bench alive.
-            errors[name] = f"{type(exc).__name__}: {(str(exc).splitlines() or [''])[0][:200]}"
+        # Always 3 runs. Two-run best-of used to skip the third run for
+        # quiet multi-second queries, but a CONTENDED box slows both runs
+        # similarly (spread stays low), so best-of-2 can record a 10x
+        # outlier as real — exactly the r5 driver-vs-local 14.9x divergence
+        # on q_lsh_pairs.
+        r = run_query(spark, REGISTRY[name].fn, sf_dir, 3)
+        if "error" in r:
+            errors[name] = r["error"]
+            continue
+        run_secs = r["runs"]
+        timings[name] = r["total"]
+        splits[name] = {"construct": r["construct"], "action": r["action"]}
+        spreads[name] = round(max(run_secs) / max(min(run_secs), 1e-9), 2)
+        # Steady-state spread excludes run 1 (every plan pays its own
+        # whole-stage-codegen compile there — a per-query constant the
+        # all-runs spread deliberately still exposes). >2 HERE with high
+        # load is the unambiguous contended-measurement signal.
+        steady = run_secs[1:]
+        spreads_steady[name] = round(max(steady) / max(min(steady), 1e-9), 2)
     load_after = _loadavg()
 
     total = round(sum(timings.values()), 3)
@@ -827,30 +874,22 @@ def main() -> None:
     _norm_scale = (
         max(calib_ratio, 1.0) if isinstance(calib_ratio, (int, float)) else 1.0
     )
+    # One confirmation run per query; None = the rerun itself failed, which
+    # keeps the flag.
     _rerun_secs: dict[str, float | None] = {}
-
-    def _rerun_once(_nm: str) -> float | None:
-        """One confirmation run; None = rerun itself failed (keep the flag)."""
-        if _nm not in _rerun_secs:
-            try:
-                _t0 = time.perf_counter()
-                REGISTRY[_nm].fn(spark, sf_dir).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-                _rerun_secs[_nm] = time.perf_counter() - _t0
-            except Exception:  # noqa: BLE001 — a rerun failure must not drop the flag
-                _rerun_secs[_nm] = None
-        return _rerun_secs[_nm]
 
     def _confirm(entries: list[dict], scale: float) -> tuple[list[dict], list[dict]]:
         confirmed: list[dict] = []
         unconfirmed: list[dict] = []
         for _entry in entries:
-            _rerun = _rerun_once(_entry["query"])
+            _nm = _entry["query"]
+            if _nm not in _rerun_secs:
+                _rerun_secs[_nm] = run_query(spark, REGISTRY[_nm].fn, sf_dir, 1).get("total")
+            _rerun = _rerun_secs[_nm]
             if _rerun is None:
                 confirmed.append(_entry)
                 continue
-            _entry["rerun_sec"] = round(_rerun, 3)
+            _entry["rerun_sec"] = _rerun
             _adj = _rerun / scale
             _before = _entry["prev_sec"]
             if (_adj - _before) > _REGRESSION_ABS_SEC and _adj > _before * (
@@ -872,8 +911,16 @@ def main() -> None:
     # either the covering A/B record's per-query bests or an explicit
     # "unadjudicated" marker ordering the A/B.
     here = os.path.dirname(os.path.abspath(__file__))
-    _head_sha = _git_head_sha(here)
-    _prev_tree_sha = _round_tree_sha(here, prev.get("_round"))
+    _head_sha = _git_line(here, "rev-parse", "--short", "HEAD")
+    # The commit that recorded the previous round's bench file: the
+    # committed tree the comparison is against, which is exactly the
+    # baseline argument scripts/ab.py needs.
+    _prev_round = prev.get("_round")
+    _prev_tree_sha = (
+        _git_line(here, "log", "-1", "--format=%h", "--", f"BENCH_r{_prev_round:02d}.json")
+        if isinstance(_prev_round, int)
+        else None
+    )
     for _lst in (
         regressions,
         regressions_norm,
@@ -888,7 +935,7 @@ def main() -> None:
     try:
         stream_stats = bench_streaming(spark, sf_dir)
     except Exception as exc:  # noqa: BLE001
-        stream_stats = {"streaming_err": f"{type(exc).__name__}: {(str(exc).splitlines() or [''])[0][:200]}"}
+        stream_stats = {"streaming_err": error_line(exc)}
 
     # Streaming-throughput regression gate (r8 verdict #6): rows/s vs the
     # previous round. CALIBRATION OF THE GATE ITSELF (r12, SCALE_AB_STREAM):
@@ -943,6 +990,9 @@ def main() -> None:
         "runs_per_query": "3",
         "timing": "best_of_runs",
         "queries": timings,
+        # Construct (building the DataFrame) and action (the noop write) of
+        # each query's fastest run; the sweep adds its queries below.
+        "query_split": splits,
         "errors": errors,
         "n_ok": len(timings),
         "n_err": len(errors),
@@ -1008,6 +1058,7 @@ def main() -> None:
         for k, v in record.items()
         if k not in (
             "deltas_vs_prev",
+            "query_split",
             "run_spread",
             "run_spread_steady",
             "runs_per_query",
@@ -1120,21 +1171,19 @@ def main() -> None:
     # construction and correctness-gated, but nothing else would catch
     # one of them going pathological (e.g. an optimizer regression after
     # a Spark upgrade). Per-query single-run walls land in the sidecar
-    # for diagnosis only; they are too noisy to gate individually.
+    # for diagnosis only; they are too noisy to gate individually. The
+    # sweep wall is the sum of those walls.
     sweep_names = [n for n in REGISTRY if n not in set(names)]
     sweep_queries: dict[str, float] = {}
     sweep_errors: dict[str, str] = {}
-    t_sweep = time.perf_counter()
     for name in sweep_names:
-        t0 = time.perf_counter()
-        try:
-            REGISTRY[name].fn(spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            sweep_queries[name] = round(time.perf_counter() - t0, 3)
-        except Exception as exc:  # noqa: BLE001 — record and keep sweeping
-            sweep_errors[name] = f"{type(exc).__name__}: {(str(exc).splitlines() or [''])[0][:200]}"
-    full_registry_wall = round(time.perf_counter() - t_sweep, 3)
+        r = run_query(spark, REGISTRY[name].fn, sf_dir, 1)
+        if "error" in r:
+            sweep_errors[name] = r["error"]
+            continue
+        sweep_queries[name] = r["total"]
+        splits[name] = {"construct": r["construct"], "action": r["action"]}
+    full_registry_wall = round(sum(sweep_queries.values()), 3)
     frw_prev = prev.get("_full_registry_wall_sec")
     # Trained-index tier total (r10 verdict #8): summed from the tier's
     # single-run sweep walls — one number, graded round-over-round like

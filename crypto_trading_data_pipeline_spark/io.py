@@ -170,10 +170,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _normalize_ntz(df)
 
 
-def read_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: read_table(spark, sf_dir, n) for n in (names or TABLES)}
-
-
 def events_between(
     spark: SparkSession,
     sf_dir: str,

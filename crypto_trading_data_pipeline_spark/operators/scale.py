@@ -184,15 +184,6 @@ def write_bucketed(
     w.format("parquet").saveAsTable(table)
 
 
-def distribute_by(df: DataFrame, *, cols: list[str], n: int | None = None) -> DataFrame:
-    """Co-locate rows by key before N same-key operations (joins/aggs reuse
-    one shuffle instead of shuffling per-op). Spark's repartition(key) —
-    the DataFrame-side equivalent of DISTRIBUTE BY / bucketed layout."""
-    return df.repartition(n, *[F.col(c) for c in cols]) if n else df.repartition(
-        *[F.col(c) for c in cols]
-    )
-
-
 def compact_files(
     spark,
     path: str,

@@ -16,10 +16,11 @@ baseline commit is extracted into .worktrees/ab_<sha> and the two trees run
 in the slot pattern head/baseline/baseline/head/head/baseline, a fresh JVM
 per slot, so drift in either direction lands on both. Each slot imports its
 own tree's engine package but runs THIS checkout's bench.py harness
-(warm_up, bench_streaming, _calibration_sec), so the trees differ in engine
-code only. A query run is timed as construct (the registry function
-building the DataFrame) plus action (the noop write); a slot keeps each
-query's fastest of --runs runs, and a tree its fastest across its slots.
+(warm_up, run_query, bench_streaming, _calibration_sec), so the trees
+differ in engine code only. bench.run_query times each query as construct
+(the registry function building the DataFrame) plus action (the noop
+write) and keeps its fastest of --runs runs; a tree keeps its fastest
+across its slots.
 
 The record (default SCALE_AB_<SET>_<sha>.json at the repo root, where
 bench.py's adjudication lookups read it) carries `set`, per-tree
@@ -40,7 +41,6 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PATTERN = ("head", "baseline", "baseline", "head", "head", "baseline")
@@ -55,10 +55,6 @@ def _git(*args: str) -> str:
     return subprocess.run(
         ["git", *args], cwd=REPO, capture_output=True, text=True, check=True
     ).stdout.strip()
-
-
-def _error_line(exc: Exception) -> str:
-    return f"{type(exc).__name__}: {(str(exc).splitlines() or [''])[0][:200]}"
 
 
 def checkout(sha: str) -> str:
@@ -111,19 +107,6 @@ def ab_record(slots: list[tuple[str, dict]], **meta) -> dict:
     return rec
 
 
-def _best_run(spark, fn, sf_dir: str, runs: int) -> dict:
-    best = None
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        t1 = time.perf_counter()
-        df.write.mode("overwrite").format("noop").save()
-        t2 = time.perf_counter()
-        if best is None or t2 - t0 < best[0]:
-            best = (t2 - t0, t1 - t0, t2 - t1)
-    return {k: round(v, 3) for k, v in zip(("total", "construct", "action"), best)}
-
-
 def child(tree: str, out: str, set_name: str, runs: str) -> None:
     """One slot: time `set_name` on `tree`'s engine with this checkout's
     bench.py harness, and write the slot record to `out`."""
@@ -166,23 +149,29 @@ def child(tree: str, out: str, set_name: str, runs: str) -> None:
                 "rows_per_sec": stats["streaming_rows_per_sec"],
             }
         except Exception as exc:  # noqa: BLE001 — the record shows the failure
-            errors[STREAM_DRAIN] = _error_line(exc)
+            errors[STREAM_DRAIN] = bench.error_line(exc)
     for name in names:
         if name not in registry:
             errors[name] = "not registered in this tree"
             continue
         fn = registry[name].fn
+        run = bench.run_query(spark, fn, sf_dir, int(runs))
+        if "error" in run:
+            errors[name] = run["error"]
+            continue
+        timed[name] = {k: run[k] for k in ("total", "construct", "action")}
+        if not plan_dir:
+            continue
+        buf = io.StringIO()
         try:
-            timed[name] = _best_run(spark, fn, sf_dir, int(runs))
-            if plan_dir:
-                buf = io.StringIO()
-                with contextlib.redirect_stdout(buf):
-                    fn(spark, sf_dir).explain(mode="formatted")
-                os.makedirs(plan_dir, exist_ok=True)
-                with open(os.path.join(plan_dir, f"{name}.txt"), "w") as f:
-                    f.write(buf.getvalue())
+            with contextlib.redirect_stdout(buf):
+                fn(spark, sf_dir).explain(mode="formatted")
         except Exception as exc:  # noqa: BLE001 — record and keep measuring
-            errors[name] = _error_line(exc)
+            errors[name] = bench.error_line(exc)
+            continue
+        os.makedirs(plan_dir, exist_ok=True)
+        with open(os.path.join(plan_dir, f"{name}.txt"), "w") as f:
+            f.write(buf.getvalue())
 
     record = {
         "tree": tree,

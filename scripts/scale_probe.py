@@ -5,12 +5,15 @@ counts, bucketed candidate generation, no broadcast of unbounded sides).
 This probe adds a measured point: synthesize a ~10x corpus by duplicating
 and perturbing the sf0.1 documents table, run the near-dup pipeline
 (q_minhash_sig -> q_lsh_pairs -> q_neardup_dedup) and q_tfidf at 1x and
-10x, and report wall time plus per-stage task-skew quantiles from the
-Spark status REST API. Near-linear wall growth + a stable max/median task
-ratio is the evidence that the blocking/sharding actually holds when the
-data grows, not just that the plan looks right.
+10x, and report wall time plus per-stage task-skew quantiles. Each query
+gets a warm run and a timed run through bench.run_query, and
+bench.stage_stats reads the timed run's stages (its job group's, every
+attempt) from the Spark status REST API. Near-linear wall growth + a
+stable max/median task ratio is the evidence that the blocking/sharding
+actually holds when the data grows, not just that the plan looks right.
 
 Usage: python scripts/scale_probe.py [--mult 10] [--out SCALE_PROBE.json]
+       [--only q_a,q_b [--skip-tpch] [--skip-events] [--keys-mult N]]
 """
 
 from __future__ import annotations
@@ -21,14 +24,18 @@ import os
 import shutil
 import sys
 import tempfile
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+import bench  # noqa: E402
 from crypto_trading_data_pipeline_spark.io import read_table  # noqa: E402
+from crypto_trading_data_pipeline_spark.queries import REGISTRY  # noqa: E402
+from crypto_trading_data_pipeline_spark.queries.dedup_advanced import (  # noqa: E402
+    _lsh_candidate_pairs,
+    semdedup_flags,
+)
 from crypto_trading_data_pipeline_spark.session import get_spark  # noqa: E402
 
 QUERIES = [
@@ -202,38 +209,20 @@ _TPCH_SPEC = {
 }
 
 
-def _semdedup_cluster_stats(spark, sf_dir: str) -> dict:
-    """Programmatic read of SemDeDup's cluster-skew CollectMetrics
-    (max/p99 cluster size, exact pairwise row count, cluster count) for
-    one corpus directory."""
+def _observed_counts(spark, build, sf_dir: str, table: str) -> dict:
+    """Programmatic read of an operator's CollectMetrics for one corpus
+    directory: `build(<table>, observation=obs)` drained into the noop sink,
+    every observed value as an int. Reads SemDeDup's cluster skew (max/p99
+    cluster size, exact pairwise row count, cluster count) and the
+    banded-LSH bucket cap (truncated_buckets, max uncapped bucket size —
+    the truncation counter the 30x/100x near-dup probe lines record, r12
+    verdict #4)."""
     from pyspark.sql import Observation
 
-    from crypto_trading_data_pipeline_spark.queries.dedup_advanced import (
-        semdedup_flags,
-    )
-
     obs = Observation()
-    semdedup_flags(
-        read_table(spark, sf_dir, "embeddings"), observation=obs
-    ).write.mode("overwrite").format("noop").save()
-    return {k: int(v) for k, v in obs.get.items()}
-
-
-def _lsh_bucket_cap_stats(spark, sf_dir: str) -> dict:
-    """Programmatic read of the banded-LSH bucket-cap CollectMetrics
-    (truncated_buckets, max uncapped bucket size) for one corpus directory
-    — the truncation counter the 30x/100x near-dup probe lines record
-    (r12 verdict #4)."""
-    from pyspark.sql import Observation
-
-    from crypto_trading_data_pipeline_spark.queries.dedup_advanced import (
-        _lsh_candidate_pairs,
-    )
-
-    obs = Observation()
-    _lsh_candidate_pairs(
-        read_table(spark, sf_dir, "documents"), observation=obs
-    ).write.mode("overwrite").format("noop").save()
+    build(read_table(spark, sf_dir, table), observation=obs).write.mode(
+        "overwrite"
+    ).format("noop").save()
     return {k: int(v) for k, v in obs.get.items()}
 
 
@@ -404,48 +393,6 @@ def synthesize_events(spark, src_dir: str, dst_dir: str, mult: int) -> None:
     out.write.mode("overwrite").parquet(os.path.join(dst_dir, "events.parquet"))
 
 
-def _stage_task_stats(spark, stage_ids):
-    """Max task duration and max/median skew ratio over the given stages,
-    via the status REST API (local-mode UI). Returns {} when the UI is off."""
-    try:
-        base = spark.sparkContext.uiWebUrl
-        app_id = spark.sparkContext.applicationId
-        if not base:
-            return {}
-        worst = {"max_task_sec": 0.0, "max_over_median": 0.0, "stage": None}
-        for sid in stage_ids:
-            url = f"{base}/api/v1/applications/{app_id}/stages/{sid}/0/taskSummary?quantiles=0.5,1.0"
-            try:
-                with urllib.request.urlopen(url, timeout=10) as r:
-                    q = json.load(r)
-            except Exception:
-                continue  # skipped/tiny stages have no summary
-            med, mx = (v / 1000.0 for v in q["duration"])
-            if mx > worst["max_task_sec"]:
-                worst.update(
-                    max_task_sec=round(mx, 3),
-                    max_over_median=round(mx / med, 2) if med > 0 else None,
-                    stage=sid,
-                )
-        return worst
-    except Exception:
-        return {}
-
-
-def _all_stage_ids(spark):
-    """Completed stage ids from the status REST API (the py4j StatusTracker
-    only exposes ACTIVE stages). Empty when the UI is disabled."""
-    try:
-        base = spark.sparkContext.uiWebUrl
-        app_id = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app_id}/stages", timeout=10
-        ) as r:
-            return {s["stageId"] for s in json.load(r)}
-    except Exception:
-        return set()
-
-
 def _workload_stats(spark, name: str, sf_dir: str) -> dict | None:
     """TRUE-WORKLOAD metric for the >=10x probe-tail queries (r10 verdict
     #5): their wall ratios are claimed to track distinct pair/n-gram
@@ -500,18 +447,25 @@ def _workload_stats(spark, name: str, sf_dir: str) -> dict | None:
     return {"distinct": int(row["distinct"]), "occurrences": int(row["occurrences"])}
 
 
-def run_one(spark, name: str, sf_dir: str) -> dict:
-    from crypto_trading_data_pipeline_spark.queries import REGISTRY
-
+def probe_query(spark, name: str, sf_dir: str) -> dict:
+    """A warm run (codegen, parquet footers), then one timed run, both
+    through bench.run_query: the timed run's wall and its slowest task over
+    the stages its job group ran, with that task's max/median ratio."""
     fn = REGISTRY[name].fn
-    # Warm run: codegen + parquet footers, so the measured run is engine cost.
-    fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-    before = _all_stage_ids(spark)
-    t0 = time.perf_counter()
-    fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-    wall = time.perf_counter() - t0
-    new_stages = sorted(_all_stage_ids(spark) - before)
-    return {"wall_sec": round(wall, 3), **_stage_task_stats(spark, new_stages)}
+    bench.run_query(spark, fn, sf_dir, 1)
+    run = bench.run_query(spark, fn, sf_dir, 1)
+    if "error" in run:
+        raise RuntimeError(f"{name}: {run['error']}")
+    worst = {"max_task_sec": 0.0, "max_over_median": 0.0, "stage": None}
+    for sid, st in bench.stage_stats(spark, run["stages"]).items():
+        mx, med = st["task_sec_max"], st["task_sec_p50"]
+        if mx is not None and mx > worst["max_task_sec"]:
+            worst.update(
+                max_task_sec=mx,
+                max_over_median=round(mx / med, 2) if med > 0 else None,
+                stage=sid,
+            )
+    return {"wall_sec": run["total"], **worst}
 
 
 def synthesize_keys(spark, src_dir: str, dst_dir: str, kmult: int) -> None:
@@ -552,7 +506,6 @@ def keys_probe(spark, sf_dir: str, kmult: int, names: list[str], out: str | None
     """Constant-rows / keys x kmult probe with a full Spark-vs-DuckDB
     parity check on the synthetic corpus (the hashes-stay-green half of
     the claim)."""
-    from crypto_trading_data_pipeline_spark.queries import REGISTRY
     from tests.oracle_util import compare_query
 
     keys_dir = tempfile.mkdtemp(prefix="ctdp_keys_")
@@ -572,10 +525,10 @@ def keys_probe(spark, sf_dir: str, kmult: int, names: list[str], out: str | None
             # kN second inside one warm session let session-level JIT/cache
             # warm-up flatter the kN wall. Alternating and taking each
             # side's best removes the ordering bias.
-            one = run_one(spark, name, sf_dir)
-            many = run_one(spark, name, keys_dir)
-            one2 = run_one(spark, name, sf_dir)
-            many2 = run_one(spark, name, keys_dir)
+            one = probe_query(spark, name, sf_dir)
+            many = probe_query(spark, name, keys_dir)
+            one2 = probe_query(spark, name, sf_dir)
+            many2 = probe_query(spark, name, keys_dir)
             if one2["wall_sec"] < one["wall_sec"]:
                 one = one2
             if many2["wall_sec"] < many["wall_sec"]:
@@ -604,7 +557,7 @@ def keys_probe(spark, sf_dir: str, kmult: int, names: list[str], out: str | None
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--mult", type=int, default=10)
-    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    ap.add_argument("--sf-dir", default=bench.data_dir())
     ap.add_argument("--out", default=None)
     ap.add_argument(
         "--only",
@@ -642,33 +595,21 @@ def main() -> None:
     )
     args = ap.parse_args()
 
+    # Every cheap guard (flag combinations, a typo, a mult mismatch) runs
+    # before the expensive xmult synthesis, so a refused run costs seconds.
+    if (args.keys_mult or args.skip_tpch or args.skip_events) and not args.only:
+        raise SystemExit("--keys-mult/--skip-tpch/--skip-events require --only")
+    names = QUERIES if not args.only else [n.strip() for n in args.only.split(",") if n.strip()]
+    unknown = [n for n in names if n not in REGISTRY]
+    if unknown:
+        raise SystemExit(f"--only names not in REGISTRY: {unknown}")
+
     spark = get_spark(app_name="ctdp-scale-probe")
     spark.sparkContext.setLogLevel("WARN")
-
     if args.keys_mult:
-        if not args.only:
-            raise SystemExit("--keys-mult requires --only <query,...>")
-        knames = [n.strip() for n in args.only.split(",") if n.strip()]
-        from crypto_trading_data_pipeline_spark.queries import REGISTRY
-
-        unknown = [n for n in knames if n not in REGISTRY]
-        if unknown:
-            raise SystemExit(f"--only names not in REGISTRY: {unknown}")
-        keys_probe(spark, args.sf_dir, args.keys_mult, knames, args.out)
+        keys_probe(spark, args.sf_dir, args.keys_mult, names, args.out)
         return
 
-    names = QUERIES if not args.only else [n.strip() for n in args.only.split(",") if n.strip()]
-    if args.only:
-        # Fail in milliseconds on a typo, not with a KeyError after the
-        # expensive xmult synthesis has already run.
-        from crypto_trading_data_pipeline_spark.queries import REGISTRY
-
-        unknown = [n for n in names if n not in REGISTRY]
-        if unknown:
-            raise SystemExit(f"--only names not in REGISTRY: {unknown}")
-
-    # Both cheap guards (typo above, mult mismatch here) run BEFORE the
-    # expensive xmult synthesis, so a refused run costs milliseconds.
     prior = None
     if args.only and args.out and os.path.exists(args.out):
         with open(args.out) as f:
@@ -686,8 +627,6 @@ def main() -> None:
     try:
         n1 = read_table(spark, args.sf_dir, "documents").count()
         n10 = synthesize(spark, args.sf_dir, big_dir, args.mult)
-        if (args.skip_tpch or args.skip_events) and not args.only:
-            raise SystemExit("--skip-tpch/--skip-events require --only")
         if not args.skip_tpch:
             synthesize_tpch(spark, args.sf_dir, big_dir, args.mult)
         if not args.skip_events:
@@ -696,8 +635,8 @@ def main() -> None:
         if prior is not None and isinstance(prior.get("queries"), dict):
             report["queries"].update(prior["queries"])
         for name in names:
-            one = run_one(spark, name, args.sf_dir)
-            ten = run_one(spark, name, big_dir)
+            one = probe_query(spark, name, args.sf_dir)
+            ten = probe_query(spark, name, big_dir)
             ratio = round(ten["wall_sec"] / one["wall_sec"], 2) if one["wall_sec"] else None
             entry = {"x1": one, f"x{args.mult}": ten, "wall_ratio": ratio}
             if name == "q_semdedup":
@@ -709,20 +648,18 @@ def main() -> None:
                 # the operator's own CollectMetrics skew observation for
                 # both corpora alongside the walls.
                 entry["cluster_stats"] = {
-                    "x1": _semdedup_cluster_stats(spark, args.sf_dir),
-                    f"x{args.mult}": _semdedup_cluster_stats(spark, big_dir),
+                    "x1": _observed_counts(spark, semdedup_flags, args.sf_dir, "embeddings"),
+                    f"x{args.mult}": _observed_counts(spark, semdedup_flags, big_dir, "embeddings"),
                 }
             if name == "q_semdedup_recall":
                 # The QUALITY number itself rides the probe record (r12
                 # verdict #2): measured removed-set agreement of capped vs
                 # uncapped greedy dedup per scope, at both scales — the
                 # result is a handful of scope rows, cheap to collect.
-                from crypto_trading_data_pipeline_spark.queries import REGISTRY as _R
-
                 entry["recall_rows"] = {
-                    "x1": [r.asDict() for r in _R[name].fn(spark, args.sf_dir).collect()],
+                    "x1": [r.asDict() for r in REGISTRY[name].fn(spark, args.sf_dir).collect()],
                     f"x{args.mult}": [
-                        r.asDict() for r in _R[name].fn(spark, big_dir).collect()
+                        r.asDict() for r in REGISTRY[name].fn(spark, big_dir).collect()
                     ],
                 }
             if name in ("q_lsh_pairs", "q_neardup_dedup", "q_neardup_threshold_sweep"):
@@ -731,8 +668,10 @@ def main() -> None:
                 # capped candidate volume, truncated buckets) — the same
                 # observability contract as SemDeDup's cluster_stats.
                 entry["bucket_stats"] = {
-                    "x1": _lsh_bucket_cap_stats(spark, args.sf_dir),
-                    f"x{args.mult}": _lsh_bucket_cap_stats(spark, big_dir),
+                    "x1": _observed_counts(spark, _lsh_candidate_pairs, args.sf_dir, "documents"),
+                    f"x{args.mult}": _observed_counts(
+                        spark, _lsh_candidate_pairs, big_dir, "documents"
+                    ),
                 }
             ws1 = _workload_stats(spark, name, args.sf_dir)
             if ws1 is not None:

@@ -8,15 +8,18 @@ walls unless you already suspect the query. r10 found q_simhash_pairs'
 |bucket|^2 pair explode running in a single 3-second task exactly this
 way (and q_entity_match / q_bootstrap_ci hit the same class in r7/r8).
 
-This script runs every registered query once (warm) at the given sf and
-flags any stage that ran with EXACTLY ONE task for longer than
---min-sec. One-task stages are legitimate for the documented bounded
-scalar passes (1-row aggregates, collect-limit finalizers) — those
-finish in milliseconds and sit under the threshold; anything slower is
-either a genuine serialization bug or a bounded pass that outgrew its
-bound, and both deserve eyes.
+This script runs every registered query twice through bench.run_query (a
+warm run, then the audited run) at the given sf. bench.stage_stats reads
+the audited run's stages, the ones its job group ran (construction-time
+jobs included), one status-API call per stage. Any stage that ran with
+EXACTLY ONE task for longer than --min-sec is flagged. One-task stages are
+legitimate for the documented bounded scalar passes (1-row aggregates,
+collect-limit finalizers) — those finish in milliseconds and sit under
+the threshold; anything slower is either a genuine serialization bug or a
+bounded pass that outgrew its bound, and both deserve eyes.
 
 Usage: python scripts/serialization_audit.py [--sf-dir DIR] [--min-sec 0.4]
+       [--only q_a,q_b]
 Prints one JSON line: {"flagged": {query: [{stage, task_sec}]}, ...}.
 """
 
@@ -27,57 +30,16 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from crypto_trading_data_pipeline_spark.session import get_spark  # noqa: E402
-
-
-def _stages_detail(spark, stage_ids):
-    """[(stage_id, n_tasks, max_task_sec)] via the status REST API."""
-    out = []
-    try:
-        base = spark.sparkContext.uiWebUrl
-        app_id = spark.sparkContext.applicationId
-        if not base:
-            return out
-        for sid in stage_ids:
-            url = f"{base}/api/v1/applications/{app_id}/stages/{sid}"
-            try:
-                with urllib.request.urlopen(url, timeout=10) as r:
-                    attempts = json.load(r)
-            except Exception:
-                continue
-            for a in attempts:
-                n = a.get("numCompleteTasks", 0)
-                # executorRunTime is the stage's total task ms; with one
-                # task it IS that task's duration.
-                ms = a.get("executorRunTime", 0)
-                out.append((sid, n, round(ms / 1000.0, 3)))
-    except Exception:
-        pass
-    return out
-
-
-def _all_stage_ids(spark):
-    try:
-        base = spark.sparkContext.uiWebUrl
-        app_id = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app_id}/stages", timeout=10
-        ) as r:
-            return {s["stageId"] for s in json.load(r)}
-    except Exception:
-        return set()
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument(
-        "--sf-dir",
-        default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
-    )
+    ap.add_argument("--sf-dir", default=bench.data_dir())
     ap.add_argument("--min-sec", type=float, default=0.4)
     ap.add_argument("--only", default=None, help="comma-separated query names")
     args = ap.parse_args()
@@ -106,18 +68,17 @@ def main() -> None:
     t0 = time.perf_counter()
     for name in names:
         fn = REGISTRY[name].fn
-        try:
-            fn(spark, args.sf_dir).write.mode("overwrite").format("noop").save()
-            before = _all_stage_ids(spark)
-            fn(spark, args.sf_dir).write.mode("overwrite").format("noop").save()
-            new = sorted(_all_stage_ids(spark) - before)
-        except Exception as exc:  # noqa: BLE001 — record and keep auditing
-            errors[name] = f"{type(exc).__name__}: {(str(exc).splitlines() or [''])[0][:160]}"
+        bench.run_query(spark, fn, args.sf_dir, 1)
+        run = bench.run_query(spark, fn, args.sf_dir, 1)
+        if "error" in run:
+            errors[name] = run["error"]
             continue
+        # executor_run_sec is the stage's total task time; with one task it
+        # IS that task's duration.
         hits = [
-            {"stage": sid, "task_sec": sec}
-            for sid, n, sec in _stages_detail(spark, new)
-            if n == 1 and sec >= args.min_sec
+            {"stage": sid, "task_sec": st["executor_run_sec"]}
+            for sid, st in bench.stage_stats(spark, run["stages"]).items()
+            if st["tasks"] == 1 and st["executor_run_sec"] >= args.min_sec
         ]
         if hits:
             flagged[name] = hits

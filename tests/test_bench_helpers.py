@@ -1,7 +1,8 @@
-"""Pure-driver tests for bench.py's A/B self-adjudication lookups (r12
-verdict #3), the records scripts/ab.py writes for them, the one-string SQL
-literal renderer (r12 verdict #7) and the scripts' importability — no
-SparkSession needed."""
+"""Tests for bench.py's harness helpers: the query runner and stage reader
+every harness times through (on the session `spark` fixture), the
+scale-factor parse, the A/B self-adjudication lookups (r12 verdict #3) and
+the records scripts/ab.py writes for them, the one-string SQL literal
+renderer (r12 verdict #7), and the scripts' importability and CLIs."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import importlib.util
 import json
 import os
 import pathlib
+import re
 import subprocess
 import sys
 
@@ -48,6 +50,57 @@ def test_render_sql_literal_rejects_nonfinite_and_bad_names():
         render_sql_literal({"not an ident!": 1})
     with pytest.raises(TypeError):
         render_sql_literal(object())
+
+
+def test_scale_factor_reads_the_basename():
+    import bench
+
+    assert bench.scale_factor("/data/sf0.1") == 0.1
+    assert bench.scale_factor("/data/sf0.001/") == 0.001
+    # Not exactly sf<number>: no scale factor, so no previous round matches.
+    assert bench.scale_factor("/data/sf0.1_x10") == -1.0
+    assert bench.scale_factor("/home/sfuser/data") == -1.0
+
+
+def test_run_query_splits_runs_and_reads_construction_stages(spark):
+    import bench
+
+    construct_stages = []
+
+    def checkpointed(spark, _sf_dir):
+        # The eager checkpoint runs a job while the DataFrame is built.
+        df = spark.range(2000, numPartitions=4).localCheckpoint(eager=True)
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup(sc.getLocalProperty("spark.jobGroup.id"))
+        construct_stages.append({s for j in jobs for s in tracker.getJobInfo(j).stageIds})
+        return df.groupBy((df.id % 7).alias("k")).count()
+
+    r = bench.run_query(spark, checkpointed, "unused", 2)
+    assert "error" not in r
+    assert abs(r["construct"] + r["action"] - r["total"]) <= 0.0015
+    assert len(r["runs"]) == 2 and r["total"] == min(r["runs"])
+    fastest = r["runs"].index(r["total"])
+    assert construct_stages[fastest] and construct_stages[fastest] <= set(r["stages"])
+    # The checkpoint job alone is not the whole run: the action's stages too.
+    assert set(r["stages"]) > construct_stages[fastest]
+    # The caller's job group is restored.
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+    stats = bench.stage_stats(spark, r["stages"])
+    assert set(stats) == set(r["stages"])
+    assert all(isinstance(s["tasks"], int) for s in stats.values())
+    assert sum(s["tasks"] for s in stats.values()) > 0
+
+
+def test_run_query_records_an_empty_message_failure(spark):
+    import bench
+
+    def broken(_spark, _sf_dir):
+        raise ValueError()
+
+    r = bench.run_query(spark, broken, "unused", 3)
+    assert r == {"error": "ValueError: "}
 
 
 def _write(dirpath, name, rec):
@@ -131,13 +184,18 @@ def test_script_imports(stem):
     _load_script(stem)
 
 
-def test_ab_help_exits_zero():
+@pytest.mark.parametrize(
+    "stem", sorted(p.stem for p in SCRIPTS.glob("*.py") if "argparse" in p.read_text())
+)
+def test_script_help_exits_zero(stem):
     r = subprocess.run(
-        [sys.executable, str(SCRIPTS / "ab.py"), "--help"],
+        [sys.executable, str(SCRIPTS / f"{stem}.py"), "--help"],
         capture_output=True, text=True, timeout=120,
     )
     assert r.returncode == 0, r.stderr
-    assert "--runs" in r.stdout and "--child" not in r.stdout
+    assert r.stdout.startswith("usage:") and "--child" not in r.stdout
+    flags = re.findall(r'add_argument\(\s*"(--[\w-]+)"', (SCRIPTS / f"{stem}.py").read_text())
+    assert flags and all(f in r.stdout for f in flags)
 
 
 def _slot(calib, **walls):
