@@ -184,6 +184,40 @@ def write_bucketed(
     w.format("parquet").saveAsTable(table)
 
 
+def recover_swap(path: str) -> None:
+    """Finish or undo a ``swap_dir`` a crash cut short. A run that died
+    between rename-aside and move-in leaves the table at <path>.old and
+    nothing at <path>: restore it. A leftover .old next to an intact table
+    is completed-swap garbage: clear it, or the next rename-aside raises on
+    the non-empty directory."""
+    import os
+    import shutil
+
+    old = path + ".old"
+    if os.path.exists(old):
+        if os.path.exists(path):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, path)
+
+
+def swap_dir(staging: str, path: str) -> None:
+    """Replace directory ``path`` with ``staging`` by rename-aside: the
+    table moves to <path>.old BEFORE the new one moves in, so a crash at
+    any point leaves a table ``recover_swap`` can restore (rmtree-then-move
+    would lose it in between). ``staging`` must sit beside ``path`` so both
+    moves are same-filesystem renames."""
+    import os
+    import shutil
+
+    old = path + ".old"
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(staging, path)
+    if os.path.exists(old):
+        shutil.rmtree(old)
+
+
 def compact_files(
     spark,
     path: str,
@@ -209,22 +243,10 @@ def compact_files(
     """
     import math
     import os
-    import shutil
     import tempfile
 
-    # Crash recovery BEFORE touching anything (same protocol as
-    # streaming.sinks.ParquetUpsertSink._recover, ADVICE r2): a prior run
-    # that died between rename-aside and move-in leaves the table at
-    # <path>.old and nothing at <path> — restore it; a leftover .old next
-    # to an intact table is completed-swap garbage — clear it, or the
-    # rename below raises on the non-empty directory.
-    old = path + ".old"
-    if os.path.exists(old):
-        if os.path.exists(path):
-            shutil.rmtree(old)
-        else:
-            os.rename(old, path)
-
+    # Crash recovery BEFORE touching anything (ADVICE r2).
+    recover_swap(path)
     total = sum(
         os.path.getsize(os.path.join(root, f))
         for root, _, fs in os.walk(path)
@@ -240,9 +262,7 @@ def compact_files(
     else:
         out = df.coalesce(n_out)
     out.write.mode("overwrite").parquet(staging)
-    os.rename(path, old)
-    shutil.move(staging, path)
-    shutil.rmtree(old)
+    swap_dir(staging, path)
     return n_out
 
 

@@ -12,8 +12,10 @@ aggregation is proven on the batch twin by the DuckDB oracle
 (watermark lateness, update mode, idempotent upsert).
 
 Scale posture (100 TB/day firehose):
-- state store: RocksDB provider (conf, not code) keeps per-executor state
-  off-heap and incremental-checkpointable;
+- state store: the default HDFS-backed provider. ``ROCKSDB_STATE_CONF``
+  moves per-executor state off-heap when it outgrows the heap; nothing
+  applies it by default, and on the benchmark's candle stream it was no
+  faster;
 - watermark bounds state: 2 min lateness x |symbols| x 1-min windows;
 - the agg is partial+final, so the shuffle carries one row per
   (symbol, window) per input partition per trigger.
@@ -27,8 +29,9 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.candles import ohlcv
 
-#: RocksDB state store — the at-scale default (set on the session for
-#: production streaming jobs; harmless for batch).
+#: RocksDB state store, for state that outgrows the executor heap. Opt-in:
+#: set it on the session before the query's first start (a checkpoint
+#: keeps the provider it was created with); harmless for batch.
 ROCKSDB_STATE_CONF = {
     "spark.sql.streaming.stateStore.providerClass": (
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"

@@ -201,6 +201,108 @@ def test_parquet_upsert_recovers_from_mid_swap_crash(spark, tmp_path):
     assert got == {(1, 10), (2, 30)}
 
 
+def _data_rows(path):
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(os.path.join(path, f)).num_rows
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
+
+
+def _crash(*_args):
+    raise RuntimeError("simulated crash")
+
+
+def test_parquet_upsert_recovers_from_unsettled_landing(spark, tmp_path, monkeypatch):
+    """A re-delivered epoch that dies after its files land but before the
+    first delivery's files go leaves both on disk; the next read() (or
+    call) finishes the landing, keeping one copy of the epoch."""
+    path = str(tmp_path / "serving")
+    sink = ParquetUpsertSink(path, keys=["k"], order_col="ord")
+    sink(spark.createDataFrame([(1, 10), (2, 20)], ["k", "ord"]), epoch_id=0)
+    batch = spark.createDataFrame([(2, 30), (3, 30)], ["k", "ord"])
+    sink(batch, epoch_id=1)
+    settled = _data_rows(path)
+    monkeypatch.setattr(sink, "_drop_superseded", _crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        sink(batch, epoch_id=1)
+    monkeypatch.undo()
+    assert _data_rows(path) == settled + 2
+    got = {(r.k, r.ord) for r in sink.read(spark).collect()}
+    assert got == {(1, 10), (2, 30), (3, 30)}
+    assert _data_rows(path) == settled
+    assert not [f for f in os.listdir(path) if f.startswith("_landing")]
+    sink(spark.createDataFrame([(1, 40)], ["k", "ord"]), epoch_id=2)
+    got = {(r.k, r.ord) for r in sink.read(spark).collect()}
+    assert got == {(1, 40), (2, 30), (3, 30)}
+
+
+def test_parquet_upsert_recovers_from_mid_compaction_crash(spark, tmp_path, monkeypatch):
+    """A fold that dies between its rename-aside and move-in leaves only
+    <path>.old; read() restores it with the epoch that landed before the
+    fold, and the next call folds again and clears the dead fold's
+    staging directory."""
+    from crypto_trading_data_pipeline_spark.streaming import sinks
+
+    path = str(tmp_path / "serving")
+    sink = ParquetUpsertSink(path, keys=["k"], order_col="ord")
+    sink(spark.createDataFrame([(1, 10), (2, 20)], ["k", "ord"]), epoch_id=0)
+
+    def rename_aside_then_crash(staging, target):
+        os.rename(target, target + ".old")
+        _crash()
+
+    monkeypatch.setattr(sinks, "swap_dir", rename_aside_then_crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        sink(spark.createDataFrame([(2, 30)], ["k", "ord"]), epoch_id=1)
+    monkeypatch.undo()
+    assert not os.path.exists(path)
+    got = {(r.k, r.ord) for r in sink.read(spark).collect()}
+    assert got == {(1, 10), (2, 30)}
+    assert os.path.exists(path) and not os.path.exists(path + ".old")
+    assert _data_rows(path) == 3  # epoch 0's two rows, epoch 1's one
+    sink(spark.createDataFrame([(3, 30)], ["k", "ord"]), epoch_id=2)
+    assert not [f for f in os.listdir(tmp_path) if ".staging-" in f]
+    assert _data_rows(path) == 3  # the base (keys 1, 2) plus epoch 2
+    got = {(r.k, r.ord) for r in sink.read(spark).collect()}
+    assert got == {(1, 10), (2, 30), (3, 30)}
+
+
+def test_freshness_read_prunes_below_the_merge(spark, tmp_path):
+    """fresh_row_count over the merged serving table filters window_start
+    below the merge Window (legal: window_start is a merge key), down to
+    the parquet scan, so stale rows never reach the merge shuffle."""
+    path = str(tmp_path / "serving")
+    sink = ParquetUpsertSink(path, keys=["symbol", "window_start"], order_col="n_trades")
+    base = datetime(2026, 1, 1, 12, 0, 0)
+    cols = ["symbol", "window_start", "n_trades"]
+    sink(spark.createDataFrame([("BTC", base - timedelta(minutes=m), 1) for m in range(10)], cols), 0)
+    sink(spark.createDataFrame([("BTC", base, 2)], cols), 1)
+    served = sink.read(spark)
+    plans = []
+    cls = type(served)
+    count = cls.count
+
+    def spy(df):
+        plans.append(df._jdf.queryExecution())
+        return count(df)
+
+    cls.count = spy
+    try:
+        assert fresh_row_count(served, now=base) == 4
+    finally:
+        cls.count = count
+    (qe,) = plans
+    tree = qe.optimizedPlan().toString().splitlines()
+    window = next(i for i, line in enumerate(tree) if "Window [" in line)
+    assert any("Filter" in line and "window_start" in line and ">=" in line
+               for line in tree[window + 1:]), "\n".join(tree)
+    assert not any("window_start" in line and ">=" in line for line in tree[:window])
+    assert "GreaterThanOrEqual(window_start" in qe.executedPlan().toString()
+
+
 def test_connected_components_strict_raises_on_nonconvergence(spark):
     # A 7-node path graph has diameter 6 > max_iter=2 rounds.
     edges = spark.createDataFrame([(i, i + 1) for i in range(6)], ["src", "dst"])

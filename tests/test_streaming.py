@@ -139,6 +139,92 @@ def test_upsert_sink_idempotent_replay(spark, tmp_path):
     assert rows == [("a", 1), ("b", 2)]
 
 
+def _file_rows(path):
+    """Rows per data file of a parquet sink table, from the footers."""
+    import pyarrow.parquet as pq
+
+    return {
+        f: pq.read_metadata(os.path.join(path, f)).num_rows
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    }
+
+
+@pytest.mark.parametrize("n_keys", [10, 10_000])
+def test_upsert_sink_writes_only_the_batch(spark, tmp_path, n_keys):
+    """The files a call adds hold exactly its batch's rows, however many
+    keys the table already holds: no whole-table rewrite per trigger."""
+    path = str(tmp_path / "t")
+    sink = ParquetUpsertSink(path, keys=["k"], order_col="ord")
+    sink(spark.range(n_keys).selectExpr("id AS k", "1L AS v", "1.0D AS ord"), 0)
+    one = spark.createDataFrame([(0, 2, 2.0)], ["k", "v", "ord"]).coalesce(1)
+    sink(one, 1)  # folds epoch 0 into the base
+    before = _file_rows(path)
+    batch = spark.createDataFrame([(1, 3, 3.0), (n_keys, 3, 1.0)], ["k", "v", "ord"])
+    sink(batch.coalesce(1), 2)
+    after = _file_rows(path)
+    assert set(before) <= set(after)
+    assert sum(after[f] for f in set(after) - set(before)) == 2
+    got = {r.k: r.v for r in sink.read(spark).collect()}
+    assert len(got) == n_keys + 1
+    assert (got[0], got[1], got[2], got[n_keys]) == (2, 3, 1, 3)
+
+
+def test_upsert_sink_replay_replaces_its_own_files(spark, tmp_path):
+    """A re-delivered epoch replaces the files of its first delivery, so
+    the file-level row count does not grow; at equal order a later epoch
+    beats an earlier one; an epoch older than the table's is refused."""
+    path = str(tmp_path / "t")
+    sink = ParquetUpsertSink(path, keys=["k"], order_col="ord")
+    sink(spark.createDataFrame([("a", 1, 1.0), ("b", 1, 1.0)], ["k", "v", "ord"]), 0)
+    batch = spark.createDataFrame([("a", 2, 1.0), ("c", 2, 1.0)], ["k", "v", "ord"])
+    sink(batch, 1)
+    rows = sum(_file_rows(path).values())
+    sink(batch, 1)
+    assert sum(_file_rows(path).values()) == rows
+    got = sorted((r.k, r.v) for r in sink.read(spark).collect())
+    assert got == [("a", 2), ("b", 1), ("c", 2)]
+    with pytest.raises(ValueError, match="another checkpoint"):
+        sink(batch, 0)
+
+
+@pytest.mark.parametrize("kind", ["parquet", "jdbc"])
+def test_sink_runs_batch_plan_once(spark, tmp_path, monkeypatch, kind):
+    """One sink call runs the batch's plan once: a Python UDF counts the
+    rows it sees through an accumulator. The aggregate above it, filtered
+    on its value, consumes the whole input even under ``isEmpty``'s
+    LIMIT 1, as the candle query's state store does. The JDBC upload is a
+    noop-format save, which still runs the plan."""
+    from pyspark.sql import DataFrameWriter
+
+    from crypto_trading_data_pipeline_spark.streaming.sinks import JdbcUpsertSink
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def tick(_k):
+        seen.add(1)
+        return True
+
+    batch = (
+        spark.range(50, numPartitions=1)
+        .filter(F.udf(tick, "boolean")("id"))
+        .groupBy(F.col("id").alias("k"))
+        .agg(F.count("*").alias("ord"))
+        .filter(F.col("ord") > 0)
+    )
+    if kind == "jdbc":
+        save = DataFrameWriter.save
+        monkeypatch.setattr(DataFrameWriter, "save", lambda w: save(w.format("noop")))
+        sink = JdbcUpsertSink(
+            host="unused", dbname="unused", user="u", password="p",
+            table="t", keys=["k"], executor=lambda *stmts: None,
+        )
+    else:
+        sink = ParquetUpsertSink(str(tmp_path / "t"), keys=["k"], order_col="ord")
+    sink(batch, 0)
+    assert seen.value == 50
+
+
 def test_running_trade_stats_stateful(spark, tmp_path):
     """applyInPandasWithState: cumulative per-key stats must carry state
     ACROSS micro-batches (a windowed agg resets; this must not)."""
