@@ -18,7 +18,11 @@ Scale posture (100 TB/day firehose):
   faster;
 - watermark bounds state: 2 min lateness x |symbols| x 1-min windows;
 - the agg is partial+final, so the shuffle carries one row per
-  (symbol, window) per input partition per trigger.
+  (symbol, window) per input partition per trigger;
+- the update-mode output per trigger is at most the state rows, so the
+  parquet sink collects each batch to the driver (``toArrow``, the plan's
+  one execution) and writes it as one file with pyarrow; the watermark
+  bound above is what bounds that driver memory.
 """
 
 from __future__ import annotations

@@ -13,11 +13,13 @@ update and commit, watermark eviction), so an ``isEmpty()`` guard in front
 of an unpersisted write would run it twice.
 
 - ``ParquetUpsertSink`` is the file-based twin used in tests and the
-  benchmark. A call writes only its batch, as that epoch's delta files in
-  a flat table directory; the empty-batch guard reads the staged files'
-  footers instead of running a job. ``read`` merges last-wins by key
-  (``merge_last_wins``), and deltas fold into one base once their bytes
-  reach the base's.
+  benchmark. A call collects its batch to the driver as one Arrow table
+  (the plan's one execution) and writes it with pyarrow as that epoch's
+  single delta file in a flat table directory; a table of 0 rows returns
+  before any file exists (the empty-batch guard). Only a fold runs a
+  Spark file-write job. ``read`` merges last-wins by key
+  (``merge_last_wins``), and deltas fold into one base once they hold as
+  many rows as the base.
 - ``JdbcUpsertSink`` reproduces staging + merge for any JDBC database
   (server-side MERGE, driver-side connection) — import-gated since test
   containers carry no JDBC driver or server. The batch is persisted across
@@ -46,6 +48,8 @@ EPOCH_COL = "__epoch"
 _DATA_FILE = re.compile(r"(base|delta)-(\d+)-([0-9a-f]+)-.+\.parquet")
 #: A delta attempt renamed into the table but not yet settled.
 _LANDING = re.compile(r"_landing-(\d+)-([0-9a-f]+)")
+#: The footer key Spark reads a parquet file's row schema from.
+_SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
 
 
 def merge_last_wins(
@@ -87,20 +91,30 @@ class ParquetUpsertSink:
     ``path``, each row carrying its epoch in ``EPOCH_COL``; ``token`` names
     one write attempt.
 
-    A call writes the batch once, into a staging directory beside the
-    table. If the staged footers hold no rows the directory is dropped
-    (the empty-batch guard). Otherwise it is renamed into the table as
-    ``_landing-{epoch}-{token}``, the commit point; its files then move to
-    the table root, and the files of any earlier attempt at the same epoch
-    are removed, so a re-delivered epoch replaces its own files. A crash
-    after the commit point is finished by ``_recover`` on the next call or
-    ``read``.
+    A call collects the batch once with ``toArrow()``. A batch of 0 rows
+    returns there, with no file and no staging directory (the empty-batch
+    guard). Otherwise pyarrow writes it as one ``part-00000.parquet`` in a
+    staging directory beside the table, with Spark's row schema in the
+    footer so a schema-inferring read gets the batch's types. The
+    directory is renamed into the table as ``_landing-{epoch}-{token}``,
+    the commit point; its file then moves to the table root, and the files
+    of any earlier attempt at the same epoch are removed, so a re-delivered
+    epoch replaces its own file. A crash after the commit point is
+    finished by ``_recover`` on the next call or ``read``.
 
-    Once the bytes of the deltas older than the call's epoch reach the
-    base's bytes, they are merged with the base into a new base, swapped in
-    by rename-aside (``operators.scale.swap_dir``). The newest epoch stays
-    a delta, so its re-delivery still finds its own files. Epoch ids must
-    not go backwards: one checkpoint per table.
+    Driver memory is bounded by one batch. For the candle query that is
+    the update-mode output, at most the state rows, which the watermark
+    bounds (lateness x symbols x windows); the reference sends every batch
+    to one Postgres the same way. A sink fed unbounded batches should be
+    the JDBC one.
+
+    Once the deltas older than the call's epoch hold as many rows as the
+    base (footer row counts), they are merged with the base into a new
+    base, swapped in by rename-aside (``operators.scale.swap_dir``), so a
+    merge-on-read scans under twice the base's rows plus the newest
+    batch. The newest epoch stays a delta, so its re-delivery still finds
+    its own file. Epoch ids must not go backwards: one checkpoint per
+    table.
     """
 
     def __init__(self, path: str, *, keys: list[str], order_col: str):
@@ -124,15 +138,18 @@ class ParquetUpsertSink:
                 f"epoch {epoch} is older than the table's epoch {latest}: "
                 f"{self.path} belongs to another checkpoint"
             )
+        staged = batch.withColumn(EPOCH_COL, F.lit(epoch).cast("bigint"))
+        rows = staged.toArrow()  # the batch plan's one execution
+        self._schema = staged.schema
+        if not rows.num_rows:
+            return  # empty-batch guard (reference processor.py:117-119)
         token = uuid.uuid4().hex[:12]
         staging = self._staging(f"{epoch}-{token}")
-        staged = batch.withColumn(EPOCH_COL, F.lit(epoch).cast("bigint"))
-        staged.write.parquet(staging)
-        self._schema = staged.schema
-        parts = _parquet_parts(staging)
-        if not sum(pq.read_metadata(os.path.join(staging, f)).num_rows for f in parts):
-            shutil.rmtree(staging)  # empty-batch guard (reference processor.py:117-119)
-            return
+        os.makedirs(staging)
+        # Spark's row schema in the footer, so a read that infers the
+        # schema gets the batch's types (timestamp_ntz, not timestamp).
+        rows = rows.replace_schema_metadata({_SPARK_ROW_METADATA: self._schema.json()})
+        pq.write_table(rows, os.path.join(staging, "part-00000.parquet"))
         os.makedirs(self.path, exist_ok=True)
         landing = os.path.join(self.path, f"_landing-{epoch:012d}-{token}")
         os.rename(staging, landing)
@@ -172,11 +189,14 @@ class ParquetUpsertSink:
 
     def _fold(self, spark, epoch: int) -> None:
         """Merge the base and the deltas older than ``epoch`` into a new
-        base once the deltas' bytes reach the base's."""
+        base once the deltas hold as many rows as the base."""
+        import pyarrow.parquet as pq
+
         files = self._files()
         folded = [f for f in files if f.kind == "base" or f.epoch < epoch]
-        base = sum(os.path.getsize(f.path) for f in folded if f.kind == "base")
-        deltas = sum(os.path.getsize(f.path) for f in folded if f.kind == "delta")
+        counts = {f: pq.read_metadata(f.path).num_rows for f in folded}
+        base = sum(n for f, n in counts.items() if f.kind == "base")
+        deltas = sum(n for f, n in counts.items() if f.kind == "delta")
         if not deltas or deltas < base:
             return
         rows = self._reader(spark).parquet(*(f.path for f in folded))
@@ -209,8 +229,11 @@ class ParquetUpsertSink:
         return spark.read if self._schema is None else spark.read.schema(self._schema)
 
     def read(self, spark) -> DataFrame:
-        """The serving table: the base and deltas merged last-wins."""
+        """The serving table: the base and deltas merged last-wins. Empty,
+        with the batches' schema, while only empty batches have arrived."""
         self._recover()
+        if self._schema is not None and not self._files():
+            return spark.createDataFrame([], self._schema).drop(EPOCH_COL)
         rows = self._reader(spark).parquet(self.path)
         return merge_last_wins(
             None, rows, keys=self.keys, order_col=self.order_col

@@ -303,6 +303,62 @@ def test_freshness_read_prunes_below_the_merge(spark, tmp_path):
     assert "GreaterThanOrEqual(window_start" in qe.executedPlan().toString()
 
 
+def test_freshness_after_only_empty_batches_is_false(spark, tmp_path):
+    """A table that has only seen empty batches has no data file: read()
+    serves an empty frame of the batches' schema, so the freshness check
+    reports stale (the reference's count of 0) instead of crashing."""
+    from crypto_trading_data_pipeline_spark.monitor import freshness_ok
+
+    path = str(tmp_path / "serving")
+    sink = ParquetUpsertSink(path, keys=["symbol", "window_start"], order_col="n_trades")
+    cols = "symbol STRING, window_start TIMESTAMP_NTZ, n_trades BIGINT"
+    sink(spark.createDataFrame([], cols), 0)
+    sink(spark.createDataFrame([], cols), 1)
+    served = sink.read(spark)
+    assert served.dtypes == [("symbol", "string"), ("window_start", "timestamp_ntz"),
+                             ("n_trades", "bigint")]
+    assert not freshness_ok(served, now=datetime(2026, 1, 1, 12, 0, 0))
+
+
+def test_cold_read_keeps_the_batch_types(spark, tmp_path):
+    """A new sink instance, with no schema of its own, reads a table of a
+    Spark-written base and pyarrow-written deltas with the batch's exact
+    types. The deltas carry Spark's row schema in their footers; without
+    it the NTZ window_start would be inferred as TIMESTAMP."""
+    from decimal import Decimal
+
+    path = str(tmp_path / "serving")
+    keys = ["symbol", "window_start"]
+    schema = T.StructType([
+        T.StructField("symbol", T.StringType()),
+        T.StructField("window_start", T.TimestampNTZType()),
+        T.StructField("close_price", T.DecimalType(20, 8)),
+        T.StructField("n_trades", T.LongType()),
+    ])
+    base = datetime(2026, 1, 1, 12, 0, 0)
+    rows = [("BTC", base + timedelta(minutes=m), Decimal("1.5"), m) for m in range(4)]
+    writer = ParquetUpsertSink(path, keys=keys, order_col="n_trades")
+    writer(spark.createDataFrame(rows, schema), 0)
+    writer(spark.createDataFrame(rows[:1], schema), 1)  # folds epoch 0: Spark base
+    writer(spark.createDataFrame(rows[1:2], schema), 2)
+    files = os.listdir(path)
+    assert any(f.startswith("base-") for f in files)
+    deltas = [os.path.join(path, f) for f in files if f.startswith("delta-")]
+    assert len(deltas) == 2
+    infer = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    prior = spark.conf.get(infer)
+    spark.conf.set(infer, "false")
+    try:
+        for delta in deltas:
+            assert spark.read.parquet(delta).drop("__epoch").schema == schema, delta
+        served = ParquetUpsertSink(path, keys=keys, order_col="n_trades").read(spark)
+        assert served.dtypes == [("symbol", "string"), ("window_start", "timestamp_ntz"),
+                                 ("close_price", "decimal(20,8)"), ("n_trades", "bigint")]
+        assert served.count() == 4
+    finally:
+        spark.conf.set(infer, prior)
+
+
 def test_connected_components_strict_raises_on_nonconvergence(spark):
     # A 7-node path graph has diameter 6 > max_iter=2 rounds.
     edges = spark.createDataFrame([(i, i + 1) for i in range(6)], ["src", "dst"])

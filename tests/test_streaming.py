@@ -153,18 +153,24 @@ def _file_rows(path):
 @pytest.mark.parametrize("n_keys", [10, 10_000])
 def test_upsert_sink_writes_only_the_batch(spark, tmp_path, n_keys):
     """The files a call adds hold exactly its batch's rows, however many
-    keys the table already holds: no whole-table rewrite per trigger."""
+    keys the table already holds: no whole-table rewrite per trigger. A
+    batch is one delta file; an empty batch writes nothing at all."""
     path = str(tmp_path / "t")
     sink = ParquetUpsertSink(path, keys=["k"], order_col="ord")
     sink(spark.range(n_keys).selectExpr("id AS k", "1L AS v", "1.0D AS ord"), 0)
-    one = spark.createDataFrame([(0, 2, 2.0)], ["k", "v", "ord"]).coalesce(1)
+    one = spark.createDataFrame([(0, 2, 2.0)], ["k", "v", "ord"])
     sink(one, 1)  # folds epoch 0 into the base
     before = _file_rows(path)
     batch = spark.createDataFrame([(1, 3, 3.0), (n_keys, 3, 1.0)], ["k", "v", "ord"])
-    sink(batch.coalesce(1), 2)
+    sink(batch, 2)
     after = _file_rows(path)
     assert set(before) <= set(after)
-    assert sum(after[f] for f in set(after) - set(before)) == 2
+    added = set(after) - set(before)
+    assert len(added) == 1 and next(iter(added)).startswith("delta-")
+    assert sum(after[f] for f in added) == 2
+    sink(batch.limit(0), 3)
+    assert _file_rows(path) == after
+    assert not [f for f in os.listdir(tmp_path) if ".staging-" in f]
     got = {r.k: r.v for r in sink.read(spark).collect()}
     assert len(got) == n_keys + 1
     assert (got[0], got[1], got[2], got[n_keys]) == (2, 3, 1, 3)
