@@ -13,7 +13,7 @@ Design principles (SURVEY.md §4, §7):
 - Built-in functions over UDFs; Pandas UDFs only where built-ins can't
   express the semantics (multimodal decode).
 - Every operator designed for a 1000-executor / 100 TB deployment: broadcast
-  small dims, partial aggregation, AQE, salting helpers, RocksDB state store.
+  small dims, partial aggregation, AQE, salting helpers.
 """
 
 __version__ = "0.1.0"

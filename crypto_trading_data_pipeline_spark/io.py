@@ -72,26 +72,6 @@ def ts_seconds_d(col: Column | str) -> Column:
     return _as_timestamp(col).cast("double")
 
 
-def utc_wall_ntz(col: Column | str) -> Column:
-    """TIMESTAMP_NTZ holding the instant's UTC wall clock.
-
-    Built by epoch arithmetic (unix_micros onto the NTZ epoch), which is
-    session-timezone-free by construction. The tempting
-    ``to_utc_timestamp(ts, current_timezone()).cast("timestamp_ntz")``
-    round trip is WRONG for instants whose UTC wall clock names a local
-    time skipped by the session zone's spring-forward (~1h/year/zone,
-    e.g. 2024-03-10 02:xx under America/New_York): to_utc_timestamp
-    resolves the nonexistent local time by shifting an hour. Pinned
-    against Python datetime over DST-hostile instants in
-    tests/test_streaming.py."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.timestamp_add(
-        "MICROSECOND",
-        F.unix_micros(c),
-        F.lit("1970-01-01 00:00:00").cast("timestamp_ntz"),
-    )
-
-
 def _normalize_ntz(df: DataFrame) -> DataFrame:
     """Cast any TIMESTAMP_NTZ column to TIMESTAMP (session tz is UTC, so
     values are unchanged). Normally dead: inferTimestampNTZ=false makes the

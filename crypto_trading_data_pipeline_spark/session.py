@@ -87,8 +87,9 @@ STARTUP_CONF = {
 #: The fast path is ONE round trip: if this wrapper was already
 #:  configured AND the timezone canary still reads UTC, skip the
 #: re-apply. A hostile mid-process `spark.conf.set("...timeZone", ...)`
-#: flips the canary and forces the full re-apply (the tz-invariance
-#: contract tests/test_streaming_tz_sweep.py relies on); a hostile flip
+#: flips the canary and forces the full re-apply (pinned by
+#: test_runtime_conf_fast_path_repins_hostile_timezone in
+#: tests/test_ops_hardening.py); a hostile flip
 #: of one of the OTHER runtime confs between reads is not re-defended —
 #: tests that probe conf-sensitive behavior already set their knobs
 #: AFTER the last read_table call for exactly this reason.

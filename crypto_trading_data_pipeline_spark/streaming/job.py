@@ -12,10 +12,10 @@ aggregation is proven on the batch twin by the DuckDB oracle
 (watermark lateness, update mode, idempotent upsert).
 
 Scale posture (100 TB/day firehose):
-- state store: the default HDFS-backed provider. ``ROCKSDB_STATE_CONF``
-  moves per-executor state off-heap when it outgrows the heap; nothing
-  applies it by default, and on the benchmark's candle stream it was no
-  faster;
+- state store: the default HDFS-backed provider. The built-in RocksDB
+  provider (``spark.sql.streaming.stateStore.providerClass``) would move
+  per-executor state off-heap; on the benchmark's candle stream it was no
+  faster, so nothing sets it;
 - watermark bounds state: 2 min lateness x |symbols| x 1-min windows;
 - the agg is partial+final, so the shuffle carries one row per
   (symbol, window) per input partition per trigger;
@@ -28,19 +28,9 @@ Scale posture (100 TB/day firehose):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.candles import ohlcv
-
-#: RocksDB state store, for state that outgrows the executor heap. Opt-in:
-#: set it on the session before the query's first start (a checkpoint
-#: keeps the provider it was created with); harmless for batch.
-ROCKSDB_STATE_CONF = {
-    "spark.sql.streaming.stateStore.providerClass": (
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    ),
-}
 
 
 def candle_stream(

@@ -1,17 +1,17 @@
-"""Custom stateful streaming operators (applyInPandasWithState).
+"""The engine's one custom-state streaming operator (applyInPandasWithState).
 
 The reference's only stateful computation is the built-in windowed aggregate
-(spark_processor/processor.py:77-89). Built-ins cover keyed *windowed* state;
-what they cannot express is an aggregate that never resets — e.g. a
-running, all-history VWAP per symbol that updates every micro-batch. That
-needs user-managed state: applyInPandasWithState gives us Arrow-batched
-per-key state with GroupState lifecycle (update/timeout/eviction).
+(spark_processor/processor.py:77-89), rebuilt in streaming/job.py. Built-ins
+cover keyed *windowed* state; what they cannot express is an aggregate that
+never resets — a running, all-history VWAP per symbol that updates every
+micro-batch. That needs user-managed state: applyInPandasWithState gives
+Arrow-batched per-key state with a GroupState lifecycle.
 
 Scale posture:
 - state is per-key and fixed-size (a handful of doubles), so 10M symbols
   cost ~hundreds of MB across the cluster — bounded regardless of input;
 - the operator shuffles on the key once per micro-batch (same as any keyed
-  agg); RocksDB state store (job.ROCKSDB_STATE_CONF) keeps it off-heap;
+  agg);
 - Arrow batching means the Python hop costs per-BATCH, not per-row.
 """
 
@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    ArrayType,
     DoubleType,
     LongType,
     StringType,
@@ -111,1080 +110,6 @@ def running_trade_stats(
         _update_running_stats,
         outputStructType=RUNNING_STATS_SCHEMA,
         stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-SESSION_SCHEMA = StructType(
-    [
-        StructField("user", StringType()),
-        StructField("session_start", LongType()),   # epoch ms
-        StructField("session_end", LongType()),     # epoch ms
-        StructField("n_events", LongType()),
-        StructField("closed_by_timeout", StringType()),  # 'timeout' | 'final'
-    ]
-)
-
-_SESSION_STATE = StructType(
-    [
-        StructField("start_ms", LongType()),
-        StructField("last_ms", LongType()),
-        StructField("n", LongType()),
-    ]
-)
-
-
-def _session_update(key, pdfs, state: "GroupState"):
-    """Gap-based sessionizer with EVENT-TIME TIMEOUT: a key's session is
-    emitted when the watermark passes last-event + gap — the state-lifecycle
-    path (hasTimedOut) that running stats never exercises. Spark calls this
-    function with NO data for keys whose timeout fired."""
-    import pandas as _pd
-
-    gap_ms = 30_000
-    if state.hasTimedOut:
-        start_ms, last_ms, n = state.get
-        state.remove()
-        yield _pd.DataFrame(
-            {
-                "user": [key[0]],
-                "session_start": [start_ms],
-                "session_end": [last_ms],
-                "n_events": [n],
-                "closed_by_timeout": ["timeout"],
-            }
-        )
-        return
-    start_ms, last_ms, n = state.get if state.exists else (None, None, 0)
-    for pdf in pdfs:
-        if pdf.empty:
-            continue
-        ms = (pdf["ts"].astype("int64") // 1_000_000).tolist()  # ns -> ms
-        for m in sorted(ms):
-            if start_ms is None:
-                start_ms, last_ms = m, m
-            last_ms = max(last_ms, m)
-            n += 1
-    state.update((start_ms, last_ms, n))
-    state.setTimeoutTimestamp(last_ms + gap_ms)
-    if False:
-        yield  # make this a generator on every path
-
-
-def sessionize(events, *, user_col: str = "user_id", ts_col: str = "ts", watermark: str = "1 minute"):
-    """Event-time sessionization via applyInPandasWithState with
-    EventTimeTimeout: sessions close (and emit exactly once) when the
-    watermark passes the 30 s inactivity gap. State per key is three longs
-    — bounded regardless of stream length; eviction is the timeout itself.
-
-    Differs from Spark's built-in session_window aggregate in that
-    arbitrary per-session logic (custom emission payloads, side effects,
-    multi-stage session state) can ride along — the built-in only computes
-    declarative aggregates.
-    """
-    projected = events.select(
-        F.col(user_col).cast("string").alias("user"), F.col(ts_col).alias("ts")
-    ).withWatermark("ts", watermark)
-    return projected.groupBy("user").applyInPandasWithState(
-        _session_update,
-        outputStructType=SESSION_SCHEMA,
-        stateStructType=_SESSION_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-EMA_SCHEMA = StructType(
-    [
-        StructField("symbol", StringType()),
-        StructField("n_obs", LongType()),
-        StructField("ema", DoubleType()),
-    ]
-)
-
-_EMA_STATE = StructType(
-    [
-        StructField("n", LongType()),
-        StructField("last_ms", LongType()),
-        StructField("ema", DoubleType()),
-    ]
-)
-
-
-def _ema_update_factory(alpha: float):
-    def update(key, pdfs, state: GroupState):
-        """Fold this batch's prices (event-time order) into the running EMA.
-
-        applyInPandasWithState delivers the group's batch as MULTIPLE
-        Arrow chunks with no cross-chunk ordering guarantee, so all chunks
-        are concatenated and sorted ONCE before folding (ADVICE r2:
-        per-chunk sorting silently dropped same-batch rows that landed in
-        a later chunk with earlier timestamps). The late-row guard then
-        applies only to genuinely cross-BATCH late data — EMA is
-        order-sensitive, so folding an older-than-state row would corrupt
-        the recursion; skipping it matches watermark-drop semantics."""
-        n, last_ms, ema = state.get if state.exists else (0, -(1 << 62), None)
-        chunks = [pdf for pdf in pdfs if not pdf.empty]
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True).sort_values("ts")
-            ms = batch["ts"].astype("int64") // 1_000_000
-            for m, p in zip(ms.tolist(), batch["price"].astype("float64").tolist()):
-                if m < last_ms:
-                    continue
-                ema = p if ema is None else alpha * p + (1.0 - alpha) * ema
-                last_ms = m
-                n += 1
-        state.update((n, last_ms, ema))
-        yield pd.DataFrame({"symbol": [key[0]], "n_obs": [n], "ema": [ema]})
-
-    return update
-
-
-def streaming_ema(
-    trades: DataFrame,
-    *,
-    key_col: str = "symbol",
-    ts_col: str = "trade_time",
-    price_col: str = "price",
-    span: int = 10,
-) -> DataFrame:
-    """Per-key exponential moving average, updated every micro-batch.
-
-    EMA is RECURSIVE (ema_t = a*p_t + (1-a)*ema_{t-1}) so no built-in
-    windowed aggregate can express it — the canonical case for
-    applyInPandasWithState. State per key is (count, last_ts, ema): O(1)
-    regardless of history, vs the batch formulation that must fold the
-    key's FULL price history (ema_batch below) — at 100 TB the streaming
-    operator maintains incrementally what batch recomputation cannot
-    afford. alpha = 2/(span+1), the standard span parameterization.
-    """
-    alpha = 2.0 / (span + 1)
-    projected = trades.select(
-        F.col(key_col).cast("string").alias("symbol"),
-        F.col(ts_col).alias("ts"),
-        F.col(price_col).cast("double").alias("price"),
-    )
-    return projected.groupBy("symbol").applyInPandasWithState(
-        _ema_update_factory(alpha),
-        outputStructType=EMA_SCHEMA,
-        stateStructType=_EMA_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def ema_batch(
-    df: DataFrame,
-    *,
-    key_col: str = "symbol",
-    ts_col: str = "trade_time",
-    price_col: str = "price",
-    span: int = 10,
-) -> DataFrame:
-    """Batch twin of streaming_ema: per-key full-history fold.
-
-    collect_list + array fold is correct but O(history) per key per run —
-    fine for verification and bounded backfills, NOT the scale path (that
-    is exactly why streaming_ema exists). Used by tests to prove the
-    incremental state math matches a from-scratch recomputation."""
-    alpha = 2.0 / (span + 1)
-    arr = F.array_sort(
-        F.collect_list(F.struct(F.col(ts_col).alias("t"), F.col(price_col).cast("double").alias("p")))
-    )
-    folded = F.aggregate(
-        F.slice(arr, 2, F.greatest(F.size(arr) - 1, F.lit(0))),
-        F.element_at(arr, 1)["p"],
-        lambda acc, x: F.lit(alpha) * x["p"] + F.lit(1.0 - alpha) * acc,
-    )
-    return (
-        df.groupBy(F.col(key_col).cast("string").alias("symbol"))
-        .agg(F.count(F.lit(1)).alias("n_obs"), folded.alias("ema"))
-    )
-
-
-DECAY_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("s", LongType()),
-        StructField("decayed", DoubleType()),
-    ]
-)
-
-_DECAY_STATE = StructType(
-    [StructField("n", LongType()), StructField("s", LongType())]
-)
-
-
-def _decay_update_factory(as_of: str, max_age: int):
-    import numpy as np
-
-    as_of_day = pd.Timestamp(as_of)
-
-    def update(key, pdfs, state: GroupState):
-        """Fold this batch's events into the exact dyadic-decay sum.
-
-        Every contribution is an INTEGER term cents(value) << (max_age -
-        age), so state is one exact int64 per key and — unlike the
-        order-sensitive EMA above — addition commutes: any batching,
-        partitioning, or arrival order yields the bit-identical sum the
-        batch query (queries/relational.q_decay_score) computes from
-        scratch. That commutativity is what makes the decayed leaderboard
-        INCREMENTALLY maintainable with no reprocessing window at all."""
-        n, sacc = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            age = (as_of_day - pdf["ts"].dt.floor("D")).dt.days
-            ok = (age >= 1) & (age <= max_age)
-            if ok.any():
-                c = np.floor(pdf.loc[ok, "value"].to_numpy() * 100.0 + 0.5).astype(
-                    np.int64
-                )
-                sh = (max_age - age[ok].to_numpy()).astype(np.int64)
-                sacc += int((c << sh).sum())
-                n += int(ok.sum())
-        state.update((n, sacc))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "s": [sacc],
-                "decayed": [sacc / float(1 << max_age)],
-            }
-        )
-
-    return update
-
-
-def streaming_decay_scores(
-    events: DataFrame,
-    *,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    as_of: str = "2024-02-01",
-    max_age: int = 20,
-) -> DataFrame:
-    """Streaming twin of q_decay_score (queries/relational.py): per-user
-    exponentially time-decayed engagement score, maintained incrementally.
-
-    The batch query re-aggregates the live window per run; this operator
-    folds each micro-batch's contribution into one exact int64 per key
-    (power-of-two decay weights over cent-scaled values — see the batch
-    twin for the overflow budget), so the leaderboard is always current at
-    O(batch) cost. Because the state is a commutative exact sum, streaming
-    and batch agree BIT-FOR-BIT on any replay/ordering — asserted in
-    tests/test_streaming.py — which is the property the recursive EMA
-    cannot offer. Defaults mirror the batch query's pinned as-of contract;
-    production advances as-of by maintaining per-(key, day) partials or
-    re-seeding state, both O(keys).
-
-    Timezone contract: event DAYS are UTC days, matching the batch twin
-    (read_table yields TIMESTAMP_NTZ = UTC wall clock). A TIMESTAMP (LTZ)
-    input is an instant, and Arrow would hand pandas its wall clock in
-    spark.sql.session.timeZone — under a non-UTC session an event near
-    midnight UTC lands on the wrong day and breaks the bit-for-bit
-    streaming==batch guarantee. So LTZ input is rebuilt as its UTC wall
-    clock in NTZ *before* the stateful operator (NTZ crosses Arrow
-    untouched); NTZ input passes through as-is. The rebuild is epoch
-    arithmetic (unix_micros added onto the NTZ epoch), NOT a
-    to_utc_timestamp round trip: to_utc_timestamp reinterprets the
-    session-tz rendering as a local wall time, which is ambiguous or
-    nonexistent for ~2h/year around the session zone's DST transitions
-    and would shift those events by the DST delta. unix_micros reads the
-    instant directly, so no calendar reinterpretation happens at all."""
-    from pyspark.sql.types import TimestampType
-
-    from ..io import utc_wall_ntz
-
-    ts_expr = F.col(ts_col)
-    if isinstance(events.schema[ts_col].dataType, TimestampType):
-        ts_expr = utc_wall_ntz(ts_expr)
-    projected = events.select(
-        F.col(user_col).cast("long").alias("user_id"),
-        ts_expr.alias("ts"),
-        F.col(value_col).cast("double").alias("value"),
-    )
-    return projected.groupBy("user_id").applyInPandasWithState(
-        _decay_update_factory(as_of, max_age),
-        outputStructType=DECAY_SCHEMA,
-        stateStructType=_DECAY_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-ATTR_SCHEMA = (
-    "user_id long, first_channel string, last_channel string, converted int"
-)
-#: (first-event key+channel, first-purchase key, last-before-purchase
-#: key+channel). Keys are (epoch_micros, event_id) pairs — the same TOTAL
-#: order the batch twin q_attribution ranks by.
-_ATTR_STATE = (
-    "fe_us long, fe_id long, fe_ch string, "
-    "fp_us long, fp_id long, "
-    "lb_us long, lb_id long, lb_ch string"
-)
-
-
-def _attr_update(key, pdfs, state: GroupState):
-    """Fold a user's micro-batch into the attribution state.
-
-    first-touch (min event) and first-purchase (min purchase) are
-    COMMUTATIVE mins over the total (ts, event_id) key — bit-exact under
-    any arrival order, like the decay sum. last-touch (max event strictly
-    before the first purchase) is exact under per-user event-time-ordered
-    arrival (the Kafka keyed-partition contract); a purchase arriving
-    AFTER events that follow it in event time can move the cutoff left
-    past an already-discarded candidate, in which case the stored
-    candidate is dropped (never emitted wrong — last_channel degrades
-    toward '(none)', it cannot name an event at-or-after the purchase)."""
-    if state.exists:
-        fe_us, fe_id, fe_ch, fp_us, fp_id, lb_us, lb_id, lb_ch = state.get
-    else:
-        fe_us = fe_id = fe_ch = fp_us = fp_id = lb_us = lb_id = lb_ch = None
-
-    # A sorted row loop, not a vectorized fold: last-touch depends on the
-    # first-purchase cutoff, which can move WITHIN the batch — per-user
-    # batches are small (one user's slice of a micro-batch), so the loop
-    # is over a handful of rows.
-    for pdf in pdfs:
-        if pdf.empty:
-            continue
-        pdf = pdf.sort_values(["ts", "event_id"])
-        us = (pdf["ts"].astype("int64") // 1000).to_numpy()  # ns -> us
-        eid = pdf["event_id"].to_numpy()
-        et = pdf["event_type"].to_numpy()
-        for i in range(len(pdf)):
-            k = (int(us[i]), int(eid[i]))
-            ch = str(et[i])
-            if fe_us is None or k < (fe_us, fe_id):
-                fe_us, fe_id, fe_ch = k[0], k[1], ch
-            if ch == "purchase":
-                if fp_us is None or k < (fp_us, fp_id):
-                    fp_us, fp_id = k
-                    # Cutoff moved left: a stored candidate at/after the
-                    # new cutoff is no longer a valid last touch. It is
-                    # dropped (not replaced — its predecessors are gone),
-                    # so last_channel degrades toward '(none)' but can
-                    # never name an event at-or-after the purchase.
-                    if lb_us is not None and (lb_us, lb_id) >= k:
-                        lb_us = lb_id = lb_ch = None
-            elif (fp_us is None or k < (fp_us, fp_id)) and (
-                lb_us is None or k > (lb_us, lb_id)
-            ):
-                # Non-purchase event strictly before the (current) first
-                # purchase: the running last-touch candidate. On a valid
-                # history events before the FIRST purchase are never
-                # purchases, so restricting candidates to non-purchases
-                # matches the batch query exactly.
-                lb_us, lb_id, lb_ch = k[0], k[1], ch
-
-    state.update((fe_us, fe_id, fe_ch, fp_us, fp_id, lb_us, lb_id, lb_ch))
-    converted = int(fp_us is not None)
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "first_channel": [fe_ch],
-            "last_channel": [
-                (lb_ch if lb_ch is not None else "(none)") if converted else None
-            ],
-            "converted": [converted],
-        }
-    )
-
-
-def streaming_attribution(
-    events: DataFrame,
-    *,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Streaming twin of q_attribution (queries/relational.py): per-user
-    first-touch / last-touch conversion attribution, maintained
-    incrementally in O(1) state per user.
-
-    The batch query re-scans the event log per run (three per-user
-    aggregates + joins); this operator folds each micro-batch into an
-    8-field state row, so the attribution table is always current at
-    O(batch) cost and the channel rollup is a |channels|-sized aggregate
-    over the emitted rows. Exactness contract (asserted in
-    tests/test_streaming.py): first_channel and the converted flag are
-    commutative (ts, event_id)-mins — bit-exact vs the batch query under
-    ANY arrival order; last_channel is bit-exact under per-user
-    event-time-ordered arrival (the Kafka keyed-partition contract) and
-    degrades only toward '(none)' (never a wrong channel) when a purchase
-    arrives out of order behind later events, because the fold drops any
-    stored candidate at-or-after a cutoff that moved left. Timezone: the
-    ordering key is epoch MICROS (an instant), so session-timezone
-    rendering never enters the fold; NTZ inputs are read as UTC wall
-    clock per the repo-wide contract."""
-    from pyspark.sql.types import TimestampType
-
-    from ..io import utc_wall_ntz
-
-    ts_expr = F.col(ts_col)
-    if isinstance(events.schema[ts_col].dataType, TimestampType):
-        ts_expr = utc_wall_ntz(ts_expr)
-    projected = events.select(
-        F.col(user_col).cast("long").alias("user_id"),
-        ts_expr.alias("ts"),
-        F.col(id_col).cast("long").alias("event_id"),
-        F.col(type_col).cast("string").alias("event_type"),
-    )
-    return projected.groupBy("user_id").applyInPandasWithState(
-        _attr_update,
-        outputStructType=ATTR_SCHEMA,
-        stateStructType=_ATTR_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-#: valid_from/valid_to are TIMESTAMP_NTZ, not TIMESTAMP: the operator's
-#: pandas fold works in UTC wall clock (the utc_wall_ntz input contract),
-#: and an LTZ output column would make Arrow re-interpret those naive
-#: wall times as SESSION-zone wall on the way back out — shifting every
-#: interval bound by the session offset under a non-UTC
-#: spark.sql.session.timeZone (caught by the tz sweep in
-#: tests/test_streaming_tz_sweep.py). NTZ crosses Arrow untouched in both
-#: directions and matches the batch q_scd2's NTZ interval bounds.
-SCD2_SCHEMA = (
-    "user_id long, version int, event_type string, valid_from timestamp_ntz, "
-    "valid_to timestamp_ntz, n_events long, is_current boolean"
-)
-#: The OPEN run only — closed versions are emitted once and never revisited,
-#: so state is O(1) per user however long the history grows: (island number,
-#: run type, run start micros, events in run, last-seen (micros, event_id)
-#: for the ordered-arrival fold).
-_SCD2_STATE = (
-    "island int, run_type string, from_us long, n_events long, "
-    "last_us long, last_id long"
-)
-
-
-def _scd2_update(key, pdfs, state: GroupState):
-    """Fold a user's micro-batch into the open SCD2 run.
-
-    Arrival-order fold: each event either extends the open run (same
-    event_type) or closes it — the closed version is emitted with
-    valid_to = the boundary event's timestamp and never revisited — and
-    opens island+1. Under per-user event-time-ordered arrival (the Kafka
-    keyed-partition contract) arrival order IS event order, making every
-    emitted row bit-exact vs the batch q_scd2; the batch-equivalence test
-    drains runs across micro-batch boundaries to prove it. Within a
-    micro-batch the rows are explicitly (ts, event_id)-sorted, so only
-    CROSS-batch disorder can differ from the batch build."""
-    if state.exists:
-        island, run_type, from_us, n_events, last_us, last_id = state.get
-    else:
-        island = 0
-        run_type = from_us = n_events = last_us = last_id = None
-
-    closed: list[tuple] = []
-    for pdf in pdfs:
-        if pdf.empty:
-            continue
-        pdf = pdf.sort_values(["ts", "event_id"])
-        us = (pdf["ts"].astype("int64") // 1000).to_numpy()  # ns -> us
-        eid = pdf["event_id"].to_numpy()
-        et = pdf["event_type"].to_numpy()
-        for i in range(len(pdf)):
-            t, e, ch = int(us[i]), int(eid[i]), str(et[i])
-            if run_type is None:
-                island, run_type, from_us, n_events = 1, ch, t, 1
-            elif ch == run_type:
-                n_events += 1
-            else:
-                closed.append(
-                    (island, run_type, from_us, t, n_events, False)
-                )
-                island, run_type, from_us, n_events = island + 1, ch, t, 1
-            last_us, last_id = t, e
-
-    state.update((island, run_type, from_us, n_events, last_us, last_id))
-    rows = closed + [(island, run_type, from_us, None, n_events, True)]
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]] * len(rows),
-            "version": [r[0] for r in rows],
-            "event_type": [r[1] for r in rows],
-            "valid_from": pd.to_datetime([r[2] for r in rows], unit="us"),
-            "valid_to": pd.to_datetime([r[3] for r in rows], unit="us"),
-            "n_events": [r[4] for r in rows],
-            "is_current": [r[5] for r in rows],
-        }
-    )
-
-
-def streaming_scd2(
-    events: DataFrame,
-    *,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Streaming twin of q_scd2 (queries/relational.py): Type-2 SCD
-    dimension maintenance, incremental.
-
-    The batch query re-runs the gaps-and-islands build over the whole
-    event log; this operator keeps only the OPEN run per user (O(1)
-    state) and emits each version at most once-closed plus the refreshed
-    current row per micro-batch, so a last-write-wins upsert on
-    (user_id, version) — exactly what the foreachBatch merge sink already
-    does for candles — maintains the full history table at O(batch)
-    cost. Versions, interval bounds, counts and is_current are bit-exact
-    vs the batch q_scd2 under per-user event-time-ordered arrival
-    (asserted across micro-batch boundaries in tests/test_streaming.py);
-    rows within a batch are (ts, event_id)-sorted so only cross-batch
-    disorder is outside the contract. Timezone: the fold runs on epoch
-    MICROS and the emitted bounds are tz-naive UTC wall timestamps, the
-    repo-wide NTZ contract (see utc_wall_ntz)."""
-    from pyspark.sql.types import TimestampType
-
-    from ..io import utc_wall_ntz
-
-    ts_expr = F.col(ts_col)
-    if isinstance(events.schema[ts_col].dataType, TimestampType):
-        ts_expr = utc_wall_ntz(ts_expr)
-    projected = events.select(
-        F.col(user_col).cast("long").alias("user_id"),
-        ts_expr.alias("ts"),
-        F.col(id_col).cast("long").alias("event_id"),
-        F.col(type_col).cast("string").alias("event_type"),
-    )
-    return projected.groupBy("user_id").applyInPandasWithState(
-        _scd2_update,
-        outputStructType=SCD2_SCHEMA,
-        stateStructType=_SCD2_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-HH_SCHEMA = "source string, tok string, cnt_lb long, n_seen long"
-#: Misra-Gries summary per key: parallel token/counter arrays + items seen.
-_HH_STATE = "toks array<string>, cnts array<long>, n long"
-
-
-def _hh_update_factory(m: int):
-    def update(key, pdfs, state: GroupState):
-        """Fold this batch's tokens into the key's Misra-Gries(m) summary.
-
-        The same mergeable reduction as the batch partial
-        (operators/sketches.py::misra_gries_candidates): value_counts per
-        batch, merge, prune back to m counters by subtracting the
-        (m+1)-th largest. Sequential folding over micro-batches IS the
-        classic streaming Misra-Gries, so after any prefix of the stream
-        the candidate set contains every token with frequency >
-        n_seen/(m+1) for this key — the property the superset test pins."""
-        import numpy as np
-
-        toks, cnts, n = state.get if state.exists else ([], [], 0)
-        counts = {t: int(c) for t, c in zip(toks, cnts)}
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            vc = pdf["tok"].value_counts()
-            n += int(vc.sum())
-            for t, c in vc.items():
-                counts[t] = counts.get(t, 0) + int(c)
-            if len(counts) > m:
-                vals = np.sort(np.fromiter(counts.values(), dtype=np.int64))
-                thresh = int(vals[-(m + 1)])
-                counts = {t: c - thresh for t, c in counts.items() if c > thresh}
-        state.update((list(counts.keys()), [int(v) for v in counts.values()], n))
-        yield pd.DataFrame(
-            {
-                "source": pd.Series([key[0]] * len(counts), dtype="object"),
-                "tok": pd.Series(list(counts.keys()), dtype="object"),
-                "cnt_lb": pd.Series(list(counts.values()), dtype="int64"),
-                "n_seen": pd.Series([n] * len(counts), dtype="int64"),
-            }
-        )
-
-    return update
-
-
-def streaming_heavy_hitters(
-    items: DataFrame,
-    *,
-    key_col: str = "source",
-    item_col: str = "tok",
-    m: int = 64,
-) -> DataFrame:
-    """Streaming per-key heavy-hitter candidates — the incremental twin of
-    q_heavy_hitters' partition partial, keyed (e.g. per ingest source).
-
-    State per key is ONE Misra-Gries(m) summary: at most m (token,
-    counter) pairs plus the items-seen total, however long the stream —
-    the bounded-state answer to "which tokens dominate this source" that
-    an exact per-token streaming count (unbounded keys) cannot give.
-    After every micro-batch the emitted candidates provably include every
-    token above n_seen/(m+1) of the key's stream so far; counters are
-    lower bounds within n_seen/(m+1) of the true count (Misra & Gries
-    1982). Production finishes exactly like the batch query: periodic
-    exact recount of the candidate set only."""
-    projected = items.select(
-        F.col(key_col).cast("string").alias("source"),
-        F.col(item_col).cast("string").alias("tok"),
-    )
-    return projected.groupBy("source").applyInPandasWithState(
-        _hh_update_factory(m),
-        outputStructType=HH_SCHEMA,
-        stateStructType=_HH_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-HOLT_SCHEMA = StructType(
-    [
-        StructField("symbol", StringType()),
-        StructField("day", StringType()),
-        StructField("n_bars", LongType()),
-        StructField("level_c", LongType()),
-        StructField("trend_c", LongType()),
-        StructField("forecast1_c", LongType()),
-    ]
-)
-
-#: (bar count, last folded bar's epoch-us, packed level*2^22 + trend+2^21) —
-#: the IDENTICAL packed int64 the batch twin (queries/finance.q_holt_forecast)
-#: folds, so streaming == batch is bit-exact, not approximately equal.
-_HOLT_STATE = StructType(
-    [
-        StructField("n", LongType()),
-        StructField("last_us", LongType()),
-        StructField("acc", LongType()),
-    ]
-)
-
-# Duplicated from queries/finance.py on purpose: importing the queries
-# package here would drag the full registry (and its evidence-file window
-# computation) into every streaming import. tests/test_streaming.py asserts
-# the two modules' constants are equal.
-HOLT_SHIFT_L = 4194304  # 2^22
-HOLT_B_OFF = 2097152    # 2^21
-HOLT_B_CLAMP = HOLT_B_OFF - 1
-
-
-def _tdiv(n: int, d: int) -> int:
-    """Truncate-toward-zero integer division — Spark `div` / DuckDB `//`
-    semantics on signed operands (Python's // floors, which differs on
-    negative numerators)."""
-    q = abs(n) // d
-    return q if n >= 0 else -q
-
-
-def holt_step(acc: int, x: int) -> int:
-    """One integer-quantized Holt step on the packed accumulator — the
-    exact recursion of the batch fold (alpha=1/4, beta=1/8, trend clamped
-    to +-(2^21-1)); acc < 0 is the uninitialized sentinel (l1=x, b1=0)."""
-    if acc < 0:
-        return (x << 22) + HOLT_B_OFF
-    l_prev = acc >> 22
-    b_prev = (acc & (HOLT_SHIFT_L - 1)) - HOLT_B_OFF
-    l_new = max(0, x + 3 * (l_prev + b_prev)) >> 2
-    b_new = _tdiv(l_new - l_prev + 7 * b_prev, 8)
-    b_new = max(-HOLT_B_CLAMP, min(HOLT_B_CLAMP, b_new))
-    return (l_new << 22) + b_new + HOLT_B_OFF
-
-
-def _holt_update(key, pdfs, state: GroupState):
-    """Fold this batch's minute bars (event-time order) into the packed
-    Holt state. Same chunking discipline as the EMA fold: concatenate and
-    sort the WHOLE batch once (chunks carry no cross-chunk order), then
-    skip bars at-or-before the last folded bar — the recursion is
-    order-sensitive, so a late bar is dropped (watermark-drop semantics)
-    and an at-least-once redelivery of the same bar is a no-op."""
-    n, last_us, acc = state.get if state.exists else (0, -(1 << 62), -1)
-    chunks = [pdf for pdf in pdfs if not pdf.empty]
-    if chunks:
-        batch = pd.concat(chunks, ignore_index=True).sort_values("ts")
-        us = batch["ts"].astype("int64") // 1_000
-        for u, c in zip(us.tolist(), batch["c"].tolist()):
-            if u <= last_us:
-                continue
-            acc = holt_step(acc, int(c))
-            last_us = u
-            n += 1
-    state.update((n, last_us, acc))
-    lvl = acc >> 22
-    trd = (acc & (HOLT_SHIFT_L - 1)) - HOLT_B_OFF
-    yield pd.DataFrame(
-        {
-            "symbol": [key[0]],
-            "day": [key[1]],
-            "n_bars": [n],
-            "level_c": [lvl],
-            "trend_c": [trd],
-            "forecast1_c": [lvl + trd],
-        }
-    )
-
-
-def streaming_holt(
-    bars: DataFrame,
-    *,
-    key_col: str = "symbol",
-    ts_col: str = "minute",
-    close_col: str = "close",
-) -> DataFrame:
-    """Streaming twin of q_holt_forecast: per-(symbol, UTC day) Holt
-    level+trend, maintained incrementally over a stream of minute bars
-    (e.g. the OHLCV aggregation's closes).
-
-    The state is the batch fold's OWN packed int64 accumulator, stepped by
-    the identical integer recursion — under in-order per-key bar arrival
-    (the keyed-partition contract; the EMA twin's caveat) streaming and
-    batch agree BIT-FOR-BIT, asserted in tests/test_streaming.py. O(1)
-    state per (symbol, day) vs the batch fold's full-day re-scan; at 100 TB
-    the leaderboard of live day-forecasts is maintained at O(batch) cost.
-    Timezone contract mirrors streaming_decay_scores: LTZ input is rebuilt
-    as its UTC wall clock in NTZ via epoch arithmetic BEFORE keying, so
-    bars near midnight UTC land on the UTC day under any session zone."""
-    from pyspark.sql.types import TimestampType
-
-    from ..io import utc_wall_ntz
-
-    ts_expr = F.col(ts_col)
-    if isinstance(bars.schema[ts_col].dataType, TimestampType):
-        ts_expr = utc_wall_ntz(ts_expr)
-    projected = bars.select(
-        F.col(key_col).cast("string").alias("symbol"),
-        ts_expr.alias("ts"),
-        F.floor(F.col(close_col).cast("double") * 100.0 + 0.5)
-        .cast("long")
-        .alias("c"),
-    ).withColumn("day", F.date_format(F.col("ts"), "yyyy-MM-dd"))
-    return projected.groupBy("symbol", "day").applyInPandasWithState(
-        _holt_update,
-        outputStructType=HOLT_SCHEMA,
-        stateStructType=_HOLT_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-OFLOW_SCHEMA = StructType(
-    [
-        StructField("symbol", StringType()),
-        StructField("day", StringType()),
-        StructField("n_ticks", LongType()),
-        StructField("n_buy", LongType()),
-        StructField("n_sell", LongType()),
-        StructField("n_unclassified", LongType()),
-        StructField("imbalance", LongType()),
-    ]
-)
-
-#: (last tick's (epoch-us, event_id) total key, last price, carried side
-#: 0/1/-1, live day string, live-day counts) — O(1) per SYMBOL however long
-#: the stream: the carry state (price, side) crosses days exactly like the
-#: batch twin's symbol-partitioned lag window.
-_OFLOW_STATE = StructType(
-    [
-        StructField("last_us", LongType()),
-        StructField("last_id", LongType()),
-        StructField("prev_v", DoubleType()),
-        StructField("side", LongType()),
-        StructField("day", StringType()),
-        StructField("n", LongType()),
-        StructField("nb", LongType()),
-        StructField("ns", LongType()),
-        StructField("nu", LongType()),
-    ]
-)
-
-
-def _oflow_update(key, pdfs, state: GroupState):
-    """Fold this batch's ticks (total (ts, event_id) order) into the tick
-    rule: up-tick buy, down-tick sell, equal print carries the last side.
-    Day rollover EMITS the closed day's final row and resets the counts —
-    under per-symbol in-order arrival a closed day never reopens, so the
-    upsert sink converges to exactly the batch query's table. A tick
-    at-or-before the last folded key is a redelivery and is skipped."""
-    if state.exists:
-        last_us, last_id, prev_v, side, day, n, nb, ns, nu = state.get
-    else:
-        last_us, last_id, prev_v, side, day, n, nb, ns, nu = (
-            -(1 << 62), -(1 << 62), None, 0, None, 0, 0, 0, 0,
-        )
-    out = []
-    chunks = [pdf for pdf in pdfs if not pdf.empty]
-    if chunks:
-        batch = pd.concat(chunks, ignore_index=True).sort_values(
-            ["ts", "event_id"]
-        )
-        us = batch["ts"].astype("int64") // 1_000
-        days = batch["ts"].dt.strftime("%Y-%m-%d")
-        for u, eid, dstr, v in zip(
-            us.tolist(),
-            batch["event_id"].tolist(),
-            days.tolist(),
-            batch["v"].astype("float64").tolist(),
-        ):
-            if (u, eid) <= (last_us, last_id):
-                continue  # at-least-once redelivery
-            if day is not None and dstr != day:
-                out.append((day, n, nb, ns, nu))  # close the day
-                n = nb = ns = nu = 0
-            day = dstr
-            if prev_v is not None and v > prev_v:
-                side = 1
-            elif prev_v is not None and v < prev_v:
-                side = -1
-            # equal print or first tick: side carries (possibly still 0)
-            prev_v = v
-            n += 1
-            if side == 1:
-                nb += 1
-            elif side == -1:
-                ns += 1
-            else:
-                nu += 1
-            last_us, last_id = u, eid
-    state.update((last_us, last_id, prev_v, side, day, n, nb, ns, nu))
-    if day is not None:
-        out.append((day, n, nb, ns, nu))  # live day snapshot
-    yield pd.DataFrame(
-        {
-            "symbol": [key[0]] * len(out),
-            "day": [o[0] for o in out],
-            "n_ticks": [o[1] for o in out],
-            "n_buy": [o[2] for o in out],
-            "n_sell": [o[3] for o in out],
-            "n_unclassified": [o[4] for o in out],
-            "imbalance": [o[2] - o[3] for o in out],
-        }
-    )
-
-
-def streaming_order_flow(
-    ticks: DataFrame,
-    *,
-    key_col: str = "symbol",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    price_col: str = "value",
-) -> DataFrame:
-    """Streaming twin of q_order_flow: per-(symbol, day) tick-rule order
-    flow, maintained with O(1) state per symbol (last key, last price,
-    carried side, live-day counts).
-
-    Under per-symbol in-order arrival (the Kafka keyed-partition
-    contract, same caveat as the EMA/SCD2 twins) the upsert table equals
-    the batch query exactly: day rollovers emit the closed day's final
-    counts once, the live day re-emits per batch, and redelivered ticks
-    (total (ts, event_id) key at-or-before the folded frontier) are
-    no-ops. Timezone contract mirrors streaming_decay_scores: LTZ input
-    rebuilt as UTC wall clock in NTZ before keying."""
-    from pyspark.sql.types import TimestampType
-
-    from ..io import utc_wall_ntz
-
-    ts_expr = F.col(ts_col)
-    if isinstance(ticks.schema[ts_col].dataType, TimestampType):
-        ts_expr = utc_wall_ntz(ts_expr)
-    projected = ticks.filter(F.col(price_col) > 0.0).select(
-        F.col(key_col).cast("string").alias("symbol"),
-        ts_expr.alias("ts"),
-        F.col(id_col).cast("long").alias("event_id"),
-        F.col(price_col).cast("double").alias("v"),
-    )
-    return projected.groupBy("symbol").applyInPandasWithState(
-        _oflow_update,
-        outputStructType=OFLOW_SCHEMA,
-        stateStructType=_OFLOW_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-INDEX_APPEND_SCHEMA = StructType(
-    [
-        StructField("cluster", LongType()),
-        StructField("n_new", LongType()),
-        StructField("n_total", LongType()),
-    ]
-)
-
-_INDEX_APPEND_STATE = StructType([StructField("n", LongType())])
-
-
-def _index_append_update(key, pdfs, state: GroupState):
-    """Fold this micro-batch's arrivals into the cluster's running total.
-    State is ONE int64 per cluster key — bounded at k forever."""
-    n = state.get[0] if state.exists else 0
-    batch = 0
-    for pdf in pdfs:
-        batch += len(pdf)
-    n += batch
-    state.update((int(n),))
-    yield pd.DataFrame(
-        {
-            "cluster": pd.Series([key[0]], dtype="int64"),
-            "n_new": pd.Series([batch], dtype="int64"),
-            "n_total": pd.Series([n], dtype="int64"),
-        }
-    )
-
-
-def streaming_index_append(
-    vectors: DataFrame,
-    *,
-    centroids: list[list[int]],
-    scale: int = 1_000_000,
-    vec_col: str = "v",
-) -> DataFrame:
-    """Streaming append to a TRAINED vector index — the streaming twin of
-    queries/dedup_advanced.q_ann_incremental (FAISS add_with_ids as a
-    continuous job): arriving vectors are assigned to the FROZEN trained
-    centroids by a ROW-LOCAL inlined-argmin projection (exact integer
-    microunit distances, lowest-cluster tie-break — operators/cluster.
-    _assign, the very pass the trainer itself uses), then one
-    applyInPandasWithState counter per cluster maintains the inverted
-    list's population across micro-batches, emitting (cluster, n_new,
-    n_total) updates.
-
-    Scale posture: the assignment never shuffles (k x dim centroid
-    literal, O(batch x k) inside codegen); the only exchange is the
-    per-cluster key shuffle, k keys with ONE int64 of state each —
-    bounded regardless of stream length. Counts are additive, so
-    delivery semantics are whatever the source gives foreachBatch; the
-    checkpointed file/Kafka sources replay exactly-once and the test
-    pins totals across a batch boundary. ``centroids`` is the trainer's
-    quantize-mode output (integer microunits at the same ``scale``)."""
-    from ..operators.cluster import _assign
-
-    q = vectors.withColumn(
-        vec_col,
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.round(x * F.lit(float(scale)), 0).cast("long"),
-        ),
-    )
-    assigned = _assign(q, vec_col, centroids, integer=True).select(
-        F.coalesce(F.col("cluster"), F.lit(-1)).cast("long").alias("cluster")
-    )
-    return assigned.groupBy("cluster").applyInPandasWithState(
-        _index_append_update,
-        outputStructType=INDEX_APPEND_SCHEMA,
-        stateStructType=_INDEX_APPEND_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-INDEX_REBALANCE_SCHEMA = StructType(
-    [
-        StructField("k_lists", LongType()),
-        StructField("n_total", LongType()),
-        StructField("max_list", LongType()),
-        StructField("imbalance_ppm", LongType()),
-        StructField("rebalance", LongType()),
-    ]
-)
-
-#: Latest running total per touched cluster, as parallel arrays — at most
-#: k entries forever (clusters are a fixed trained set).
-_INDEX_REBALANCE_STATE = StructType(
-    [
-        StructField("clusters", ArrayType(LongType())),
-        StructField("totals", ArrayType(LongType())),
-    ]
-)
-
-#: Same retrain heuristic as queries/dedup_advanced.q_index_rebalance
-#: (_REBALANCE_THRESHOLD_PPM there): fullest list > 2x the mean. Kept as
-#: a literal here to avoid a streaming -> queries import; equality is
-#: asserted in tests/test_streaming.py.
-INDEX_REBALANCE_THRESHOLD_PPM = 2_000_000
-
-
-def _index_rebalance_factory(k: int, threshold_ppm: int):
-    def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        """Fold this batch's (cluster, n_total) updates into the monitor's
-        per-cluster latest-total map and emit the imbalance verdict over
-        the full k-list design — untouched lists count as empty toward
-        the mean, the q_index_rebalance contract.
-
-        n_total is a RUNNING (monotonic) total from the append counter,
-        so the fold takes the MAX per cluster, not the last row seen:
-        row order within a micro-batch is NOT event order, and a replay
-        source (Kafka catch-up re-delivering several updates for one
-        cluster in one batch) could otherwise overwrite a newer total
-        with a stale one and regress the verdict (r10 ADVICE)."""
-        if state.exists:
-            m = dict(zip(state.get[0], state.get[1]))
-        else:
-            m: dict[int, int] = {}
-        for pdf in pdfs:
-            for c, n in zip(pdf["cluster"], pdf["n_total"]):
-                m[int(c)] = max(m.get(int(c), 0), int(n))
-        items = sorted(m.items())
-        state.update(
-            ([c for c, _ in items], [n for _, n in items])
-        )
-        total = sum(n for _, n in items)
-        mx = max((n for _, n in items), default=0)
-        imb = (mx * k * 1_000_000) // total if total else 0
-        yield pd.DataFrame(
-            {
-                "k_lists": pd.Series([k], dtype="int64"),
-                "n_total": pd.Series([total], dtype="int64"),
-                "max_list": pd.Series([mx], dtype="int64"),
-                "imbalance_ppm": pd.Series([imb], dtype="int64"),
-                "rebalance": pd.Series(
-                    [int(imb > threshold_ppm)], dtype="int64"
-                ),
-            }
-        )
-
-    return update
-
-
-def streaming_index_rebalance(
-    counts: DataFrame,
-    *,
-    k: int,
-    threshold_ppm: int = INDEX_REBALANCE_THRESHOLD_PPM,
-    cluster_col: str = "cluster",
-    total_col: str = "n_total",
-) -> DataFrame:
-    """Continuous retrain-trigger monitor for the maintained IVF index —
-    the streaming twin of queries/dedup_advanced.q_index_rebalance,
-    completing the streaming lifecycle the same way r9's
-    streaming_index_append completed append: train (q_kmeans_ivf /
-    q_pq_train) -> serve -> audit -> append (streaming_index_append) ->
-    DECIDE WHEN TO RETRAIN, continuously.
-
-    ``counts`` is the (cluster, n_total) UPDATE STREAM the append counter
-    emits (in production: replayed from its sink/Kafka topic — the
-    standard monitor composition, since Spark cannot chain two stateful
-    operators in one query). Each micro-batch therefore carries AT MOST k
-    rows — one per touched cluster — so keying the whole stream to a
-    single monitor group shuffles k bounded rows per batch regardless of
-    stream rate or corpus size, and the monitor's state is two <=k-entry
-    arrays forever. Emits one verdict row per micro-batch: total indexed
-    rows, fullest list, FAISS imbalance_factor as integer ppm against the
-    full k-list design (untouched lists count as empty toward the mean),
-    and rebalance=1 once the fullest list exceeds threshold_ppm x mean."""
-    projected = counts.select(
-        F.lit(0).alias("idx"),
-        F.col(cluster_col).cast("long").alias("cluster"),
-        F.col(total_col).cast("long").alias("n_total"),
-    )
-    return projected.groupBy("idx").applyInPandasWithState(
-        _index_rebalance_factory(k, threshold_ppm),
-        outputStructType=INDEX_REBALANCE_SCHEMA,
-        stateStructType=_INDEX_REBALANCE_STATE,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -550,8 +550,8 @@ def test_read_table_schema_cache_sees_rewrite_with_restored_mtime(spark, tmp_pat
 def test_runtime_conf_fast_path_repins_hostile_timezone(spark):
     """apply_runtime_conf's one-round-trip fast path must NOT survive a
     hostile mid-process timezone flip: the canary probe re-applies the
-    engine conf, preserving the read_table-re-pins-UTC contract the tz
-    sweep relies on."""
+    engine conf, so read_table re-pins UTC. This is the direct test the
+    fast path's comment in session.py cites."""
     from crypto_trading_data_pipeline_spark.session import apply_runtime_conf
 
     apply_runtime_conf(spark)  # marker set, tz pinned UTC

@@ -610,45 +610,6 @@ def test_embed_covariance_is_psd(spark, sf_dir):
     assert all(m[i, i] > 0 for i in range(64))
 
 
-def test_compaction_plan_and_apply(spark, tmp_path):
-    """Small-file compaction: fragment the sf0.001 events table into many
-    tiny part files, plan with FFD bin packing, and verify (a) every file
-    lands in exactly one group, (b) no group exceeds the target unless it
-    is a single oversize file, (c) the plan is deterministic, and (d)
-    applying it preserves every row while collapsing the file count."""
-    from crypto_trading_data_pipeline_spark.io import read_table
-    from crypto_trading_data_pipeline_spark.operators.maintenance import (
-        apply_compaction,
-        compaction_plan,
-        list_part_files,
-    )
-
-    src = str(tmp_path / "frag")
-    ev = read_table(spark, "/root/testdata/sf0.001", "events")
-    n_rows = ev.count()
-    ev.repartition(24).write.mode("overwrite").parquet(src)
-
-    files = list_part_files(src)
-    assert len(files) >= 20, "fixture should fragment into many part files"
-    target = 4 * max(s for _, s in files)
-    plan = compaction_plan(files, target)
-    planned = [p for g in plan for p in g.files]
-    assert sorted(planned) == sorted(p for p, _ in files)
-    sizes = dict(files)
-    for g in plan:
-        assert g.total_bytes == sum(sizes[p] for p in g.files)
-        assert g.total_bytes <= target or len(g.files) == 1
-    assert len(plan) < len(files) // 2, "compaction should merge aggressively"
-    assert compaction_plan(files, target) == plan  # deterministic
-
-    out = str(tmp_path / "compact")
-    assert apply_compaction(spark, plan, out) == n_rows
-    out_files = list_part_files(out)
-    assert len(out_files) == len(plan)
-    total = spark.read.parquet(*[p for p, _ in out_files]).count()
-    assert total == n_rows
-
-
 def test_semdedup_dominator_cap_bounds_pairs(spark):
     """r11 verdict #5: the dominator prefix cap bounds a mega-cluster's
     pair volume to |c| * cap (the 30x probe measured pairwise_rows 40x at
