@@ -1,4 +1,4 @@
-"""Table IO: parquet fixture reader + generic source/sink helpers.
+"""Table IO: the parquet fixture reader, its timestamp helpers and SQL views.
 
 The reference's only batch input is an implicit JDBC staging table; its
 streaming input is Kafka (reference spark_processor/processor.py:54-60).
@@ -188,46 +188,6 @@ def events_between(
     if ts_to is not None:
         df = df.filter(F.col("ts") < F.lit(ts_to).cast(ts_type))
     return _normalize_ntz(df)
-
-
-def read_jsonl(spark: SparkSession, path: str, schema) -> DataFrame:
-    """Read newline-delimited JSON with a MANDATORY explicit schema.
-
-    Schema inference on JSON triggers a full extra pass over the data
-    before the real scan — at 100 TB that doubles ingest cost and races
-    schema drift. PERMISSIVE mode (Spark default) turns malformed lines
-    into NULL rows instead of failing the job; filter on a required key.
-    """
-    apply_runtime_conf(spark)
-    return spark.read.schema(schema).json(path)
-
-
-def write_jsonl(df: DataFrame, path: str, *, mode: str = "overwrite", compression: str = "gzip") -> None:
-    """Write newline-delimited JSON (the interchange format of LLM-corpus
-    tooling). Compressed by default: JSONL is ~5-10x the size of parquet,
-    gzip claws most of that back for cold interchange copies. Keep parquet
-    as the processing format; JSONL is for handoff."""
-    df.write.mode(mode).option("compression", compression).json(path)
-
-
-def read_csv(spark: SparkSession, path: str, schema, *, header: bool = True, sep: str = ",") -> DataFrame:
-    """CSV with mandatory explicit schema (same inference rationale as
-    read_jsonl; CSV inference additionally mis-types empty/numeric-looking
-    strings)."""
-    apply_runtime_conf(spark)
-    return spark.read.schema(schema).option("header", header).option("sep", sep).csv(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC source (built into Spark, no extra jars): the columnar
-    interchange format of Hive-era warehouses. Same pushdown/pruning
-    behavior as parquet — PushedFilters and ReadSchema both apply."""
-    apply_runtime_conf(spark)
-    return spark.read.orc(path)
-
-
-def write_orc(df: DataFrame, path: str, *, mode: str = "overwrite") -> None:
-    df.write.mode(mode).orc(path)
 
 
 def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:

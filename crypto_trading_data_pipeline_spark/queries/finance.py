@@ -957,14 +957,13 @@ _MACD_A9 = "2.0 / 10.0"
         "fold (Spark F.aggregate over the ordered close array, DuckDB "
         "list_reduce over the same list; seed = first element, step = "
         "a*x + (1-a)*acc with the same constant-folded IEEE literals), "
-        "making an order-sensitive recursion value-hash-match exactly — "
-        "the same trick streaming/stateful.py's EMA uses against its "
-        "batch fold. Shape at scale: one aggregate collapses ticks to "
-        "(symbol, day, ordered close array) — arrays bounded at 1440 "
-        "minutes/day; the signal pass folds day-level prefixes, O(days^2) "
-        "per symbol but span-bound (the same bounded-grid argument as "
-        "q_candle_gap_fill) and |symbols| x days rows total. Two "
-        "exchanges end to end: symbol,day then symbol."
+        "making an order-sensitive recursion value-hash-match exactly "
+        "between Spark and DuckDB. Shape at scale: one aggregate "
+        "collapses ticks to (symbol, day, ordered close array) — arrays "
+        "bounded at 1440 minutes/day; the signal pass folds day-level "
+        "prefixes, O(days^2) per symbol but span-bound (the same "
+        "bounded-grid argument as q_candle_gap_fill) and |symbols| x days "
+        "rows total. Two exchanges end to end: symbol,day then symbol."
     ),
 )
 def q_macd(spark: SparkSession, sf_dir: str):

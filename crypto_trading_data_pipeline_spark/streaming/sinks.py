@@ -15,11 +15,11 @@ of an unpersisted write would run it twice.
 - ``ParquetUpsertSink`` is the file-based twin used in tests and the
   benchmark. A call collects its batch to the driver as one Arrow table
   (the plan's one execution) and writes it with pyarrow as that epoch's
-  single delta file in a flat table directory; a table of 0 rows returns
-  before any file exists (the empty-batch guard). Only a fold runs a
-  Spark file-write job. ``read`` merges last-wins by key
-  (``merge_last_wins``), and deltas fold into one base once they hold as
-  many rows as the base.
+  one delta file, named by the epoch and committed by one rename, so a
+  retried epoch replaces its own file; a table of 0 rows returns before
+  any file exists (the empty-batch guard). Only a fold runs a Spark
+  file-write job. ``read`` merges last-wins by key (``merge_last_wins``),
+  and deltas fold into one base once they hold as many rows as the base.
 - ``JdbcUpsertSink`` reproduces staging + merge for any JDBC database
   (server-side MERGE, driver-side connection) — import-gated since test
   containers carry no JDBC driver or server. The batch is persisted across
@@ -33,7 +33,6 @@ from __future__ import annotations
 import os
 import re
 import shutil
-import uuid
 from glob import escape, glob
 from typing import NamedTuple
 
@@ -44,10 +43,9 @@ from ..operators.scale import recover_swap, swap_dir
 
 #: Column the parquet sink stores each row's epoch in (``read`` drops it).
 EPOCH_COL = "__epoch"
-#: ``{kind}-{epoch}-{token}-{spark part name}``: the table's data files.
-_DATA_FILE = re.compile(r"(base|delta)-(\d+)-([0-9a-f]+)-.+\.parquet")
-#: A delta attempt renamed into the table but not yet settled.
-_LANDING = re.compile(r"_landing-(\d+)-([0-9a-f]+)")
+#: ``delta-{epoch}.parquet`` or ``base-{epoch}-{spark part name}``: the
+#: table's data files.
+_DATA_FILE = re.compile(r"(base|delta)-(\d+)(?:-.+)?\.parquet")
 #: The footer key Spark reads a parquet file's row schema from.
 _SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
 
@@ -72,14 +70,9 @@ def merge_last_wins(
     )
 
 
-def _parquet_parts(directory: str) -> list[str]:
-    return [f for f in os.listdir(directory) if f.endswith(".parquet")]
-
-
 class _DataFile(NamedTuple):
     kind: str  # "base" or "delta"
     epoch: int
-    token: str
     path: str
 
 
@@ -87,20 +80,20 @@ class ParquetUpsertSink:
     """foreachBatch writer maintaining a keyed parquet table with last-wins
     upserts — the test twin of the reference's Postgres upsert.
 
-    Layout: flat files ``{base|delta}-{epoch}-{token}-{part}.parquet`` in
-    ``path``, each row carrying its epoch in ``EPOCH_COL``; ``token`` names
-    one write attempt.
+    Layout: flat files in ``path``, one ``delta-{epoch}.parquet`` per
+    non-empty epoch and the parts of at most one base,
+    ``base-{epoch}-{part}``, each row carrying its epoch in ``EPOCH_COL``.
 
     A call collects the batch once with ``toArrow()``. A batch of 0 rows
-    returns there, with no file and no staging directory (the empty-batch
-    guard). Otherwise pyarrow writes it as one ``part-00000.parquet`` in a
-    staging directory beside the table, with Spark's row schema in the
-    footer so a schema-inferring read gets the batch's types. The
-    directory is renamed into the table as ``_landing-{epoch}-{token}``,
-    the commit point; its file then moves to the table root, and the files
-    of any earlier attempt at the same epoch are removed, so a re-delivered
-    epoch replaces its own file. A crash after the commit point is
-    finished by ``_recover`` on the next call or ``read``.
+    returns there, with no file written (the empty-batch guard). Otherwise
+    pyarrow writes it inside the table as the hidden
+    ``.delta-{epoch}.parquet.tmp``, with Spark's row schema in the footer
+    so a schema-inferring read gets the batch's types, and
+    ``os.replace`` renames it to ``delta-{epoch}.parquet``: the commit
+    point. A re-delivered epoch replaces its own file by name, the
+    reference's epoch-named staging table in file form. A crash before the
+    rename leaves only the hidden file, which Spark's reader skips (a
+    leading dot) and the next call deletes.
 
     Driver memory is bounded by one batch. For the candle query that is
     the update-mode output, at most the state rows, which the watermark
@@ -110,7 +103,8 @@ class ParquetUpsertSink:
 
     Once the deltas older than the call's epoch hold as many rows as the
     base (footer row counts), they are merged with the base into a new
-    base, swapped in by rename-aside (``operators.scale.swap_dir``), so a
+    base. Spark writes it in parts to a staging directory beside the
+    table, swapped in by rename-aside (``operators.scale.swap_dir``), so a
     merge-on-read scans under twice the base's rows plus the newest
     batch. The newest epoch stays a delta, so its re-delivery still finds
     its own file. Epoch ids must not go backwards: one checkpoint per
@@ -128,9 +122,11 @@ class ParquetUpsertSink:
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
         import pyarrow.parquet as pq
 
-        self._recover()
-        for stale in glob(escape(self._staging("")) + "*"):
-            shutil.rmtree(stale)  # a crashed call's unfinished write
+        recover_swap(self.path)
+        if os.path.isdir(self._staging):
+            shutil.rmtree(self._staging)  # a crashed fold's unswapped base
+        for tmp in glob(os.path.join(escape(self.path), ".delta-*.parquet.tmp")):
+            os.remove(tmp)  # a crashed call's uncommitted delta
         epoch = int(epoch_id)
         latest = max((f.epoch for f in self._files()), default=-1)
         if epoch < latest:
@@ -143,24 +139,22 @@ class ParquetUpsertSink:
         self._schema = staged.schema
         if not rows.num_rows:
             return  # empty-batch guard (reference processor.py:117-119)
-        token = uuid.uuid4().hex[:12]
-        staging = self._staging(f"{epoch}-{token}")
-        os.makedirs(staging)
         # Spark's row schema in the footer, so a read that infers the
         # schema gets the batch's types (timestamp_ntz, not timestamp).
         rows = rows.replace_schema_metadata({_SPARK_ROW_METADATA: self._schema.json()})
-        pq.write_table(rows, os.path.join(staging, "part-00000.parquet"))
         os.makedirs(self.path, exist_ok=True)
-        landing = os.path.join(self.path, f"_landing-{epoch:012d}-{token}")
-        os.rename(staging, landing)
-        self._settle(landing)
+        delta = os.path.join(self.path, f"delta-{epoch:012d}.parquet")
+        tmp = os.path.join(self.path, f".delta-{epoch:012d}.parquet.tmp")
+        pq.write_table(rows, tmp)
+        os.replace(tmp, delta)  # the commit point
         self._fold(batch.sparkSession, epoch)
 
-    def _staging(self, tag: str) -> str:
-        """A write's staging dir: beside the table, so moving its files in
-        is a same-filesystem rename."""
+    @property
+    def _staging(self) -> str:
+        """The fold's staging dir: beside the table, so the swap is a
+        same-filesystem rename."""
         head, name = os.path.split(os.path.abspath(self.path))
-        return os.path.join(head, f".{name}.staging-{tag}")
+        return os.path.join(head, f".{name}.staging")
 
     def _files(self) -> list[_DataFile]:
         if not os.path.isdir(self.path):
@@ -169,23 +163,8 @@ class ParquetUpsertSink:
         for f in os.listdir(self.path):
             m = _DATA_FILE.fullmatch(f)
             if m:
-                out.append(_DataFile(m[1], int(m[2]), m[3], os.path.join(self.path, f)))
+                out.append(_DataFile(m[1], int(m[2]), os.path.join(self.path, f)))
         return out
-
-    def _settle(self, landing: str) -> None:
-        """Finish a committed landing: move its files to the table root,
-        then drop the files other attempts wrote for the same epoch."""
-        epoch, token = _LANDING.fullmatch(os.path.basename(landing)).groups()
-        for f in _parquet_parts(landing):
-            os.rename(os.path.join(landing, f),
-                      os.path.join(self.path, f"delta-{epoch}-{token}-{f}"))
-        self._drop_superseded(int(epoch), token)
-        shutil.rmtree(landing)
-
-    def _drop_superseded(self, epoch: int, token: str) -> None:
-        for f in self._files():
-            if f.kind == "delta" and f.epoch == epoch and f.token != token:
-                os.remove(f.path)
 
     def _fold(self, spark, epoch: int) -> None:
         """Merge the base and the deltas older than ``epoch`` into a new
@@ -202,13 +181,12 @@ class ParquetUpsertSink:
         rows = self._reader(spark).parquet(*(f.path for f in folded))
         merged = merge_last_wins(None, rows, keys=self.keys, order_col=self.order_col)
         top = max(f.epoch for f in folded)
-        token = uuid.uuid4().hex[:12]
-        staging = self._staging(f"{top}-{token}")
+        staging = self._staging
         merged.write.parquet(staging)
         for f in os.listdir(staging):
             src = os.path.join(staging, f)
             if f.endswith(".parquet"):
-                os.rename(src, os.path.join(staging, f"base-{top:012d}-{token}-{f}"))
+                os.rename(src, os.path.join(staging, f"base-{top:012d}-{f}"))
             else:
                 os.remove(src)  # _SUCCESS and checksums of the renamed parts
         for f in files:
@@ -216,22 +194,13 @@ class ParquetUpsertSink:
                 shutil.copy2(f.path, staging)
         swap_dir(staging, self.path)
 
-    def _recover(self) -> None:
-        """Finish what a crashed call left: a rename-aside swap cut between
-        its renames, or a committed landing not yet settled."""
-        recover_swap(self.path)
-        if os.path.isdir(self.path):
-            for f in os.listdir(self.path):
-                if _LANDING.fullmatch(f):
-                    self._settle(os.path.join(self.path, f))
-
     def _reader(self, spark):
         return spark.read if self._schema is None else spark.read.schema(self._schema)
 
     def read(self, spark) -> DataFrame:
         """The serving table: the base and deltas merged last-wins. Empty,
         with the batches' schema, while only empty batches have arrived."""
-        self._recover()
+        recover_swap(self.path)
         if self._schema is not None and not self._files():
             return spark.createDataFrame([], self._schema).drop(EPOCH_COL)
         rows = self._reader(spark).parquet(self.path)

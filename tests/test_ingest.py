@@ -9,8 +9,6 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import functions as F
-
 from crypto_trading_data_pipeline_spark.ingest import (
     backoff_schedule,
     normalize_trade_message,
@@ -87,40 +85,6 @@ def test_freshness_check(spark):
     assert not freshness_ok(df, now=stale_now)
 
 
-def test_jsonl_roundtrip_and_permissive(spark, tmp_path, sf_dir):
-    """JSONL round-trip preserves the documents table; malformed lines
-    become NULL rows (PERMISSIVE), dropped by a required-key filter."""
-    from crypto_trading_data_pipeline_spark.io import read_jsonl, read_table, write_jsonl
-
-    docs = read_table(spark, sf_dir, "documents")
-    out = str(tmp_path / "docs_jsonl")
-    write_jsonl(docs, out)
-    back = read_jsonl(spark, out, docs.schema)
-    assert back.count() == docs.count()
-    a = {r.doc_id: r.text for r in docs.collect()}
-    b = {r.doc_id: r.text for r in back.collect()}
-    assert a == b
-
-    broken = tmp_path / "broken"
-    broken.mkdir()
-    (broken / "part.jsonl").write_text('{"doc_id": 1, "text": "ok"}\nnot json at all\n')
-    parsed = read_jsonl(spark, str(broken), "doc_id LONG, text STRING")
-    assert parsed.count() == 2  # PERMISSIVE keeps the null row
-    assert parsed.filter("doc_id IS NOT NULL").count() == 1
-
-
-def test_csv_roundtrip(spark, tmp_path, sf_dir):
-    from crypto_trading_data_pipeline_spark.io import read_csv, read_table
-
-    nation = read_table(spark, sf_dir, "nation")
-    out = str(tmp_path / "nation_csv")
-    nation.write.mode("overwrite").option("header", True).csv(out)
-    back = read_csv(spark, out, nation.schema)
-    assert sorted(r.n_name for r in back.collect()) == sorted(
-        r.n_name for r in nation.collect()
-    )
-
-
 def test_to_kafka_records_roundtrip(spark):
     """Kafka wire serialization: to_json(struct(*)) must round-trip through
     the trade parser bit-exactly, and the key must carry the symbol."""
@@ -165,25 +129,6 @@ def test_kafka_source_options_match_reference():
     assert opts["startingOffsets"] == "earliest"
     assert opts["failOnDataLoss"] == "false"
     assert opts["maxOffsetsPerTrigger"] == "100000"
-
-
-def test_orc_roundtrip_with_pushdown(spark, tmp_path, sf_dir):
-    """ORC round-trip preserves values and pushes predicates to the scan
-    (same pushdown contract as parquet, no extra jars)."""
-    from crypto_trading_data_pipeline_spark.io import read_orc, read_table, write_orc
-
-    nation = read_table(spark, sf_dir, "nation")
-    out = str(tmp_path / "nation_orc")
-    write_orc(nation, out)
-    back = read_orc(spark, out)
-    assert sorted(r.n_name for r in back.collect()) == sorted(
-        r.n_name for r in nation.collect()
-    )
-    plan = (
-        back.filter(F.col("n_regionkey") == 1)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "PushedFilters: [" in plan and "EqualTo" in plan, plan
 
 
 def test_register_views_sql_surface(spark, sf_dir):

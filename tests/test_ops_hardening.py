@@ -215,26 +215,32 @@ def _crash(*_args):
     raise RuntimeError("simulated crash")
 
 
-def test_parquet_upsert_recovers_from_unsettled_landing(spark, tmp_path, monkeypatch):
-    """A re-delivered epoch that dies after its files land but before the
-    first delivery's files go leaves both on disk; the next read() (or
-    call) finishes the landing, keeping one copy of the epoch."""
+@pytest.mark.parametrize("leftover", ["whole", "truncated"])
+def test_parquet_upsert_recovers_from_crash_before_commit(spark, tmp_path, monkeypatch, leftover):
+    """A re-delivered epoch that dies before its commit rename leaves only
+    a hidden .tmp file, whole (the crash hit the rename) or cut short (it
+    hit the write). A read, even one inferring the schema, serves the
+    first delivery and skips the file; the next call removes it."""
     path = str(tmp_path / "serving")
     sink = ParquetUpsertSink(path, keys=["k"], order_col="ord")
     sink(spark.createDataFrame([(1, 10), (2, 20)], ["k", "ord"]), epoch_id=0)
-    batch = spark.createDataFrame([(2, 30), (3, 30)], ["k", "ord"])
-    sink(batch, epoch_id=1)
-    settled = _data_rows(path)
-    monkeypatch.setattr(sink, "_drop_superseded", _crash)
+    sink(spark.createDataFrame([(2, 30), (3, 30)], ["k", "ord"]), epoch_id=1)
+    committed = set(os.listdir(path))
+    monkeypatch.setattr(os, "replace", _crash)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        sink(batch, epoch_id=1)
+        sink(spark.createDataFrame([(2, 50), (3, 50)], ["k", "ord"]), epoch_id=1)
     monkeypatch.undo()
-    assert _data_rows(path) == settled + 2
-    got = {(r.k, r.ord) for r in sink.read(spark).collect()}
-    assert got == {(1, 10), (2, 30), (3, 30)}
-    assert _data_rows(path) == settled
-    assert not [f for f in os.listdir(path) if f.startswith("_landing")]
+    (hidden,) = set(os.listdir(path)) - committed
+    assert hidden.startswith(".") and hidden.endswith(".tmp")
+    if leftover == "truncated":
+        with open(os.path.join(path, hidden), "r+b") as f:
+            f.truncate(7)
+    for reader in (sink, ParquetUpsertSink(path, keys=["k"], order_col="ord")):
+        got = {(r.k, r.ord) for r in reader.read(spark).collect()}
+        assert got == {(1, 10), (2, 30), (3, 30)}
+    assert set(os.listdir(path)) == committed | {hidden}
     sink(spark.createDataFrame([(1, 40)], ["k", "ord"]), epoch_id=2)
+    assert not [f for f in os.listdir(path) if f.startswith(".")]
     got = {(r.k, r.ord) for r in sink.read(spark).collect()}
     assert got == {(1, 40), (2, 30), (3, 30)}
 

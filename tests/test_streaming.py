@@ -154,9 +154,15 @@ def _file_rows(path):
 def test_upsert_sink_writes_only_the_batch(spark, tmp_path, n_keys):
     """The files a call adds hold exactly its batch's rows, however many
     keys the table already holds: no whole-table rewrite per trigger. A
-    batch is one delta file; an empty batch writes nothing at all."""
+    batch is one delta file; an empty batch writes nothing at all. No call
+    leaves a hidden file in the table or a staging directory beside it."""
     path = str(tmp_path / "t")
-    sink = ParquetUpsertSink(path, keys=["k"], order_col="ord")
+    writer = ParquetUpsertSink(path, keys=["k"], order_col="ord")
+
+    def sink(df, epoch):
+        writer(df, epoch)
+        assert not [f for f in os.listdir(path) if f.startswith(".")]
+
     sink(spark.range(n_keys).selectExpr("id AS k", "1L AS v", "1.0D AS ord"), 0)
     one = spark.createDataFrame([(0, 2, 2.0)], ["k", "v", "ord"])
     sink(one, 1)  # folds epoch 0 into the base
@@ -170,8 +176,8 @@ def test_upsert_sink_writes_only_the_batch(spark, tmp_path, n_keys):
     assert sum(after[f] for f in added) == 2
     sink(batch.limit(0), 3)
     assert _file_rows(path) == after
-    assert not [f for f in os.listdir(tmp_path) if ".staging-" in f]
-    got = {r.k: r.v for r in sink.read(spark).collect()}
+    assert not [f for f in os.listdir(tmp_path) if ".staging" in f]
+    got = {r.k: r.v for r in writer.read(spark).collect()}
     assert len(got) == n_keys + 1
     assert (got[0], got[1], got[2], got[n_keys]) == (2, 3, 1, 3)
 
