@@ -14,6 +14,9 @@ Design principles (SURVEY.md §4, §7):
   express the semantics (multimodal decode).
 - Every operator designed for a 1000-executor / 100 TB deployment: broadcast
   small dims, partial aggregation, AQE, salting helpers.
+- Every top-level name is reached from an entry point (the driver contract,
+  ``__main__``, the benches, the scripts) or is the reference's own runtime,
+  kept with its reason in tests/test_reachability.py.
 """
 
 __version__ = "0.1.0"

@@ -3,9 +3,7 @@ SURVEY.md §2.1; behavior described at reference producer/producer.py:14-115).
 
 This sits OUTSIDE Spark by design — the reference does the same: a thin
 Python process pushes raw trade JSON onto Kafka, and the Spark engine owns
-everything after the topic. The engine-side twin of the normalization here
-is ``sources.normalize_binance`` (same field mapping, but as Spark columns),
-so backfills can replay raw archived messages through the identical logic.
+everything after the topic.
 
 The decision logic (subscription frame, event filter + field renaming,
 reconnect backoff schedule) is pure functions, unit-tested without any

@@ -1,9 +1,9 @@
-"""Table IO: the parquet fixture reader, its timestamp helpers and SQL views.
+"""Table IO: the parquet fixture reader and its timestamp helpers.
 
 The reference's only batch input is an implicit JDBC staging table; its
 streaming input is Kafka (reference spark_processor/processor.py:54-60).
 Our engine reads the driver's parquet fixtures for batch queries and wraps
-Kafka/file/rate sources for streaming (see sources.py / streaming/).
+Kafka/file sources for streaming (see sources.py / streaming/).
 """
 
 from __future__ import annotations
@@ -26,10 +26,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-#: Dimension tables that are broadcast-sized at every scale factor
-#: (FIXTURES.md §B: region 5 rows, nation 25, supplier 10·sf).
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
 
 
 #: Columns stored as parquet TIMESTAMP(NANOS), which Spark's reader rejects.
@@ -188,12 +184,3 @@ def events_between(
     if ts_to is not None:
         df = df.filter(F.col("ts") < F.lit(ts_to).cast(ts_type))
     return _normalize_ntz(df)
-
-
-def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    """Register the fixture tables as temp views so the full engine surface
-    is reachable from plain SQL (spark.sql('SELECT ... FROM lineitem')) —
-    the same names the DuckDB oracle uses, so any oracle statement is also
-    runnable against Spark directly."""
-    for n in names or TABLES:
-        read_table(spark, sf_dir, n).createOrReplaceTempView(n)

@@ -26,25 +26,7 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-#: Canonical multimodal record: payload + typed metadata.
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),  # image | audio | video
-        StructField("payload", BinaryType()),
-        StructField("mime", StringType()),
-        StructField("n_bytes", LongType()),
-    ]
-)
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 IMAGE_FEATURES_SCHEMA = StructType(
     [
@@ -57,7 +39,8 @@ IMAGE_FEATURES_SCHEMA = StructType(
 
 
 def attach_media(df: DataFrame, *, id_col: str, bytes_col: str, kind: str, mime: str) -> DataFrame:
-    """Wrap an existing binary column into the canonical media record."""
+    """Wrap an existing binary column into the media record
+    (media_id, kind, payload, mime, n_bytes)."""
     return df.select(
         F.col(id_col).cast("long").alias("media_id"),
         F.lit(kind).alias("kind"),
@@ -148,31 +131,6 @@ def raw_rgb_decode(payload: pd.Series) -> pd.DataFrame:
     )
 
 
-def raw_rgb_resize(payload: pd.Series, target_wh: tuple[int, int]) -> pd.Series:
-    """REAL nearest-neighbor resize for raw-RGB payloads — numpy index
-    striding, no codec. Malformed payloads pass through unchanged (the
-    decode step downstream reports them as width=0 anyway)."""
-    import struct
-
-    import numpy as np
-
-    tw, th = target_wh
-
-    def one(b) -> bytes:
-        b = bytes(b)
-        if len(b) < _RGB_HEADER_BYTES:
-            return b
-        w, h = struct.unpack_from("<II", b)
-        if len(b) != _RGB_HEADER_BYTES + w * h * 3 or w * h == 0:
-            return b
-        px = np.frombuffer(b, dtype="uint8", offset=_RGB_HEADER_BYTES).reshape(h, w, 3)
-        yi = (np.arange(th) * h) // th
-        xi = (np.arange(tw) * w) // tw
-        return encode_raw_rgb(px[yi][:, xi])
-
-    return payload.map(one)
-
-
 def _fake_image_decode(payload: pd.Series) -> pd.DataFrame:
     """Deterministic stand-in for a real image decoder: derives pseudo
     width/height/luma from the payload bytes. Replaced wholesale by a real
@@ -234,14 +192,6 @@ AUDIO_FEATURES_SCHEMA = StructType(
     ]
 )
 
-VIDEO_FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("frame_payload", BinaryType()),
-    ]
-)
-
 
 def encode_wav_pcm16(samples, sample_rate: int) -> bytes:
     """int16 sample array -> canonical 44-byte-header mono PCM16 WAV
@@ -300,138 +250,6 @@ def wav_audio_decode(payload: pd.Series) -> pd.DataFrame:
             "rms_level": pd.Series(rms, dtype="int32"),
         }
     )
-
-
-def _fake_audio_decode(payload: pd.Series) -> pd.DataFrame:
-    """Deterministic stand-in for an audio decoder (librosa/ffmpeg absent)."""
-    n = payload.map(len)
-    first = payload.map(lambda b: b[0] if len(b) else 0)
-    return pd.DataFrame(
-        {
-            "sample_rate": (8000 + (first % 5) * 8000).astype("int32"),
-            "duration_ms": (n.astype("int64") * 4),
-            "rms_level": ((n * 13 + first) % 100).astype("int32"),
-        }
-    )
-
-
-def extract_audio_features(
-    media: DataFrame,
-    *,
-    decoder: Callable[[pd.Series], pd.DataFrame] | None = None,
-    parallelism: int | None = None,
-) -> DataFrame:
-    """Audio decode + featurize via mapInPandas — same plumbing contract as
-    extract_image_features (Arrow batches, bounded memory, CPU-shaped
-    partitioning)."""
-    if decoder is None:
-        decoder = _fake_audio_decode
-    elif decoder == "wav":
-        decoder = wav_audio_decode
-
-    src = media.select("media_id", "payload")
-    if parallelism is not None:
-        src = src.repartition(parallelism)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = decoder(pdf["payload"])
-            feats.insert(0, "media_id", pdf["media_id"].values)
-            yield feats
-
-    return src.mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
-
-
-def resize_images(
-    media: DataFrame,
-    *,
-    target_bytes: int,
-    resizer: Callable[[pd.Series, int], pd.Series] | None = None,
-    parallelism: int | None = None,
-) -> DataFrame:
-    """Re-encode payloads to a bounded size, preserving the media record
-    shape (media_id/kind/payload/mime/n_bytes) so resized output feeds any
-    downstream media operator unchanged.
-
-    The fake resizer truncates/left-pads bytes to ``target_bytes``; a real
-    one (PIL thumbnail + re-encode) slots into the same signature.
-    """
-    if resizer is None:
-        def resizer(payload: pd.Series, tgt: int) -> pd.Series:  # noqa: F811
-            return payload.map(lambda b: bytes(b[:tgt]).ljust(tgt, b"\x00"))
-
-    src = media.select("media_id", "kind", "payload", "mime")
-    if parallelism is not None:
-        src = src.repartition(parallelism)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            out["payload"] = resizer(pdf["payload"], target_bytes)
-            out["n_bytes"] = out["payload"].map(len).astype("int64")
-            yield out[["media_id", "kind", "payload", "mime", "n_bytes"]]
-
-    return src.mapInPandas(run, schema=MEDIA_SCHEMA)
-
-
-def resize_raw_rgb_images(
-    media: DataFrame,
-    *,
-    target_wh: tuple[int, int],
-    parallelism: int | None = None,
-) -> DataFrame:
-    """REAL resize for raw-RGB payloads: nearest-neighbor to target_wh
-    (numpy striding — no codec), preserving the media record shape like
-    resize_images. The byte-budget variant (resize_images) bounds storage;
-    this bounds pixel dimensions, the thing a vision model actually wants."""
-    src = media.select("media_id", "kind", "payload", "mime")
-    if parallelism is not None:
-        src = src.repartition(parallelism)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            out["payload"] = raw_rgb_resize(pdf["payload"], target_wh)
-            out["n_bytes"] = out["payload"].map(len).astype("int64")
-            yield out[["media_id", "kind", "payload", "mime", "n_bytes"]]
-
-    return src.mapInPandas(run, schema=MEDIA_SCHEMA)
-
-
-def sample_video_frames(
-    media: DataFrame,
-    *,
-    frame_bytes: int = 64,
-    max_frames: int = 8,
-    parallelism: int | None = None,
-) -> DataFrame:
-    """Explode each video payload into up to ``max_frames`` frame records —
-    the row-expanding shape (1 input row -> N output rows) that real frame
-    sampling produces; mapInPandas handles fan-out natively since the
-    output batch need not align 1:1 with the input.
-
-    Fake extraction slices the payload into fixed-size chunks; a real
-    ffmpeg/torchcodec sampler replaces the slicing only.
-    """
-    src = media.select("media_id", "payload")
-    if parallelism is not None:
-        src = src.repartition(parallelism)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                n = min(max_frames, max(1, len(payload) // frame_bytes))
-                for i in range(n):
-                    ids.append(mid)
-                    idxs.append(i)
-                    frames.append(bytes(payload[i * frame_bytes : (i + 1) * frame_bytes]))
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": pd.Series(idxs, dtype="int32"),
-                 "frame_payload": frames}
-            )
-
-    return src.mapInPandas(run, schema=VIDEO_FRAME_SCHEMA)
 
 
 # --- video: raw multi-frame container + frame-sampling decoder -------------

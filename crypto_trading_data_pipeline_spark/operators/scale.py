@@ -1,6 +1,6 @@
-"""Scale utilities: skew salting, partitioned layout writers, distribution
-helpers. These are the knobs a 100 TB deployment turns; none change query
-semantics.
+"""Scale utilities: skew salting, literal rendering, the crash-safe directory
+swap, layout keys and distribution helpers. These are the knobs a 100 TB
+deployment turns; none change query semantics.
 
 Context: the reference runs 1 worker / 1 core / 1 GB and sets zero Spark
 configs (SURVEY.md §6). Our engine targets 1000-executor clusters, where
@@ -141,49 +141,6 @@ def salted_group_sum(
     )
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    *,
-    partition_by: list[str],
-    sort_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write a parquet table partitioned by low-cardinality columns
-    (e.g. date, symbol) so readers get partition pruning for free.
-
-    ``sort_by`` orders rows within each file — tight min/max row-group
-    stats turn point/range predicates into row-group skips.
-    """
-    if sort_by:
-        df = df.sortWithinPartitions(*sort_by)
-    df.write.mode(mode).partitionBy(*partition_by).parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    *,
-    bucket_by: list[str],
-    buckets: int,
-    sort_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist as a bucketed table (hash-clustered files + metastore
-    metadata). Two tables bucketed the same way on the join key give a
-    co-located join: zero Exchange on either side — at 100 TB that removes
-    the dominant cost of every fact-fact join touching the key.
-
-    Bucketing requires saveAsTable (the bucket spec lives in the catalog,
-    not the parquet files). Readers must keep
-    spark.sql.sources.bucketing.enabled=true (default).
-    """
-    w = df.write.mode(mode).bucketBy(buckets, *bucket_by)
-    if sort_by:
-        w = w.sortBy(*sort_by)
-    w.format("parquet").saveAsTable(table)
-
-
 def recover_swap(path: str) -> None:
     """Finish or undo a ``swap_dir`` a crash cut short. A run that died
     between rename-aside and move-in leaves the table at <path>.old and
@@ -216,95 +173,6 @@ def swap_dir(staging: str, path: str) -> None:
     os.rename(staging, path)
     if os.path.exists(old):
         shutil.rmtree(old)
-
-
-def compact_files(
-    spark,
-    path: str,
-    *,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_by: list[str] | None = None,
-) -> int:
-    """Rewrite a parquet directory into ~target-sized files; returns the
-    output file count.
-
-    The small-files problem is the silent killer of long-lived ingest
-    tables: a streaming sink emitting one file per micro-batch per
-    partition turns a year of 60 s triggers into ~500k tiny files, and
-    every reader pays open/footer/seek costs per file plus a scheduler
-    task per split. Compaction = one read + coalesce to
-    ceil(bytes/target) + atomic swap. ``sort_by`` additionally clusters
-    rows so min/max row-group stats prune (cheap Z-order stand-in for a
-    single key).
-
-    Uses coalesce (narrow, no shuffle) unless sorting is requested —
-    sortWithinPartitions after repartition gives globally useful file
-    clustering at the cost of one shuffle.
-    """
-    import math
-    import os
-    import tempfile
-
-    # Crash recovery BEFORE touching anything (ADVICE r2).
-    recover_swap(path)
-    total = sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    parent = os.path.dirname(os.path.abspath(path))
-    staging = tempfile.mkdtemp(prefix="compact_", dir=parent)
-    if sort_by:
-        out = df.repartition(n_out).sortWithinPartitions(*sort_by)
-    else:
-        out = df.coalesce(n_out)
-    out.write.mode("overwrite").parquet(staging)
-    swap_dir(staging, path)
-    return n_out
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: list[str],
-    *,
-    buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-resistant equi-join: salt the BIG side, replicate the SMALL
-    side across all salt values, join on (keys + salt).
-
-    A hot join key puts its entire fact-side volume into one shuffle
-    partition; AQE's skew split helps sort-merge joins but cannot split a
-    hash partition consumed by a single stateful consumer. Salting spreads
-    each key over ``buckets`` partitions deterministically; the small side
-    is exploded x buckets (bounded: |small| * buckets rows), so the join
-    result is identical while the worst partition shrinks ~buckets-fold.
-
-    Semantics-preserving ONLY for big-side-preserving joins (inner/left/
-    semi/anti on equi-keys): with how='right'/'full' every UNMATCHED
-    small-side row would survive once per salt replica — buckets-fold
-    duplicated output — so those are rejected rather than silently wrong
-    (ADVICE r2). For right/full skew, swap the sides or fall back to AQE
-    skew-join.
-    """
-    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi",
-               "leftsemi", "semi", "left_anti", "leftanti", "anti"}
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_join(how={how!r}) would duplicate unmatched small-side "
-            f"rows once per salt bucket; only big-side-preserving joins are "
-            f"supported: {sorted(allowed)}"
-        )
-    salted_big = with_salt(big, buckets=buckets)
-    replicated = small.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
-    ).withColumn("__salt", F.col("__salt").cast("bigint"))
-    out = salted_big.join(replicated, [*on, "__salt"], how)
-    return out.drop("__salt")
 
 
 def zorder_key(x, y, *, bits: int = 8):

@@ -1,5 +1,6 @@
-"""Input adapters: Kafka (prod) and file/rate (tests) sources, plus the
-trade-message parse transform shared by batch and streaming.
+"""Input adapters: the Kafka source (prod) and a file source (tests and the
+benchmark), plus the trade-message parse transform shared by batch and
+streaming.
 
 Reference mapping:
 - Kafka stream source  -> reference spark_processor/processor.py:54-60
@@ -9,12 +10,6 @@ Reference mapping:
 - decimal casts        -> processor.py:71-72 (string -> DECIMAL(20,8))
 - epoch-ms -> ts       -> processor.py:73
 - trade_value          -> processor.py:74
-
-The producer-side event filter and key-rename (reference
-producer/producer.py:50-58) are folded into ``parse_trades`` so the engine
-accepts raw Binance-shaped JSON too: pass ``raw_binance=True`` to map
-e/t/s/p/q/T/m and keep only trade events — moving that projection from
-client Python into Spark.
 """
 
 from __future__ import annotations
@@ -24,21 +19,12 @@ from pyspark.sql import functions as F
 
 from .schemas import MONEY, TRADE_SCHEMA
 
-_BINANCE_RENAME = [
-    ("t", "trade_id"),
-    ("s", "symbol"),
-    ("p", "price"),
-    ("q", "quantity"),
-    ("T", "trade_time"),
-    ("m", "is_buyer_maker"),
-]
-
 
 def kafka_source_options(
     *,
     topic: str,
     brokers: str,
-    starting_offsets: str | None = "latest",
+    starting_offsets: str = "latest",
     fail_on_data_loss: bool | None = None,
     max_offsets_per_trigger: int | None = None,
 ) -> dict[str, str]:
@@ -55,9 +41,8 @@ def kafka_source_options(
     opts = {
         "kafka.bootstrap.servers": brokers,
         "subscribe": topic,
+        "startingOffsets": starting_offsets,
     }
-    if starting_offsets is not None:
-        opts["startingOffsets"] = starting_offsets
     if fail_on_data_loss is not None:
         opts["failOnDataLoss"] = "true" if fail_on_data_loss else "false"
     if max_offsets_per_trigger is not None:
@@ -82,12 +67,6 @@ def kafka_stream(
     return spark.readStream.format("kafka").options(**opts).load()
 
 
-def kafka_batch(spark: SparkSession, *, topic: str, brokers: str) -> DataFrame:
-    """Batch twin of the Kafka source — same columns, bounded read."""
-    opts = kafka_source_options(topic=topic, brokers=brokers, starting_offsets=None)
-    return spark.read.format("kafka").options(**opts).load()
-
-
 def parse_trades(raw: DataFrame, *, value_col: str = "value") -> DataFrame:
     """Kafka value bytes -> typed trade rows.
 
@@ -108,103 +87,7 @@ def parse_trades(raw: DataFrame, *, value_col: str = "value") -> DataFrame:
     )
 
 
-def normalize_binance(raw_json: DataFrame, *, value_col: str = "value") -> DataFrame:
-    """Raw Binance WS payloads -> canonical trade JSON columns.
-
-    Rebuilds the producer's client-side filter+rename (reference
-    producer/producer.py:50-58) as a Spark transform: keep only
-    ``e == 'trade'`` events and rename the single-letter keys.
-
-    Uses ``get_json_object`` (case-sensitive JSON paths) rather than
-    ``from_json``: Binance uses both ``t`` and ``T`` as keys, which collide
-    under Spark's case-insensitive struct-field resolution.
-    """
-    v = F.col(value_col).cast("string")
-    return raw_json.filter(F.get_json_object(v, "$.e") == "trade").select(
-        *[F.get_json_object(v, f"$.{short}").alias(long) for short, long in _BINANCE_RENAME]
-    )
-
-
 def file_json_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-based stand-in for the Kafka source in tests: each JSON line is
     one message; exposes the same ``value``-column shape."""
-    return (
-        spark.readStream.schema("value STRING")
-        .format("text")
-        .load(path)
-        .withColumnRenamed("value", "value")
-    )
-
-
-def jdbc_table(
-    spark: SparkSession,
-    *,
-    url: str,
-    table: str,
-    partition_column: str | None = None,
-    num_partitions: int = 8,
-    lower_bound=None,
-    upper_bound=None,
-    **options: str,
-) -> DataFrame:
-    """Batch JDBC read — the read twin of the reference's JDBC staging write
-    (reference spark_processor/processor.py:126-135).
-
-    Without ``partition_column`` the whole table arrives through ONE
-    connection on one task — fine for dims, fatal for facts. With it, Spark
-    issues ``num_partitions`` range-bounded queries in parallel; pick an
-    indexed, roughly-uniform column (a serial PK) and real bounds.
-    Untested in this container (no JDBC driver/server) — logic is config
-    assembly only.
-    """
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("numPartitions", str(num_partitions))
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-        )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()
-
-
-def to_kafka_records(df: DataFrame, *, key_col: str | None = None) -> DataFrame:
-    """Serialize every column into the Kafka wire shape the producer uses
-    (reference producer/producer.py:22-25: one JSON object per message) —
-    a (key, value) pair of strings, JVM-side via to_json(struct(*)).
-
-    ``key_col`` (e.g. symbol) keys the messages so Kafka partitioning
-    co-locates a key's trades in one partition — preserving the per-symbol
-    arrival order the reference's open/close semantics rely on. Without a
-    key, messages round-robin.
-    """
-    value = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
-    key = (
-        F.col(key_col).cast("string")
-        if key_col is not None
-        else F.lit(None).cast("string")
-    )
-    return df.select(key.alias("key"), value.alias("value"))
-
-
-def kafka_sink(
-    df: DataFrame,
-    *,
-    topic: str,
-    brokers: str,
-    checkpoint: str,
-    key_col: str | None = None,
-):
-    """writeStream half of the producer (reference producer/producer.py:60,
-    rebuilt Spark-side): JSON records to a topic, exactly-once per epoch via
-    the checkpoint. Returns the started StreamingQuery."""
-    return (
-        to_kafka_records(df, key_col=key_col)
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    return spark.readStream.schema("value STRING").format("text").load(path)

@@ -1,8 +1,5 @@
-"""Ingestion adapter pure-function tests (no network, no Spark).
-
-The wire-side normalization must agree with the Spark-side twin
-(sources.normalize_binance) so archived raw messages replay identically
-through either path.
+"""Ingestion adapter pure-function tests (no network), plus the Kafka
+source option map, the wire schema and the freshness check.
 """
 
 from __future__ import annotations
@@ -50,23 +47,6 @@ def test_backoff_schedule_caps():
     assert [next(sched) for _ in range(6)] == [5, 10, 20, 40, 60, 60]
 
 
-def test_wire_and_spark_normalization_agree(spark):
-    """The same raw message through ingest.normalize_trade_message and
-    through sources.normalize_binance must yield the same record."""
-    from crypto_trading_data_pipeline_spark.sources import normalize_binance
-
-    raw = json.dumps(
-        {"e": "trade", "t": "7", "s": "ETHUSDT", "p": "2200.5", "q": "2",
-         "T": "1700000000000", "m": "true"}
-    )
-    wire = normalize_trade_message(raw)
-    df = spark.createDataFrame([(raw,)], ["value"])
-    spark_rec = normalize_binance(df).collect()[0].asDict()
-    assert set(spark_rec) == set(wire)
-    for k, v in spark_rec.items():
-        assert str(v).lower() == str(wire[k]).lower(), k
-
-
 def test_freshness_check(spark):
     """Monitor semantics (reference monitor DAG): fresh row within horizon
     -> OK; all rows older -> check fails."""
@@ -83,26 +63,6 @@ def test_freshness_check(spark):
     stale_now = datetime(2024, 3, 1, 12, 8, 0)    # 4min after newest row
     assert freshness_ok(df, now=fresh_now)
     assert not freshness_ok(df, now=stale_now)
-
-
-def test_to_kafka_records_roundtrip(spark):
-    """Kafka wire serialization: to_json(struct(*)) must round-trip through
-    the trade parser bit-exactly, and the key must carry the symbol."""
-    from crypto_trading_data_pipeline_spark.sources import parse_trades, to_kafka_records
-
-    src = spark.createDataFrame(
-        [(9, "BTCUSDT", "42000.10", "0.5", 1_700_000_000_000, False)],
-        "trade_id LONG, symbol STRING, price STRING, quantity STRING, "
-        "trade_time LONG, is_buyer_maker BOOLEAN",
-    )
-    rec = to_kafka_records(src, key_col="symbol")
-    assert rec.columns == ["key", "value"]
-    row = rec.collect()[0]
-    assert row.key == "BTCUSDT"
-    back = parse_trades(spark.createDataFrame([(row.value,)], ["value"])).collect()[0]
-    assert back.trade_id == 9 and str(back.price) == "42000.10000000"
-    plan = rec._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan  # serialization stays JVM-side
 
 
 def test_kafka_source_options_match_reference():
@@ -129,21 +89,6 @@ def test_kafka_source_options_match_reference():
     assert opts["startingOffsets"] == "earliest"
     assert opts["failOnDataLoss"] == "false"
     assert opts["maxOffsetsPerTrigger"] == "100000"
-
-
-def test_register_views_sql_surface(spark, sf_dir):
-    """After register_views, oracle-shaped SQL runs directly on Spark."""
-    from crypto_trading_data_pipeline_spark.io import register_views
-
-    register_views(spark, sf_dir, "nation", "region")
-    got = spark.sql(
-        """
-        SELECT r_name, count(*) AS n FROM nation
-        JOIN region ON n_regionkey = r_regionkey
-        GROUP BY r_name ORDER BY r_name
-        """
-    ).collect()
-    assert sum(r.n for r in got) == 25
 
 
 def test_wire_schema_matches_reference_field_for_field():

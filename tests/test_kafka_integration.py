@@ -17,18 +17,17 @@ To run it for real, anywhere Docker exists (one command per step):
         python -m pytest tests/test_kafka_integration.py
     # 3. teardown:  docker rm -f redpanda
 
-Everything the test drives is the exact production wiring — sources.py
-kafka_sink/kafka_batch/kafka_stream are thin option-builders over Spark's
-built-in connector, so the unit suites prove the transforms on file-stream
-twins and THIS module proves only the broker hop itself:
-produce (to_kafka_records -> kafka) -> batch read-back -> parse_trades
-round-trip, then the streaming path kafka_stream -> parse_trades ->
-candle_stream matching reference spark_processor/processor.py:54-101.
+The streaming side is the exact production wiring: sources.kafka_stream
+is a thin option-builder over Spark's built-in connector, so the unit
+suites prove the transforms on file-stream twins and THIS module proves
+only the broker hop itself. The fixture produces the trades in the
+producer's wire shape (one JSON object per message, symbol-keyed), and
+the test runs kafka_stream -> parse_trades -> candle_stream, matching
+reference spark_processor/processor.py:54-101.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 
@@ -80,10 +79,10 @@ def topic(spark):
 
 @pytest.fixture(scope="module")
 def produced(spark, topic, tmp_path_factory):
-    """Produce the fixture trades once via the PRODUCTION wire serializer
-    (sources.to_kafka_records — JSON object per message, symbol-keyed),
-    through Spark's batch Kafka sink."""
-    from crypto_trading_data_pipeline_spark.sources import to_kafka_records
+    """Produce the fixture trades once in the producer's wire shape (one
+    JSON object per message, keyed by symbol so a symbol's trades share a
+    partition), through Spark's batch Kafka sink."""
+    from pyspark.sql import functions as F
 
     df = spark.createDataFrame(
         [tuple(t.values()) for t in _TRADES],
@@ -91,85 +90,16 @@ def produced(spark, topic, tmp_path_factory):
         "trade_time long, is_buyer_maker boolean",
     )
     (
-        to_kafka_records(df, key_col="symbol")
+        df.select(
+            F.col("symbol").alias("key"),
+            F.to_json(F.struct(*[F.col(c) for c in df.columns])).alias("value"),
+        )
         .write.format("kafka")
         .option("kafka.bootstrap.servers", BROKERS)
         .option("topic", topic)
         .save()
     )
     return topic
-
-
-def test_batch_roundtrip_parses_byte_for_byte(spark, produced):
-    """kafka_batch -> parse_trades must reproduce the reference processor's
-    parsed schema and values exactly (processor.py:54-75): typed columns,
-    MONEY decimals, millis -> timestamp, derived trade_value."""
-    from crypto_trading_data_pipeline_spark.schemas import TRADE_SCHEMA
-    from crypto_trading_data_pipeline_spark.sources import kafka_batch, parse_trades
-
-    # The WIRE schema the bytes are parsed with must equal reference
-    # processor.py:43-52 field-for-field (name, type, order): trade_id
-    # long, symbol string, price string, quantity string (decimals ride
-    # as STRINGS on the wire), trade_time epoch-millis long,
-    # is_buyer_maker boolean.
-    assert [(f.name, f.dataType.simpleString()) for f in TRADE_SCHEMA.fields] == [
-        ("trade_id", "bigint"),
-        ("symbol", "string"),
-        ("price", "string"),
-        ("quantity", "string"),
-        ("trade_time", "bigint"),
-        ("is_buyer_maker", "boolean"),
-    ]
-
-    raw = kafka_batch(spark, topic=produced, brokers=BROKERS)
-    parsed = parse_trades(raw)
-    fields = [f.simpleString() for f in parsed.schema.fields]
-    assert fields[:6] == [
-        "trade_id:bigint",
-        "symbol:string",
-        "price:decimal(20,8)",
-        "quantity:decimal(20,8)",
-        "trade_time:timestamp",
-        "is_buyer_maker:boolean",
-    ]
-    # trade_value = price * quantity: exact precision depends on
-    # spark.sql.decimalOperations.allowPrecisionLoss; decimal either way.
-    assert fields[6].startswith("trade_value:decimal(38,")
-    # Epoch compare via unix_millis in-query: collect() renders LTZ as a
-    # naive datetime in the SESSION tz, and datetime.timestamp() would
-    # re-interpret it in the HOST OS tz — skewing every epoch when the
-    # two differ. unix_millis reads the instant directly.
-    from pyspark.sql import functions as F
-
-    rows = {
-        r.trade_id: r
-        for r in parsed.withColumn(
-            "tt_ms", F.expr("unix_millis(trade_time)")
-        ).collect()
-    }
-    assert len(rows) == len(_TRADES)
-    for t in _TRADES:
-        r = rows[t["trade_id"]]
-        assert r.symbol == t["symbol"]
-        assert float(r.price) == pytest.approx(float(t["price"]))
-        assert float(r.quantity) == pytest.approx(float(t["quantity"]))
-        assert r.tt_ms == t["trade_time"]
-        assert float(r.trade_value) == pytest.approx(
-            float(t["price"]) * float(t["quantity"])
-        )
-    # Keying by symbol must have landed each symbol's trades in order
-    # within its partition (the per-symbol ordering the reference's
-    # open/close semantics rely on).
-    part_order = (
-        raw.selectExpr("partition", "offset", "CAST(value AS STRING) AS v")
-        .orderBy("partition", "offset")
-        .collect()
-    )
-    by_part: dict[int, list[int]] = {}
-    for r in part_order:
-        by_part.setdefault(r.partition, []).append(json.loads(r.v)["trade_id"])
-    for ids in by_part.values():
-        assert ids == sorted(ids)
 
 
 def test_streaming_candles_end_to_end(spark, produced, tmp_path):

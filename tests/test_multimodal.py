@@ -1,4 +1,5 @@
-"""Multimodal plumbing: canonical media schema, Arrow-batched decode path."""
+"""Multimodal plumbing: the media record, the Arrow-batched decode path and
+the numpy decoders."""
 
 from __future__ import annotations
 
@@ -61,57 +62,6 @@ def test_metadata_query_prunes_payload(spark):
     # metadata-only aggregation runs without touching payload bytes
     rows = media.groupBy("kind").agg(F.sum("n_bytes").alias("total")).collect()
     assert rows[0].total == 103
-
-
-def test_audio_features(spark):
-    from crypto_trading_data_pipeline_spark.operators.multimodal import (
-        AUDIO_FEATURES_SCHEMA,
-        extract_audio_features,
-    )
-
-    df = spark.createDataFrame([(1, b"\x01" * 250), (2, b"")], ["id", "raw"])
-    media = attach_media(df, id_col="id", bytes_col="raw", kind="audio", mime="audio/wav")
-    out = {r.media_id: r for r in extract_audio_features(media).collect()}
-    assert extract_audio_features(media).schema == AUDIO_FEATURES_SCHEMA
-    assert out[1].sample_rate == 8000 + (1 % 5) * 8000
-    assert out[1].duration_ms == 1000  # 250 bytes * 4
-    assert out[2].duration_ms == 0
-
-
-def test_resize_preserves_media_contract(spark):
-    from crypto_trading_data_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_image_features,
-        resize_images,
-    )
-
-    media = _media(spark)
-    resized = resize_images(media, target_bytes=16)
-    assert resized.schema == MEDIA_SCHEMA
-    rows = {r.media_id: r for r in resized.collect()}
-    assert all(r.n_bytes == 16 for r in rows.values())
-    assert rows[1].payload[:3] == b"\x10\x20\x30"          # content kept
-    assert rows[3].payload == b"\x00" * 16                 # empty -> padded
-    # resized output must feed downstream media operators unchanged
-    assert extract_image_features(resized).count() == 3
-
-
-def test_video_frame_sampling_fan_out(spark):
-    from crypto_trading_data_pipeline_spark.operators.multimodal import sample_video_frames
-
-    df = spark.createDataFrame(
-        [(1, bytes(range(200))), (2, b"\x05" * 1000), (3, b"xy")], ["id", "raw"]
-    )
-    media = attach_media(df, id_col="id", bytes_col="raw", kind="video", mime="video/fake")
-    frames = sample_video_frames(media, frame_bytes=64, max_frames=8).collect()
-    by_id = {}
-    for r in frames:
-        by_id.setdefault(r.media_id, []).append(r)
-    assert len(by_id[1]) == 3          # 200 // 64
-    assert len(by_id[2]) == 8          # capped at max_frames
-    assert len(by_id[3]) == 1          # short payload still yields one frame
-    f0 = sorted(by_id[1], key=lambda r: r.frame_idx)[0]
-    assert bytes(f0.frame_payload) == bytes(range(64))
 
 
 def _pil_available() -> bool:
@@ -199,63 +149,30 @@ def test_raw_rgb_decode_real_path(spark):
     assert (rows[3].width, rows[3].height, rows[3].mean_luma) == (0, 0, 0)  # malformed
 
 
-def test_raw_rgb_resize_real_path(spark):
-    """Nearest-neighbor resize halves a checkerboard exactly; the record
-    contract (schema + recomputed n_bytes) survives, and re-decoding the
-    resized payload reports the target dimensions."""
-    import numpy as np
-
-    from crypto_trading_data_pipeline_spark.operators.multimodal import (
-        attach_media,
-        encode_raw_rgb,
-        extract_image_features,
-        resize_raw_rgb_images,
-    )
-
-    img = np.zeros((4, 4, 3), dtype="uint8")
-    img[::2, ::2] = 200  # top-left of each 2x2 block
-    df = spark.createDataFrame([(1, encode_raw_rgb(img))], ["id", "raw"])
-    media = attach_media(df, id_col="id", bytes_col="raw", kind="image", mime="image/x-raw-rgb")
-    small = resize_raw_rgb_images(media, target_wh=(2, 2))
-    r = small.collect()[0]
-    assert r.n_bytes == 8 + 2 * 2 * 3
-    feats = extract_image_features(small, decoder="raw_rgb").collect()[0]
-    assert (feats.width, feats.height) == (2, 2)
-    # Nearest-neighbor with floor indexing picks pixel (0,0) of each block.
-    assert feats.mean_luma == int(200 * 0.299 + 200 * 0.587 + 200 * 0.114)
-
-
-def test_wav_audio_decode_real_path(spark):
+def test_wav_audio_decode_real_path():
     """REAL audio decode, numpy-only RIFF parse: a synthesized 440 Hz sine
-    at 16 kHz reports its true sample rate, duration, and RMS (amp/sqrt(2))
-    through extract_audio_features; malformed bytes degrade to zeros."""
+    at 16 kHz reports its true sample rate, duration, and RMS (amp/sqrt(2));
+    malformed bytes degrade to zeros."""
     import numpy as np
 
     from crypto_trading_data_pipeline_spark.operators.multimodal import (
-        attach_media,
         encode_wav_pcm16,
-        extract_audio_features,
+        wav_audio_decode,
     )
 
     rate, secs, amp = 16000, 0.5, 10000
     t = np.arange(int(rate * secs)) / rate
     sine = (amp * np.sin(2 * np.pi * 440 * t)).astype("int16")
     silent = np.zeros(800, dtype="int16")
-    df = spark.createDataFrame(
-        [
-            (1, encode_wav_pcm16(sine, rate)),
-            (2, encode_wav_pcm16(silent, 8000)),
-            (3, b"not a wav"),
-        ],
-        ["id", "raw"],
+    out = wav_audio_decode(
+        pd.Series([encode_wav_pcm16(sine, rate), encode_wav_pcm16(silent, 8000), b"not a wav"])
     )
-    media = attach_media(df, id_col="id", bytes_col="raw", kind="audio", mime="audio/wav")
-    rows = {r.media_id: r for r in extract_audio_features(media, decoder="wav").collect()}
-    assert rows[1].sample_rate == 16000
-    assert rows[1].duration_ms == 500
-    assert abs(rows[1].rms_level - amp / np.sqrt(2)) < amp * 0.01
-    assert (rows[2].sample_rate, rows[2].duration_ms, rows[2].rms_level) == (8000, 100, 0)
-    assert (rows[3].sample_rate, rows[3].duration_ms, rows[3].rms_level) == (0, 0, 0)
+    rows = list(out.itertuples(index=False))
+    assert rows[0].sample_rate == 16000
+    assert rows[0].duration_ms == 500
+    assert abs(rows[0].rms_level - amp / np.sqrt(2)) < amp * 0.01
+    assert (rows[1].sample_rate, rows[1].duration_ms, rows[1].rms_level) == (8000, 100, 0)
+    assert (rows[2].sample_rate, rows[2].duration_ms, rows[2].rms_level) == (0, 0, 0)
 
 
 def test_video_frame_sample_decoder_properties():

@@ -6,6 +6,7 @@ unconverged labels, and freshness cutoffs respect timezones."""
 from __future__ import annotations
 
 import os
+import shutil
 from datetime import datetime, timedelta, timezone
 
 import pytest
@@ -199,6 +200,13 @@ def test_parquet_upsert_recovers_from_mid_swap_crash(spark, tmp_path):
     sink(spark.createDataFrame([(2, 30)], ["k", "ord"]), epoch_id=1)
     got = {(r.k, r.ord) for r in sink.read(spark).collect()}
     assert got == {(1, 10), (2, 30)}
+    # A leftover .old beside an intact table is completed-swap garbage:
+    # the next call clears it instead of renaming onto it.
+    shutil.copytree(path, path + ".old")
+    sink(spark.createDataFrame([(3, 30)], ["k", "ord"]), epoch_id=2)
+    assert not os.path.exists(path + ".old")
+    got = {(r.k, r.ord) for r in sink.read(spark).collect()}
+    assert got == {(1, 10), (2, 30), (3, 30)}
 
 
 def _data_rows(path):
@@ -270,7 +278,7 @@ def test_parquet_upsert_recovers_from_mid_compaction_crash(spark, tmp_path, monk
     assert os.path.exists(path) and not os.path.exists(path + ".old")
     assert _data_rows(path) == 3  # epoch 0's two rows, epoch 1's one
     sink(spark.createDataFrame([(3, 30)], ["k", "ord"]), epoch_id=2)
-    assert not [f for f in os.listdir(tmp_path) if ".staging-" in f]
+    assert not [f for f in os.listdir(tmp_path) if ".staging" in f]
     assert _data_rows(path) == 3  # the base (keys 1, 2) plus epoch 2
     got = {(r.k, r.ord) for r in sink.read(spark).collect()}
     assert got == {(1, 10), (2, 30), (3, 30)}

@@ -1,18 +1,15 @@
-"""End-to-end pipeline compositions (pipelines.py): the operators are
+"""End-to-end pipeline composition (pipelines.py): the operators are
 oracle-proven individually; these tests pin the CONTRACTS of the composed
-jobs — determinism, stage invariants, and the partitioned-write layout.
+job — determinism, stage invariants and its observed metrics.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import functions as F
 
 from crypto_trading_data_pipeline_spark.io import read_table
 from crypto_trading_data_pipeline_spark.operators.dedup import normalize_text
-from crypto_trading_data_pipeline_spark.operators.scale import write_partitioned
-from crypto_trading_data_pipeline_spark.pipelines import candle_serving, corpus_prep
+from crypto_trading_data_pipeline_spark.pipelines import corpus_prep
 
 SF = "/root/testdata/sf0.001"
 
@@ -46,53 +43,6 @@ def test_corpus_prep_invariants(spark):
         out.unpersist()
 
 
-def test_corpus_prep_partitioned_layout(spark, tmp_path):
-    """The split tag is the write partition key: one directory per split,
-    readable back with partition pruning."""
-    docs = read_table(spark, SF, "documents")
-    out = corpus_prep(docs)
-    dest = str(tmp_path / "corpus")
-    write_partitioned(out, dest, partition_by=["split"], sort_by=["doc_id"])
-    assert {d for d in os.listdir(dest) if d.startswith("split=")} >= {"split=train"}
-    back = spark.read.parquet(dest)
-    assert back.count() == out.count()
-    pushed = (
-        back.filter(F.col("split") == "train")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "PartitionFilters" in pushed
-
-
-def test_candle_serving_tiers(spark):
-    events = read_table(spark, SF, "events")
-    tiers = candle_serving(
-        events, ts_col="ts", key_col="event_type", price_col="value", qty_col=None
-    )
-    one, five = tiers["1min"], tiers["5min"]
-
-    # Gap-filled tier: per symbol the minute grid is CONTINUOUS.
-    g = one.groupBy("symbol").agg(
-        F.min("window_start").alias("lo"),
-        F.max("window_start").alias("hi"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    for r in g.collect():
-        span_minutes = int((r.hi - r.lo).total_seconds() // 60) + 1
-        assert r.n == span_minutes, f"{r.symbol}: {r.n} rows for {span_minutes} slots"
-    # Synthesized rows are flat zero-volume candles.
-    gaps = one.filter("is_gap").collect()
-    assert all(
-        r.n_trades == 0 and r.open_price == r.close_price == r.high_price == r.low_price
-        for r in gaps
-    )
-
-    # Rollup tier conserves trade counts (re-aggregation loses nothing).
-    assert (
-        five.agg(F.sum("n_trades")).first()[0]
-        == one.agg(F.sum("n_trades")).first()[0]
-    )
-
-
 def test_corpus_prep_observation_metrics(spark, sf_dir):
     """df.observe metrics accumulate during the materializing action (no
     second pass) and report the prep run's health: survivor count, mean
@@ -111,60 +61,3 @@ def test_corpus_prep_observation_metrics(spark, sf_dir):
     assert 0.0 < m["mean_quality"] <= 1.0
     assert 0 < m["n_train"] <= m["docs_kept"]
     assert n_chunks >= m["docs_kept"]  # every kept doc yields >= 1 chunk
-
-
-def test_training_release_statuses_and_precedence(spark):
-    """End-to-end release audit: every doc gets exactly one verdict with
-    the documented precedence (quality -> exact dup -> near dup ->
-    contamination), splits exist only on keepers, and the observed
-    per-status counts partition the input."""
-    from pyspark.sql import Observation
-
-    from crypto_trading_data_pipeline_spark.pipelines import training_release
-
-    good = (
-        "the quick brown fox jumps over a lazy dog of note in every "
-        "morning it runs far"
-    )
-    near = good + " indeed"                       # same shingles + a few -> LSH collision
-    contam = (
-        "alpha beta gamma delta epsilon zeta eta theta iota kappa "
-        "the a of limit"
-    )
-    docs = spark.createDataFrame(
-        [
-            (1, good),
-            (2, good),              # exact dup of 1 (same normalized text)
-            (3, near),              # near dup of 1
-            (4, "x x x x x"),       # low quality (and identical to nothing)
-            (5, contam),            # shares a 5-gram with the benchmark
-            (6, "completely different words about ships harbors tides "
-                "storms the a of sailing charts maps"),
-        ],
-        "doc_id long, text string",
-    )
-    bench = spark.createDataFrame(
-        [(100, "alpha beta gamma delta epsilon unrelated tail here")],
-        "doc_id long, text string",
-    )
-    obs = Observation("release")
-    out = training_release(docs, bench, observation=obs)
-    rows = {r.doc_id: r for r in out.collect()}
-
-    assert rows[1].status == "kept"
-    assert rows[2].status == "exact_dup"
-    assert rows[3].status == "near_dup"
-    assert rows[4].status == "low_quality"
-    assert rows[5].status == "contaminated"
-    assert rows[6].status == "kept"
-    for r in rows.values():
-        assert (r.split is not None) == (r.status == "kept"), r
-        assert r.split in (None, "train", "val", "test")
-
-    m = obs.get
-    assert m["docs_in"] == 6
-    assert (
-        m["kept"] + m["exact_dups"] + m["near_dups"]
-        + m["contaminated"] + m["low_quality"]
-    ) == 6
-    assert m["kept"] == 2 and m["near_dups"] == 1 and m["contaminated"] == 1

@@ -1,5 +1,5 @@
 """Scale helpers must not change semantics: salted aggregation equals plain
-aggregation; partitioned writes round-trip with pruning-friendly layout."""
+aggregation, and the scale-hardened operators keep their results."""
 
 from __future__ import annotations
 
@@ -7,11 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from crypto_trading_data_pipeline_spark.io import read_table
-from crypto_trading_data_pipeline_spark.operators.scale import (
-    salted_group_sum,
-    with_salt,
-    write_partitioned,
-)
+from crypto_trading_data_pipeline_spark.operators.scale import salted_group_sum, with_salt
 
 
 def test_salted_group_sum_matches_plain(spark, sf_dir):
@@ -40,48 +36,6 @@ def test_with_salt_bounded_and_deterministic(spark, sf_dir):
     s2 = [r["__salt"] for r in with_salt(e, buckets=4).select("__salt").collect()]
     assert s1 == s2
     assert set(s1) <= {0, 1, 2, 3}
-
-
-def test_write_partitioned_roundtrip(spark, sf_dir, tmp_path):
-    e = read_table(spark, sf_dir, "events").withColumn(
-        "day", F.date_format("ts", "yyyy-MM-dd")
-    )
-    out = str(tmp_path / "events_by_day")
-    write_partitioned(e, out, partition_by=["day"], sort_by=["ts"])
-    back = spark.read.parquet(out)
-    assert back.count() == e.count()
-    # partition pruning: the day predicate must land in PartitionFilters
-    # (directory-level pruning), not survive as a post-scan Filter.
-    one_day = back.filter(F.col("day") == "2024-01-05")
-    plan = one_day._jdf.queryExecution().executedPlan().toString()
-    pf = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
-    assert "day" in pf, plan
-
-
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
-    """Two tables bucketed identically on the join key must join with ZERO
-    shuffle on either side — the co-located join that makes fact-fact joins
-    affordable at 100 TB."""
-    from crypto_trading_data_pipeline_spark.operators.scale import write_bucketed
-
-    li = read_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
-    )
-    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    write_bucketed(li, "li_b", bucket_by=["l_orderkey"], buckets=4, sort_by=["l_orderkey"])
-    write_bucketed(orders, "o_b", bucket_by=["o_orderkey"], buckets=4, sort_by=["o_orderkey"])
-    try:
-        a, b = spark.table("li_b"), spark.table("o_b")
-        # Disable auto-broadcast so the test exercises the bucketed SMJ path.
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = a.join(b, a.l_orderkey == b.o_orderkey)
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert joined.count() == li.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS li_b")
-        spark.sql("DROP TABLE IF EXISTS o_b")
 
 
 def test_connected_components_transitive_chain(spark):
@@ -272,31 +226,6 @@ def test_embed_neardup_guard_refuses_large_corpus(spark, monkeypatch, sf_dir):
         da.q_embed_neardup(spark, sf_dir)
 
 
-def test_compact_files_merges_small_files(spark, tmp_path):
-    """32 micro-batch-sized files compact to one target-sized file with
-    identical contents — the maintenance pass every streaming parquet sink
-    needs (open/footer cost scales with file count, not bytes)."""
-    from crypto_trading_data_pipeline_spark.operators.scale import compact_files
-
-    path = str(tmp_path / "t")
-    df = spark.range(10_000).withColumn("k", F.col("id") % 7)
-    df.repartition(32).write.parquet(path)
-    import os
-
-    n_before = sum(f.endswith(".parquet") for f in os.listdir(path))
-    assert n_before == 32
-    n_out = compact_files(spark, path, target_file_bytes=64 * 1024 * 1024)
-    n_after = sum(f.endswith(".parquet") for f in os.listdir(path))
-    assert n_out == n_after == 1
-    back = spark.read.parquet(path)
-    assert back.count() == 10_000
-    assert back.groupBy().sum("k").collect()[0][0] == df.groupBy().sum("k").collect()[0][0]
-    # sorted variant clusters rows for min/max pruning
-    df.repartition(8).write.mode("overwrite").parquet(path)
-    compact_files(spark, path, target_file_bytes=64 * 1024 * 1024, sort_by=["k"])
-    assert spark.read.parquet(path).count() == 10_000
-
-
 def test_hll_union_accuracy_bounded(spark, sf_dir):
     """The unioned sketch estimate must sit within HLL lgK=14 error bounds
     of exact (~0.8% typical; assert a loose 5%), and per-lang estimates
@@ -308,76 +237,6 @@ def test_hll_union_accuracy_bounded(spark, sf_dir):
         assert r.exact_distinct > 0
         rel = abs(r.estimate - r.exact_distinct) / r.exact_distinct
         assert rel < 0.05, (r.lang, r.estimate, r.exact_distinct)
-
-
-def test_salted_join_matches_plain_join(spark, sf_dir):
-    """Salting + small-side replication must not change join results —
-    checked on a deliberately skewed key distribution (one hot key holding
-    most rows)."""
-    from crypto_trading_data_pipeline_spark.operators.scale import salted_join
-
-    big = spark.range(20_000).select(
-        F.when(F.col("id") % 10 < 9, F.lit("HOT")).otherwise(
-            F.concat(F.lit("k"), (F.col("id") % 100).cast("string"))
-        ).alias("k"),
-        F.col("id").alias("v"),
-    )
-    small = spark.createDataFrame(
-        [("HOT", 1.0), ("k5", 2.0), ("k42", 3.0), ("missing", 9.9)], ["k", "w"]
-    )
-    plain = big.join(small, ["k"]).groupBy("k").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("v").alias("sv")
-    )
-    salted = salted_join(big, small, ["k"], buckets=8).groupBy("k").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("v").alias("sv")
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-    # left join keeps unmatched big rows exactly once
-    pl = big.join(small, ["k"], "left").count()
-    sl = salted_join(big, small, ["k"], buckets=8, how="left").count()
-    assert pl == sl == 20_000
-
-
-def test_salted_join_rejects_small_side_preserving_how(spark):
-    """right/full joins would emit each unmatched small-side row once PER
-    SALT REPLICA — buckets-fold duplication. The operator must refuse
-    (ADVICE r2), not document-and-hope."""
-    from crypto_trading_data_pipeline_spark.operators.scale import salted_join
-
-    big = spark.range(10).select(F.col("id").alias("k"), F.col("id").alias("v"))
-    small = spark.createDataFrame([(1, 1.0), (99, 2.0)], ["k", "w"])
-    for how in ("right", "full", "outer", "full_outer", "right_outer"):
-        with pytest.raises(ValueError, match="salt bucket"):
-            salted_join(big, small, ["k"], buckets=4, how=how)
-    # allowlisted hows still work
-    assert salted_join(big, small, ["k"], buckets=4, how="left_anti").count() == 9
-
-
-def test_compact_files_recovers_from_mid_swap_crash(spark, tmp_path):
-    """compact_files must run the same crash-recovery protocol as
-    ParquetUpsertSink (ADVICE r2): a prior run that died between
-    rename-aside and move-in leaves only <path>.old — the next compaction
-    restores it instead of failing on the missing table; leftover .old
-    beside an intact table is cleared instead of breaking the rename."""
-    import os
-    import shutil
-
-    from crypto_trading_data_pipeline_spark.operators.scale import compact_files
-
-    path = str(tmp_path / "t")
-    spark.range(5_000).withColumn("k", F.col("id") % 5).repartition(8).write.parquet(path)
-    # Crash case 1: swap died after rename-aside — table missing, .old present.
-    os.rename(path, path + ".old")
-    n_out = compact_files(spark, path, target_file_bytes=64 * 1024 * 1024)
-    assert n_out == 1
-    assert spark.read.parquet(path).count() == 5_000
-    assert not os.path.exists(path + ".old")
-    # Crash case 2: stale .old beside an intact table must not break the
-    # rename-aside (os.rename onto a non-empty dir raises).
-    shutil.copytree(path, path + ".old")
-    compact_files(spark, path, target_file_bytes=64 * 1024 * 1024)
-    assert spark.read.parquet(path).count() == 5_000
-    assert not os.path.exists(path + ".old")
 
 
 def test_semdedup_cluster_skew_is_observable(spark):

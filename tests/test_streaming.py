@@ -12,11 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from crypto_trading_data_pipeline_spark.operators.candles import ohlcv
-from crypto_trading_data_pipeline_spark.sources import (
-    file_json_stream,
-    normalize_binance,
-    parse_trades,
-)
+from crypto_trading_data_pipeline_spark.sources import file_json_stream, parse_trades
 from crypto_trading_data_pipeline_spark.streaming.job import candle_stream, start_candle_query
 from crypto_trading_data_pipeline_spark.streaming.sinks import ParquetUpsertSink, merge_last_wins
 
@@ -65,18 +61,6 @@ def test_parse_trades_batch(spark):
     assert str(r.price) == "42000.10000000"  # DECIMAL(20,8) exact
     assert r.trade_value == Decimal("21000.05")  # exact decimal multiply
     assert r.trade_time.isoformat().startswith("2023-11-14T22:13:20")
-
-
-def test_normalize_binance(spark):
-    raw = [
-        json.dumps({"e": "trade", "t": "9", "s": "BTCUSDT", "p": "1.5", "q": "2",
-                    "T": str(BASE_MS), "m": "false"}),
-        json.dumps({"e": "aggTrade", "t": "10", "s": "X", "p": "1", "q": "1",
-                    "T": str(BASE_MS), "m": "true"}),
-    ]
-    df = spark.createDataFrame([(v,) for v in raw], ["value"])
-    out = normalize_binance(df).collect()
-    assert len(out) == 1 and out[0].trade_id == "9" and out[0].symbol == "BTCUSDT"
 
 
 def test_merge_last_wins(spark):
@@ -237,55 +221,6 @@ def test_sink_runs_batch_plan_once(spark, tmp_path, monkeypatch, kind):
     assert seen.value == 50
 
 
-def test_running_trade_stats_stateful(spark, tmp_path):
-    """applyInPandasWithState: cumulative per-key stats must carry state
-    ACROSS micro-batches (a windowed agg resets; this must not)."""
-    from crypto_trading_data_pipeline_spark.streaming.stateful import running_trade_stats
-
-    indir = tmp_path / "in"
-    indir.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    _write_batch(str(indir), TRADES_1, "batch1.json")
-
-    trades = parse_trades(file_json_stream(spark, str(indir)))
-    stats = running_trade_stats(trades)
-
-    collected: dict[str, dict] = {}
-
-    def sink(df, epoch_id):
-        for r in df.collect():
-            collected[r.symbol] = r.asDict()
-
-    q = (
-        stats.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        assert collected["BTCUSDT"]["n_trades"] == 3
-        assert collected["ETHUSDT"]["n_trades"] == 1
-        btc_after_1 = collected["BTCUSDT"]
-
-        _write_batch(str(indir), TRADES_2, "batch2.json")
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    # State carried over: batch2 has 2 BTC rows (one is 2h "late" but this
-    # operator has no watermark — all rows count) -> 3 + 2 cumulative.
-    assert collected["BTCUSDT"]["n_trades"] == 5
-    assert collected["ETHUSDT"]["n_trades"] == 2
-    # Running high/low span ALL history including batch 1.
-    assert collected["BTCUSDT"]["high"] >= btc_after_1["high"]
-    assert collected["BTCUSDT"]["low"] == 40000.0  # batch2's low
-    # VWAP is total value / total volume over the full history.
-    exp_val = 42000.10 * 0.5 + 42001.00 * 0.25 + 41999.90 * 1.0 + 42002.00 * 0.1 + 40000.00 * 9.9
-    exp_vol = 0.5 + 0.25 + 1.0 + 0.1 + 9.9
-    assert abs(collected["BTCUSDT"]["vwap"] - exp_val / exp_vol) < 1e-9
-
-
 def test_streaming_dedup_within_watermark(spark, tmp_path):
     """Streaming dedup: replayed trade_ids within the watermark horizon are
     dropped; state is bounded by the watermark (unbounded-history dedup
@@ -314,50 +249,37 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     assert ids == [1, 2, 3, 4]  # each trade exactly once despite the replay
 
 
-def test_stateful_survives_query_restart(spark, tmp_path):
-    """Checkpoint recovery: a NEW query object resuming from the same
-    checkpoint must carry the per-key state forward (exactly-once resume,
-    reference's checkpointLocation semantics) — not recount batch 1."""
-    from crypto_trading_data_pipeline_spark.streaming.stateful import running_trade_stats
-
+def test_candle_query_resumes_from_checkpoint(spark, tmp_path):
+    """Checkpoint recovery on the shipped candle path: a NEW query resuming
+    from the same checkpoint carries the source offsets, the watermark and
+    the open windows forward. It neither re-reads batch 1 nor restarts a
+    window that batch 2 updates, so the served table equals batch ``ohlcv``
+    over the on-time trades, row for row."""
     indir = tmp_path / "in"
     indir.mkdir()
     ckpt = str(tmp_path / "ckpt")
-    collected = {}
+    sink = ParquetUpsertSink(
+        str(tmp_path / "candles_table"), keys=["symbol", "window_start"], order_col="n_trades"
+    )
 
-    def sink(df, epoch_id):
-        for r in df.collect():
-            collected[r.symbol] = r.asDict()
-
-    def start():
+    def run():
         trades = parse_trades(file_json_stream(spark, str(indir)))
-        return (
-            running_trade_stats(trades)
-            .writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
+        q = start_candle_query(
+            candle_stream(trades), sink=sink, checkpoint_dir=ckpt, trigger_seconds=None
         )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
 
     _write_batch(str(indir), TRADES_1, "b1.json")
-    q1 = start()
-    try:
-        q1.processAllAvailable()
-    finally:
-        q1.stop()
-    assert collected["BTCUSDT"]["n_trades"] == 3
-
-    # restart: new query object, same checkpoint; add batch 2
+    run()
     _write_batch(str(indir), TRADES_2, "b2.json")
-    q2 = start()
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-    # 3 (recovered state) + 2 new BTC rows — NOT 5+3 (which would mean
-    # batch 1 was re-read) and NOT 2 (which would mean state was lost).
-    assert collected["BTCUSDT"]["n_trades"] == 5
-    assert collected["ETHUSDT"]["n_trades"] == 2
+    run()  # restart: new query object, same checkpoint
+
+    on_time = spark.createDataFrame([(t,) for t in TRADES_1 + TRADES_2[:2]], ["value"])
+    expected = sorted(map(tuple, ohlcv(parse_trades(on_time)).collect()))
+    assert sorted(map(tuple, sink.read(spark).collect())) == expected
 
 
 def test_streaming_to_live_db_end_to_end(spark, tmp_path):
