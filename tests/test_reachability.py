@@ -24,7 +24,7 @@ ENTRY_POINTS = [
     REPO / "__spark_entry__.py",
     REPO / PKG / "__main__.py",
     REPO / "bench.py",
-    *sorted((REPO / "perfbench").glob("*.py")),
+    *sorted(p for p in (REPO / "perfbench").glob("*.py") if not p.name.startswith("test_")),
     *sorted((REPO / "scripts").glob("*.py")),
 ]
 

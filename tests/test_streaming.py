@@ -5,18 +5,31 @@ assertion — the same transform functions must produce identical candles.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
+import signal
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
 
 from crypto_trading_data_pipeline_spark.operators.candles import ohlcv
 from crypto_trading_data_pipeline_spark.sources import file_json_stream, parse_trades
-from crypto_trading_data_pipeline_spark.streaming.job import candle_stream, start_candle_query
+from crypto_trading_data_pipeline_spark.streaming.job import (
+    candle_stream,
+    checkpoint_manager,
+    start_candle_query,
+)
 from crypto_trading_data_pipeline_spark.streaming.sinks import ParquetUpsertSink, merge_last_wins
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BASE_MS = 1_700_000_000_000  # fixed epoch anchor (2023-11-14T22:13:20Z)
+MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+FS_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
 
 
 def trade(tid, symbol, price, qty, offset_s):
@@ -280,6 +293,218 @@ def test_candle_query_resumes_from_checkpoint(spark, tmp_path):
     on_time = spark.createDataFrame([(t,) for t in TRADES_1 + TRADES_2[:2]], ["value"])
     expected = sorted(map(tuple, ohlcv(parse_trades(on_time)).collect()))
     assert sorted(map(tuple, sink.read(spark).collect())) == expected
+
+
+@pytest.mark.parametrize(
+    "preset", [None, FS_MANAGER.replace("FileSystem", "FileContext")], ids=["unset", "set"]
+)
+def test_checkpoint_manager_is_scoped_to_the_query(spark, tmp_path, preset):
+    """A local checkpoint runs its query under Spark's FileSystem-based
+    checkpoint manager, set on the query's own session only: once
+    ``start_candle_query`` returns, the session's conf reads exactly what
+    it read before, set or unset. Only a ``file`` scheme switches; a
+    scheme-less path is qualified through ``fs.defaultFS``."""
+    if preset is not None:
+        spark.conf.set(MANAGER_CONF, preset)
+    try:
+        before = spark.conf.getAll
+        indir = tmp_path / "in"
+        indir.mkdir()
+        _write_batch(str(indir), TRADES_1, "b1.json")
+        rows = []
+        q = start_candle_query(
+            candle_stream(parse_trades(file_json_stream(spark, str(indir)))),
+            sink=lambda df, _epoch: rows.extend(df.collect()),
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            trigger_seconds=None,
+        )
+        try:
+            assert spark.conf.getAll == before
+            stream_session = q._jsq.streamingQuery().sparkSessionForStream()
+            assert stream_session.conf().get(MANAGER_CONF) == FS_MANAGER
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        assert len(rows) == 3
+        assert spark.conf.getAll == before
+    finally:
+        spark.conf.unset(MANAGER_CONF)
+
+    assert checkpoint_manager(spark, "/x") == FS_MANAGER
+    assert checkpoint_manager(spark, "file:/x") == FS_MANAGER
+    assert checkpoint_manager(spark, "hdfs://nn/x") is None
+    assert checkpoint_manager(spark, "s3a://b/x") is None
+
+
+def test_candle_query_resumes_a_default_manager_checkpoint(spark, tmp_path):
+    """A checkpoint written under Spark's default checkpoint manager (a
+    plain ``writeStream`` over the same candle plan) resumes under
+    ``start_candle_query``'s FileSystem-based one: the served table equals
+    batch ``ohlcv`` over the on-time trades, row for row."""
+    indir = tmp_path / "in"
+    indir.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    sink = ParquetUpsertSink(
+        str(tmp_path / "candles_table"), keys=["symbol", "window_start"], order_col="n_trades"
+    )
+
+    def candles():
+        return candle_stream(parse_trades(file_json_stream(spark, str(indir))))
+
+    _write_batch(str(indir), TRADES_1, "b1.json")
+    assert spark.conf.get(MANAGER_CONF, None) is None
+    q = (
+        candles().writeStream.outputMode("update")
+        .foreachBatch(sink)
+        .option("checkpointLocation", ckpt)
+        .queryName("candles_1min")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    _write_batch(str(indir), TRADES_2, "b2.json")
+    q = start_candle_query(candles(), sink=sink, checkpoint_dir=ckpt, trigger_seconds=None)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    on_time = spark.createDataFrame([(t,) for t in TRADES_1 + TRADES_2[:2]], ["value"])
+    expected = sorted(map(tuple, ohlcv(parse_trades(on_time)).collect()))
+    assert sorted(map(tuple, sink.read(spark).collect())) == expected
+
+
+CRASH_SEED = 11
+CRASH_CYCLES = 4
+CRASH_TRADES = 500
+#: The cycle whose data epoch dies after its delta's rename.
+CRASH_CYCLE = 2
+CRASH_EXIT = 17
+
+
+def _crash_child(work: str, crash: bool) -> None:
+    """One run of the candle job over the seeded perfbench feed, in its own
+    process and JVM, on the checkpoint and serving table in ``work``.
+
+    With ``crash`` it lands the cycles up to ``CRASH_CYCLE``. The sink call
+    of that cycle's data epoch runs the real sink, which commits the
+    epoch's delta, records the table's files, then kills the JVM and ends
+    the process before returning: Spark has not written that epoch's
+    commit log. Without ``crash`` it resumes from the checkpoint (Spark
+    re-delivers the epoch), records the table's files, then lands the
+    remaining cycles. Every cycle's freshness count goes to a JSON file."""
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    from stream import _now_ms, make_feed
+
+    from crypto_trading_data_pipeline_spark.monitor import fresh_row_count
+    from crypto_trading_data_pipeline_spark.session import get_spark
+
+    spark = get_spark(app_name="candle-crash", master="local[2]", shuffle_partitions=4)
+    spark.sparkContext.setLogLevel("ERROR")
+    jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
+    feed = make_feed(CRASH_SEED, CRASH_CYCLES, per_cycle=CRASH_TRADES)
+    indir, staging = os.path.join(work, "in"), os.path.join(work, "staging")
+    table = os.path.join(work, "serving")
+    os.makedirs(indir, exist_ok=True)
+    os.makedirs(staging, exist_ok=True)
+    real = ParquetUpsertSink(table, keys=["symbol", "window_start"], order_col="n_trades")
+    phase = "crash" if crash else "resume"
+    fresh, cycle = {}, [None]
+
+    def record(name):
+        with open(os.path.join(work, f"{name}.json"), "w") as f:
+            json.dump(_file_rows(table), f)
+
+    def sink(batch, epoch_id):
+        real(batch, epoch_id)
+        committed = os.path.exists(os.path.join(table, f"delta-{epoch_id:012d}.parquet"))
+        if crash and cycle[0] == CRASH_CYCLE and committed:
+            record("committed")
+            os.kill(jvm_pid, signal.SIGKILL)
+            os._exit(CRASH_EXIT)
+
+    def land(c):
+        name = f"trades-{c:05d}.json"
+        with open(os.path.join(staging, name), "w") as f:
+            f.writelines(json.dumps(r) + "\n" for r in feed[c])
+        os.rename(os.path.join(staging, name), os.path.join(indir, name))
+
+    def settle(c):
+        q.processAllAvailable()
+        now = datetime.datetime.fromtimestamp(_now_ms(c) / 1000, datetime.timezone.utc)
+        fresh[c] = fresh_row_count(real.read(spark), now=now)
+        with open(os.path.join(work, f"fresh-{phase}.json"), "w") as f:
+            json.dump(fresh, f)
+
+    q = start_candle_query(
+        candle_stream(parse_trades(file_json_stream(spark, indir))),
+        sink=sink, checkpoint_dir=os.path.join(work, "ckpt"), trigger_seconds=None,
+    )
+    try:
+        if crash:
+            for c in range(CRASH_CYCLE + 1):
+                cycle[0] = c
+                land(c)
+                settle(c)
+        else:
+            settle(CRASH_CYCLE)
+            record("redelivered")
+            for c in range(CRASH_CYCLE + 1, CRASH_CYCLES):
+                land(c)
+                settle(c)
+    finally:
+        q.stop()
+
+
+def test_candle_job_survives_a_crash_after_the_sink_commits(spark, tmp_path, monkeypatch):
+    """The re-delivery window: the process dies after the sink committed an
+    epoch's delta and before Spark wrote that epoch's commit log. Resumed
+    from the same checkpoint, Spark re-delivers the epoch, and the sink
+    replaces the epoch's own file: the table's files and their row counts
+    are what the first delivery left. Every freshness count matches the
+    perfbench replay's, and the finished table equals batch ``ohlcv`` over
+    the replay's on-time trades, row for row."""
+    monkeypatch.syspath_prepend(os.path.join(REPO, "perfbench"))
+    from stream import _now_ms, fresh_counts, make_feed, replay
+
+    work = str(tmp_path)
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+
+    def child(crash):
+        code = (
+            "import sys; from tests.test_streaming import _crash_child; "
+            "_crash_child(sys.argv[1], sys.argv[2] == 'crash')"
+        )
+        phase = "crash" if crash else "resume"
+        return subprocess.run(
+            [sys.executable, "-c", code, work, phase],
+            cwd=REPO, env=env, capture_output=True, text=True, timeout=600,
+        )
+
+    first = child(True)
+    assert first.returncode == CRASH_EXIT, first.stderr[-3000:]
+    second = child(False)
+    assert second.returncode == 0, second.stderr[-3000:]
+
+    def load(name):
+        with open(os.path.join(work, f"{name}.json")) as f:
+            return json.load(f)
+
+    assert load("redelivered") == load("committed")
+    feed = make_feed(CRASH_SEED, CRASH_CYCLES, per_cycle=CRASH_TRADES)
+    kept, _dropped = replay(feed)
+    want, _rows = fresh_counts(kept, [_now_ms(c) for c in range(CRASH_CYCLES)])
+    got = {**load("fresh-crash"), **load("fresh-resume")}
+    assert [got[str(c)] for c in range(CRASH_CYCLES)] == want
+
+    on_time = spark.createDataFrame([(json.dumps(r),) for b in kept for r in b], ["value"])
+    expected = sorted(map(tuple, ohlcv(parse_trades(on_time)).collect()))
+    served = ParquetUpsertSink(
+        os.path.join(work, "serving"), keys=["symbol", "window_start"], order_col="n_trades"
+    )
+    assert sorted(map(tuple, served.read(spark).collect())) == expected
 
 
 def test_streaming_to_live_db_end_to_end(spark, tmp_path):
