@@ -2,11 +2,18 @@
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
 and prints the record as JSON on stdout.
 
-Output layout (the consumer keeps the LAST ~2000 stdout chars and parses
-the FINAL line): first the full compact record — per-query timings for
-tail salvage — then a final summary line that always fits the buffer
-(headline metric, counts, calibration, 12 slowest queries). The complete
-record is also written to BENCH_LOCAL.json beside this script.
+`python bench.py` measures and records; it does not judge. Whether a change
+made something faster is settled by scripts/ab.py's interleaved fresh-JVM
+A/B, which runs this module's harness on both trees.
+
+Output layout: one summary line (headline metric, counts, calibration,
+load, the 12 slowest queries, streaming throughput) printed once after the
+headline queries and printed again, with the registry sweep's total, as
+the FINAL stdout line. It stays under 1,000 characters, so a consumer that
+keeps only the last ~2000 stdout chars can always parse it, and a run
+killed mid-sweep still ends on a complete headline line. The complete
+record (per-query timings, construct/action splits, errors, run spreads,
+sweep walls) is written to BENCH_LOCAL.json beside this script.
 
 Each query is fully executed via the noop sink (format("noop")) so the whole
 plan runs — no collect() driver bottleneck, no disk write skew.
@@ -221,21 +228,6 @@ HEADLINE = [
 # run twice and silently collapse in the output dict.
 HEADLINE = list(dict.fromkeys(HEADLINE))
 
-# Trained-index lifecycle tier (r10 verdict #8): headline-excluded because
-# the trainer's driver-coordinated Lloyd rounds are a fixed data-independent
-# cost (probe ratios 0.81-1.11x at 10x), but a trainer pathology must still
-# surface round-over-round — the tier gets ONE total wall per round from
-# its registry-sweep single-run walls, graded like full_registry_wall_sec.
-TRAINED_TIER = [
-    "q_kmeans_ivf",
-    "q_ann_ivf_trained",
-    "q_ann_recall_trained",
-    "q_ann_incremental",
-    "q_pq_train",
-    "q_ann_pq_trained",
-    "q_index_rebalance",
-]
-
 
 def bench_streaming(spark, sf_dir: str) -> dict:
     """End-to-end streaming candle throughput (the reference's actual
@@ -249,8 +241,8 @@ def bench_streaming(spark, sf_dir: str) -> dict:
     BEST-OF-3 drains (fresh checkpoint each), mirroring the per-query
     best-of-3: a single drain measured 18.6k-27.7k rows/s across three
     runs of IDENTICAL code (r9 triage) — checkpoint/sink first-touch and
-    end-of-bench GC pressure dominate one-shot numbers, and the r9
-    streaming regression gate would fire on that noise. Run 1 additionally
+    end-of-bench GC pressure dominate one-shot numbers, so one drain's
+    rows/s says more about the box than the code. Run 1 additionally
     absorbs the streaming-machinery warm-up the batch warmers don't reach.
     """
     import shutil
@@ -324,144 +316,6 @@ def _loadavg() -> list[float] | None:
     except (OSError, ValueError):
         return None
 
-#: A query is flagged as a regression only when it is slower than the
-#: previous recorded round by BOTH bounds — relative (>15 %) and absolute
-#: (>0.2 s) — so millisecond noise on sub-second plans never trips it.
-_REGRESSION_REL = 0.15
-_REGRESSION_ABS_SEC = 0.2
-
-#: Identical-code streaming noise band measured on this box (r12,
-#: SCALE_AB_STREAM.json): two trees running BYTE-IDENTICAL streaming code,
-#: interleaved same-box fresh-JVM runs, measured a +10.1% best-rows/s
-#: spread. A round-over-round streaming delta inside this band is
-#: indistinguishable from host noise by construction.
-_STREAM_IDENTICAL_CODE_BAND_REL = 0.101
-#: Streaming gate threshold (r12 verdict #5): ≈ 2× the identical-code band
-#: so the gate trips on signal, not noise. A trip is still a TRIPWIRE that
-#: orders the interleaved A/B (the record carries the exact command), never
-#: standalone evidence of a code regression.
-_STREAM_GATE_REL = 2 * _STREAM_IDENTICAL_CODE_BAND_REL
-
-
-def _salvage_tail_timings(tail: str) -> dict[str, float]:
-    """Recover per-query timings from a head-truncated stdout tail (the
-    driver keeps only the last ~2000 chars; round 3's line overran it and
-    left parsed: null). Only the span BEFORE the deltas/regressions keys is
-    scanned — "q_*": N pairs after those markers are round-over-round
-    deltas, not timings, and must not be mistaken for them."""
-    import re
-
-    cut = len(tail)
-    for marker in ('"prev_round"', '"deltas_vs_prev"', '"regressions"'):
-        i = tail.find(marker)
-        if i != -1:
-            cut = min(cut, i)
-    return {
-        m.group(1): float(m.group(2))
-        for m in re.finditer(r'"(q_\w+)":\s*([0-9.]+)', tail[:cut])
-    }
-
-
-def _load_previous_round(sf: float, here: str | None = None) -> dict:
-    """Per-query timings from the latest USABLE prior BENCH_r{N}.json next
-    to this script, plus its round tag under "_round".
-
-    Scans rounds descending and takes the first file with per-query timings
-    recorded AT THE SAME scale factor — crashed rounds (rc!=0, no data,
-    e.g. r4) and other-sf runs are skipped, and a round whose JSON line was
-    tail-truncated (parsed: null, e.g. r3) is salvaged from the raw tail
-    text instead of discarded. Set SPARK_GRAFT_ROUND=N to additionally
-    exclude rounds >= N (prevents self-comparison when the bench is re-run
-    after the driver already recorded this round's file). Empty dict when
-    no usable prior round exists."""
-    import glob
-    import re
-
-    if here is None:
-        here = os.path.dirname(os.path.abspath(__file__))
-    cur = os.environ.get("SPARK_GRAFT_ROUND")
-    cur = int(cur) if cur and cur.isdigit() else None
-    rounds = []
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m and (cur is None or int(m.group(1)) < cur):
-            rounds.append((int(m.group(1)), p))
-    for n, path in sorted(rounds, reverse=True):
-        try:
-            with open(path) as f:
-                rec = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rec, dict):
-            continue
-        # The driver wraps our JSON line under "parsed" (alongside rc/tail).
-        parsed = rec.get("parsed")
-        rec_sf = (parsed or {}).get("sf", rec.get("sf"))
-        if isinstance(rec_sf, (int, float)) and abs(rec_sf - sf) > 1e-9:
-            continue
-        # Since r7 the parsed final line carries only the 12 slowest
-        # queries (the full line overflows the driver's 2000-char tail);
-        # merge it with whatever the tail salvage reaches of the full
-        # line printed just before it. The two describe the SAME run, so
-        # the union is consistent.
-        queries = dict(_salvage_tail_timings(rec.get("tail") or ""))
-        p_queries = (parsed or {}).get("queries")
-        if isinstance(p_queries, dict):
-            queries.update(
-                {k: v for k, v in p_queries.items() if isinstance(v, (int, float))}
-            )
-        # A truncated tail can salvage only a partial subset; a too-small
-        # set would silently exempt most queries from the regression
-        # comparison, so top it up from the committed full sidecar of the
-        # SAME round's local run when available (BENCH_LOCAL.json is
-        # written by every bench invocation and committed per round), and
-        # keep scanning older complete rounds if still too small.
-        if len(queries) < max(10, len(HEADLINE) // 2):
-            try:
-                with open(os.path.join(here, "BENCH_LOCAL.json")) as f:
-                    local = json.load(f)
-                if (
-                    isinstance(local.get("sf"), (int, float))
-                    and abs(local["sf"] - sf) < 1e-9
-                    and isinstance(local.get("queries"), dict)
-                ):
-                    for k, v in local["queries"].items():
-                        if k not in queries and isinstance(v, (int, float)):
-                            queries[k] = v
-            except (OSError, ValueError):
-                pass
-            if len(queries) < max(10, len(HEADLINE) // 2):
-                continue
-        if queries:
-            calib = (parsed or {}).get("calib_sec", rec.get("calib_sec"))
-            out = {"_round": n, **queries}
-            if isinstance(calib, (int, float)) and calib > 0:
-                out["_calib_sec"] = calib
-            # Streaming throughput rides the same record so a real
-            # streaming regression can't hide (r8's -3.2% went unflagged
-            # because nothing compared it round-over-round).
-            srps = (parsed or {}).get(
-                "streaming_rows_per_sec", rec.get("streaming_rows_per_sec")
-            )
-            if isinstance(srps, (int, float)) and srps > 0:
-                out["_streaming_rows_per_sec"] = srps
-            # Same for the full-registry sweep wall (r9 verdict #6).
-            frw = (parsed or {}).get(
-                "full_registry_wall_sec", rec.get("full_registry_wall_sec")
-            )
-            if isinstance(frw, (int, float)) and frw > 0:
-                out["_full_registry_wall_sec"] = frw
-            # And the trained-index tier (r10 verdict #8): bench-excluded
-            # from the headline (trainer-dominated, data-independent cost)
-            # but a trainer pathology must still show round-over-round.
-            ttw = (parsed or {}).get(
-                "trained_tier_wall_sec", rec.get("trained_tier_wall_sec")
-            )
-            if isinstance(ttw, (int, float)) and ttw > 0:
-                out["_trained_tier_wall_sec"] = ttw
-            return out
-    return {}
-
 
 def _calibration_sec(spark) -> float:
     """Best-of-3 wall time of a FIXED synthetic workload (range scan →
@@ -489,153 +343,6 @@ def _calibration_sec(spark) -> float:
     return round(best, 3)
 
 
-def _compare_to_previous(timings: dict, prev: dict, calib_ratio=None):
-    """(deltas, regressions, regressions_normalized): per-query seconds vs
-    the previous round for every query present in both, the subset slower
-    by both the relative and absolute regression bounds, and that same test
-    re-run with current timings divided by the machine-speed calibration
-    ratio (clamped to >= 1 so a FASTER box never hides a code regression;
-    equal to the raw list when no prior calibration exists)."""
-    deltas: dict[str, float] = {}
-    regressions: list[dict] = []
-    norm: list[dict] = []
-    scale = max(calib_ratio, 1.0) if isinstance(calib_ratio, (int, float)) else 1.0
-    for name, now in timings.items():
-        before = prev.get(name)
-        if not isinstance(before, (int, float)) or before <= 0:
-            continue
-        delta = round(now - before, 3)
-        deltas[name] = delta
-        if delta > _REGRESSION_ABS_SEC and now > before * (1 + _REGRESSION_REL):
-            regressions.append(
-                {"query": name, "prev_sec": before, "now_sec": now, "delta_sec": delta}
-            )
-        adj = now / scale
-        if (adj - before) > _REGRESSION_ABS_SEC and adj > before * (
-            1 + _REGRESSION_REL
-        ):
-            norm.append(
-                {
-                    "query": name,
-                    "prev_sec": before,
-                    "now_sec": now,
-                    "now_normalized_sec": round(adj, 3),
-                }
-            )
-    return deltas, regressions, norm
-
-
-def _ab_records(here: str) -> list[tuple[str, dict]]:
-    """All SCALE_AB*.json records at the repo root, newest-mtime first.
-
-    These are the committed same-box interleaved A/B adjudications
-    (scripts/ab.py and its predecessors). Tolerates both the
-    current baseline-labelled shape and the pre-r13 records whose keys
-    carry the historical tree names (r9/r10)."""
-    import glob as _glob
-
-    out: list[tuple[str, dict]] = []
-    for f in sorted(
-        _glob.glob(os.path.join(here, "SCALE_AB*.json")),
-        key=os.path.getmtime,
-        reverse=True,
-    ):
-        try:
-            with open(f) as fh:
-                out.append((os.path.basename(f), json.load(fh)))
-        except (OSError, json.JSONDecodeError):
-            continue
-    return out
-
-
-def _ab_baseline_label(rec: dict) -> str | None:
-    for lbl in ("baseline", "r9", "r10", "r11"):
-        if isinstance(rec.get(lbl), dict):
-            return lbl
-    return None
-
-
-def _ab_adjudication(query: str, here: str, head_sha: str | None) -> dict | None:
-    """The newest A/B record carrying per-query bests for `query`, reduced
-    to the fields a regression-entry reader needs (r12 verdict #3: BENCH
-    flagged q_bfs_reach/q_mrr while the same tree's SCALE_AB_R12 proved
-    HEAD faster — the two artifacts must cite each other). Returns None
-    when no record covers the query; the caller writes the explicit
-    "unadjudicated" marker so absence is visible, not implicit."""
-    for fname, rec in _ab_records(here):
-        lbl = _ab_baseline_label(rec)
-        if lbl is None:
-            continue
-        head_best = base_best = None
-        hq = rec.get("head", {}).get("queries_best")
-        bq = rec.get(lbl, {}).get("queries_best")
-        if isinstance(hq, dict) and query in hq and isinstance(bq, dict) and query in bq:
-            head_best, base_best = hq[query], bq.get(query)
-        else:
-            for d in rec.get("worst_deltas", []) or []:
-                if d.get("q") == query:
-                    head_best, base_best = d.get("head"), d.get(lbl)
-                    break
-        if head_best is None or base_best is None:
-            continue
-        rec_head = rec.get("head_sha")
-        return {
-            "file": fname,
-            "head_best_sec": head_best,
-            "baseline_best_sec": base_best,
-            "baseline_sha": rec.get("baseline_sha", rec.get(f"{lbl}_sha")),
-            # True only when the record says which HEAD it measured and it
-            # is this tree; None when the (older) record has no head_sha.
-            "ab_is_current_head": (
-                None
-                if not (rec_head and head_sha)
-                else rec_head.startswith(head_sha) or head_sha.startswith(rec_head)
-            ),
-        }
-    return None
-
-
-def _sweep_ab_summary(here: str) -> dict | None:
-    """Newest sweep A/B record (`scripts/ab.py <sha> sweep`), reduced to the
-    matched-set verdict the trained-tier line cites: the shared-set delta is
-    the only sweep number measured interleaved/best-of-3, so it adjudicates
-    the single-run raw/normalized tier deltas. Records without a `set` key
-    predate ab.py and only sweep records carried a shared-set delta then;
-    ab.py writes that delta for every set, so its other sets are skipped."""
-    for fname, rec in _ab_records(here):
-        if rec.get("set", "sweep") != "sweep":
-            continue
-        for key in ("head_over_baseline_pct_shared", "head_over_r10_pct_shared"):
-            if isinstance(rec.get(key), (int, float)):
-                lbl = _ab_baseline_label(rec)
-                return {
-                    "file": fname,
-                    "head_over_baseline_pct_shared": rec[key],
-                    "shared_n": rec.get("shared_n"),
-                    "baseline_sha": rec.get(
-                        "baseline_sha", rec.get(f"{lbl}_sha") if lbl else None
-                    ),
-                }
-    return None
-
-
-def _git_line(here: str, *args: str) -> str | None:
-    """A git command's stripped stdout in `here`; None when it is empty or
-    git fails — the adjudication lookups are additive and never fail the
-    bench."""
-    import subprocess
-
-    try:
-        return (
-            subprocess.run(
-                ["git", *args], cwd=here, capture_output=True, text=True, timeout=10
-            ).stdout.strip()
-            or None
-        )
-    except Exception:  # noqa: BLE001 — adjudication lookup is additive
-        return None
-
-
 def data_dir() -> str:
     """The fixture directory every harness measures: $SPARK_GRAFT_SF_DIR."""
     return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -644,8 +351,8 @@ def data_dir() -> str:
 def scale_factor(sf_dir: str) -> float:
     """The scale factor a data dir's basename names (`sf0.1` -> 0.1), or
     -1.0 when the basename is not exactly sf<number> (a synthesized
-    `sf0.1_x10` tier, any other dir), so its walls never match a real
-    scale factor's previous round."""
+    `sf0.1_x10` tier, any other dir), so a record's `sf` never passes off
+    such a tier's walls as a real scale factor's."""
     m = re.fullmatch(r"sf(\d+(?:\.\d+)?)", os.path.basename(sf_dir.rstrip("/")))
     return float(m.group(1)) if m else -1.0
 
@@ -800,9 +507,50 @@ def warm_up(spark, sf_dir: str, first_query: str | None) -> None:
         run_query(spark, REGISTRY[first_query].fn, sf_dir, 1)
 
 
+
+
+#: The record's scalar keys the summary line carries, when present; the
+#: per-query maps are sidecar-only.
+SUMMARY_KEYS = (
+    "metric",
+    "value",
+    "unit",
+    "total_is_complete",
+    "n_ok",
+    "n_err",
+    "sf",
+    "calib_sec",
+    "streaming_input_rows",
+    "streaming_wall_sec",
+    "streaming_rows_per_sec",
+    "streaming_candles_emitted",
+    "full_registry_wall_sec",
+    "full_registry_n_err",
+)
+
+
+def summary_line(record: dict) -> str:
+    """The record as one compact JSON line: the scalars in SUMMARY_KEYS,
+    the 1-min load before and after the headline queries, the 12 slowest
+    queries and at most 3 errors, each cut to 40 characters, as is a failed
+    stream drain's error. Its size does not grow with the registry, and
+    with the registry's longest names it stays under 1,000 characters
+    (tests/test_bench_helpers.py). Once the suite outgrew ~45 queries a
+    line with every query overran the consumer's ~2000-character tail and
+    parsed as null (r3, r6)."""
+    out = {k: record[k] for k in SUMMARY_KEYS if k in record}
+    out["load1"] = [(record.get(k) or [None])[0] for k in ("load_avg_before", "load_avg_after")]
+    if "streaming_err" in record:
+        out["streaming_err"] = record["streaming_err"][:40]
+    slowest = sorted(record["queries"].items(), key=lambda kv: -kv[1])[:12]
+    out["queries"] = {name: round(sec, 2) for name, sec in slowest}
+    if record["errors"]:
+        out["errors"] = {name: msg[:40] for name, msg in sorted(record["errors"].items())[:3]}
+    return json.dumps(out, separators=(",", ":"))
+
+
 def main() -> None:
     sf_dir = data_dir()
-    sf = scale_factor(sf_dir)
     spark = get_spark(app_name="ctdp-spark-bench")
     spark.sparkContext.setLogLevel("WARN")
 
@@ -843,149 +591,21 @@ def main() -> None:
         spreads_steady[name] = round(max(steady) / max(min(steady), 1e-9), 2)
     load_after = _loadavg()
 
-    total = round(sum(timings.values()), 3)
-    try:
-        calib_sec = _calibration_sec(spark)
-    except Exception:  # noqa: BLE001 — the ruler must never kill the bench
-        calib_sec = None
-    prev = _load_previous_round(sf)
-    calib_prev = prev.get("_calib_sec")
-    calib_ratio = (
-        round(calib_sec / calib_prev, 3)
-        if isinstance(calib_sec, (int, float)) and isinstance(calib_prev, (int, float))
-        else None
-    )
-    deltas, regressions, regressions_norm = _compare_to_previous(
-        timings, prev, calib_ratio
-    )
-    # Confirm-on-second-run (r10 verdict #7): one contended best-of-3
-    # (q_decision_stump 0.34->2.02 s committed while the driver's own run
-    # measured 0.557 s) can land pure noise in a regression list a reader
-    # mistakes for a code change. Every flagged entry — RAW and normalized
-    # alike (r11 ADVICE: the two lists must be measured by one protocol) —
-    # gets ONE extra run here, cached per query so a name on both lists
-    # reruns once; entries whose rerun also breaches their own list's
-    # threshold stay (confirmed across two measurements), the rest move to
-    # *_unconfirmed with the rerun recorded. The confirmation is a single
-    # run judged against the previous round's best-of-3 — biased toward
-    # keeping flags (single runs skew slow), but run variance is two-sided:
-    # one lucky fast rerun can still demote a REAL regression to the
-    # unconfirmed list, so treat *_unconfirmed as "needs A/B", not "noise".
-    _norm_scale = (
-        max(calib_ratio, 1.0) if isinstance(calib_ratio, (int, float)) else 1.0
-    )
-    # One confirmation run per query; None = the rerun itself failed, which
-    # keeps the flag.
-    _rerun_secs: dict[str, float | None] = {}
-
-    def _confirm(entries: list[dict], scale: float) -> tuple[list[dict], list[dict]]:
-        confirmed: list[dict] = []
-        unconfirmed: list[dict] = []
-        for _entry in entries:
-            _nm = _entry["query"]
-            if _nm not in _rerun_secs:
-                _rerun_secs[_nm] = run_query(spark, REGISTRY[_nm].fn, sf_dir, 1).get("total")
-            _rerun = _rerun_secs[_nm]
-            if _rerun is None:
-                confirmed.append(_entry)
-                continue
-            _entry["rerun_sec"] = _rerun
-            _adj = _rerun / scale
-            _before = _entry["prev_sec"]
-            if (_adj - _before) > _REGRESSION_ABS_SEC and _adj > _before * (
-                1 + _REGRESSION_REL
-            ):
-                confirmed.append(_entry)
-            else:
-                unconfirmed.append(_entry)
-        return confirmed, unconfirmed
-
-    regressions, regressions_unconfirmed = _confirm(regressions, 1.0)
-    regressions_norm, regressions_norm_unconfirmed = _confirm(
-        regressions_norm, _norm_scale
-    )
-    # Self-adjudication (r12 verdict #3): BENCH_r12 flagged q_bfs_reach /
-    # q_mrr as confirmed regressions while SCALE_AB_R12 in the SAME tree
-    # proved HEAD faster on both — two committed artifacts disagreed unless
-    # the reader cross-referenced by hand. Every flagged entry now carries
-    # either the covering A/B record's per-query bests or an explicit
-    # "unadjudicated" marker ordering the A/B.
-    here = os.path.dirname(os.path.abspath(__file__))
-    _head_sha = _git_line(here, "rev-parse", "--short", "HEAD")
-    # The commit that recorded the previous round's bench file: the
-    # committed tree the comparison is against, which is exactly the
-    # baseline argument scripts/ab.py needs.
-    _prev_round = prev.get("_round")
-    _prev_tree_sha = (
-        _git_line(here, "log", "-1", "--format=%h", "--", f"BENCH_r{_prev_round:02d}.json")
-        if isinstance(_prev_round, int)
-        else None
-    )
-    for _lst in (
-        regressions,
-        regressions_norm,
-        regressions_unconfirmed,
-        regressions_norm_unconfirmed,
-    ):
-        for _entry in _lst:
-            _entry["ab"] = (
-                _ab_adjudication(_entry["query"], here, _head_sha)
-                or "unadjudicated"
-            )
     try:
         stream_stats = bench_streaming(spark, sf_dir)
     except Exception as exc:  # noqa: BLE001
         stream_stats = {"streaming_err": error_line(exc)}
-
-    # Streaming-throughput regression gate (r8 verdict #6): rows/s vs the
-    # previous round. CALIBRATION OF THE GATE ITSELF (r12, SCALE_AB_STREAM):
-    # the interleaved same-box A/B measured +10.1% between two trees running
-    # BYTE-IDENTICAL streaming code — this box's identical-code noise band
-    # exceeds the 15% gate threshold's margin over typical deltas, so a
-    # flip here is a TRIPWIRE that orders the A/B (scripts/ab.py <sha> stream),
-    # not itself evidence of a code regression (the r11 -5.8% flip was
-    # host; the code closure hadn't changed a byte).
-    # Two verdicts, mirroring the per-query gate (r9
-    # ADVICE — the old max(ratio, 1) clamp let a FASTER box mask a real
-    # code drop): `streaming_regression_raw` compares raw rows/s, and
-    # `streaming_regression` machine-normalizes in BOTH directions
-    # (cur_rps * calib_ratio, unclamped — on a slower box ratio > 1 scales
-    # throughput back up; on a faster box ratio < 1 scales it back down).
-    stream_prev = prev.get("_streaming_rows_per_sec")
-    cur_rps = stream_stats.get("streaming_rows_per_sec")
-    streaming_delta_pct = None
-    streaming_regression = None
-    streaming_regression_raw = None
-    streaming_ab_command = None
-    if isinstance(stream_prev, (int, float)) and isinstance(cur_rps, (int, float)):
-        streaming_delta_pct = round((cur_rps - stream_prev) / stream_prev * 100, 1)
-        scale = calib_ratio if isinstance(calib_ratio, (int, float)) else 1.0
-        # Gate threshold is _STREAM_GATE_REL (2× the measured ±10.1%
-        # identical-code band, SCALE_AB_STREAM r12) — the old 15% bound sat
-        # inside one band-width of typical deltas and tripped on host noise
-        # (the r11 flip was byte-identical code).
-        streaming_regression_raw = bool(
-            cur_rps < stream_prev * (1.0 - _STREAM_GATE_REL)
-        )
-        streaming_regression = bool(
-            cur_rps * scale < stream_prev * (1.0 - _STREAM_GATE_REL)
-        )
-        if streaming_regression or streaming_regression_raw:
-            # A flip ships with its adjudication order in the same record
-            # (r12 verdict #5): the exact same-box interleaved A/B command,
-            # baseline = the committed tree the comparison was against.
-            streaming_ab_command = (
-                f"python scripts/ab.py {_prev_tree_sha} stream"
-                if _prev_tree_sha
-                else "python scripts/ab.py <prev-round tree sha> stream"
-            )
+    try:
+        calib_sec = _calibration_sec(spark)
+    except Exception:  # noqa: BLE001 — the ruler must never kill the bench
+        calib_sec = None
 
     record = {
         "metric": "headline_queries_total_wall",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         # `value` sums only the queries that RAN — with n_err > 0 it is not
-        # comparable round-over-round (a broken query reads as a speedup).
+        # comparable with another record (a broken query reads as a speedup).
         "total_is_complete": not errors,
         "runs_per_query": "3",
         "timing": "best_of_runs",
@@ -996,266 +616,53 @@ def main() -> None:
         "errors": errors,
         "n_ok": len(timings),
         "n_err": len(errors),
-        "prev_round": prev.get("_round"),
-        "deltas_vs_prev": deltas,
-        "regressions": regressions,
-        # Machine-speed ruler: the same fixed synthetic workload timed every
-        # round. regressions_machine_normalized re-tests each raw regression
-        # with the current timing divided by calib ratio (clamped >= 1) —
-        # entries surviving normalization are code, the rest environment.
+        # The same fixed synthetic workload timed every run: the box's
+        # speed while this record was taken.
         "calib_sec": calib_sec,
-        "calib_prev_sec": calib_prev,
-        "calib_ratio": calib_ratio,
-        "regressions_machine_normalized": regressions_norm,
-        # Entries that flagged on the best-of-3 but did NOT reproduce on
-        # the confirmation rerun — environment noise by measurement, kept
-        # for diagnosis only (r10 verdict #7; raw list added r11 ADVICE so
-        # both lists share the one protocol).
-        "regressions_unconfirmed": regressions_unconfirmed,
-        "regressions_norm_unconfirmed": regressions_norm_unconfirmed,
-        # Median per-query delta vs prev: a nonzero median across ~all
-        # compared queries is uniform drift (environment), since a code
-        # change moves its own queries, not the whole suite's median.
-        "delta_median_sec": (
-            round(sorted(deltas.values())[len(deltas) // 2], 3) if deltas else None
-        ),
         # Contention evidence (r5: driver bench 3x the committed local bench
-        # on identical code — now every record carries system load and
-        # per-query run spread so a contended round is diagnosable from the
+        # on identical code — every record carries system load and
+        # per-query run spread so a contended run is diagnosable from the
         # file alone).
         "load_avg_before": load_before,
         "load_avg_after": load_after,
         "run_spread": spreads,
         "run_spread_steady": spreads_steady,
-        "sf": sf,
+        "sf": scale_factor(sf_dir),
         **stream_stats,
-        "streaming_prev_rows_per_sec": stream_prev,
-        "streaming_delta_pct": streaming_delta_pct,
-        "streaming_regression": streaming_regression,
-        "streaming_regression_raw": streaming_regression_raw,
-        # Gate provenance: threshold + the measured identical-code band it
-        # is derived from, and (on a trip) the adjudication command.
-        "streaming_gate_rel": _STREAM_GATE_REL,
-        "streaming_identical_code_band_rel": _STREAM_IDENTICAL_CODE_BAND_REL,
-        "streaming_ab_command": streaming_ab_command,
     }
-    # Compact single line on stdout for the driver FIRST (a sidecar-write
-    # failure must never orphan the driver's parsed line): the headline
-    # metric, per-query timings, errors and the regression verdict. The
-    # driver's tail buffer keeps ~2000 chars (a clean 44-query line is
-    # ~1.5 KB), so the per-query deltas and spreads live in the sidecar
-    # only, the regression list is capped at the 4 worst, and error
-    # messages are truncated to their exception-type-plus-head — the exact
-    # mass-failure scenario (r4: one env shift broke 5 queries) must not
-    # push the line past the buffer and turn the whole round's metric into
-    # parsed:null. n_regressions / n_err always carry the true counts;
-    # BENCH_LOCAL.json holds the full record.
-    # 47 queries x ~24 bytes already costs ~1.2 KB of the ~2 KB budget, so
-    # the compact line trims aggressively: 2-decimal timings, 1-min load
-    # only, 3 regressions / errors max, verbose constants sidecar-only.
-    compact = {
-        k: v
-        for k, v in record.items()
-        if k not in (
-            "deltas_vs_prev",
-            "query_split",
-            "run_spread",
-            "run_spread_steady",
-            "runs_per_query",
-            "timing",
-            "load_avg_before",
-            "load_avg_after",
-            "calib_prev_sec",
-            "regressions_machine_normalized",
-            "regressions_unconfirmed",
-            "regressions_norm_unconfirmed",
-            # delta_pct + regression flag stay in the line; the prev
-            # value itself is sidecar-only (byte budget).
-            "streaming_prev_rows_per_sec",
-            "streaming_gate_rel",
-            "streaming_identical_code_band_rel",
-            # Sweep per-query walls/errors are sidecar-only; the line
-            # carries only the total + delta (byte budget).
-            "registry_sweep_queries",
-            "registry_sweep_errors",
-            "full_registry_prev_wall_sec",
-            "trained_tier_queries",
-            "trained_tier_prev_wall_sec",
-        )
-    }
-    if compact.get("streaming_ab_command") is None:
-        compact.pop("streaming_ab_command", None)  # byte budget: only on trip
-    compact["queries"] = {n: round(t, 2) for n, t in timings.items()}
-    # 1-min loadavg at start/end: >> a busy-bench baseline means a
-    # contended measurement, not a regression.
-    compact["load1"] = [
-        (load_before or [None])[0],
-        (load_after or [None])[0],
-    ]
-    compact["n_regressions"] = len(regressions)
-    # Raw count minus the entries the machine-speed ruler explains away;
-    # full normalized list in the BENCH_LOCAL.json sidecar.
-    compact["n_regressions_normalized"] = len(regressions_norm)
-    compact["regressions"] = sorted(
-        regressions, key=lambda r: -r["delta_sec"]
-    )[:3]
-    compact["errors"] = {
-        name: msg[:40]
-        for name, msg in sorted(errors.items())[:3]
-    }
-    # The worst run spread (query, ratio): >2 here + high load says
-    # "contended measurement", not "regression".
-    if spreads:
-        worst = max(spreads, key=spreads.get)
-        compact["noisiest"] = [worst, spreads[worst]]
-    if spreads_steady:
-        worst = max(spreads_steady, key=spreads_steady.get)
-        compact["noisiest_steady"] = [worst, spreads_steady[worst]]
-    print(json.dumps(compact, separators=(",", ":")), flush=True)
-    # The driver keeps only the LAST ~2000 stdout chars and parses the
-    # final line: once the suite outgrew ~45 queries the compact line
-    # truncated mid-queries and every such round recorded parsed:null
-    # (r3, r6 — confirmed against the committed BENCH_r*.json). So the
-    # FINAL line is a summary that always fits: every scalar, the
-    # slowest 12 queries, and a pointer to the full record. The full
-    # compact line above still feeds _salvage_tail_timings with as many
-    # per-query timings as the tail window reaches.
-    slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:12])
-    summary = {
-        k: compact.get(k)
-        for k in (
-            "metric",
-            "value",
-            "unit",
-            "total_is_complete",
-            "n_ok",
-            "n_err",
-            "prev_round",
-            "n_regressions",
-            "n_regressions_normalized",
-            "calib_sec",
-            "calib_ratio",
-            "delta_median_sec",
-            "load1",
-            "noisiest_steady",
-            "sf",
-            "streaming_rows_per_sec",
-            "streaming_delta_pct",
-            "streaming_regression",
-            "full_registry_wall_sec",
-            "full_registry_delta_pct",
-            "full_registry_n_err",
-        )
-        if k in compact
-    }
-    summary["queries"] = {n: round(t, 2) for n, t in slowest.items()}
-    summary["queries_note"] = f"12 slowest of {len(timings)}; full set in BENCH_LOCAL.json + the line above"
-    summary["regressions"] = compact["regressions"][:2]
-    if errors:
-        summary["errors"] = compact["errors"]
-    print(json.dumps(summary, separators=(",", ":")), flush=True)
-    # Full record to a sidecar file (the driver's stdout tail buffer
-    # truncated r3's long line into parsed:null). `here` was computed at
-    # adjudication time above.
-    with open(os.path.join(here, "BENCH_LOCAL.json"), "w") as f:
-        json.dump(record, f, indent=1)
+    sidecar = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json")
 
-    # Full-registry blind-spot sweep (r9 verdict #6) — deliberately LAST,
-    # after the headline summary line and sidecar are already out: if a
-    # driver-side bench timeout kills the process mid-sweep, the last
-    # complete stdout line is still the full headline summary, so the
-    # round loses only the sweep number, never the metric (the sweep is
-    # the most expendable ~2 min of the run). Every registered query NOT
-    # in HEADLINE runs ONCE and only the TOTAL wall is graded
-    # round-over-round — the 100+ non-headline queries are cheap by
-    # construction and correctness-gated, but nothing else would catch
-    # one of them going pathological (e.g. an optimizer regression after
-    # a Spark upgrade). Per-query single-run walls land in the sidecar
-    # for diagnosis only; they are too noisy to gate individually. The
-    # sweep wall is the sum of those walls.
-    sweep_names = [n for n in REGISTRY if n not in set(names)]
+    def publish() -> None:
+        # The line first: a sidecar-write failure must never orphan it.
+        print(summary_line(record), flush=True)
+        with open(sidecar, "w") as f:
+            json.dump(record, f, indent=1)
+
+    publish()
+    # Full-registry sweep — deliberately LAST, after the headline line and
+    # sidecar are out: a run killed mid-sweep still ends on a complete
+    # headline line and loses only the sweep. Every registered query NOT
+    # in HEADLINE runs ONCE; its single-run wall and split land in the
+    # sidecar, and the line carries only their total.
     sweep_queries: dict[str, float] = {}
     sweep_errors: dict[str, str] = {}
-    for name in sweep_names:
+    for name in [n for n in REGISTRY if n not in HEADLINE]:
         r = run_query(spark, REGISTRY[name].fn, sf_dir, 1)
         if "error" in r:
             sweep_errors[name] = r["error"]
             continue
         sweep_queries[name] = r["total"]
         splits[name] = {"construct": r["construct"], "action": r["action"]}
-    full_registry_wall = round(sum(sweep_queries.values()), 3)
-    frw_prev = prev.get("_full_registry_wall_sec")
-    # Trained-index tier total (r10 verdict #8): summed from the tier's
-    # single-run sweep walls — one number, graded round-over-round like
-    # the sweep itself, so a trainer pathology can't hide in the
-    # bench-excluded family.
-    tier_walls = {n: sweep_queries[n] for n in TRAINED_TIER if n in sweep_queries}
-    trained_tier_wall = (
-        round(sum(tier_walls.values()), 3) if tier_walls else None
-    )
-    ttw_prev = prev.get("_trained_tier_wall_sec")
-    # Machine-normalized deltas alongside the raw ones (r10 ADVICE: the
-    # sweep gate compared walls with no machine-speed normalization,
-    # unlike the per-query and streaming gates). Mirrors the streaming
-    # pair's unclamped two-verdict convention: wall / calib_ratio — a
-    # slower box (ratio > 1) scales its inflated wall back down, a
-    # faster box (ratio < 1) scales its flattering wall back up.
-    # CALIBRATION OF THIS DELTA (r12, SCALE_AB_SWEEP): the raw delta
-    # counts newly-registered queries as "regression" and the CPU calib
-    # ruler does not transfer to this single-run, scheduler/trainer-bound
-    # sweep (r11 read +33.9% normalized; the interleaved matched-set A/B
-    # measured +0.49%). Treat a spike here as a TRIPWIRE that orders
-    # `scripts/ab.py <sha> sweep` — shared-set, best-of-3, interleaved — never
-    # as standalone evidence of a code regression.
-    _cal = calib_ratio if isinstance(calib_ratio, (int, float)) else 1.0
-
-    def _delta_pct(cur, prev_val, scale=1.0):
-        if isinstance(cur, (int, float)) and isinstance(prev_val, (int, float)) and prev_val > 0:
-            return round((cur / scale - prev_val) / prev_val * 100, 1)
-        return None
-
     record.update(
         {
-            "full_registry_wall_sec": full_registry_wall,
+            "full_registry_wall_sec": round(sum(sweep_queries.values()), 3),
             "full_registry_n_ok": len(sweep_queries),
             "full_registry_n_err": len(sweep_errors),
-            "full_registry_prev_wall_sec": frw_prev,
-            "full_registry_delta_pct": _delta_pct(full_registry_wall, frw_prev),
-            "full_registry_delta_pct_normalized": _delta_pct(
-                full_registry_wall, frw_prev, _cal
-            ),
-            "trained_tier_wall_sec": trained_tier_wall,
-            "trained_tier_queries": tier_walls,
-            "trained_tier_prev_wall_sec": ttw_prev,
-            "trained_tier_delta_pct": _delta_pct(trained_tier_wall, ttw_prev),
-            "trained_tier_delta_pct_normalized": _delta_pct(
-                trained_tier_wall, ttw_prev, _cal
-            ),
-            # Matched-set A/B citation for the tier (r12 verdict #3): the
-            # tier dominates the sweep, its raw/normalized deltas are
-            # single-run + trainer-bound, so the nearest interleaved
-            # shared-set sweep A/B rides the record.
-            "trained_tier_ab": _sweep_ab_summary(here) or "unadjudicated",
             "registry_sweep_queries": sweep_queries,
             "registry_sweep_errors": sweep_errors,
         }
     )
-    # Re-emit the summary as the new final line, now carrying the sweep
-    # verdict, and refresh the sidecar with the complete record.
-    summary["full_registry_wall_sec"] = full_registry_wall
-    summary["full_registry_delta_pct"] = record["full_registry_delta_pct"]
-    summary["full_registry_delta_pct_normalized"] = record[
-        "full_registry_delta_pct_normalized"
-    ]
-    summary["full_registry_n_err"] = len(sweep_errors)
-    summary["trained_tier_wall_sec"] = trained_tier_wall
-    summary["trained_tier_delta_pct_normalized"] = record[
-        "trained_tier_delta_pct_normalized"
-    ]
-    summary["trained_tier_ab"] = record["trained_tier_ab"]
-    print(json.dumps(summary, separators=(",", ":")), flush=True)
-    with open(os.path.join(here, "BENCH_LOCAL.json"), "w") as f:
-        json.dump(record, f, indent=1)
+    publish()
 
 
 if __name__ == "__main__":

@@ -22,13 +22,13 @@ differ in engine code only. bench.run_query times each query as construct
 write) and keeps its fastest of --runs runs; a tree keeps its fastest
 across its slots.
 
-The record (default SCALE_AB_<SET>_<sha>.json at the repo root, where
-bench.py's adjudication lookups read it) carries `set`, per-tree
-queries_best, the construct/action split of each best run, per-slot
-calib_sec, and over the queries both trees ran: best totals, worst_deltas
-and head_over_baseline_pct_shared (positive = head slower). Slot outputs
-and plans go to .worktrees/ab_out/<record name>/. The data dir is
-$SPARK_GRAFT_SF_DIR, as for bench.py.
+The record (default SCALE_AB_<SET>_<sha>.json at the repo root) is the
+verdict on a change; bench.py records one window and judges nothing. It
+carries `set`, per-tree queries_best, the construct/action split of each
+best run, per-slot calib_sec, and over the queries both trees ran: best
+totals, worst_deltas and head_over_baseline_pct_shared (positive = head
+slower). Slot outputs and plans go to .worktrees/ab_out/<record name>/.
+The data dir is $SPARK_GRAFT_SF_DIR, as for bench.py.
 """
 
 from __future__ import annotations

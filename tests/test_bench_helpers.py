@@ -1,14 +1,13 @@
 """Tests for bench.py's harness helpers: the query runner and stage reader
 every harness times through (on the session `spark` fixture), the
-scale-factor parse, the A/B self-adjudication lookups (r12 verdict #3) and
-the records scripts/ab.py writes for them, the one-string SQL literal
-renderer (r12 verdict #7), and the scripts' importability and CLIs."""
+scale-factor parse, the summary line's size budget, the records
+scripts/ab.py writes, the one-string SQL literal renderer (r12 verdict #7),
+and the scripts' importability and CLIs."""
 
 from __future__ import annotations
 
 import importlib.util
 import json
-import os
 import pathlib
 import re
 import subprocess
@@ -57,9 +56,53 @@ def test_scale_factor_reads_the_basename():
 
     assert bench.scale_factor("/data/sf0.1") == 0.1
     assert bench.scale_factor("/data/sf0.001/") == 0.001
-    # Not exactly sf<number>: no scale factor, so no previous round matches.
+    # Not exactly sf<number>: no scale factor, so the record says -1.
     assert bench.scale_factor("/data/sf0.1_x10") == -1.0
     assert bench.scale_factor("/home/sfuser/data") == -1.0
+
+
+def test_summary_line_fits_the_tail_budget():
+    import bench
+    from crypto_trading_data_pipeline_spark.queries import REGISTRY
+
+    # Every registered query timed, the longest names the slowest, and the
+    # three longest-named queries failed with 200-character messages: the
+    # worst case the consumer's ~2000-character stdout tail must hold.
+    timings = {name: 100.0 + len(name) + 0.123 for name in REGISTRY}
+    longest = sorted(REGISTRY, key=len)[-3:]
+    record = {
+        "metric": "headline_queries_total_wall",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "total_is_complete": False,
+        "queries": timings,
+        "errors": {name: "AnalysisException: " + "x" * 181 for name in longest},
+        "n_ok": len(timings),
+        "n_err": 3,
+        "sf": 0.1,
+        "calib_sec": 1.234,
+        "load_avg_before": [12.34, 10.5, 9.0],
+        "load_avg_after": [13.45, 11.0, 9.5],
+        "streaming_input_rows": 123456,
+        "streaming_wall_sec": 12.345,
+        "streaming_rows_per_sec": 12345.6,
+        "streaming_candles_emitted": 12345,
+        "full_registry_wall_sec": 1234.567,
+        "full_registry_n_err": 3,
+    }
+    line = bench.summary_line(record)
+    assert "\n" not in line and len(line) < 1000, len(line)
+    got = json.loads(line)
+    assert set(bench.SUMMARY_KEYS) <= set(got)
+    assert got["load1"] == [12.34, 13.45]
+    assert len(got["queries"]) == 12 and set(got["queries"]) <= set(REGISTRY)
+    assert set(got["errors"]) == set(longest)
+
+    failed_drain = {
+        k: v for k, v in record.items() if not k.startswith("streaming_")
+    } | {"streaming_err": "Py4JJavaError: " + "y" * 200}
+    line = bench.summary_line(failed_drain)
+    assert len(line) < 1000 and json.loads(line)["streaming_err"].startswith("Py4JJavaError")
 
 
 def test_run_query_splits_runs_and_reads_construction_stages(spark):
@@ -101,68 +144,6 @@ def test_run_query_records_an_empty_message_failure(spark):
 
     r = bench.run_query(spark, broken, "unused", 3)
     assert r == {"error": "ValueError: "}
-
-
-def _write(dirpath, name, rec):
-    with open(dirpath / name, "w") as f:
-        json.dump(rec, f)
-
-
-def test_ab_adjudication_reads_both_record_shapes(tmp_path):
-    import bench
-
-    # Old shape: historical tree-name keys (r9), queries_best per label.
-    _write(
-        tmp_path,
-        "SCALE_AB_OLD.json",
-        {
-            "r9_sha": "abc1234",
-            "head": {"queries_best": {"q_x": 1.0}},
-            "r9": {"queries_best": {"q_x": 2.0}},
-        },
-    )
-    got = bench._ab_adjudication("q_x", str(tmp_path), "deadbee")
-    assert got == {
-        "file": "SCALE_AB_OLD.json",
-        "head_best_sec": 1.0,
-        "baseline_best_sec": 2.0,
-        "baseline_sha": "abc1234",
-        "ab_is_current_head": None,  # old record has no head_sha
-    }
-    # No coverage for an unknown query -> None (caller writes the
-    # explicit "unadjudicated" marker).
-    assert bench._ab_adjudication("q_missing", str(tmp_path), None) is None
-
-
-def test_ab_adjudication_prefers_worst_deltas_and_head_sha(tmp_path):
-    import bench
-
-    _write(
-        tmp_path,
-        "SCALE_AB_SWEEPY.json",
-        {
-            "baseline_sha": "96e2d8e",
-            "head_sha": "feedf00",
-            "head": {"walls": [1]},
-            "baseline": {"walls": [2]},
-            "head_over_baseline_pct_shared": 0.5,
-            "shared_n": 10,
-            "worst_deltas": [
-                {"q": "q_y", "head": 3.0, "baseline": 4.0, "delta": -1.0}
-            ],
-        },
-    )
-    got = bench._ab_adjudication("q_y", str(tmp_path), "feedf00")
-    assert got["head_best_sec"] == 3.0
-    assert got["baseline_best_sec"] == 4.0
-    assert got["ab_is_current_head"] is True
-    sweep = bench._sweep_ab_summary(str(tmp_path))
-    assert sweep == {
-        "file": "SCALE_AB_SWEEPY.json",
-        "head_over_baseline_pct_shared": 0.5,
-        "shared_n": 10,
-        "baseline_sha": "96e2d8e",
-    }
 
 
 SCRIPTS = pathlib.Path(__file__).resolve().parents[1] / "scripts"
@@ -209,9 +190,7 @@ def _slot(calib, **walls):
     }
 
 
-def test_ab_record_feeds_adjudication_and_sweep_summary(tmp_path):
-    import bench
-
+def test_ab_record_keeps_best_runs_and_shared_deltas():
     ab = _load_script("ab")
     slots = [
         ("head", _slot(1.0, q_x=1.2, q_new=0.5)),
@@ -237,23 +216,3 @@ def test_ab_record_feeds_adjudication_and_sweep_summary(tmp_path):
     assert headline["worst_deltas"] == [
         {"q": "q_x", "head": 1.0, "baseline": 2.0, "delta": -1.0}
     ]
-
-    _write(tmp_path, "SCALE_AB_HEADLINE_62ee5a9.json", headline)
-    assert bench._ab_adjudication("q_x", str(tmp_path), "feedf00") == {
-        "file": "SCALE_AB_HEADLINE_62ee5a9.json",
-        "head_best_sec": 1.0,
-        "baseline_best_sec": 2.0,
-        "baseline_sha": "62ee5a9",
-        "ab_is_current_head": True,
-    }
-    # A headline record is never taken for the sweep adjudication ...
-    assert bench._sweep_ab_summary(str(tmp_path)) is None
-    # ... even when it is newer than the sweep record.
-    _write(tmp_path, "SCALE_AB_SWEEP_62ee5a9.json", ab.ab_record(slots, set="sweep", **meta))
-    os.utime(tmp_path / "SCALE_AB_SWEEP_62ee5a9.json", (1, 1))
-    assert bench._sweep_ab_summary(str(tmp_path)) == {
-        "file": "SCALE_AB_SWEEP_62ee5a9.json",
-        "head_over_baseline_pct_shared": -50.0,
-        "shared_n": 1,
-        "baseline_sha": "62ee5a9",
-    }

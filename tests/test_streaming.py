@@ -379,22 +379,35 @@ def test_candle_query_resumes_a_default_manager_checkpoint(spark, tmp_path):
 CRASH_SEED = 11
 CRASH_CYCLES = 4
 CRASH_TRADES = 500
-#: The cycle whose data epoch dies after its delta's rename.
-CRASH_CYCLE = 2
 CRASH_EXIT = 17
+#: Where the job dies (in the sink after its delta's rename, in the sink
+#: before that rename, or after a settled cycle and before the next lands)
+#: and the cycle it dies in or after. ``before_rename`` dies in the last
+#: cycle: a later call's fold rewrites the table dir, which would hide a
+#: temp file the resumed sink failed to clear.
+CRASH_CYCLE = {"after_commit": 2, "before_rename": CRASH_CYCLES - 1, "between_triggers": 2}
+CRASH_POINTS = tuple(CRASH_CYCLE)
 
 
-def _crash_child(work: str, crash: bool) -> None:
+def _crash_child(work: str, point: str, crash: bool) -> None:
     """One run of the candle job over the seeded perfbench feed, in its own
     process and JVM, on the checkpoint and serving table in ``work``.
 
-    With ``crash`` it lands the cycles up to ``CRASH_CYCLE``. The sink call
-    of that cycle's data epoch runs the real sink, which commits the
-    epoch's delta, records the table's files, then kills the JVM and ends
-    the process before returning: Spark has not written that epoch's
-    commit log. Without ``crash`` it resumes from the checkpoint (Spark
-    re-delivers the epoch), records the table's files, then lands the
-    remaining cycles. Every cycle's freshness count goes to a JSON file."""
+    With ``crash`` it lands the cycles up to the point's ``CRASH_CYCLE``
+    and dies at ``point`` by killing the JVM and ending the process:
+    - ``after_commit``: the sink call of that cycle's data epoch runs the
+      real sink, which commits the epoch's delta, records the table's
+      files, and dies before returning, so Spark has not written that
+      epoch's commit log;
+    - ``before_rename``: ``os.replace`` dies when its target is that
+      epoch's ``delta-{epoch}.parquet``, leaving only the hidden file;
+    - ``between_triggers``: it dies once the cycle has settled, before the
+      next cycle lands.
+    Without ``crash`` it resumes from the checkpoint (Spark re-delivers an
+    uncommitted epoch), records the table's files, then lands the
+    remaining cycles. Every settled cycle's freshness count and the hidden
+    files in the table then go to JSON files, as do the hidden files
+    ``before_rename`` leaves."""
     sys.path.insert(0, os.path.join(REPO, "perfbench"))
     from stream import _now_ms, make_feed
 
@@ -411,19 +424,41 @@ def _crash_child(work: str, crash: bool) -> None:
     os.makedirs(staging, exist_ok=True)
     real = ParquetUpsertSink(table, keys=["symbol", "window_start"], order_col="n_trades")
     phase = "crash" if crash else "resume"
-    fresh, cycle = {}, [None]
+    crash_cycle = CRASH_CYCLE[point]
+    fresh, hidden, cycle, doomed = {}, {}, [None], [None]
+
+    def dump(name, obj):
+        with open(os.path.join(work, f"{name}.json"), "w") as f:
+            json.dump(obj, f)
 
     def record(name):
-        with open(os.path.join(work, f"{name}.json"), "w") as f:
-            json.dump(_file_rows(table), f)
+        dump(name, _file_rows(table))
+
+    def dot_files():
+        return sorted(f for f in os.listdir(table) if f.startswith("."))
+
+    def die():
+        os.kill(jvm_pid, signal.SIGKILL)
+        os._exit(CRASH_EXIT)
 
     def sink(batch, epoch_id):
+        if crash and cycle[0] == crash_cycle:
+            doomed[0] = os.path.join(table, f"delta-{epoch_id:012d}.parquet")
         real(batch, epoch_id)
-        committed = os.path.exists(os.path.join(table, f"delta-{epoch_id:012d}.parquet"))
-        if crash and cycle[0] == CRASH_CYCLE and committed:
+        if crash and point == "after_commit" and doomed[0] and os.path.exists(doomed[0]):
             record("committed")
-            os.kill(jvm_pid, signal.SIGKILL)
-            os._exit(CRASH_EXIT)
+            die()
+
+    if crash and point == "before_rename":
+        replace = os.replace
+
+        def replace_or_die(src, dst, **kwargs):
+            if dst == doomed[0]:
+                dump("hidden-at-crash", dot_files())
+                die()
+            replace(src, dst, **kwargs)
+
+        os.replace = replace_or_die
 
     def land(c):
         name = f"trades-{c:05d}.json"
@@ -435,8 +470,9 @@ def _crash_child(work: str, crash: bool) -> None:
         q.processAllAvailable()
         now = datetime.datetime.fromtimestamp(_now_ms(c) / 1000, datetime.timezone.utc)
         fresh[c] = fresh_row_count(real.read(spark), now=now)
-        with open(os.path.join(work, f"fresh-{phase}.json"), "w") as f:
-            json.dump(fresh, f)
+        hidden[c] = dot_files()
+        dump(f"fresh-{phase}", fresh)
+        dump(f"hidden-{phase}", hidden)
 
     q = start_candle_query(
         candle_stream(parse_trades(file_json_stream(spark, indir))),
@@ -444,63 +480,80 @@ def _crash_child(work: str, crash: bool) -> None:
     )
     try:
         if crash:
-            for c in range(CRASH_CYCLE + 1):
+            for c in range(crash_cycle + 1):
                 cycle[0] = c
                 land(c)
                 settle(c)
+            if point == "between_triggers":
+                die()
         else:
-            settle(CRASH_CYCLE)
+            settle(crash_cycle)
             record("redelivered")
-            for c in range(CRASH_CYCLE + 1, CRASH_CYCLES):
+            for c in range(crash_cycle + 1, CRASH_CYCLES):
                 land(c)
                 settle(c)
     finally:
         q.stop()
 
 
-def test_candle_job_survives_a_crash_after_the_sink_commits(spark, tmp_path, monkeypatch):
-    """The re-delivery window: the process dies after the sink committed an
-    epoch's delta and before Spark wrote that epoch's commit log. Resumed
-    from the same checkpoint, Spark re-delivers the epoch, and the sink
-    replaces the epoch's own file: the table's files and their row counts
-    are what the first delivery left. Every freshness count matches the
-    perfbench replay's, and the finished table equals batch ``ohlcv`` over
-    the replay's on-time trades, row for row."""
-    monkeypatch.syspath_prepend(os.path.join(REPO, "perfbench"))
-    from stream import _now_ms, fresh_counts, make_feed, replay
+@pytest.fixture(scope="module")
+def crash_replay(spark):
+    """What every crash point must end with: the perfbench replay's
+    freshness count after each cycle, and batch ``ohlcv`` over the replay's
+    on-time trades, sorted."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.syspath_prepend(os.path.join(REPO, "perfbench"))
+        from stream import _now_ms, fresh_counts, make_feed, replay
 
+    kept, _dropped = replay(make_feed(CRASH_SEED, CRASH_CYCLES, per_cycle=CRASH_TRADES))
+    want, _rows = fresh_counts(kept, [_now_ms(c) for c in range(CRASH_CYCLES)])
+    on_time = spark.createDataFrame([(json.dumps(r),) for b in kept for r in b], ["value"])
+    return want, sorted(map(tuple, ohlcv(parse_trades(on_time)).collect()))
+
+
+@pytest.mark.parametrize("point", CRASH_POINTS)
+def test_candle_job_survives_a_crash(spark, tmp_path, crash_replay, point):
+    """The candle job's process and JVM die at ``point`` (see
+    ``_crash_child``) and a new process resumes it from the same
+    checkpoint. Every freshness count matches the perfbench replay's, the
+    finished table equals batch ``ohlcv`` over the replay's on-time trades,
+    row for row, and no settled cycle leaves a hidden file in the table
+    (dying before the rename did leave one). After a commit,
+    the re-delivery window: Spark re-delivers the epoch and the sink
+    replaces the epoch's own file, so the table's files and their row
+    counts are what the first delivery left."""
     work = str(tmp_path)
     env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
 
-    def child(crash):
+    def child(phase):
         code = (
             "import sys; from tests.test_streaming import _crash_child; "
-            "_crash_child(sys.argv[1], sys.argv[2] == 'crash')"
+            "_crash_child(sys.argv[1], sys.argv[2], sys.argv[3] == 'crash')"
         )
-        phase = "crash" if crash else "resume"
         return subprocess.run(
-            [sys.executable, "-c", code, work, phase],
+            [sys.executable, "-c", code, work, point, phase],
             cwd=REPO, env=env, capture_output=True, text=True, timeout=600,
         )
 
-    first = child(True)
+    first = child("crash")
     assert first.returncode == CRASH_EXIT, first.stderr[-3000:]
-    second = child(False)
+    second = child("resume")
     assert second.returncode == 0, second.stderr[-3000:]
 
     def load(name):
         with open(os.path.join(work, f"{name}.json")) as f:
             return json.load(f)
 
-    assert load("redelivered") == load("committed")
-    feed = make_feed(CRASH_SEED, CRASH_CYCLES, per_cycle=CRASH_TRADES)
-    kept, _dropped = replay(feed)
-    want, _rows = fresh_counts(kept, [_now_ms(c) for c in range(CRASH_CYCLES)])
+    if point == "after_commit":
+        assert load("redelivered") == load("committed")
+    if point == "before_rename":
+        assert load("hidden-at-crash")
+    for phase in ("crash", "resume"):
+        assert not any(load(f"hidden-{phase}").values()), load(f"hidden-{phase}")
+    want, expected = crash_replay
     got = {**load("fresh-crash"), **load("fresh-resume")}
     assert [got[str(c)] for c in range(CRASH_CYCLES)] == want
 
-    on_time = spark.createDataFrame([(json.dumps(r),) for b in kept for r in b], ["value"])
-    expected = sorted(map(tuple, ohlcv(parse_trades(on_time)).collect()))
     served = ParquetUpsertSink(
         os.path.join(work, "serving"), keys=["symbol", "window_start"], order_col="n_trades"
     )
