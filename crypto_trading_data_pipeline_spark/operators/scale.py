@@ -1,6 +1,6 @@
-"""Scale utilities: skew salting, literal rendering, the crash-safe directory
-swap, layout keys and distribution helpers. These are the knobs a 100 TB
-deployment turns; none change query semantics.
+"""Scale utilities: skew salting, literal rendering, layout keys and
+distribution helpers. These are the knobs a 100 TB deployment turns; none
+change query semantics.
 
 Context: the reference runs 1 worker / 1 core / 1 GB and sets zero Spark
 configs (SURVEY.md §6). Our engine targets 1000-executor clusters, where
@@ -139,40 +139,6 @@ def salted_group_sum(
         *[F.sum(out).alias(out) for out in agg_cols],
         F.sum("__n").alias("n"),
     )
-
-
-def recover_swap(path: str) -> None:
-    """Finish or undo a ``swap_dir`` a crash cut short. A run that died
-    between rename-aside and move-in leaves the table at <path>.old and
-    nothing at <path>: restore it. A leftover .old next to an intact table
-    is completed-swap garbage: clear it, or the next rename-aside raises on
-    the non-empty directory."""
-    import os
-    import shutil
-
-    old = path + ".old"
-    if os.path.exists(old):
-        if os.path.exists(path):
-            shutil.rmtree(old)
-        else:
-            os.rename(old, path)
-
-
-def swap_dir(staging: str, path: str) -> None:
-    """Replace directory ``path`` with ``staging`` by rename-aside: the
-    table moves to <path>.old BEFORE the new one moves in, so a crash at
-    any point leaves a table ``recover_swap`` can restore (rmtree-then-move
-    would lose it in between). ``staging`` must sit beside ``path`` so both
-    moves are same-filesystem renames."""
-    import os
-    import shutil
-
-    old = path + ".old"
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(staging, path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
 
 
 def zorder_key(x, y, *, bits: int = 8):

@@ -19,7 +19,8 @@ of an unpersisted write would run it twice.
   retried epoch replaces its own file; a table of 0 rows returns before
   any file exists (the empty-batch guard). Only a fold runs a Spark
   file-write job. ``read`` merges last-wins by key (``merge_last_wins``),
-  and deltas fold into one base once they hold as many rows as the base.
+  and deltas fold into one base once they hold as many rows as the base:
+  in place, the base renamed in before the files it covers are deleted.
 - ``JdbcUpsertSink`` reproduces staging + merge for any JDBC database
   (server-side MERGE, driver-side connection) — import-gated since test
   containers carry no JDBC driver or server. The batch is persisted across
@@ -38,8 +39,6 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from ..operators.scale import recover_swap, swap_dir
 
 #: Column the parquet sink stores each row's epoch in (``read`` drops it).
 EPOCH_COL = "__epoch"
@@ -103,12 +102,18 @@ class ParquetUpsertSink:
 
     Once the deltas older than the call's epoch hold as many rows as the
     base (footer row counts), they are merged with the base into a new
-    base. Spark writes it in parts to a staging directory beside the
-    table, swapped in by rename-aside (``operators.scale.swap_dir``), so a
-    merge-on-read scans under twice the base's rows plus the newest
-    batch. The newest epoch stays a delta, so its re-delivery still finds
-    its own file. Epoch ids must not go backwards: one checkpoint per
-    table.
+    base, so a merge-on-read scans under twice the base's rows plus the
+    newest batch. The newest epoch stays a delta, so its re-delivery
+    still finds its own file. Epoch ids must not go backwards: one
+    checkpoint per table.
+
+    Crash safety: every file is rows that ``read`` merges last-wins, so a
+    file whose rows another file covers changes nothing, present or gone.
+    A commit only adds a delta by rename. A fold only adds a covering
+    base by rename (Spark writes its parts to a staging directory beside
+    the table, and each part is renamed in), then deletes the files it
+    covered. A crash at any step leaves the merged read as it was; the
+    next fold covers and deletes what is left over.
     """
 
     def __init__(self, path: str, *, keys: list[str], order_col: str):
@@ -122,9 +127,8 @@ class ParquetUpsertSink:
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
         import pyarrow.parquet as pq
 
-        recover_swap(self.path)
         if os.path.isdir(self._staging):
-            shutil.rmtree(self._staging)  # a crashed fold's unswapped base
+            shutil.rmtree(self._staging)  # a crashed fold's unrenamed parts
         for tmp in glob(os.path.join(escape(self.path), ".delta-*.parquet.tmp")):
             os.remove(tmp)  # a crashed call's uncommitted delta
         epoch = int(epoch_id)
@@ -151,8 +155,8 @@ class ParquetUpsertSink:
 
     @property
     def _staging(self) -> str:
-        """The fold's staging dir: beside the table, so the swap is a
-        same-filesystem rename."""
+        """The fold's staging dir: beside the table, so moving a part in is
+        a same-filesystem rename."""
         head, name = os.path.split(os.path.abspath(self.path))
         return os.path.join(head, f".{name}.staging")
 
@@ -171,8 +175,7 @@ class ParquetUpsertSink:
         base once the deltas hold as many rows as the base."""
         import pyarrow.parquet as pq
 
-        files = self._files()
-        folded = [f for f in files if f.kind == "base" or f.epoch < epoch]
+        folded = [f for f in self._files() if f.kind == "base" or f.epoch < epoch]
         counts = {f: pq.read_metadata(f.path).num_rows for f in folded}
         base = sum(n for f, n in counts.items() if f.kind == "base")
         deltas = sum(n for f, n in counts.items() if f.kind == "delta")
@@ -184,15 +187,14 @@ class ParquetUpsertSink:
         staging = self._staging
         merged.write.parquet(staging)
         for f in os.listdir(staging):
-            src = os.path.join(staging, f)
+            # Spark's part names carry the write's job id, so a part never
+            # replaces a crashed fold's leftover part, which is in ``folded``.
             if f.endswith(".parquet"):
-                os.rename(src, os.path.join(staging, f"base-{top:012d}-{f}"))
-            else:
-                os.remove(src)  # _SUCCESS and checksums of the renamed parts
-        for f in files:
-            if f not in folded:
-                shutil.copy2(f.path, staging)
-        swap_dir(staging, self.path)
+                dst = os.path.join(self.path, f"base-{top:012d}-{f}")
+                os.rename(os.path.join(staging, f), dst)
+        for f in folded:  # only once the new base is wholly in
+            os.remove(f.path)
+        shutil.rmtree(staging)  # _SUCCESS and checksums of the renamed parts
 
     def _reader(self, spark):
         return spark.read if self._schema is None else spark.read.schema(self._schema)
@@ -200,7 +202,6 @@ class ParquetUpsertSink:
     def read(self, spark) -> DataFrame:
         """The serving table: the base and deltas merged last-wins. Empty,
         with the batches' schema, while only empty batches have arrived."""
-        recover_swap(self.path)
         if self._schema is not None and not self._files():
             return spark.createDataFrame([], self._schema).drop(EPOCH_COL)
         rows = self._reader(spark).parquet(self.path)

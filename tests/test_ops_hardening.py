@@ -1,12 +1,11 @@
 """Operational-glue hardening: generated serving-table DDL matches the
 reference's hand-written shape, merge SQL is injection-safe, the parquet
-upsert swap survives a crash at any point, CC refuses to return
+upsert survives a crash at any step of a fold, CC refuses to return
 unconverged labels, and freshness cutoffs respect timezones."""
 
 from __future__ import annotations
 
 import os
-import shutil
 from datetime import datetime, timedelta, timezone
 
 import pytest
@@ -184,41 +183,6 @@ def test_jdbc_sink_live_merge_against_duckdb(spark, tmp_path):
     assert leftovers == []
 
 
-def test_parquet_upsert_recovers_from_mid_swap_crash(spark, tmp_path):
-    path = str(tmp_path / "serving")
-    sink = ParquetUpsertSink(path, keys=["k"], order_col="ord")
-    df = spark.createDataFrame([(1, 10), (2, 20)], ["k", "ord"])
-    sink(df, epoch_id=0)
-    # Simulate a crash between rename-aside and move-in: the table dir is
-    # gone, only .old survives.
-    os.rename(path, path + ".old")
-    assert not os.path.exists(path)
-    got = {(r.k, r.ord) for r in sink.read(spark).collect()}
-    assert got == {(1, 10), (2, 20)}
-    assert os.path.exists(path) and not os.path.exists(path + ".old")
-    # And the next write after recovery merges normally.
-    sink(spark.createDataFrame([(2, 30)], ["k", "ord"]), epoch_id=1)
-    got = {(r.k, r.ord) for r in sink.read(spark).collect()}
-    assert got == {(1, 10), (2, 30)}
-    # A leftover .old beside an intact table is completed-swap garbage:
-    # the next call clears it instead of renaming onto it.
-    shutil.copytree(path, path + ".old")
-    sink(spark.createDataFrame([(3, 30)], ["k", "ord"]), epoch_id=2)
-    assert not os.path.exists(path + ".old")
-    got = {(r.k, r.ord) for r in sink.read(spark).collect()}
-    assert got == {(1, 10), (2, 30), (3, 30)}
-
-
-def _data_rows(path):
-    import pyarrow.parquet as pq
-
-    return sum(
-        pq.read_metadata(os.path.join(path, f)).num_rows
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )
-
-
 def _crash(*_args):
     raise RuntimeError("simulated crash")
 
@@ -253,35 +217,74 @@ def test_parquet_upsert_recovers_from_crash_before_commit(spark, tmp_path, monke
     assert got == {(1, 40), (2, 30), (3, 30)}
 
 
-def test_parquet_upsert_recovers_from_mid_compaction_crash(spark, tmp_path, monkeypatch):
-    """A fold that dies between its rename-aside and move-in leaves only
-    <path>.old; read() restores it with the epoch that landed before the
-    fold, and the next call folds again and clears the dead fold's
-    staging directory."""
-    from crypto_trading_data_pipeline_spark.streaming import sinks
+#: Two calls that each fold, once epochs 0 and 1 have made a base and a
+#: delta: epoch 2's call folds base 0 with delta 1, epoch 3's base 1 with
+#: delta 2.
+FOLD_CALLS = [(2, [(3, 50), (4, 40), (5, 50)]), (3, [(1, 60)])]
+#: The renames and removes those two calls make: per fold, one rename of
+#: its one base part and one remove each of the old base and the delta.
+FOLD_FILE_OPS = 6
 
+
+@pytest.mark.parametrize("k", range(FOLD_FILE_OPS + 1))
+def test_parquet_upsert_survives_a_crash_inside_a_fold(spark, tmp_path, monkeypatch, k):
+    """The k-th ``os.rename`` or ``os.remove`` of two folding calls raises
+    (at ``k == FOLD_FILE_OPS`` none does, and the calls make exactly that
+    many). A fresh sink then reads the table as it was before the crashed
+    call or after it, the re-delivered epoch leaves it exact, and one more
+    fold leaves only its base and the newest delta."""
     path = str(tmp_path / "serving")
     sink = ParquetUpsertSink(path, keys=["k"], order_col="ord")
-    sink(spark.createDataFrame([(1, 10), (2, 20)], ["k", "ord"]), epoch_id=0)
 
-    def rename_aside_then_crash(staging, target):
-        os.rename(target, target + ".old")
-        _crash()
+    def served(reader):
+        return {(r.k, r.ord) for r in reader.read(spark).collect()}
 
-    monkeypatch.setattr(sinks, "swap_dir", rename_aside_then_crash)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        sink(spark.createDataFrame([(2, 30)], ["k", "ord"]), epoch_id=1)
+    def deliver(epoch, rows):
+        sink(spark.createDataFrame(rows, ["k", "ord"]), epoch_id=epoch)
+
+    deliver(0, [(1, 10), (2, 20)])
+    deliver(1, [(2, 30), (3, 30)])
+    ops = []
+
+    def nth_op_crashes(real):
+        def op(*args, **kwargs):
+            ops.append(args)
+            if len(ops) == k + 1:
+                _crash()
+            return real(*args, **kwargs)
+
+        return op
+
+    monkeypatch.setattr(os, "rename", nth_op_crashes(os.rename))
+    monkeypatch.setattr(os, "remove", nth_op_crashes(os.remove))
+    table = {1: 10, 2: 30, 3: 30}
+    crashed = []
+    for epoch, rows in FOLD_CALLS:
+        before = set(table.items())
+        for key, order in rows:
+            table[key] = max(order, table.get(key, order))
+        try:
+            deliver(epoch, rows)
+        except RuntimeError:
+            crashed.append(epoch)
+            fresh = ParquetUpsertSink(path, keys=["k"], order_col="ord")
+            assert served(fresh) in (before, set(table.items()))
+            deliver(epoch, rows)  # the re-delivery
+        assert served(sink) == set(table.items())
     monkeypatch.undo()
-    assert not os.path.exists(path)
-    got = {(r.k, r.ord) for r in sink.read(spark).collect()}
-    assert got == {(1, 10), (2, 30)}
-    assert os.path.exists(path) and not os.path.exists(path + ".old")
-    assert _data_rows(path) == 3  # epoch 0's two rows, epoch 1's one
-    sink(spark.createDataFrame([(3, 30)], ["k", "ord"]), epoch_id=2)
+    if k < FOLD_FILE_OPS:
+        assert crashed
+    else:
+        assert len(ops) == FOLD_FILE_OPS
+    deliver(4, [(key, 70) for key in range(10, 30)])
+    deliver(5, [(2, 80)])
+    table.update({key: 70 for key in range(10, 30)})
+    table[2] = 80
+    files = sorted(os.listdir(path))
+    assert files[-1] == "delta-000000000005.parquet"
+    assert all(f.startswith("base-000000000004-") for f in files[:-1])
     assert not [f for f in os.listdir(tmp_path) if ".staging" in f]
-    assert _data_rows(path) == 3  # the base (keys 1, 2) plus epoch 2
-    got = {(r.k, r.ord) for r in sink.read(spark).collect()}
-    assert got == {(1, 10), (2, 30), (3, 30)}
+    assert served(sink) == set(table.items())
 
 
 def test_freshness_read_prunes_below_the_merge(spark, tmp_path):

@@ -8,6 +8,7 @@ from __future__ import annotations
 import datetime
 import json
 import os
+import re
 import signal
 import subprocess
 import sys
@@ -380,13 +381,12 @@ CRASH_SEED = 11
 CRASH_CYCLES = 4
 CRASH_TRADES = 500
 CRASH_EXIT = 17
-#: Where the job dies (in the sink after its delta's rename, in the sink
-#: before that rename, or after a settled cycle and before the next lands)
-#: and the cycle it dies in or after. ``before_rename`` dies in the last
-#: cycle: a later call's fold rewrites the table dir, which would hide a
-#: temp file the resumed sink failed to clear.
-CRASH_CYCLE = {"after_commit": 2, "before_rename": CRASH_CYCLES - 1, "between_triggers": 2}
-CRASH_POINTS = tuple(CRASH_CYCLE)
+#: The cycle the job dies in or after, at every point: its data epoch folds.
+CRASH_CYCLE = 2
+#: Where the job dies: in the sink after its delta's rename, in the sink
+#: before that rename, after a settled cycle and before the next lands, or
+#: in a fold after its first base part is renamed in.
+CRASH_POINTS = ("after_commit", "before_rename", "between_triggers", "mid_fold")
 
 
 def _crash_child(work: str, point: str, crash: bool) -> None:
@@ -402,12 +402,15 @@ def _crash_child(work: str, point: str, crash: bool) -> None:
     - ``before_rename``: ``os.replace`` dies when its target is that
       epoch's ``delta-{epoch}.parquet``, leaving only the hidden file;
     - ``between_triggers``: it dies once the cycle has settled, before the
-      next cycle lands.
+      next cycle lands;
+    - ``mid_fold``: ``os.rename`` dies once it has moved that cycle's
+      first ``base-*`` part into the table, before the fold removes any
+      file it covered.
     Without ``crash`` it resumes from the checkpoint (Spark re-delivers an
     uncommitted epoch), records the table's files, then lands the
     remaining cycles. Every settled cycle's freshness count and the hidden
     files in the table then go to JSON files, as do the hidden files
-    ``before_rename`` leaves."""
+    ``before_rename`` leaves and the table's files ``mid_fold`` leaves."""
     sys.path.insert(0, os.path.join(REPO, "perfbench"))
     from stream import _now_ms, make_feed
 
@@ -424,7 +427,6 @@ def _crash_child(work: str, point: str, crash: bool) -> None:
     os.makedirs(staging, exist_ok=True)
     real = ParquetUpsertSink(table, keys=["symbol", "window_start"], order_col="n_trades")
     phase = "crash" if crash else "resume"
-    crash_cycle = CRASH_CYCLE[point]
     fresh, hidden, cycle, doomed = {}, {}, [None], [None]
 
     def dump(name, obj):
@@ -442,7 +444,7 @@ def _crash_child(work: str, point: str, crash: bool) -> None:
         os._exit(CRASH_EXIT)
 
     def sink(batch, epoch_id):
-        if crash and cycle[0] == crash_cycle:
+        if crash and cycle[0] == CRASH_CYCLE:
             doomed[0] = os.path.join(table, f"delta-{epoch_id:012d}.parquet")
         real(batch, epoch_id)
         if crash and point == "after_commit" and doomed[0] and os.path.exists(doomed[0]):
@@ -459,6 +461,17 @@ def _crash_child(work: str, point: str, crash: bool) -> None:
             replace(src, dst, **kwargs)
 
         os.replace = replace_or_die
+
+    if crash and point == "mid_fold":
+        rename = os.rename
+
+        def rename_then_die(src, dst, **kwargs):
+            rename(src, dst, **kwargs)
+            if cycle[0] == CRASH_CYCLE and os.path.basename(dst).startswith("base-"):
+                dump("files-at-crash", sorted(os.listdir(table)))
+                die()
+
+        os.rename = rename_then_die
 
     def land(c):
         name = f"trades-{c:05d}.json"
@@ -480,16 +493,16 @@ def _crash_child(work: str, point: str, crash: bool) -> None:
     )
     try:
         if crash:
-            for c in range(crash_cycle + 1):
+            for c in range(CRASH_CYCLE + 1):
                 cycle[0] = c
                 land(c)
                 settle(c)
             if point == "between_triggers":
                 die()
         else:
-            settle(crash_cycle)
+            settle(CRASH_CYCLE)
             record("redelivered")
-            for c in range(crash_cycle + 1, CRASH_CYCLES):
+            for c in range(CRASH_CYCLE + 1, CRASH_CYCLES):
                 land(c)
                 settle(c)
     finally:
@@ -548,6 +561,11 @@ def test_candle_job_survives_a_crash(spark, tmp_path, crash_replay, point):
         assert load("redelivered") == load("committed")
     if point == "before_rename":
         assert load("hidden-at-crash")
+    if point == "mid_fold":  # the new base is in, and a delta it covers too
+        names = load("files-at-crash")
+        at_crash = [m for f in names if (m := re.match(r"(base|delta)-(\d+)", f))]
+        top = max(int(m[2]) for m in at_crash if m[1] == "base")
+        assert [m for m in at_crash if m[1] == "delta" and int(m[2]) <= top]
     for phase in ("crash", "resume"):
         assert not any(load(f"hidden-{phase}").values()), load(f"hidden-{phase}")
     want, expected = crash_replay
