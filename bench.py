@@ -287,9 +287,7 @@ def bench_streaming(spark, sf_dir: str) -> dict:
             run_ckpt = f"{ckpt}_{i}"
             t0 = time.perf_counter()
             trades = parse_trades(file_json_stream(spark, indir))
-            candles = candle_stream(
-                trades, watermark="2 minutes", window_duration="1 minute"
-            )
+            candles = candle_stream(trades)
             q = start_candle_query(
                 candles, sink=sink, checkpoint_dir=run_ckpt, available_now=True
             )

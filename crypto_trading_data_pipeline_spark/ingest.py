@@ -29,14 +29,14 @@ _FIELD_MAP = {
 }
 
 
-def subscribe_frame(pairs: list[str], *, frame_id: int = 1) -> str:
+def subscribe_frame(pairs: list[str]) -> str:
     """JSON SUBSCRIBE frame for the {pair}@trade streams
     (reference producer/producer.py:83-90 subscribes one pair; ours takes N)."""
     return json.dumps(
         {
             "method": "SUBSCRIBE",
             "params": [f"{p.lower()}@trade" for p in pairs],
-            "id": frame_id,
+            "id": 1,
         }
     )
 
@@ -56,13 +56,13 @@ def normalize_trade_message(raw: str | bytes) -> dict[str, Any] | None:
     return {long: msg[short] for short, long in _FIELD_MAP.items()}
 
 
-def backoff_schedule(*, initial_s: float = 5.0, cap_s: float = 60.0) -> Iterator[float]:
-    """Exponential reconnect delays: initial, 2x, 4x, ... capped
-    (reference producer.py:100-115 uses the same 5s -> 60s-cap policy)."""
-    delay = initial_s
+def backoff_schedule() -> Iterator[float]:
+    """Exponential reconnect delays: 5 s, 10 s, 20 s, ... capped at 60 s
+    (reference producer.py:100-115 uses the same policy)."""
+    delay = 5.0
     while True:
-        yield min(delay, cap_s)
-        delay = min(delay * 2, cap_s)
+        yield delay
+        delay = min(delay * 2, 60.0)
 
 
 def run_producer(

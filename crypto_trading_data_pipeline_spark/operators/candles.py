@@ -31,10 +31,9 @@ def ohlcv(
     key_col: str = "symbol",
     price_col: str = "price",
     qty_col: str | None = "quantity",
-    window_duration: str = "1 minute",
     round_digits: int | None = None,
 ) -> DataFrame:
-    """Per-(key, tumbling window) OHLCV candles.
+    """Per-(key, tumbling 1-minute window) OHLCV candles.
 
     When ``qty_col`` is None every row counts as quantity 1 (the fixture
     ``events`` table has a price-like ``value`` but no quantity), so
@@ -42,7 +41,7 @@ def ohlcv(
     """
     price = F.col(price_col)
     qty: Column = F.col(qty_col) if qty_col else F.lit(1.0)
-    w = F.window(F.col(ts_col), window_duration)
+    w = F.window(F.col(ts_col), "1 minute")
 
     def _r(c: Column) -> Column:
         return F.round(c, round_digits) if round_digits is not None else c
@@ -79,16 +78,11 @@ def ohlcv(
     )
 
 
-def rollup_candles(
-    candles: DataFrame,
-    *,
-    window_duration: str = "5 minutes",
-    round_digits: int | None = None,
-) -> DataFrame:
-    """Re-aggregate fine candles into coarser ones WITHOUT touching raw
+def rollup_candles(candles: DataFrame, *, round_digits: int | None = None) -> DataFrame:
+    """Re-aggregate fine candles into 5-minute ones WITHOUT touching raw
     trades — the hypertable-rollup pattern (1-min candles are ~10^3-10^5x
-    smaller than the trade stream, so a day of 5-min/1-hour/1-day rollups
-    reads megabytes, not terabytes).
+    smaller than the trade stream, so a day of rollups reads megabytes,
+    not terabytes).
 
     OHLCV re-aggregates exactly: open = open of the earliest sub-window
     (min_by on window_start), close = close of the latest, high/low = max/
@@ -99,7 +93,7 @@ def rollup_candles(
     def _r(c: Column) -> Column:
         return F.round(c, round_digits) if round_digits is not None else c
 
-    w = F.window(F.col("window_start"), window_duration)
+    w = F.window(F.col("window_start"), "5 minutes")
     agg = (
         candles.groupBy(w.alias("w"), "symbol")
         .agg(
@@ -128,51 +122,38 @@ def rollup_candles(
     )
 
 
-def gap_fill_candles(
-    candles: DataFrame,
-    *,
-    key_col: str = "symbol",
-    start_col: str = "window_start",
-    step: str = "1 minute",
-    close_col: str = "close_price",
-    ohlc_cols: tuple[str, ...] = (
-        "open_price",
-        "high_price",
-        "low_price",
-        "close_price",
-    ),
-    zero_cols: tuple[str, ...] = ("n_trades",),
-) -> DataFrame:
-    """Fill missing candle windows per key with flat carry-forward candles
-    (TimescaleDB time_bucket_gapfill + locf, rebuilt on stock Spark).
+def gap_fill_candles(candles: DataFrame) -> DataFrame:
+    """Fill missing 1-minute candle windows per symbol with flat
+    carry-forward candles (TimescaleDB time_bucket_gapfill + locf, rebuilt
+    on stock Spark).
 
     Empty minutes happen whenever a symbol has no trades in a window — a
-    chartable series needs every minute present. For each key the full
-    [first, last] window grid is generated (sequence + explode — narrow,
-    sized by time span not by trade count), left-joined against the real
-    candles, and gaps become zero-volume flat candles at the last observed
-    close (last(ignorenulls) running frame — one sort per key partition,
-    no self-join). ``is_gap`` marks synthesized rows.
+    chartable series needs every minute present. For each symbol the full
+    [first, last] ``window_start`` grid is generated (sequence + explode —
+    narrow, sized by time span not by trade count), left-joined against the
+    real candles, and gaps become zero-trade flat candles: open, high, low
+    and close all take the last observed close (last(ignorenulls) running
+    frame — one sort per key partition, no self-join) and ``n_trades`` is
+    0. ``is_gap`` marks synthesized rows.
 
     Scale: grid rows = span/step per key — independent of trade volume, so
     at 100 TB of trades the grid side stays tiny; the join shuffles on
     (key, window) with AQE free to broadcast the grid.
     """
-    lo, hi = F.min(start_col), F.max(start_col)
-    bounds = candles.groupBy(key_col).agg(lo.alias("__lo"), hi.alias("__hi"))
+    lo, hi = F.min("window_start"), F.max("window_start")
+    bounds = candles.groupBy("symbol").agg(lo.alias("__lo"), hi.alias("__hi"))
     grid = bounds.select(
-        key_col,
+        "symbol",
         F.explode(
-            F.sequence(F.col("__lo"), F.col("__hi"), F.expr(f"INTERVAL {step}"))
-        ).alias(start_col),
+            F.sequence(F.col("__lo"), F.col("__hi"), F.expr("INTERVAL 1 minute"))
+        ).alias("window_start"),
     )
-    joined = grid.join(candles, [key_col, start_col], "left")
-    w = Window.partitionBy(key_col).orderBy(start_col)
-    out = joined.withColumn(
-        "is_gap", F.col(zero_cols[0] if zero_cols else close_col).isNull()
-    ).withColumn("__ff", F.last(F.col(close_col), ignorenulls=True).over(w))
-    for c in ohlc_cols:
+    joined = grid.join(candles, ["symbol", "window_start"], "left")
+    w = Window.partitionBy("symbol").orderBy("window_start")
+    out = joined.withColumn("is_gap", F.col("n_trades").isNull()).withColumn(
+        "__ff", F.last(F.col("close_price"), ignorenulls=True).over(w)
+    )
+    for c in ("open_price", "high_price", "low_price", "close_price"):
         out = out.withColumn(c, F.coalesce(F.col(c), F.col("__ff")))
-    for c in zero_cols:
-        out = out.withColumn(c, F.coalesce(F.col(c), F.lit(0)))
+    out = out.withColumn("n_trades", F.coalesce(F.col("n_trades"), F.lit(0)))
     return out.drop("__ff")

@@ -28,6 +28,10 @@ from pyspark.sql import functions as F
 
 from . import dedup_hash
 
+#: The id and vector columns both trainers read.
+_ID_COL = "vec_id"
+_VEC_COL = "v"
+
 
 def _sq_dist(v, c, *, integer: bool = False):
     zero = F.lit(0).cast("long") if integer else F.lit(0.0)
@@ -78,8 +82,6 @@ def kmeans_train(
     *,
     k: int = 8,
     max_iter: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
     quantize: int | None = None,
 ) -> tuple[DataFrame, list[list[float]], list[float]]:
     """Returns (assignments, centroids, sse_history).
@@ -100,8 +102,8 @@ def kmeans_train(
     if quantize is not None:
         q = F.lit(float(quantize))
         vecs = vecs.withColumn(
-            vec_col,
-            F.transform(F.col(vec_col), lambda x: F.round(x * q, 0).cast("long")),
+            _VEC_COL,
+            F.transform(F.col(_VEC_COL), lambda x: F.round(x * q, 0).cast("long")),
         )
     # Materialize the training input ONCE (r12 verdict #7 — the
     # q_semdedup localCheckpoint pattern): every Lloyd iteration's
@@ -114,23 +116,23 @@ def kmeans_train(
     # caller (q_kmeans_ivf, the trainer demo) materializes the corpus it
     # was going to scan max_iter+2 times anyway.
     vecs = vecs.localCheckpoint(eager=True)
-    h = dedup_hash.token_hash(F.col(id_col).cast("string"))
+    h = dedup_hash.token_hash(F.col(_ID_COL).cast("string"))
     seeds = (
-        vecs.select(vec_col, h.alias("__h"), F.col(id_col))
-        .orderBy("__h", id_col)
+        vecs.select(_VEC_COL, h.alias("__h"), F.col(_ID_COL))
+        .orderBy("__h", _ID_COL)
         .limit(k)
         .collect()
     )
-    centroids = [list(r[vec_col]) for r in seeds]
+    centroids = [list(r[_VEC_COL]) for r in seeds]
 
     integer = quantize is not None
     mean = F.round(F.avg("x"), 0).cast("long") if integer else F.avg("x")
     sse_history: list[float] = []
     for _ in range(max_iter):
-        assigned = _assign(vecs, vec_col, centroids, integer=integer)
+        assigned = _assign(vecs, _VEC_COL, centroids, integer=integer)
         stats = (
             assigned.select(
-                "cluster", F.col("__d"), F.posexplode(vec_col).alias("pos", "x")
+                "cluster", F.col("__d"), F.posexplode(_VEC_COL).alias("pos", "x")
             )
             .groupBy("cluster", "pos")
             .agg(mean.alias("m"), F.sum("__d").alias("dsum"))
@@ -147,7 +149,7 @@ def kmeans_train(
         sse_history.append(float(sum(r.sse for r in stats)))
         for r in stats:  # empty clusters keep their previous centroid
             centroids[r.cluster] = [p.m for p in r.pm]
-    final = _assign(vecs, vec_col, centroids, integer=integer).drop("__d")
+    final = _assign(vecs, _VEC_COL, centroids, integer=integer).drop("__d")
     return final, centroids, sse_history
 
 
@@ -189,8 +191,6 @@ def pq_train(
     dsub: int,
     k: int = 8,
     max_iter: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
     quantize: int | None = None,
 ) -> tuple[DataFrame, list[list[list[float]]], list[list[float]]]:
     """Train m product-quantizer sub-codebooks JOINTLY — one Spark job per
@@ -221,10 +221,10 @@ def pq_train(
     if quantize is not None:
         q = F.lit(float(quantize))
         vecs = vecs.withColumn(
-            vec_col,
-            F.transform(F.col(vec_col), lambda x: F.round(x * q, 0).cast("long")),
+            _VEC_COL,
+            F.transform(F.col(_VEC_COL), lambda x: F.round(x * q, 0).cast("long")),
         )
-    h = dedup_hash.token_hash(F.col(id_col).cast("string"))
+    h = dedup_hash.token_hash(F.col(_ID_COL).cast("string"))
     # Explode to (id, __h, __j, sub) and materialize ONCE — m×|train| rows,
     # bounded by the trainer-sample contract. Every later job (seeds, each
     # iteration, the final assignment) reads this checkpoint; the caller's
@@ -233,16 +233,16 @@ def pq_train(
         F.sequence(F.lit(0), F.lit(m - 1)),
         lambda j: F.struct(
             j.cast("int").alias("j"),
-            F.slice(F.col(vec_col), j * dsub + 1, dsub).alias("sub"),
+            F.slice(F.col(_VEC_COL), j * dsub + 1, dsub).alias("sub"),
         ),
     )
     cp = (
-        vecs.select(F.col(id_col), h.alias("__h"), F.explode(subs).alias("s"))
+        vecs.select(F.col(_ID_COL), h.alias("__h"), F.explode(subs).alias("s"))
         .select(
-            F.col(id_col),
+            F.col(_ID_COL),
             "__h",
             F.col("s.j").alias("__j"),
-            F.col("s.sub").alias(vec_col),
+            F.col("s.sub").alias(_VEC_COL),
         )
         .localCheckpoint(eager=True)
     )
@@ -251,15 +251,15 @@ def pq_train(
     # limit(k*m) collect yields all m seed sets (kmeans_train's per-sub
     # orderBy(__h, id).limit(k), sliced).
     seed_rows = (
-        cp.select("__j", vec_col, "__h", F.col(id_col))
-        .orderBy("__h", id_col, "__j")
+        cp.select("__j", _VEC_COL, "__h", F.col(_ID_COL))
+        .orderBy("__h", _ID_COL, "__j")
         .limit(k * m)
         .collect()
     )
     codebooks: list[list[list[float]]] = [[None] * k for _ in range(m)]  # type: ignore[list-item]
     per_j_seen = [0] * m
     for r in seed_rows:  # rows arrive (h, id, j)-sorted: k ids × m subspaces
-        codebooks[r["__j"]][per_j_seen[r["__j"]]] = list(r[vec_col])
+        codebooks[r["__j"]][per_j_seen[r["__j"]]] = list(r[_VEC_COL])
         per_j_seen[r["__j"]] += 1
     if min(per_j_seen) < k:  # fewer than k training rows: shorter codebooks,
         # same as kmeans_train's seeds-limit(k) on a small input
@@ -269,10 +269,10 @@ def pq_train(
     mean = F.round(F.avg("x"), 0).cast("long") if integer else F.avg("x")
     sse_histories: list[list[float]] = [[] for _ in range(m)]
     for _ in range(max_iter):
-        assigned = _pq_assign(cp, vec_col, codebooks, integer=integer)
+        assigned = _pq_assign(cp, _VEC_COL, codebooks, integer=integer)
         stats = (
             assigned.select(
-                "__j", "cluster", F.col("__d"), F.posexplode(vec_col).alias("pos", "x")
+                "__j", "cluster", F.col("__d"), F.posexplode(_VEC_COL).alias("pos", "x")
             )
             .groupBy("__j", "cluster", "pos")
             .agg(mean.alias("m"), F.sum("__d").alias("dsum"))
@@ -290,5 +290,5 @@ def pq_train(
             codebooks[r["__j"]][r.cluster] = [p.m for p in r.pm]
         for j in range(m):
             sse_histories[j].append(per_j_sse[j])
-    final = _pq_assign(cp, vec_col, codebooks, integer=integer).drop("__h")
+    final = _pq_assign(cp, _VEC_COL, codebooks, integer=integer).drop("__h")
     return final, codebooks, sse_histories

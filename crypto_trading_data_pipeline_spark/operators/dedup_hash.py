@@ -106,13 +106,14 @@ def sparksql_word_shingles(text_expr: str, k: int = 3) -> str:
     )
 
 
-def sparksql_minhash_signature(hs_expr: str = "hs") -> list[str]:
+def sparksql_minhash_signature() -> list[str]:
     """16 MinHash values (one per permutation, aliased m0..m15); NULL for
     empty shingle sets.
 
-    ``hs_expr`` must name a MATERIALIZED column of token hashes: passing
-    the hash expression itself would duplicate the md5 work into all 16
-    permutation expressions — a 16x slowdown measured at sf0.1.
+    They read the column ``hs``, which must be a MATERIALIZED column of
+    token hashes: reading the hash expression itself would duplicate the
+    md5 work into all 16 permutation expressions — a 16x slowdown measured
+    at sf0.1.
 
     Alternative considered and rejected: folding all 16 minima in one
     array traversal (16-wide accumulator via aggregate + zip_with/least).
@@ -122,7 +123,7 @@ def sparksql_minhash_signature(hs_expr: str = "hs") -> list[str]:
     passes stay simple codegen loops.
     """
     return [
-        f"array_min(transform({hs_expr}, h -> (({a} * h + {b}) % {MINHASH_P}))) AS m{i}"
+        f"array_min(transform(hs, h -> (({a} * h + {b}) % {MINHASH_P}))) AS m{i}"
         for i, (a, b) in enumerate(MINHASH_PERMS)
     ]
 
@@ -132,7 +133,7 @@ def sparksql_token_hash_list(toks_expr: str) -> str:
     return f"transform({toks_expr}, t -> {sparksql_token_hash('t')})"
 
 
-def sparksql_simhash(hs_col: str, bits: int = SIMHASH_BITS) -> str:
+def sparksql_simhash(hs_col: str) -> str:
     """SimHash over a materialized hash-array column: bit j of the result
     is the majority vote of bit j across all token hashes (ties -> 0).
     Row-local, no shuffle; like the MinHash signature, it needs the hash
@@ -140,7 +141,7 @@ def sparksql_simhash(hs_col: str, bits: int = SIMHASH_BITS) -> str:
     terms = " + ".join(
         f"(CASE WHEN size(filter({hs_col}, h -> (h & {1 << j}) != 0)) * 2 "
         f"> size({hs_col}) THEN {1 << j} ELSE 0 END)"
-        for j in range(bits)
+        for j in range(SIMHASH_BITS)
     )
     return f"(CAST(0 AS bigint) + {terms})"
 
@@ -197,10 +198,10 @@ def sql_token_hash_list(toks_expr: str) -> str:
     return f"list_transform({toks_expr}, t -> {th})"
 
 
-def sql_simhash_sum(hs_col: str, bits: int = SIMHASH_BITS) -> str:
+def sql_simhash_sum(hs_col: str) -> str:
     """Majority-vote bit sum over a precomputed hash-list column."""
     terms = []
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         ones = f"len(list_filter({hs_col}, h -> (h & {1 << j}) != 0))"
         terms.append(f"(CASE WHEN {ones} * 2 > len({hs_col}) THEN {1 << j} ELSE 0 END)")
     return " + ".join(terms)

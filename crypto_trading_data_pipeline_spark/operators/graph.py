@@ -36,18 +36,15 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    strict: bool = True,
 ) -> DataFrame:
     """(src, dst) edge list -> (node, component) where component is the
     smallest node id reachable from ``node``. Undirected; isolated nodes
     absent from ``edges`` are absent from the output (callers coalesce).
 
     Min-label propagation needs O(graph diameter) rounds, so a path longer
-    than ``max_iter`` cannot converge in time. ``strict=True`` (default)
-    raises rather than returning partially-propagated labels that callers
-    would mistake for exact components; ``strict=False`` returns the
-    best-effort labels (every node still maps to SOME member of its
-    component's prefix — useful as a seeding pass).
+    than ``max_iter`` cannot converge in time. It then raises rather than
+    returning partially-propagated labels that callers would mistake for
+    exact components.
 
     NOT a lazy plan constructor: the propagation loop runs Spark jobs
     (one convergence count per round) at CALL time, and intermediate
@@ -128,11 +125,11 @@ def connected_components(
         labels = stepped.select("node", "lbl")
         if changed == 0:
             break
-    if changed != 0 and strict:
+    if changed != 0:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
             f"({changed} labels still changing) — the graph diameter exceeds "
-            "max_iter; raise max_iter or use strict=False for best-effort labels"
+            "max_iter; use connected_components_star for long chains"
         )
     return labels.select("node", F.col("lbl").alias("component"))
 
@@ -174,7 +171,6 @@ def connected_components_star(
     *,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 40,
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
@@ -187,7 +183,8 @@ def connected_components_star(
     id), isolated nodes absent. Each round is two groupBy-min + join
     passes, lineage truncated with an eager localCheckpoint; convergence =
     the canonical edge set stops changing (one isEmpty() action on the
-    symmetric difference — the driver sees a single boolean per round)."""
+    symmetric difference — the driver sees a single boolean per round),
+    within 40 rounds or the call raises."""
     und = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionAll(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -209,7 +206,7 @@ def connected_components_star(
     # distincts per round, the after-plan one).
     cur = und.filter(F.col("a") > F.col("b"))
     cur_cnt = None  # unknown until the first round's count lands
-    for _ in range(max_iter):
+    for _ in range(40):
         # large-star works on the symmetric closure of the current set.
         sym = cur.unionAll(cur.select(F.col("b").alias("a"), F.col("a").alias("b")))
         ls = _large_star(sym)
@@ -241,7 +238,7 @@ def connected_components_star(
         cur, cur_cnt = nxt, nxt_cnt
     else:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds"
+            "connected_components_star did not converge in 40 rounds"
         )
     # Converged star forest: every edge is (child, root). Roots map to
     # themselves; nodes can appear as child of exactly one root.

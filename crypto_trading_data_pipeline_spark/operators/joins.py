@@ -37,18 +37,14 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     value_cols: list[str],
-    direction: str = "backward",
 ) -> DataFrame:
     """Point-in-time (as-of) left join.
 
     For each left row, attach ``value_cols`` from the right row with the
-    largest ``right_ts`` <= ``left_ts`` (direction='backward'; ties on the
+    largest ``right_ts`` <= ``left_ts`` (a backward as-of join; ties on the
     timestamp match, i.e. inclusive — same semantics as DuckDB/pandas ASOF)
     sharing the same key columns ``on``. Unmatched left rows keep NULLs.
     """
-    if direction != "backward":
-        raise NotImplementedError("only direction='backward' is implemented")
-
     carried = [f"__asof_{c}" for c in value_cols]
     l_tagged = left.withColumn(_TAG, F.lit(1)).withColumn(_TS, F.col(left_ts))
     for c, cc in zip(value_cols, carried):

@@ -272,11 +272,11 @@ def encode_raw_video(frames) -> bytes:
     return _VID_MAGIC + struct.pack("<HHH", w, h, n) + a.tobytes()
 
 
-def video_frame_sample(payload: pd.Series, stride: int = 2) -> pd.DataFrame:
+def video_frame_sample(payload: pd.Series) -> pd.DataFrame:
     """REAL frame-sampling video decoder for the raw container — pure numpy,
     runs in this sandbox (an ffmpeg/torchcodec decoder slots in behind the
     same signature). Parses the header, reshapes the pixel buffer to
-    (n, h, w, 3), keeps every ``stride``-th frame (the standard
+    (n, h, w, 3), keeps every 2nd frame (the standard
     keyframe-subsampling step before vision-model feature extraction), and
     emits per-video aggregates over the SAMPLED frames:
 
@@ -306,7 +306,7 @@ def video_frame_sample(payload: pd.Series, stride: int = 2) -> pd.DataFrame:
         px = np.frombuffer(
             b, dtype="uint8", offset=_VID_HEADER_BYTES, count=n * h * w * 3
         ).reshape(n, h, w, 3).astype("float64")
-        sampled = px[::stride]
+        sampled = px[::2]
         luma = (
             0.299 * sampled[..., 0]
             + 0.587 * sampled[..., 1]

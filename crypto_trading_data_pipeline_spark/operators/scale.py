@@ -62,7 +62,7 @@ def inline_literal(value) -> Column:
     return F.expr(render_sql_literal(value))
 
 
-def fan_out(df: DataFrame, factor: int = 1) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Repartition a CPU-bound narrow pipeline's input UP to cluster
     parallelism — only when the scan gives fewer splits than cores.
 
@@ -74,16 +74,13 @@ def fan_out(df: DataFrame, factor: int = 1) -> DataFrame:
     is a no-op (no shuffle added); on skinny inputs it buys a cores-fold
     speedup for a shuffle of the raw rows.
 
-    ``factor`` multiplies the target (use >1 when downstream work per row is
-    very uneven, so stragglers smooth out).
-
     The already-parallel probe uses ``inputFiles()`` (pure metadata), not
     ``df.rdd.getNumPartitions()`` — the latter forces a DataFrame->RDD plan
     conversion on every call. File count slightly undercounts splits for
     multi-row-group files, which only makes the check conservative: a scan
     wide enough to exceed core count by files alone never needed help.
     """
-    target = df.sparkSession.sparkContext.defaultParallelism * factor
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         n_files = len(df.inputFiles())
     except Exception:  # non-file source: assume skinny, let repartition decide
@@ -93,24 +90,24 @@ def fan_out(df: DataFrame, factor: int = 1) -> DataFrame:
     return df.repartition(target)
 
 
-def configured_shuffle_partitions(spark, *, floor: int = 16) -> int:
+def configured_shuffle_partitions(spark) -> int:
     """The CONFIGURED cluster width for explicit-count repartitions that
     must survive AQE coalescing (q_bootstrap_ci / q_entity_match): reads
     spark.sql.shuffle.partitions rather than plan-time defaultParallelism
     (which under-counts on a dynamic-allocation cluster that scales up
     after submission), falls back to defaultParallelism where the config
     is non-numeric (Databricks sets it to 'auto' under auto-optimized
-    shuffle), and floors so the spread stays meaningful when the config
-    is set low for tiny fixtures."""
+    shuffle), and floors at 16 so the spread stays meaningful when the
+    config is set low for tiny fixtures."""
     try:
         n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (ValueError, TypeError):
         n = int(spark.sparkContext.defaultParallelism)
-    return max(n, floor)
+    return max(n, 16)
 
 
-def with_salt(df: DataFrame, *, buckets: int, col_name: str = "__salt") -> DataFrame:
-    """Add a deterministic-per-row salt column in [0, buckets).
+def with_salt(df: DataFrame, *, buckets: int) -> DataFrame:
+    """Add a deterministic-per-row salt column ``__salt`` in [0, buckets).
 
     Use for hot-key aggregation: groupBy(key, salt) -> partial agg ->
     groupBy(key) -> final agg. Two small shuffles instead of one skewed one.
@@ -118,19 +115,20 @@ def with_salt(df: DataFrame, *, buckets: int, col_name: str = "__salt") -> DataF
     would break determinism under retries).
     """
     return df.withColumn(
-        col_name, F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(buckets))
+        "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(buckets))
     )
 
 
 def salted_group_sum(
-    df: DataFrame, *, keys: list[str], agg_cols: dict[str, str], buckets: int = 16
+    df: DataFrame, *, keys: list[str], agg_cols: dict[str, str]
 ) -> DataFrame:
-    """Two-phase salted sum/count aggregation for skewed keys.
+    """Two-phase salted sum/count aggregation for skewed keys, over 16 salt
+    buckets.
 
     agg_cols: {output_name: input_col} summed exactly (sums and counts
     re-aggregate losslessly; avg/min_by need their own decomposition).
     """
-    salted = with_salt(df, buckets=buckets)
+    salted = with_salt(df, buckets=16)
     partial = salted.groupBy(*keys, "__salt").agg(
         *[F.sum(src).alias(out) for out, src in agg_cols.items()],
         F.count(F.lit(1)).alias("__n"),
@@ -141,7 +139,11 @@ def salted_group_sum(
     )
 
 
-def zorder_key(x, y, *, bits: int = 8):
+#: Bits per dimension of a Z-order key.
+_ZORDER_BITS = 8
+
+
+def zorder_key(x, y):
     """Morton (Z-order) interleave of two bucketized dimensions — the
     multi-dimensional data-layout key: sorting/partitioning files by this
     key clusters rows so per-file min/max statistics on BOTH columns stay
@@ -149,14 +151,14 @@ def zorder_key(x, y, *, bits: int = 8):
     (Delta/Iceberg OPTIMIZE ZORDER semantics, expressed as plain integer
     arithmetic — no engine extension needed).
 
-    `x`, `y` must already be integer bucket ids in [0, 2^bits); the
+    `x`, `y` must already be integer bucket ids in [0, 2^8); the
     result interleaves x into the even bit positions and y into the odd
     ones. Pure row-local codegen'd bit math.
     """
     from pyspark.sql import functions as F
 
     z = F.lit(0).cast("bigint")
-    for b in range(bits):
+    for b in range(_ZORDER_BITS):
         z = z.bitwiseOR(
             F.shiftleft(F.shiftright(x.cast("bigint"), b).bitwiseAND(F.lit(1)), 2 * b)
         ).bitwiseOR(
@@ -165,11 +167,11 @@ def zorder_key(x, y, *, bits: int = 8):
     return z
 
 
-def zorder_key_sql(x: str, y: str, *, bits: int = 8) -> str:
+def zorder_key_sql(x: str, y: str) -> str:
     """DuckDB/ANSI twin of zorder_key — textually generated from the same
     bit layout so both engines compute the identical key."""
     terms = []
-    for b in range(bits):
+    for b in range(_ZORDER_BITS):
         terms.append(f"(((CAST({x} AS BIGINT) >> {b}) & 1) << {2 * b})")
         terms.append(f"(((CAST({y} AS BIGINT) >> {b}) & 1) << {2 * b + 1})")
     return " | ".join(terms)

@@ -40,12 +40,12 @@ def cosine_topk(
     id_col: str,
     vec_col: str,
     k: int,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
-    Returns (query_id, neighbor_id, sim, rnk). Ranking uses the ROUNDED
-    similarity with neighbor-id tie-break so results are reproducible.
+    Returns (query_id, neighbor_id, sim, rnk). Ranking uses the similarity
+    ROUNDED to 6 decimals, with a neighbor-id tie-break, so results are
+    reproducible.
     """
     # FLOP cost dominates the scan — spread the corpus across all cores even
     # when it arrives as one split (no-op when the scan is already parallel).
@@ -60,7 +60,7 @@ def cosine_topk(
         c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
         .withColumn(
             "sim",
-            F.round(dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), round_digits),
+            F.round(dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6),
         )
         .select("query_id", "neighbor_id", "sim")
     )
@@ -75,7 +75,6 @@ def cosine_topk_pandas(
     id_col: str,
     vec_col: str,
     k: int,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Arrow/NumPy variant of cosine_topk: queries are collected (they are
     top-k-small by construction), L2-normalized, broadcast as one matrix;
@@ -118,7 +117,7 @@ def cosine_topk_pandas(
                 {
                     "neighbor_id": np.repeat(pdf[id_col].values, len(ids)),
                     "query_id": np.tile(ids, n),
-                    "sim": np.round(S.ravel(), round_digits),
+                    "sim": np.round(S.ravel(), 6),
                 }
             )
             yield out[out.neighbor_id != out.query_id]

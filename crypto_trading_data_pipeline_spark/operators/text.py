@@ -10,8 +10,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def tokens(text: Column, sep: str = " ") -> Column:
-    return F.split(text, sep)
+def tokens(text: Column) -> Column:
+    return F.split(text, " ")
 
 
 def token_stats_cols(text: Column) -> list[Column]:

@@ -18,6 +18,9 @@ from .operators import dedup_hash
 from .operators.dedup import exact_dedup, normalize_text
 
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
+#: corpus_prep's chunk length and step, in tokens.
+_CHUNK_TOKENS = 32
+_CHUNK_STRIDE = 24
 
 
 def quality_score(text) -> "F.Column":
@@ -33,44 +36,37 @@ def quality_score(text) -> "F.Column":
     )
 
 
-def split_assign(id_col, *, train_pct: int = 90, val_pct: int = 5) -> "F.Column":
-    """Deterministic train/val/test tag by stable id-hash (q_split_assign)."""
+def split_assign(id_col) -> "F.Column":
+    """Deterministic 90/5/5 train/val/test tag by stable id-hash
+    (q_split_assign)."""
     h = dedup_hash.token_hash(id_col.cast("string")) % 100
     return (
-        F.when(h < train_pct, F.lit("train"))
-        .when(h < train_pct + val_pct, F.lit("val"))
+        F.when(h < 90, F.lit("train"))
+        .when(h < 95, F.lit("val"))
         .otherwise(F.lit("test"))
     )
 
 
-def corpus_prep(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_quality: float = 0.45,
-    chunk_tokens: int = 32,
-    stride: int = 24,
-    observation=None,
-) -> DataFrame:
+def corpus_prep(docs: DataFrame, *, observation=None) -> DataFrame:
     """documents -> deduplicated, split-tagged, overlapping token chunks.
 
+    Reads ``doc_id`` and ``text``; keeps documents of quality >= 0.45.
     Output: one row per chunk with (doc_id, split, quality, chunk_id,
     chunk_text, n_chunk_tokens). Stage order matters at scale: score+filter
     first (narrow, shrinks everything downstream), dedup second (the only
     shuffle), chunk last (explode AFTER dedup so duplicates are never
-    chunked). ``stride < chunk_tokens`` gives overlapping windows.
+    chunked). Chunks are 32 tokens every 24, so neighbours overlap by 8.
     """
-    scored = docs.withColumn("quality", quality_score(F.col(text_col)))
-    kept = scored.filter(F.col("quality") >= min_quality)
+    scored = docs.withColumn("quality", quality_score(F.col("text")))
+    kept = scored.filter(F.col("quality") >= 0.45)
 
     deduped = exact_dedup(
-        kept.withColumn("__norm", normalize_text(F.col(text_col))),
+        kept.withColumn("__norm", normalize_text(F.col("text"))),
         key_cols=["__norm"],
-        order_col=id_col,
+        order_col="doc_id",
     ).drop("__norm")
 
-    tagged = deduped.withColumn("split", split_assign(F.col(id_col)))
+    tagged = deduped.withColumn("split", split_assign(F.col("doc_id")))
     if observation is not None:
         # Pipeline instrumentation rides the job itself (df.observe):
         # per-run survivor count / mean quality / split distribution with
@@ -84,10 +80,10 @@ def corpus_prep(
             F.count(F.when(F.col("split") == "train", 1)).alias("n_train"),
         )
 
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     n_chunks = F.ceil(
-        F.greatest(F.size(toks) - F.lit(chunk_tokens - stride), F.lit(1))
-        / F.lit(float(stride))
+        F.greatest(F.size(toks) - F.lit(_CHUNK_TOKENS - _CHUNK_STRIDE), F.lit(1))
+        / F.lit(float(_CHUNK_STRIDE))
     )
     # explode_outer, not explode: plain explode makes Catalyst infer a
     # size(<chunk transform>) > 0 predicate and push the WHOLE chunking
@@ -99,17 +95,17 @@ def corpus_prep(
             F.sequence(F.lit(0), (n_chunks - 1).cast("int")),
             lambda i: F.struct(
                 i.alias("chunk_id"),
-                F.slice(toks, i * stride + 1, chunk_tokens).alias("toks"),
+                F.slice(toks, i * _CHUNK_STRIDE + 1, _CHUNK_TOKENS).alias("toks"),
             ),
         )
     )
     return tagged.select(
-        id_col,
+        "doc_id",
         "split",
         "quality",
         chunk.alias("c"),
     ).filter(F.col("c").isNotNull()).select(
-        id_col,
+        "doc_id",
         "split",
         "quality",
         F.col("c.chunk_id").alias("chunk_id"),

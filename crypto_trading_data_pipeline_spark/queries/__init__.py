@@ -295,7 +295,7 @@ def _changed_since_checked(checked: Iterable[str]) -> set[str]:
     return changed_since_checked(recorded, _fingerprints(), checked)
 
 
-def _compute_window(size: int = _WINDOW_SIZE) -> list[str]:
+def _compute_window() -> list[str]:
     latest, hash_checked = _driver_check_rounds()
     order = {n: i for i, n in enumerate(REGISTRY)}
     never = [n for n in REGISTRY if n not in latest]
@@ -326,13 +326,13 @@ def _compute_window(size: int = _WINDOW_SIZE) -> list[str]:
     # A never-checked twin of an aged rows-only pair lands in BOTH head
     # (via aged_pairs) and never; dedupe so the 50-slot window never
     # carries one name twice (r12 ADVICE — the duplicate would silently
-    # waste a slot after the [:size] truncation).
+    # waste a slot after the [:_WINDOW_SIZE] truncation).
     never = [n for n in never if n not in head]
     rest = sorted(
         (n for n in REGISTRY if n in latest and n not in head),
         key=lambda n: (latest[n], order[n]),
     )
-    return (head + never + rest)[:size]
+    return (head + never + rest)[:_WINDOW_SIZE]
 
 
 def _rotate_window(priority: list[str]) -> None:

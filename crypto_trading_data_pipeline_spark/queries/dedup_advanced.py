@@ -74,7 +74,7 @@ def _shingle_hashes(docs):
 def q_minhash_sig(spark: SparkSession, sf_dir: str):
     docs = read_table(spark, sf_dir, "documents")
     return _shingle_hashes(docs).selectExpr(
-        "doc_id", *dh.sparksql_minhash_signature("hs")
+        "doc_id", *dh.sparksql_minhash_signature()
     )
 
 
@@ -95,13 +95,14 @@ _LSH_BUCKET_CAP = 64
 _LSH_OBSERVE_SEQ = count()
 
 
-def _observe_bucket_cap(buckets, bucket_cap, observation, name_prefix):
+def _observe_bucket_cap(buckets, observation, name_prefix):
     """Shared cap-overflow observability: CollectMetrics counting buckets
-    whose uncapped membership (column ``all_ids``) exceeded ``bucket_cap``,
-    plus the max uncapped size. One contract for every capped bucket
-    structure (LSH pair buckets, the incremental corpus band index)."""
+    whose uncapped membership (column ``all_ids``) exceeded
+    ``_LSH_BUCKET_CAP``, plus the max uncapped size. One contract for every
+    capped bucket structure (LSH pair buckets, the incremental corpus band
+    index)."""
     metrics = [
-        F.sum((F.size("all_ids") > bucket_cap).cast("long")).alias("truncated_buckets"),
+        F.sum((F.size("all_ids") > _LSH_BUCKET_CAP).cast("long")).alias("truncated_buckets"),
         F.max(F.size("all_ids")).alias("max_bucket_size"),
     ]
     if observation is not None:
@@ -109,16 +110,14 @@ def _observe_bucket_cap(buckets, bucket_cap, observation, name_prefix):
     return buckets.observe(f"{name_prefix}_{next(_LSH_OBSERVE_SEQ)}", *metrics)
 
 
-def _lsh_candidate_pairs(
-    docs, bucket_cap: int = _LSH_BUCKET_CAP, observation=None, sig=None
-):
+def _lsh_candidate_pairs(docs, observation=None, sig=None):
     """Distinct (doc_a < doc_b) pairs sharing any LSH band bucket — the
     shared candidate-generation stage for q_lsh_pairs and q_neardup_dedup.
 
     Cap overflow is OBSERVABLE, not silent: a CollectMetrics node counts
-    buckets whose uncapped membership exceeded ``bucket_cap`` (and the max
-    uncapped bucket size), emitted to the Spark UI / QueryExecutionListener
-    on every action — zero extra passes, the stats ride the aggregate that
+    buckets whose uncapped membership exceeded ``_LSH_BUCKET_CAP`` (and the
+    max uncapped bucket size), emitted to the Spark UI /
+    QueryExecutionListener on every action — zero extra passes, the stats ride the aggregate that
     already built the bucket. Pass a ``pyspark.sql.Observation`` to read
     the metrics programmatically (tests do; production monitors listen).
     A non-zero truncated_buckets means real candidate pairs were dropped —
@@ -135,7 +134,7 @@ def _lsh_candidate_pairs(
     default is exactly this expression."""
     if sig is None:
         sig = _shingle_hashes(docs).selectExpr(
-            "doc_id", *dh.sparksql_minhash_signature("hs")
+            "doc_id", *dh.sparksql_minhash_signature()
         )
     bands = sig.selectExpr(
         "doc_id",
@@ -146,10 +145,10 @@ def _lsh_candidate_pairs(
     buckets = (
         bands.groupBy("band_id", "band_hash")
         .agg(F.sort_array(F.collect_set("doc_id")).alias("all_ids"))
-        .withColumn("ids", F.slice(F.col("all_ids"), 1, bucket_cap))
+        .withColumn("ids", F.slice(F.col("all_ids"), 1, _LSH_BUCKET_CAP))
         .filter(F.size("ids") >= 2)
     )
-    buckets = _observe_bucket_cap(buckets, bucket_cap, observation, "lsh_bucket_cap")
+    buckets = _observe_bucket_cap(buckets, observation, "lsh_bucket_cap")
     # ids is sorted, so pairing each element with everything after it emits
     # each unordered pair exactly once with doc_a < doc_b.
     return (
@@ -303,7 +302,7 @@ def q_lsh_pairs(spark: SparkSession, sf_dir: str):
 def q_lsh_bucket_stats(spark: SparkSession, sf_dir: str):
     docs = read_table(spark, sf_dir, "documents")
     sig = _shingle_hashes(docs).selectExpr(
-        "doc_id", *dh.sparksql_minhash_signature("hs")
+        "doc_id", *dh.sparksql_minhash_signature()
     )
     bands = sig.selectExpr(
         "doc_id",
@@ -435,32 +434,18 @@ def q_neardup_incremental(spark: SparkSession, sf_dir: str):
     return neardup_incremental(docs, cutoff=400)
 
 
-def neardup_incremental(
-    docs,
-    cutoff: int,
-    observation=None,
-    bucket_cap: int = _LSH_BUCKET_CAP,
-    strict: bool = False,
-):
+def neardup_incremental(docs, cutoff: int, observation=None):
     """Core of q_neardup_incremental, callable with an ``Observation``.
 
     The corpus side is materialized as a capped bucket INDEX — per
     (band_id, band_hash), the sorted corpus doc_ids sliced to
-    ``bucket_cap`` — which is both the skew bound (one hot band bucket
+    ``_LSH_BUCKET_CAP`` — which is both the skew bound (one hot band bucket
     cannot explode the batch join beyond |batch| x cap) and literally the
     table a production deployment persists between batches. Cap overflow
     is observable via the same CollectMetrics contract as
     _lsh_candidate_pairs: truncated_buckets > 0 means a batch doc may have
     been cleared against an over-cap bucket whose tail was dropped — the
-    fix is upstream exact dedup, not a bigger cap.
-
-    ``strict=True`` turns the per-doc ``screened_truncated`` flag into a
-    hard gate: the capped index is checked EAGERLY and the call raises
-    ``ValueError`` if any bucket overflowed, so a pipeline that must not
-    emit potential false-keeps fails at build time instead of shipping
-    flagged rows. Costs one extra index-build job up front (bounded: the
-    index is |bands| x |buckets| rows, never the corpus; a production
-    deployment persists it between batches and pays this once)."""
+    fix is upstream exact dedup, not a bigger cap."""
     # NO signature checkpoint (r14, VERDICT r13 #1): the r13 eager
     # localCheckpoint here was the round's one A/B-confirmed regression
     # (+19%, head 3.04 s vs baseline 2.57 s, SCALE_AB_R13FINAL.json) —
@@ -476,7 +461,7 @@ def neardup_incremental(
     # the corpus index is PERSISTED between batches (see docstring) —
     # the in-job share was never the scale story.
     sig = _shingle_hashes(docs).selectExpr(
-        "doc_id", *dh.sparksql_minhash_signature("hs")
+        "doc_id", *dh.sparksql_minhash_signature()
     )
     bands = sig.selectExpr(
         "doc_id",
@@ -491,29 +476,10 @@ def neardup_incremental(
         bands.filter(F.col("doc_id") < cutoff)
         .groupBy("band_id", "band_hash")
         .agg(F.sort_array(F.collect_set("doc_id")).alias("all_ids"))
-        .withColumn("ids", F.slice(F.col("all_ids"), 1, bucket_cap))
-        .withColumn("trunc", (F.size("all_ids") > bucket_cap).cast("int"))
+        .withColumn("ids", F.slice(F.col("all_ids"), 1, _LSH_BUCKET_CAP))
+        .withColumn("trunc", (F.size("all_ids") > _LSH_BUCKET_CAP).cast("int"))
     )
-    corpus_index = _observe_bucket_cap(
-        corpus_index, bucket_cap, observation, "neardup_incr_bucket_cap"
-    )
-    if strict:
-        # Eager gate, not a plan node: CollectMetrics only surfaces after
-        # an action, so strictness has to spend one bounded index job here.
-        overflow = (
-            corpus_index.filter(F.col("trunc") == 1)
-            .select(F.count(F.lit(1)).alias("n"), F.max(F.size("all_ids")).alias("mx"))
-            .first()
-        )
-        if overflow["n"]:
-            raise ValueError(
-                f"neardup_incremental(strict=True): {overflow['n']} corpus band "
-                f"bucket(s) exceed bucket_cap={bucket_cap} (largest holds "
-                f"{overflow['mx']} docs) — batch docs cleared against their "
-                "dropped tails could be silent false-keeps. Run exact dedup "
-                "on the corpus first (q_dedup_incremental), or screen with "
-                "strict=False and quarantine rows with screened_truncated=1."
-            )
+    corpus_index = _observe_bucket_cap(corpus_index, observation, "neardup_incr_bucket_cap")
     # shuffle_hash hint: metrics inside a broadcast stage come back EMPTY
     # (see semdedup_flags), and AQE would broadcast the index exactly in
     # small/benign regimes — silencing the truncation alarm when it is
@@ -873,8 +839,8 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str):
     return _ivf_topk(_ivf_assign(n))
 
 
-def _ivf_topk(assign, k: int = 3):
-    """Top-k in-cluster neighbors for the probe queries (vec_id < 5) —
+def _ivf_topk(assign):
+    """Top-3 in-cluster neighbors for the probe queries (vec_id < 5) —
     ONE ranking definition (cosine rounded 6dp desc, vec_id tie-break)
     shared by the index query (q_ann_ivf) and its recall audit
     (q_ann_recall_eval). The audit is only meaningful if it ranks exactly
@@ -895,7 +861,7 @@ def _ivf_topk(assign, k: int = 3):
         )
         .withColumn("sim", sim)
         .withColumn("rnk", F.row_number().over(wr))
-        .filter(F.col("rnk") <= k)
+        .filter(F.col("rnk") <= 3)
         .select("query_id", F.col("vec_id").alias("neighbor_id"), "sim", "rnk")
     )
 
@@ -2100,16 +2066,16 @@ def q_lang_id(spark: SparkSession, sf_dir: str):
     )
 
 
-def _srp_planes(n_planes: int = 8, dim: int = 64) -> list[list[int]]:
-    """Deterministic ternary hyperplanes for signed-random-projection LSH
-    (fixed LCG; values in {-1, 0, +1}). One source of truth feeds both the
+def _srp_planes() -> list[list[int]]:
+    """8 deterministic ternary 64-dim hyperplanes for signed-random-projection
+    LSH (fixed LCG; values in {-1, 0, +1}). One source of truth feeds both the
     Spark columns and the DuckDB oracle literals, so the two engines bucket
     identically. Ternary keeps the projection a plain +/- sum of vector
     components — cheap and sparse (about 2/3 of terms drop out)."""
     x, planes = 1_234_567, []
-    for _ in range(n_planes):
+    for _ in range(8):
         row = []
-        for _ in range(dim):
+        for _ in range(64):
             x = (1_103_515_245 * x + 12_345) % (1 << 31)
             row.append((x >> 16) % 3 - 1)
         planes.append(row)
@@ -2444,7 +2410,7 @@ def q_minhash_est_jaccard(spark: SparkSession, sf_dir: str):
     # materialization job (r13 ADVICE #2 contract note).
     sig = (
         _shingle_hashes(docs)
-        .selectExpr("doc_id", *dh.sparksql_minhash_signature("hs"))
+        .selectExpr("doc_id", *dh.sparksql_minhash_signature())
         .localCheckpoint(eager=True)
     )
     cand = _lsh_candidate_pairs(docs, sig=sig)

@@ -1503,7 +1503,7 @@ def q_bpe_pair_counts(spark: SparkSession, sf_dir: str):
 _BPE_MERGES = 3
 
 
-def _bpe_merges_oracle(n_merges: int = _BPE_MERGES, emit: str = "merges") -> str:
+def _bpe_merges_oracle(emit: str = "merges") -> str:
     """DuckDB twin of q_bpe_merges as generated CTEs (the q_pagerank
     trick for iterative algorithms). The greedy left-to-right
     non-overlapping merge is expressed relationally via gaps-and-islands
@@ -1545,8 +1545,8 @@ def _bpe_merges_oracle(n_merges: int = _BPE_MERGES, emit: str = "merges") -> str
       WHERE w <> ''
       GROUP BY w
     )"""
-    apply_rounds = n_merges if emit in ("tokens", "fertility") else n_merges - 1
-    for r in range(n_merges):
+    apply_rounds = _BPE_MERGES if emit in ("tokens", "fertility") else _BPE_MERGES - 1
+    for r in range(_BPE_MERGES):
         sql += f""", p{r} AS MATERIALIZED (
       SELECT syms[i] AS p1, syms[i + 1] AS p2, CAST(sum(wc) AS BIGINT) AS cnt
       FROM (SELECT wc, syms, unnest(range(1, len(syms))) AS i
@@ -1585,7 +1585,7 @@ def _bpe_merges_oracle(n_merges: int = _BPE_MERGES, emit: str = "merges") -> str
             sql
             + f"""
     SELECT s AS token, CAST(sum(wc) AS BIGINT) AS cnt
-    FROM (SELECT wc, unnest(syms) AS s FROM v{n_merges})
+    FROM (SELECT wc, unnest(syms) AS s FROM v{_BPE_MERGES})
     GROUP BY 1 ORDER BY cnt DESC, token LIMIT 20
     """
         )
@@ -1598,13 +1598,13 @@ def _bpe_merges_oracle(n_merges: int = _BPE_MERGES, emit: str = "merges") -> str
            CAST(sum(wl.wc * len(v.syms)) AS BIGINT) AS n_tokens,
            CAST(sum(wl.wc * len(v.syms)) * 1000000 // sum(wl.wc) AS BIGINT)
              AS fertility_ppm
-    FROM wl JOIN v{n_merges} v ON wl.w = v.w
+    FROM wl JOIN v{_BPE_MERGES} v ON wl.w = v.w
     GROUP BY wl.lang
     """
         )
     parts = " UNION ALL ".join(
         f"SELECT {r + 1} AS merge_rank, p1, p2, p1 || p2 AS merged, cnt FROM t{r}"
-        for r in range(n_merges)
+        for r in range(_BPE_MERGES)
     )
     return (
         sql
@@ -3074,7 +3074,7 @@ def q_video_frames(spark: SparkSession, sf_dir: str):
                 for i in range(n):
                     frames[i, :, :, 0] = (d * 7 + i * 11) % 256
                 vids.append(encode_raw_video(frames))
-            feats = video_frame_sample(pd.Series(vids), stride=2)
+            feats = video_frame_sample(pd.Series(vids))
             out = pd.DataFrame({"media_id": ids.to_numpy()})
             for c in feats.columns:
                 out[c] = feats[c].to_numpy()

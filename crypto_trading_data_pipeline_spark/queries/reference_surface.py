@@ -48,7 +48,6 @@ def q_ohlcv_1min(spark: SparkSession, sf_dir: str):
         key_col="event_type",
         price_col="value",
         qty_col=None,
-        window_duration="1 minute",
         round_digits=4,
     )
 
@@ -331,9 +330,9 @@ def q_candle_rollup_5min(spark: SparkSession, sf_dir: str):
     events = read_table(spark, sf_dir, "events")
     c1 = ohlcv(
         events, ts_col="ts", key_col="event_type", price_col="value",
-        qty_col=None, window_duration="1 minute", round_digits=4,
+        qty_col=None, round_digits=4,
     )
-    return rollup_candles(c1, window_duration="5 minutes", round_digits=4)
+    return rollup_candles(c1, round_digits=4)
 
 
 @query(
@@ -388,7 +387,7 @@ def q_candle_gap_fill(spark: SparkSession, sf_dir: str):
     events = read_table(spark, sf_dir, "events")
     c1 = ohlcv(
         events, ts_col="ts", key_col="event_type", price_col="value",
-        qty_col=None, window_duration="1 minute",
+        qty_col=None,
     ).select(
         "symbol",
         F.col("window_start").cast("timestamp").alias("window_start"),

@@ -697,7 +697,7 @@ def q_group_sum_salted(spark: SparkSession, sf_dir: str):
     from ..operators.scale import salted_group_sum
 
     e = read_table(spark, sf_dir, "events").select("event_type", "value")
-    out = salted_group_sum(e, keys=["event_type"], agg_cols={"total": "value"}, buckets=16)
+    out = salted_group_sum(e, keys=["event_type"], agg_cols={"total": "value"})
     return out.select("event_type", F.round("total", 2).alias("total"), "n")
 
 
@@ -2445,7 +2445,7 @@ from ..operators.scale import zorder_key_sql as _zorder_key_sql  # noqa: E402
              CAST(l_suppkey % 256 AS BIGINT) AS sx
       FROM lineitem
     ), z AS (
-      SELECT px, sx, ({_zorder_key_sql("px", "sx", bits=8)}) AS zval FROM b
+      SELECT px, sx, ({_zorder_key_sql("px", "sx")}) AS zval FROM b
     )
     SELECT CAST(zval >> 8 AS BIGINT) AS file_id,
            count(*)                  AS n,
@@ -2474,7 +2474,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str):
         (F.col("l_partkey") % 256).cast("bigint").alias("px"),
         (F.col("l_suppkey") % 256).cast("bigint").alias("sx"),
     )
-    z = b.withColumn("zval", zorder_key(F.col("px"), F.col("sx"), bits=8))
+    z = b.withColumn("zval", zorder_key(F.col("px"), F.col("sx")))
     return (
         z.select(F.shiftright("zval", 8).cast("bigint").alias("file_id"), "px", "sx")
         .groupBy("file_id")
@@ -4502,18 +4502,16 @@ def q_label_propagation(spark: SparkSession, sf_dir: str):
 #: k-core threshold and the number of unrolled peeling rounds. The output
 #: contract is "the graph after R peeling rounds at k" — deterministic by
 #: construction; on the fixture graphs 4 rounds reach the fixpoint
-#: (asserted by the rounds-vs-rounds+1 DuckDB test in
-#: tests/test_properties.py; the random-graph replica there checks the
-#: R-round contract itself), and production runs loop until a round
-#: removes nothing, checkpointing per round.
+#: (asserted by a DuckDB test in tests/test_properties.py: every node the
+#: oracle keeps has degree >= k, so one more round would remove nothing;
+#: the random-graph replica there checks the R-round contract itself), and
+#: production runs loop until a round removes nothing, checkpointing per
+#: round.
 _KCORE_K = 3
 _KCORE_ROUNDS = 4
 
 
-def _kcore_oracle(rounds: int = _KCORE_ROUNDS) -> str:
-    # `rounds` parametrized so tests/test_properties.py can re-run the
-    # identical CTE program with rounds+1 and assert the fixture graphs
-    # reached their peeling fixpoint by round _KCORE_ROUNDS.
+def _kcore_oracle() -> str:
     cte = f"""
     WITH pe AS (
       SELECT DISTINCT l1.l_suppkey AS a, l2.l_suppkey AS b
@@ -4523,7 +4521,7 @@ def _kcore_oracle(rounds: int = _KCORE_ROUNDS) -> str:
     ), e0 AS (
       SELECT a AS src, b AS dst FROM pe UNION ALL SELECT b AS src, a AS dst FROM pe
     )"""
-    for i in range(1, rounds + 1):
+    for i in range(1, _KCORE_ROUNDS + 1):
         cte += f""", d{i} AS (
       SELECT src AS node, count(*) AS d FROM e{i - 1} GROUP BY 1
     ), a{i} AS (
@@ -4535,7 +4533,7 @@ def _kcore_oracle(rounds: int = _KCORE_ROUNDS) -> str:
     )"""
     return cte + f"""
     SELECT src AS node, CAST(count(*) AS BIGINT) AS core_deg
-    FROM e{rounds} GROUP BY src
+    FROM e{_KCORE_ROUNDS} GROUP BY src
     """
 
 

@@ -125,7 +125,6 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
 def get_spark(
     app_name: str = "crypto-trading-data-pipeline-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
@@ -141,8 +140,6 @@ def get_spark(
     builder = builder.master(master)
     for k, v in STARTUP_CONF.items():
         builder = builder.config(k, v)
-    if shuffle_partitions is not None:
-        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     for k, v in RUNTIME_CONF.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -21,33 +21,17 @@ from .schemas import MONEY, TRADE_SCHEMA
 
 
 def kafka_source_options(
-    *,
-    topic: str,
-    brokers: str,
-    starting_offsets: str = "latest",
-    fail_on_data_loss: bool | None = None,
-    max_offsets_per_trigger: int | None = None,
+    *, topic: str, brokers: str, starting_offsets: str = "latest"
 ) -> dict[str, str]:
     """The exact Kafka source option map the reference builds
     (processor.py:54-60: bootstrap servers, subscribe, startingOffsets) —
     assembled as a pure function so the mapping is testable without a
-    broker or the connector JAR on the classpath.
-
-    ``fail_on_data_loss=False`` tolerates aged-out offsets on restart (the
-    retention-vs-checkpoint race every long-lived consumer hits);
-    ``max_offsets_per_trigger`` bounds a catch-up batch so recovery after
-    downtime doesn't produce one giant micro-batch.
-    """
-    opts = {
+    broker or the connector JAR on the classpath."""
+    return {
         "kafka.bootstrap.servers": brokers,
         "subscribe": topic,
         "startingOffsets": starting_offsets,
     }
-    if fail_on_data_loss is not None:
-        opts["failOnDataLoss"] = "true" if fail_on_data_loss else "false"
-    if max_offsets_per_trigger is not None:
-        opts["maxOffsetsPerTrigger"] = str(max_offsets_per_trigger)
-    return opts
 
 
 def kafka_stream(
@@ -56,25 +40,24 @@ def kafka_stream(
     topic: str,
     brokers: str,
     starting_offsets: str = "latest",
-    **extra,
 ) -> DataFrame:
     """Streaming Kafka source (reference processor.py:54-60). Requires the
     spark-sql-kafka connector JARs on the classpath (shipped via spark-submit
     --jars in production, as the reference's submit DAG does)."""
     opts = kafka_source_options(
-        topic=topic, brokers=brokers, starting_offsets=starting_offsets, **extra
+        topic=topic, brokers=brokers, starting_offsets=starting_offsets
     )
     return spark.readStream.format("kafka").options(**opts).load()
 
 
-def parse_trades(raw: DataFrame, *, value_col: str = "value") -> DataFrame:
-    """Kafka value bytes -> typed trade rows.
+def parse_trades(raw: DataFrame) -> DataFrame:
+    """Kafka ``value`` bytes -> typed trade rows.
 
     Works identically on batch and streaming DataFrames; malformed JSON
     yields NULL structs (PERMISSIVE), dropped by the trade_id filter.
     """
     parsed = (
-        raw.select(F.col(value_col).cast("string").alias("json_str"))
+        raw.select(F.col("value").cast("string").alias("json_str"))
         .select(F.from_json("json_str", TRADE_SCHEMA).alias("data"))
         .select("data.*")
     )

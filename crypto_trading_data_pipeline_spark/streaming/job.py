@@ -52,29 +52,16 @@ _FS_CHECKPOINT_MANAGER = (
 _INIT_TIMEOUT_MS = 60_000
 
 
-def candle_stream(
-    trades: DataFrame,
-    *,
-    ts_col: str = "trade_time",
-    key_col: str = "symbol",
-    price_col: str = "price",
-    qty_col: str | None = "quantity",
-    window_duration: str = "1 minute",
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """Watermarked streaming OHLCV aggregate (reference processor.py:77-101).
+def candle_stream(trades: DataFrame) -> DataFrame:
+    """Watermarked streaming OHLCV aggregate (reference processor.py:77-101):
+    1-minute candles per symbol over ``trade_time``, ``price`` and
+    ``quantity``, under a 2-minute watermark (processor.py:78).
 
-    Rows later than ``watermark`` are dropped; in-window candles keep
-    updating until the watermark passes window end.
+    Trades behind the watermark (the latest trade time seen, less 2
+    minutes) are dropped; in-window candles keep updating until the
+    watermark passes window end.
     """
-    return ohlcv(
-        trades.withWatermark(ts_col, watermark),
-        ts_col=ts_col,
-        key_col=key_col,
-        price_col=price_col,
-        qty_col=qty_col,
-        window_duration=window_duration,
-    )
+    return ohlcv(trades.withWatermark("trade_time", "2 minutes"))
 
 
 def start_candle_query(
@@ -84,7 +71,6 @@ def start_candle_query(
     checkpoint_dir: str,
     trigger_seconds: int | None = 60,
     available_now: bool = False,
-    query_name: str = "candles_1min",
 ) -> StreamingQuery:
     """Start the update-mode foreachBatch query (reference processor.py:103-109).
 
@@ -98,7 +84,7 @@ def start_candle_query(
         candles.writeStream.outputMode("update")
         .foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
+        .queryName("candles_1min")
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

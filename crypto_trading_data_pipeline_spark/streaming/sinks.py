@@ -113,7 +113,11 @@ class ParquetUpsertSink:
     base by rename (Spark writes its parts to a staging directory beside
     the table, and each part is renamed in), then deletes the files it
     covered. A crash at any step leaves the merged read as it was; the
-    next fold covers and deletes what is left over.
+    next fold covers and deletes what is left over. The fold trigger
+    counts only the newest base epoch's parts as the base, so an older
+    base's leftover parts count as rows to fold and bring that fold on.
+    A crash mid-rename leaves a partial newest base, which only brings
+    the fold on sooner; nothing was removed yet.
     """
 
     def __init__(self, path: str, *, keys: list[str], order_col: str):
@@ -172,14 +176,16 @@ class ParquetUpsertSink:
 
     def _fold(self, spark, epoch: int) -> None:
         """Merge the base and the deltas older than ``epoch`` into a new
-        base once the deltas hold as many rows as the base."""
+        base once the other files hold as many rows as the base, the newest
+        base epoch's parts (an older base's are a crashed fold's leftovers)."""
         import pyarrow.parquet as pq
 
         folded = [f for f in self._files() if f.kind == "base" or f.epoch < epoch]
         counts = {f: pq.read_metadata(f.path).num_rows for f in folded}
-        base = sum(n for f, n in counts.items() if f.kind == "base")
-        deltas = sum(n for f, n in counts.items() if f.kind == "delta")
-        if not deltas or deltas < base:
+        newest = max((f.epoch for f in folded if f.kind == "base"), default=-1)
+        base = sum(n for f, n in counts.items() if f.kind == "base" and f.epoch == newest)
+        rest = sum(counts.values()) - base
+        if not rest or rest < base:
             return
         rows = self._reader(spark).parquet(*(f.path for f in folded))
         merged = merge_last_wins(None, rows, keys=self.keys, order_col=self.order_col)

@@ -6,9 +6,11 @@ the monitor DAG's freshness gate as the post-launch health check).
 Kept deliberately thin and side-effect-injected: the argv builder is a
 pure function, and the retry loop takes the process runner / sleeper /
 health probe as callables, so the whole orchestration path is unit-tested
-without a cluster. In production the defaults shell out to spark-submit
-and the health check is ``monitor.freshness_ok`` against the serving
-table.
+without a cluster. In production the defaults shell out to spark-submit.
+The CLI's ``submit`` command passes no health check, so a launch counts as
+healthy when spark-submit exits 0; ``monitor.freshness_ok`` against the
+serving table becomes the check once a ``stream`` pipeline command wires
+it in.
 """
 
 from __future__ import annotations
@@ -25,25 +27,13 @@ def build_spark_submit(
     master: str,
     name: str,
     jars: Sequence[str] = (),
-    packages: Sequence[str] = (),
-    py_files: Sequence[str] = (),
-    conf: dict[str, str] | None = None,
-    deploy_mode: str | None = None,
     app_args: Sequence[str] = (),
 ) -> list[str]:
     """Assemble the spark-submit argv (reference submit DAG command shape:
     spark-submit --master <url> --jars <csv> --name <app> <file>)."""
     cmd = ["spark-submit", "--master", master, "--name", name]
-    if deploy_mode is not None:
-        cmd += ["--deploy-mode", deploy_mode]
     if jars:
         cmd += ["--jars", ",".join(jars)]
-    if packages:
-        cmd += ["--packages", ",".join(packages)]
-    if py_files:
-        cmd += ["--py-files", ",".join(py_files)]
-    for k, v in sorted((conf or {}).items()):
-        cmd += ["--conf", f"{k}={v}"]
     cmd.append(app)
     cmd += list(app_args)
     return cmd
@@ -64,8 +54,6 @@ def submit_with_retry(
     cmd: Sequence[str],
     *,
     retries: int = 3,
-    backoff_s: float = 5.0,
-    max_backoff_s: float = 60.0,
     health_check: Callable[[], bool] | None = None,
     runner: Callable[[Sequence[str]], int] | None = None,
     sleep: Callable[[float], None] = time.sleep,
@@ -75,8 +63,8 @@ def submit_with_retry(
     A launch counts as successful only when the process exits 0 AND the
     health probe passes (the reference splits these across two DAGs —
     submit + freshness monitor; here one call owns the whole contract).
-    Backoff doubles per attempt and caps at ``max_backoff_s``, the same
-    5s->60s envelope as the reference producer's reconnect loop
+    Backoff starts at 5 s, doubles per attempt and caps at 60 s, the same
+    envelope as the reference producer's reconnect loop
     (producer/producer.py:115).
     """
     runner = runner or (lambda c: subprocess.call(list(c)))
@@ -90,5 +78,5 @@ def submit_with_retry(
                 return SubmitOutcome(attempts=attempts, returncode=0, healthy=True)
             rc = 0  # launched but unhealthy: retry like a failure
         if attempt < retries:
-            sleep(min(backoff_s * (2**attempt), max_backoff_s))
+            sleep(min(5.0 * 2**attempt, 60.0))
     return SubmitOutcome(attempts=attempts, returncode=rc, healthy=False)

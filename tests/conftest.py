@@ -17,7 +17,8 @@ SF_SMALL = f"{TESTDATA}/{os.environ.get('SPARK_GRAFT_TEST_SF', 'sf0.001')}"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="ctdp-spark-tests", shuffle_partitions=8)
+    s = get_spark(app_name="ctdp-spark-tests")
+    s.conf.set("spark.sql.shuffle.partitions", "8")
     yield s
 
 

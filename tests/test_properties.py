@@ -64,7 +64,7 @@ def test_minhash_matches_python_mirror(spark, texts):
     got = {
         r.doc_id: [r[m] for m in sig]
         for r in df.selectExpr("doc_id", f"{hs} AS hs")
-        .selectExpr("doc_id", *dh.sparksql_minhash_signature("hs"))
+        .selectExpr("doc_id", *dh.sparksql_minhash_signature())
         .collect()
     }
     con = duckdb.connect()
@@ -127,7 +127,10 @@ def test_ohlcv_invariants(spark, recs):
 def test_candle_rollup_matches_direct(spark, recs):
     """Hypertable-rollup invariant: 5-min candles built FROM 1-min candles
     must equal 5-min candles built directly from trades (OHLC and counts
-    exactly; summed measures up to per-tier rounding)."""
+    exactly; summed measures up to per-tier rounding). The direct side is
+    ohlcv's aggregate over a 5-minute window, written out here."""
+    from pyspark.sql import functions as F
+
     from crypto_trading_data_pipeline_spark.operators.candles import rollup_candles
 
     base = datetime(2024, 3, 1, tzinfo=timezone.utc)
@@ -136,15 +139,20 @@ def test_candle_rollup_matches_direct(spark, recs):
         for s, off, p, q in recs
     ]
     df = spark.createDataFrame(rows, ["symbol", "trade_time", "price", "quantity"])
-    direct = {
-        (c.symbol, c.window_start): c
-        for c in ohlcv(df, window_duration="5 minutes", round_digits=4).collect()
-    }
+    ts, price, qty = F.col("trade_time"), F.col("price"), F.col("quantity")
+    direct_df = df.groupBy(F.window(ts, "5 minutes").alias("w"), "symbol").agg(
+        F.min_by(price, ts).alias("open_price"),
+        F.max(price).alias("high_price"),
+        F.min(price).alias("low_price"),
+        F.max_by(price, ts).alias("close_price"),
+        F.round(F.sum(qty), 4).alias("total_volume"),
+        F.round(F.sum(price * qty), 4).alias("total_value"),
+        F.count(F.lit(1)).alias("n_trades"),
+    ).withColumn("window_start", F.col("w.start").cast("timestamp_ntz"))
+    direct = {(c.symbol, c.window_start): c for c in direct_df.collect()}
     rolled = {
         (c.symbol, c.window_start): c
-        for c in rollup_candles(
-            ohlcv(df, window_duration="1 minute", round_digits=4), round_digits=4
-        ).collect()
+        for c in rollup_candles(ohlcv(df, round_digits=4), round_digits=4).collect()
     }
     assert set(direct) == set(rolled)
     for key, d in direct.items():
@@ -2464,13 +2472,14 @@ def test_kcore_matches_bruteforce(spark, edges):
 def test_kcore_fixture_reaches_fixpoint(sf_dir):
     """The q_kcore output contract is 'the graph after R peeling rounds';
     this pins the documented stronger claim that R=4 rounds ALREADY reach
-    the peeling fixpoint on the fixture graphs, by running the identical
-    generated-CTE program with one extra round in DuckDB and asserting
-    nothing changes. Pure DuckDB — no Spark job."""
+    the peeling fixpoint on the fixture graphs. The oracle's ``core_deg``
+    is each kept node's degree in the round-R graph, so when every one is
+    at least k, one more round keeps every node and changes nothing. Pure
+    DuckDB — no Spark job."""
     import duckdb
 
     from crypto_trading_data_pipeline_spark.queries.relational import (
-        _KCORE_ROUNDS,
+        _KCORE_K,
         _kcore_oracle,
     )
 
@@ -2479,9 +2488,8 @@ def test_kcore_fixture_reaches_fixpoint(sf_dir):
         "CREATE VIEW lineitem AS SELECT * FROM "
         f"read_parquet('{sf_dir}/lineitem.parquet')"
     )
-    at_r = sorted(con.execute(_kcore_oracle()).fetchall())
-    at_r1 = sorted(con.execute(_kcore_oracle(_KCORE_ROUNDS + 1)).fetchall())
-    assert at_r and at_r == at_r1
+    at_r = con.execute(_kcore_oracle()).fetchall()
+    assert at_r and all(deg >= _KCORE_K for _node, deg in at_r)
 
 
 @settings(max_examples=3, deadline=None)

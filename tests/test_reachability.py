@@ -1,14 +1,18 @@
-"""Every package module, and every top-level name in it, is reached from a
-program entry point, or is named here with the reason it stays. Code only
-tests reach is code no pipeline, bench or script runs; it has to earn a
-line in ``UNREACHED`` or ``UNREACHED_NAMES``.
+"""Every package module, every top-level name in it and every defaulted
+parameter of its functions is reached from a program entry point, or is
+named here with the reason it stays. Code only tests reach is code no
+pipeline, bench or script runs; it has to earn a line in ``UNREACHED``,
+``UNREACHED_NAMES`` or ``KEPT_OPTIONS``.
 
-Both walks are static. The module walk follows every ``import`` statement
-(at any depth in a file, so function-level imports count) from the entry
-points into the package, and importing ``a.b.c`` reaches ``a`` and ``a.b``
-too. The name walk collects identifiers and follows them by bare name into
-the bodies of the top-level package defs they name; see
-``test_package_names_are_reached_from_an_entry_point``.
+All three walks are static. The module walk follows every ``import``
+statement (at any depth in a file, so function-level imports count) from
+the entry points into the package, and importing ``a.b.c`` reaches ``a``
+and ``a.b`` too. The name walk collects identifiers and follows them by
+bare name into the bodies of the top-level package defs they name; see
+``test_package_names_are_reached_from_an_entry_point``. The option walk
+matches every call in an entry point or the package to the functions of
+its bare name and asks which defaulted parameters it passes a value other
+than the default; see ``test_package_options_are_reached_from_an_entry_point``.
 """
 
 from __future__ import annotations
@@ -44,6 +48,35 @@ UNREACHED_NAMES = {
         "the Postgres upsert, reference spark_processor/processor.py:116-172 and init.sql"
     ),
     "monitor.freshness_ok": "the freshness check, reference crypto_pipeline_monitor_dag.py:22-28",
+}
+
+#: Defaulted package parameters that no call site passes a value other than
+#: the default, each kept on purpose. A reason is one of two kinds: a
+#: deployment setting (an address, a path, a credential or a class name) or
+#: a test seam (a test substitutes a fake, reads a safety counter or drives
+#: an error path through it).
+KEPT_OPTIONS = {
+    "operators.graph.connected_components(max_iter)": (
+        "test seam: a short budget drives the non-convergence RuntimeError"
+    ),
+    "operators.multimodal.extract_image_features(decoder)": (
+        "test seam: tests swap in the PIL and raw-RGB decoders and a fake"
+    ),
+    "pipelines.corpus_prep(observation)": (
+        "test seam: tests read the survivor and split counts through an Observation"
+    ),
+    "queries.dedup_advanced._lsh_candidate_pairs(observation)": (
+        "test seam: tests read the bucket-cap truncation counter through an Observation"
+    ),
+    "queries.dedup_advanced.neardup_incremental(observation)": (
+        "test seam: tests read the bucket-cap truncation counter through an Observation"
+    ),
+    "queries.dedup_advanced.semdedup_flags(observation)": (
+        "test seam: tests read the cluster-skew counters through an Observation"
+    ),
+    "submit.submit_with_retry(health_check)": "test seam: tests substitute a fake probe",
+    "submit.submit_with_retry(runner)": "test seam: tests substitute a fake spark-submit",
+    "submit.submit_with_retry(sleep)": "test seam: tests record the backoff instead of sleeping",
 }
 
 
@@ -149,21 +182,20 @@ def _reach(defs: dict[str, list[ast.stmt]], by_bare: dict[str, set[str]],
     return reached
 
 
-def test_package_names_are_reached_from_an_entry_point():
-    """Roots: the whole of each entry point, and in every reached package
-    module the statements that bind no name plus the ``@query`` functions,
-    because importing the module runs the first and ``REGISTRY`` the second.
-    ``import`` statements inside the package are bindings, not uses, so an
-    unused import keeps nothing alive; an ``as`` alias is followed back to
-    the name it binds."""
+def _package() -> tuple[dict[str, ast.Module], dict[str, list[ast.stmt]],
+                        dict[str, set[str]], list[ast.AST]]:
+    """The walk both name-level gates share: every package module parsed
+    once, its top-level defs by qualified and by bare name (an ``as`` alias
+    stands for the name it binds), and the name walk's roots."""
     modules, reached_mods = _reached_modules()
+    trees = {mod: ast.parse(path.read_text()) for mod, path in modules.items()}
     defs: dict[str, list[ast.stmt]] = {}
     by_bare: dict[str, set[str]] = {}
     aliases: list[tuple[str, str]] = []
     roots: list[ast.AST] = [ast.parse(p.read_text()) for p in ENTRY_POINTS]
-    for mod, path in modules.items():
+    for mod, tree in trees.items():
         short = mod.removeprefix(PKG).lstrip(".")
-        for stmt in ast.parse(path.read_text()).body:
+        for stmt in tree.body:
             names = _bound_names(stmt)
             for name in names:
                 qual = f"{short}.{name}" if short else name
@@ -177,7 +209,17 @@ def test_package_names_are_reached_from_an_entry_point():
                 roots.append(stmt)
     for asname, name in aliases:
         by_bare.setdefault(asname, set()).update(by_bare.get(name, ()))
+    return trees, defs, by_bare, roots
 
+
+def test_package_names_are_reached_from_an_entry_point():
+    """Roots: the whole of each entry point, and in every reached package
+    module the statements that bind no name plus the ``@query`` functions,
+    because importing the module runs the first and ``REGISTRY`` the second.
+    ``import`` statements inside the package are bindings, not uses, so an
+    unused import keeps nothing alive; an ``as`` alias is followed back to
+    the name it binds."""
+    _, defs, by_bare, roots = _package()
     reached = _reach(defs, by_bare, roots)
     kept = [stmt for q in UNREACHED_NAMES for stmt in defs.get(q, [])]
     helpers = _reach(defs, by_bare, roots + kept) - reached - set(UNREACHED_NAMES)
@@ -188,3 +230,97 @@ def test_package_names_are_reached_from_an_entry_point():
     )
     for name, reason in UNREACHED_NAMES.items():
         assert re.search(r"\w\.\w+:\d+", reason), f"{name}: reason names no reference file:line"
+
+
+def _options(tree: ast.Module, short: str, exempt: set[int]):
+    """``(key, bare name, fn, skip, param, default)`` for every defaulted
+    parameter of every function or method in ``tree``, nested ones too.
+    ``bare`` is the name a call spells: the class name for ``__init__``.
+    ``skip`` is 1 where a call binds ``self`` or ``cls`` implicitly."""
+    def walk(body, prefix, cls):
+        for stmt in body:
+            if isinstance(stmt, ast.ClassDef):
+                yield from walk(stmt.body, f"{prefix}{stmt.name}.", stmt.name)
+            elif isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield stmt, prefix, cls
+                yield from walk(stmt.body, f"{prefix}{stmt.name}.", None)
+            else:
+                for field in ("body", "orelse", "finalbody", "handlers"):
+                    yield from walk(getattr(stmt, field, []), prefix, cls)
+
+    for fn, prefix, cls in walk(tree.body, "", None):
+        if id(fn) in exempt:
+            continue
+        bare = cls if cls and fn.name == "__init__" else fn.name
+        static = any(getattr(d, "id", None) == "staticmethod" for d in fn.decorator_list)
+        skip = int(bool(cls) and not static)
+        a = fn.args
+        positional = a.posonlyargs + a.args
+        pairs = list(zip(positional[len(positional) - len(a.defaults):], a.defaults))
+        pairs += [(p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+        for p, d in pairs:
+            yield f"{short}.{prefix}{fn.name}({p.arg})", bare, fn, skip, p, d
+
+
+def _passes(call: ast.Call, fn: ast.FunctionDef, skip: int, p: ast.arg,
+            default: ast.expr) -> bool:
+    """Whether ``call`` may pass ``p`` a value spelled unlike its default."""
+    differs = lambda v: ast.unparse(v) != ast.unparse(default)  # noqa: E731
+    for kw in call.keywords:
+        if kw.arg is None or (kw.arg == p.arg and differs(kw.value)):
+            return True
+    positional = fn.args.posonlyargs + fn.args.args
+    if p not in positional:
+        return False
+    i = positional.index(p) - skip
+    for j, arg in enumerate(call.args[: i + 1]):
+        if isinstance(arg, ast.Starred):
+            return True
+        if j == i:
+            return differs(arg)
+    return False
+
+
+def test_package_options_are_reached_from_an_entry_point():
+    """A defaulted parameter of a package function or method is reached when
+    a call site in an entry point or in the package passes it, by keyword or
+    by position, a value whose source text differs from the default's.
+    Calls match by bare name, through the name walk's ``as`` aliases; a
+    class name stands for its ``__init__``; a ``*args`` or ``**kwargs`` at a
+    call site reaches every parameter it could carry. The
+    ``UNREACHED_NAMES`` roots are the reference's own runtime, so their
+    parameters are exempt. Every other unreached parameter is one value in
+    use: inline it, or keep it in ``KEPT_OPTIONS`` as a deployment setting
+    or a test seam."""
+    trees, defs, by_bare, _ = _package()
+    exempt = {id(n) for q in UNREACHED_NAMES for s in defs.get(q, []) for n in ast.walk(s)}
+    options: dict[str, list] = {}
+    for mod, tree in trees.items():
+        for key, bare, *rest in _options(tree, mod.removeprefix(PKG).lstrip("."), exempt):
+            options.setdefault(bare, []).append((key, *rest))
+    # The def names a call name may stand for: its own, or the one an ``as``
+    # alias binds.
+    spelled = {bare: {bare} for bare in options}
+    for bare, quals in by_bare.items():
+        for qual in quals:
+            name = qual.rpartition(".")[2]
+            if name != bare and name in options:
+                spelled.setdefault(bare, set()).add(name)
+    sites = [*trees.values(), *(ast.parse(p.read_text()) for p in ENTRY_POINTS)]
+    reached: set[str] = set()
+    for site in sites:
+        for call in ast.walk(site):
+            if not isinstance(call, ast.Call):
+                continue
+            name = getattr(call.func, "id", None) or getattr(call.func, "attr", None)
+            for bare in spelled.get(name, ()):
+                for key, fn, skip, p, default in options[bare]:
+                    if key not in reached and _passes(call, fn, skip, p, default):
+                        reached.add(key)
+    unreached = {key for opts in options.values() for key, *_ in opts} - reached
+    assert unreached == set(KEPT_OPTIONS), (
+        f"one value in use, not kept: {sorted(unreached - set(KEPT_OPTIONS))}; "
+        f"kept, but reached or gone: {sorted(set(KEPT_OPTIONS) - unreached)}"
+    )
+    for key, reason in KEPT_OPTIONS.items():
+        assert reason.startswith(("deployment setting: ", "test seam: ")), key

@@ -24,7 +24,6 @@ def test_salted_group_sum_matches_plain(spark, sf_dir):
             e.select("event_type", "value"),
             keys=["event_type"],
             agg_cols={"total": "value"},
-            buckets=8,
         ).collect()
     }
     assert plain == salted
@@ -282,9 +281,10 @@ def test_semdedup_cluster_skew_is_observable(spark):
 def test_neardup_incremental_bucket_cap_observable(spark):
     """Same contract as the LSH pair cap, on the incremental screen: a hot
     corpus band bucket is sliced to the cap and the truncation is a metric,
-    not a silent drop. 100 identical corpus docs + 5 batch copies with a
-    cap of 8 -> all 4 band buckets truncated, and every batch doc still
-    matches (the kept 8 lowest-id corpus docs verify at Jaccard 1.0)."""
+    not a silent drop. 100 identical corpus docs + 5 batch copies against
+    the cap of 64 -> all 4 band buckets truncated, and every batch doc
+    still matches (the kept 64 lowest-id corpus docs verify at Jaccard
+    1.0)."""
     from pyspark.sql import Observation
 
     from crypto_trading_data_pipeline_spark.queries.dedup_advanced import (
@@ -296,7 +296,7 @@ def test_neardup_incremental_bucket_cap_observable(spark):
         F.lit("the same exact document body repeated verbatim").alias("text"),
     )
     obs = Observation("neardup_incr_hot")
-    out = neardup_incremental(docs, cutoff=100, observation=obs, bucket_cap=8)
+    out = neardup_incremental(docs, cutoff=100, observation=obs)
     rows = {r.doc_id: r for r in out.collect()}
     m = obs.get
     assert m["truncated_buckets"] == 4, m  # all 4 bands hold the one hot bucket
@@ -304,40 +304,6 @@ def test_neardup_incremental_bucket_cap_observable(spark):
     assert set(rows) == {100, 101, 102, 103, 104}
     for r in rows.values():
         assert r.keep == 0 and r.match_id == 0 and r.jac == 1.0, r
-
-
-def test_neardup_incremental_strict_mode(spark):
-    """strict=True escalates bucket-cap overflow from a per-doc flag to a
-    build-time ValueError; with no overflow, strict and default modes
-    return identical rows (the gate must not change clean-path results)."""
-    import pytest as _pytest
-
-    from crypto_trading_data_pipeline_spark.queries.dedup_advanced import (
-        neardup_incremental,
-    )
-
-    hot = spark.range(105).select(
-        F.col("id").alias("doc_id"),
-        F.lit("the same exact document body repeated verbatim").alias("text"),
-    )
-    with _pytest.raises(ValueError, match="strict=True.*bucket_cap=8"):
-        neardup_incremental(hot, cutoff=100, bucket_cap=8, strict=True)
-
-    clean = spark.range(12).select(
-        F.col("id").alias("doc_id"),
-        F.concat(
-            F.lit("unique words for document number "),
-            F.col("id").cast("string"),
-            F.lit(" padded with distinct trailing token t"),
-            F.col("id").cast("string"),
-        ).alias("text"),
-    )
-    strict_rows = sorted(
-        neardup_incremental(clean, cutoff=10, bucket_cap=8, strict=True).collect()
-    )
-    default_rows = sorted(neardup_incremental(clean, cutoff=10, bucket_cap=8).collect())
-    assert strict_rows == default_rows
-    assert all(r.screened_truncated == 0 for r in strict_rows)
 
 
 def test_zorder_key_bit_layout(spark):
@@ -351,7 +317,7 @@ def test_zorder_key_bit_layout(spark):
 
     rows = [(x, y) for x in range(16) for y in range(16)]
     df = spark.createDataFrame(rows, ["x", "y"])
-    z = df.select("x", "y", zorder_key(F.col("x"), F.col("y"), bits=4).alias("z"))
+    z = df.select("x", "y", zorder_key(F.col("x"), F.col("y")).alias("z"))
     got = {(r.x, r.y): r.z for r in z.collect()}
     # Hand-computed Morton codes.
     assert got[(0, 0)] == 0

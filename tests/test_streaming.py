@@ -96,7 +96,7 @@ def test_streaming_candles_end_to_end(spark, tmp_path):
     _write_batch(str(indir), TRADES_1, "batch1.json")
 
     trades = parse_trades(file_json_stream(spark, str(indir)))
-    candles = candle_stream(trades, watermark="2 minutes", window_duration="1 minute")
+    candles = candle_stream(trades)
     sink = ParquetUpsertSink(sink_path, keys=["symbol", "window_start"], order_col="n_trades")
     q = start_candle_query(candles, sink=sink, checkpoint_dir=ckpt, trigger_seconds=None)
     try:
@@ -118,7 +118,7 @@ def test_streaming_candles_end_to_end(spark, tmp_path):
     batch_df = spark.createDataFrame([(t,) for t in TRADES_1 + TRADES_2[:2]], ["value"])
     expected = {
         (r.symbol, r.window_start): r
-        for r in ohlcv(parse_trades(batch_df), window_duration="1 minute").collect()
+        for r in ohlcv(parse_trades(batch_df)).collect()
     }
     assert set(final) == set(expected)
     for key, row in expected.items():
@@ -384,9 +384,12 @@ CRASH_EXIT = 17
 #: The cycle the job dies in or after, at every point: its data epoch folds.
 CRASH_CYCLE = 2
 #: Where the job dies: in the sink after its delta's rename, in the sink
-#: before that rename, after a settled cycle and before the next lands, or
-#: in a fold after its first base part is renamed in.
-CRASH_POINTS = ("after_commit", "before_rename", "between_triggers", "mid_fold")
+#: before that rename, after a settled cycle and before the next lands, in
+#: a fold after its first base part is renamed in, or in a fold after its
+#: first covered file is removed.
+CRASH_POINTS = (
+    "after_commit", "before_rename", "between_triggers", "mid_fold", "after_remove"
+)
 
 
 def _crash_child(work: str, point: str, crash: bool) -> None:
@@ -405,19 +408,24 @@ def _crash_child(work: str, point: str, crash: bool) -> None:
       next cycle lands;
     - ``mid_fold``: ``os.rename`` dies once it has moved that cycle's
       first ``base-*`` part into the table, before the fold removes any
-      file it covered.
+      file it covered;
+    - ``after_remove``: ``os.remove`` dies once it has removed the first
+      file that cycle's fold covered, leaving the others beside the new
+      base.
     Without ``crash`` it resumes from the checkpoint (Spark re-delivers an
     uncommitted epoch), records the table's files, then lands the
     remaining cycles. Every settled cycle's freshness count and the hidden
     files in the table then go to JSON files, as do the hidden files
-    ``before_rename`` leaves and the table's files ``mid_fold`` leaves."""
+    ``before_rename`` leaves and the table's files ``mid_fold`` and
+    ``after_remove`` leave."""
     sys.path.insert(0, os.path.join(REPO, "perfbench"))
     from stream import _now_ms, make_feed
 
     from crypto_trading_data_pipeline_spark.monitor import fresh_row_count
     from crypto_trading_data_pipeline_spark.session import get_spark
 
-    spark = get_spark(app_name="candle-crash", master="local[2]", shuffle_partitions=4)
+    spark = get_spark(app_name="candle-crash", master="local[2]")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
     spark.sparkContext.setLogLevel("ERROR")
     jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
     feed = make_feed(CRASH_SEED, CRASH_CYCLES, per_cycle=CRASH_TRADES)
@@ -472,6 +480,17 @@ def _crash_child(work: str, point: str, crash: bool) -> None:
                 die()
 
         os.rename = rename_then_die
+
+    if crash and point == "after_remove":
+        remove = os.remove
+
+        def remove_then_die(path):
+            remove(path)
+            if cycle[0] == CRASH_CYCLE and re.match(r"(base|delta)-", os.path.basename(path)):
+                dump("files-at-crash", sorted(os.listdir(table)))
+                die()
+
+        os.remove = remove_then_die
 
     def land(c):
         name = f"trades-{c:05d}.json"
@@ -561,11 +580,15 @@ def test_candle_job_survives_a_crash(spark, tmp_path, crash_replay, point):
         assert load("redelivered") == load("committed")
     if point == "before_rename":
         assert load("hidden-at-crash")
-    if point == "mid_fold":  # the new base is in, and a delta it covers too
+    if point in ("mid_fold", "after_remove"):
         names = load("files-at-crash")
         at_crash = [m for f in names if (m := re.match(r"(base|delta)-(\d+)", f))]
         top = max(int(m[2]) for m in at_crash if m[1] == "base")
-        assert [m for m in at_crash if m[1] == "delta" and int(m[2]) <= top]
+        covered = [m for m in at_crash if m[1] == "delta" and int(m[2]) <= top]
+        if point == "mid_fold":  # the new base is in, and a delta it covers too
+            assert covered, names
+        else:  # the new base is in, beside an older base or a delta it covers
+            assert covered or [m for m in at_crash if m[1] == "base" and int(m[2]) < top], names
     for phase in ("crash", "resume"):
         assert not any(load(f"hidden-{phase}").values()), load(f"hidden-{phase}")
     want, expected = crash_replay
