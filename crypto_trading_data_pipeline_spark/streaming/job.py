@@ -16,7 +16,20 @@ Scale posture (100 TB/day firehose):
   provider (``spark.sql.streaming.stateStore.providerClass``) would move
   per-executor state off-heap; on the benchmark's candle stream it was no
   faster, so nothing sets it;
-- watermark bounds state: 2 min lateness x |symbols| x 1-min windows;
+- one trigger per micro-batch: the query starts with no-data
+  micro-batches off (``spark.sql.streaming.noDataMicroBatches.enabled``).
+  In update mode the watermark only evicts state and never changes the
+  output, so no trigger runs only to evict: eviction runs at the start of
+  the next data batch;
+- late rows are filtered by the batch's own watermark: the query starts
+  with ``spark.sql.streaming.statefulOperator.allowMultiple`` off, which
+  is possible because it has one stateful operator only. With it on,
+  Spark filters late rows by the previous batch's watermark, which only
+  a no-data batch in between brings up to date. A resumed query takes
+  the watermark from the commit log;
+- watermark bounds state: 2 min lateness plus one trigger, x |symbols|
+  x 1-min windows, since a closed window waits for the next data batch
+  to be evicted;
 - the agg is partial+final, so the shuffle carries one row per
   (symbol, window) per input partition per trigger;
 - the update-mode output per trigger is at most the state rows, so the
@@ -48,6 +61,12 @@ _CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
 _FS_CHECKPOINT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 )
+#: What the candle query starts with on its own session, whatever the
+#: checkpoint's scheme (see "Scale posture").
+_QUERY_CONF = {
+    "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+    "spark.sql.streaming.statefulOperator.allowMultiple": "false",
+}
 #: How long a start waits for the query to build its sources.
 _INIT_TIMEOUT_MS = 60_000
 
@@ -76,9 +95,12 @@ def start_candle_query(
 
     ``trigger_seconds=None`` -> ASAP micro-batches (test mode with
     processAllAvailable); ``available_now=True`` -> drain-and-stop.
-    A ``file:`` checkpoint is written through Spark's FileSystem-based
-    checkpoint manager (see "Scale posture"); the session's conf reads as
-    before once this returns.
+    The query runs one trigger per micro-batch, holds lateness plus one
+    trigger of windows in state, and filters late rows by the batch's own
+    watermark, which needs its one stateful operator; a ``file:``
+    checkpoint is written through Spark's FileSystem-based checkpoint
+    manager (see "Scale posture"). These are set on the query's own
+    session: the caller's session conf reads as before once this returns.
     """
     writer = (
         candles.writeStream.outputMode("update")
@@ -91,24 +113,27 @@ def start_candle_query(
     elif trigger_seconds is not None:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     spark = candles.sparkSession
+    confs = dict(_QUERY_CONF)
     manager = checkpoint_manager(spark, checkpoint_dir)
-    if manager is None:
-        return writer.start()
+    if manager is not None:
+        confs[_CHECKPOINT_MANAGER_CONF] = manager
     # The query runs on a clone of the session taken inside start(), so
-    # the setting stays with this query once the session's is restored.
+    # the settings stay with this query once the session's are restored.
     # The file source builds its log from the session itself, on the
     # query's thread, so the restore waits for the query's initialization.
-    before = spark.conf.get(_CHECKPOINT_MANAGER_CONF, None)
-    spark.conf.set(_CHECKPOINT_MANAGER_CONF, manager)
+    before = {key: spark.conf.get(key, None) for key in confs}
+    for key, value in confs.items():
+        spark.conf.set(key, value)
     try:
         query = writer.start()
         query._jsq.streamingQuery().awaitInitialization(_INIT_TIMEOUT_MS)
         return query
     finally:
-        if before is None:
-            spark.conf.unset(_CHECKPOINT_MANAGER_CONF)
-        else:
-            spark.conf.set(_CHECKPOINT_MANAGER_CONF, before)
+        for key, value in before.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 def checkpoint_manager(spark, checkpoint_dir: str) -> str | None:

@@ -31,6 +31,8 @@ MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
 FS_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 )
+NO_DATA_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
+ALLOW_MULTIPLE_CONF = "spark.sql.streaming.statefulOperator.allowMultiple"
 
 
 def trade(tid, symbol, price, qty, offset_s):
@@ -296,17 +298,113 @@ def test_candle_query_resumes_from_checkpoint(spark, tmp_path):
     assert sorted(map(tuple, sink.read(spark).collect())) == expected
 
 
+def _executed(q):
+    """Progress entries of the triggers that ran a batch (an idle poll
+    reports no ``addBatch``)."""
+    return [p for p in q.recentProgress if "addBatch" in p["durationMs"]]
+
+
+def test_candle_query_runs_one_trigger_per_file(spark, tmp_path):
+    """Each landed file costs the candle query one trigger: no no-data
+    batch runs between files, and a window the watermark has passed is
+    evicted by the next data batch instead. File 2 moves the max event
+    time to 22:18:20, so batch 3 runs with watermark 22:16:20 and evicts
+    the windows of file 1, which end at 22:14 and 22:15."""
+    indir = tmp_path / "in"
+    indir.mkdir()
+    files = [TRADES_1, [trade(8, "BTCUSDT", "42010.00", "0.2", 300)],
+             [trade(9, "ETHUSDT", "2205.00", "1.0", 310)]]
+    q = start_candle_query(
+        candle_stream(parse_trades(file_json_stream(spark, str(indir)))),
+        sink=lambda df, _epoch: df.collect(),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        trigger_seconds=None,
+    )
+    try:
+        for i, lines in enumerate(files):
+            _write_batch(str(indir), lines, f"b{i}.json")
+            q.processAllAvailable()
+        executed = _executed(q)
+    finally:
+        q.stop()
+    assert [p["numInputRows"] for p in executed] == [4, 1, 1]
+    assert sum(p["stateOperators"][0]["numRowsRemoved"] for p in executed) > 0
+
+
+@pytest.mark.parametrize("restart", [False, True], ids=["in_process", "restart"])
+def test_candle_query_drops_late_rows_by_the_batch_watermark(spark, tmp_path, restart):
+    """Batch A brings the max event time to T = 22:18:20, so batch B runs
+    with watermark T - 2 min = 22:16:20. B's trades in the 22:13 and 22:14
+    windows end after the watermark A ran with (none yet) but at or
+    before B's, so B drops them, in one query and after a clean stop and
+    restart between A and B (the watermark comes back from the commit
+    log). The table equals batch ``ohlcv`` over the trades the perfbench
+    replay keeps, and the query's watermark drops equal the replay's."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.syspath_prepend(os.path.join(REPO, "perfbench"))
+        from stream import replay
+
+    batch_a = [
+        trade(1, "BTCUSDT", "42000.10", "0.5", 0),
+        trade(2, "ETHUSDT", "2200.50", "2.0", 20),
+        trade(3, "BTCUSDT", "42001.00", "0.25", 300),
+    ]
+    batch_b = [
+        trade(4, "BTCUSDT", "41000.00", "7.0", 30),   # 22:13 window, late
+        trade(5, "ETHUSDT", "2100.00", "5.0", 70),    # 22:14 window, late
+        trade(6, "BTCUSDT", "42002.00", "0.1", 290),  # 22:18 window, on time
+        trade(7, "ETHUSDT", "2201.00", "3.0", 250),   # 22:17 window, on time
+    ]
+    kept, dropped = replay([[json.loads(t) for t in b] for b in (batch_a, batch_b)])
+    assert dropped == [0, 2]
+
+    indir = tmp_path / "in"
+    indir.mkdir()
+    sink = ParquetUpsertSink(
+        str(tmp_path / "candles_table"), keys=["symbol", "window_start"], order_col="n_trades"
+    )
+
+    def start():
+        return start_candle_query(
+            candle_stream(parse_trades(file_json_stream(spark, str(indir)))),
+            sink=sink, checkpoint_dir=str(tmp_path / "ckpt"), trigger_seconds=None,
+        )
+
+    executed = []
+    q = start()
+    try:
+        _write_batch(str(indir), batch_a, "a.json")
+        q.processAllAvailable()
+        if restart:
+            executed += _executed(q)
+            q.stop()
+            q = start()
+        _write_batch(str(indir), batch_b, "b.json")
+        q.processAllAvailable()
+        executed += _executed(q)
+    finally:
+        q.stop()
+
+    assert sum(p["stateOperators"][0]["numRowsDroppedByWatermark"] for p in executed) == sum(dropped)
+    on_time = spark.createDataFrame([(json.dumps(r),) for b in kept for r in b], ["value"])
+    expected = sorted(map(tuple, ohlcv(parse_trades(on_time)).collect()))
+    assert sorted(map(tuple, sink.read(spark).collect())) == expected
+
+
 @pytest.mark.parametrize(
-    "preset", [None, FS_MANAGER.replace("FileSystem", "FileContext")], ids=["unset", "set"]
+    "preset",
+    [{}, {MANAGER_CONF: FS_MANAGER.replace("FileSystem", "FileContext"), NO_DATA_CONF: "true"}],
+    ids=["unset", "set"],
 )
 def test_checkpoint_manager_is_scoped_to_the_query(spark, tmp_path, preset):
     """A local checkpoint runs its query under Spark's FileSystem-based
-    checkpoint manager, set on the query's own session only: once
+    checkpoint manager, with no-data micro-batches off and one stateful
+    operator's watermark, all set on the query's own session only: once
     ``start_candle_query`` returns, the session's conf reads exactly what
-    it read before, set or unset. Only a ``file`` scheme switches; a
-    scheme-less path is qualified through ``fs.defaultFS``."""
-    if preset is not None:
-        spark.conf.set(MANAGER_CONF, preset)
+    it read before, set or unset. Only a ``file`` scheme switches the
+    manager; a scheme-less path is qualified through ``fs.defaultFS``."""
+    for key, value in preset.items():
+        spark.conf.set(key, value)
     try:
         before = spark.conf.getAll
         indir = tmp_path / "in"
@@ -321,15 +419,18 @@ def test_checkpoint_manager_is_scoped_to_the_query(spark, tmp_path, preset):
         )
         try:
             assert spark.conf.getAll == before
-            stream_session = q._jsq.streamingQuery().sparkSessionForStream()
-            assert stream_session.conf().get(MANAGER_CONF) == FS_MANAGER
+            stream_conf = q._jsq.streamingQuery().sparkSessionForStream().conf()
+            assert stream_conf.get(MANAGER_CONF) == FS_MANAGER
+            assert stream_conf.get(NO_DATA_CONF) == "false"
+            assert stream_conf.get(ALLOW_MULTIPLE_CONF) == "false"
             q.processAllAvailable()
         finally:
             q.stop()
         assert len(rows) == 3
         assert spark.conf.getAll == before
     finally:
-        spark.conf.unset(MANAGER_CONF)
+        for key in preset:
+            spark.conf.unset(key)
 
     assert checkpoint_manager(spark, "/x") == FS_MANAGER
     assert checkpoint_manager(spark, "file:/x") == FS_MANAGER
