@@ -496,9 +496,7 @@ def warm_up(spark, sf_dir: str, first_query: str | None) -> None:
         media = attach_media(
             tiny, id_col="id", bytes_col="b", kind="image", mime="image/fake"
         )
-        extract_image_features(media, parallelism=8).write.mode(
-            "overwrite"
-        ).format("noop").save()
+        extract_image_features(media).write.mode("overwrite").format("noop").save()
     except Exception:  # noqa: BLE001 — warm-up must never kill the bench
         pass
     if first_query:

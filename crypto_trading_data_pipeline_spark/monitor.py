@@ -16,15 +16,14 @@ from datetime import datetime, timezone
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+#: The serving table's timestamp and the staleness horizon, as in the
+#: reference's check (crypto_pipeline_monitor_dag.py:26).
+_TS_COL = "window_start"
+_MAX_STALENESS = "3 minutes"
 
-def fresh_row_count(
-    df: DataFrame,
-    *,
-    ts_col: str = "window_start",
-    max_staleness: str = "3 minutes",
-    now: datetime | Column | None = None,
-) -> int:
-    """Rows with ``ts_col`` within the staleness horizon.
+
+def fresh_row_count(df: DataFrame, *, now: datetime | None = None) -> int:
+    """Rows with ``window_start`` within 3 minutes of ``now``.
 
     ``now`` defaults to the cluster clock (current_timestamp); pass a fixed
     datetime for deterministic tests/backfills.
@@ -32,7 +31,7 @@ def fresh_row_count(
     anchor: Column
     if now is None:
         anchor = F.current_timestamp()
-    elif isinstance(now, datetime):
+    else:
         # Aware datetimes must be normalized to UTC before the cast: the
         # string literal is reinterpreted in the session timezone (pinned
         # UTC), so a non-UTC tzinfo would silently shift the cutoff by the
@@ -41,19 +40,11 @@ def fresh_row_count(
         if now.tzinfo is not None:
             now = now.astimezone(timezone.utc).replace(tzinfo=None)
         anchor = F.lit(now.isoformat(sep=" ", timespec="microseconds")).cast("timestamp")
-    else:
-        anchor = now
-    cutoff = anchor - F.expr(f"INTERVAL {max_staleness}")
-    return df.filter(F.col(ts_col) >= cutoff).count()
+    cutoff = anchor - F.expr(f"INTERVAL {_MAX_STALENESS}")
+    return df.filter(F.col(_TS_COL) >= cutoff).count()
 
 
-def freshness_ok(
-    df: DataFrame,
-    *,
-    ts_col: str = "window_start",
-    max_staleness: str = "3 minutes",
-    now: datetime | Column | None = None,
-) -> bool:
+def freshness_ok(df: DataFrame, *, now: datetime | None = None) -> bool:
     """True when at least one row is fresh — the reference's check
     semantics (first cell of the COUNT must be truthy)."""
-    return fresh_row_count(df, ts_col=ts_col, max_staleness=max_staleness, now=now) > 0
+    return fresh_row_count(df, now=now) > 0

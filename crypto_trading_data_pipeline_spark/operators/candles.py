@@ -78,7 +78,7 @@ def ohlcv(
     )
 
 
-def rollup_candles(candles: DataFrame, *, round_digits: int | None = None) -> DataFrame:
+def rollup_candles(candles: DataFrame) -> DataFrame:
     """Re-aggregate fine candles into 5-minute ones WITHOUT touching raw
     trades — the hypertable-rollup pattern (1-min candles are ~10^3-10^5x
     smaller than the trade stream, so a day of rollups reads megabytes,
@@ -88,11 +88,9 @@ def rollup_candles(candles: DataFrame, *, round_digits: int | None = None) -> Da
     (min_by on window_start), close = close of the latest, high/low = max/
     min, volume/value/trades = sums; vwap recomputes from the summed
     numerator/denominator (averaging sub-window vwaps would be wrong).
+    The summed volume and value round to 4 places, so both engines hold
+    the identical doubles the vwap divides.
     """
-
-    def _r(c: Column) -> Column:
-        return F.round(c, round_digits) if round_digits is not None else c
-
     w = F.window(F.col("window_start"), "5 minutes")
     agg = (
         candles.groupBy(w.alias("w"), "symbol")
@@ -101,8 +99,8 @@ def rollup_candles(candles: DataFrame, *, round_digits: int | None = None) -> Da
             F.max("high_price").alias("high_price"),
             F.min("low_price").alias("low_price"),
             F.max_by("close_price", F.col("window_start")).alias("close_price"),
-            _r(F.sum("total_volume")).alias("total_volume"),
-            _r(F.sum("total_value")).alias("total_value"),
+            F.round(F.sum("total_volume"), 4).alias("total_volume"),
+            F.round(F.sum("total_value"), 4).alias("total_value"),
             F.sum("n_trades").alias("n_trades"),
         )
         .withColumn("vwap", F.col("total_value") / F.col("total_volume"))

@@ -14,16 +14,20 @@ as a driver-coordinated loop over fully distributed steps:
 - the driver only ever holds the k×dim centroid matrix and the SSE scalar
   (the convergence signal) — never data rows.
 
-Determinism: seeds are the k vectors with the smallest portable id-hash
-(ties by id), every argmin tie-breaks toward the lowest centroid index,
-and coordinate means are averaged in Spark's pairwise-merge order — so
-re-runs produce identical clusters (the property random-init k-means
-lacks, and the one that matters for reproducible index builds).
+Determinism: coordinates are snapped to BIGINT microunits up front, so
+distances are integer sums of squares and centroid updates half-up-rounded
+integer means; seeds are the k vectors with the smallest portable id-hash
+(ties by id), and every argmin tie-breaks toward the lowest centroid
+index. Re-runs produce identical clusters (the property random-init
+k-means lacks, and the one that matters for reproducible index builds),
+and every intermediate is bit-identical across engines, which is what
+lets the trained queries carry DuckDB hash-match oracles for the full
+iterative refinement.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import dedup_hash
@@ -32,79 +36,76 @@ from . import dedup_hash
 _ID_COL = "vec_id"
 _VEC_COL = "v"
 
+#: The IVF coarse quantizer: centroids, Lloyd iterations, and the
+#: quantization scale (coordinates become ``round(x * scale)`` BIGINT
+#: microunits; the error is 0.5/scale per coordinate, noise against
+#: unit-ish embeddings). The queries' DuckDB oracles unroll the same
+#: values, so they are written once, here.
+_KMEANS_IVF_K = 16
+_KMEANS_IVF_ITERS = 3
+_KMEANS_IVF_SCALE = 1_000_000
 
-def _sq_dist(v, c, *, integer: bool = False):
-    zero = F.lit(0).cast("long") if integer else F.lit(0.0)
+#: PQ geometry: 64-dim vectors -> 4 subspaces x 16 dims, 8 codewords per
+#: subspace. A vector compresses to 4 codes (3 bits each): the
+#: memory-side ANN answer — 64 floats -> half a byte, distances served
+#: from an 8-entry lookup table per (query, subspace).
+_PQ_M, _PQ_DSUB, _PQ_K = 4, 16, 8
+#: The PQ trainer's Lloyd iterations. Two rounds per subspace — the PQ
+#: codebook refinement plateaus fast at k=8/dsub=16, and every extra round
+#: quadruples the oracle's unrolled-CTE cost (4 subspaces x rounds).
+_PQ_TRAIN_ITERS = 2
+
+
+def quantize(v: Column) -> Column:
+    """The vector ``v`` as BIGINT microunits: ``round(x * _KMEANS_IVF_SCALE)``
+    per coordinate, the input every trainer and assignment works on."""
+    q = F.lit(float(_KMEANS_IVF_SCALE))
+    return F.transform(v, lambda x: F.round(x * q, 0).cast("long"))
+
+
+def _sq_dist(v, c):
     return F.aggregate(
         F.zip_with(v, c, lambda a, b: (a - b) * (a - b)),
-        zero,
+        F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
 
 
-def _cent_literal(centroids: list[list[float]], *, integer: bool) -> "F.Column":
+def _cent_literal(centroids: list[list[int]]) -> "F.Column":
     """The k×dim centroid matrix as ONE array<array<...>> literal built via
     a single SQL string (F.expr). The per-element form —
     F.array(*[F.array(*[F.lit(x) ...]) ...]) — costs k*dim py4j round
     trips PER CALL (k=16, dim=64 → 1024 driver↔JVM hops, ~1 s), and the
     trainer loop rebuilds the literal every Lloyd iteration because the
     centroids changed; the SQL string is one hop and the JVM parser eats
-    a ~20 KB array literal in milliseconds. Values are rendered exactly:
-    integer mode emits BIGINT tokens, float mode repr(float) round-trips
-    binary64 — the resulting Literal is bit-identical to the old tree."""
+    a ~20 KB array literal in milliseconds. Values are rendered exactly as
+    BIGINT tokens — the resulting Literal is bit-identical to the old
+    tree."""
     from .scale import inline_literal
 
-    if integer:
-        return inline_literal([[int(x) for x in c] for c in centroids])
-    return inline_literal([[float(x) for x in c] for c in centroids])
+    return inline_literal([[int(x) for x in c] for c in centroids])
 
 
-def _assign(
-    vecs: DataFrame,
-    vec_col: str,
-    centroids: list[list[float]],
-    *,
-    integer: bool = False,
-) -> DataFrame:
-    cent_arr = _cent_literal(centroids, integer=integer)
+def _assign(vecs: DataFrame, vec_col: str, centroids: list[list[int]]) -> DataFrame:
+    cent_arr = _cent_literal(centroids)
     scored = F.transform(
         cent_arr,
-        lambda c, i: F.struct(
-            _sq_dist(F.col(vec_col), c, integer=integer).alias("d"), i.alias("i")
-        ),
+        lambda c, i: F.struct(_sq_dist(F.col(vec_col), c).alias("d"), i.alias("i")),
     )
     best = F.array_min(scored)  # struct ordering: distance, then index
     return vecs.withColumn("cluster", best["i"]).withColumn("__d", best["d"])
 
 
-def kmeans_train(
-    vecs: DataFrame,
-    *,
-    k: int = 8,
-    max_iter: int = 5,
-    quantize: int | None = None,
-) -> tuple[DataFrame, list[list[float]], list[float]]:
-    """Returns (assignments, centroids, sse_history).
+def kmeans_train(vecs: DataFrame) -> tuple[DataFrame, list[list[int]], list[float]]:
+    """``_KMEANS_IVF_K`` centroids from ``_KMEANS_IVF_ITERS`` Lloyd
+    iterations over the quantized ``vecs``. Returns (assignments,
+    centroids, sse_history).
 
-    ``assignments`` adds a ``cluster`` index column to ``vecs``;
-    ``sse_history`` has one entry per iteration and is non-increasing
-    (Lloyd's monotonicity — asserted in tests).
-
-    ``quantize`` (e.g. ``1_000_000``) switches the trainer to EXACT
-    integer arithmetic: coordinates are snapped to
-    ``round(x * quantize)`` BIGINT microunits up front, distances are
-    integer sums of squares, and centroid updates are half-up-rounded
-    integer means. Every intermediate is then bit-identical across
-    engines (no float summation-order drift), which is what lets
-    q_kmeans_ivf carry a DuckDB hash-match oracle for the full
-    iterative refinement. Quantization error is 0.5/quantize per
-    coordinate — noise at 1e-6 against unit-ish embeddings."""
-    if quantize is not None:
-        q = F.lit(float(quantize))
-        vecs = vecs.withColumn(
-            _VEC_COL,
-            F.transform(F.col(_VEC_COL), lambda x: F.round(x * q, 0).cast("long")),
-        )
+    ``assignments`` is the quantized ``vecs`` with a ``cluster`` index
+    column; ``sse_history`` has one entry per iteration and is
+    non-increasing (Lloyd's monotonicity — the nearest-integer mean
+    minimises the SSE over integer centroids; asserted in tests)."""
+    vecs = vecs.withColumn(_VEC_COL, quantize(F.col(_VEC_COL)))
     # Materialize the training input ONCE (r12 verdict #7 — the
     # q_semdedup localCheckpoint pattern): every Lloyd iteration's
     # assignment+update job otherwise re-executes the caller's whole
@@ -114,22 +115,21 @@ def kmeans_train(
     # sample (the _ANN_INC_TRAIN_MAX contract; FAISS trains on a sample),
     # so the checkpoint is small by construction; the one full-corpus
     # caller (q_kmeans_ivf, the trainer demo) materializes the corpus it
-    # was going to scan max_iter+2 times anyway.
+    # was going to scan _KMEANS_IVF_ITERS+2 times anyway.
     vecs = vecs.localCheckpoint(eager=True)
     h = dedup_hash.token_hash(F.col(_ID_COL).cast("string"))
     seeds = (
         vecs.select(_VEC_COL, h.alias("__h"), F.col(_ID_COL))
         .orderBy("__h", _ID_COL)
-        .limit(k)
+        .limit(_KMEANS_IVF_K)
         .collect()
     )
     centroids = [list(r[_VEC_COL]) for r in seeds]
 
-    integer = quantize is not None
-    mean = F.round(F.avg("x"), 0).cast("long") if integer else F.avg("x")
+    mean = F.round(F.avg("x"), 0).cast("long")
     sse_history: list[float] = []
-    for _ in range(max_iter):
-        assigned = _assign(vecs, _VEC_COL, centroids, integer=integer)
+    for _ in range(_KMEANS_IVF_ITERS):
+        assigned = _assign(vecs, _VEC_COL, centroids)
         stats = (
             assigned.select(
                 "cluster", F.col("__d"), F.posexplode(_VEC_COL).alias("pos", "x")
@@ -149,17 +149,11 @@ def kmeans_train(
         sse_history.append(float(sum(r.sse for r in stats)))
         for r in stats:  # empty clusters keep their previous centroid
             centroids[r.cluster] = [p.m for p in r.pm]
-    final = _assign(vecs, _VEC_COL, centroids, integer=integer).drop("__d")
+    final = _assign(vecs, _VEC_COL, centroids).drop("__d")
     return final, centroids, sse_history
 
 
-def _pq_assign(
-    subs: DataFrame,
-    vec_col: str,
-    codebooks: list[list[list[float]]],
-    *,
-    integer: bool,
-) -> DataFrame:
+def _pq_assign(subs: DataFrame, vec_col: str, codebooks: list[list[list[int]]]) -> DataFrame:
     """_assign generalized to m codebooks: each (id, __j, sub) row scores
     against ITS subspace's k codewords, selected by ``element_at`` from one
     nested [m][k][dsub] literal (one py4j hop via inline_literal). The
@@ -167,18 +161,11 @@ def _pq_assign(
     so per-row results are bit-identical to assigning subspace __j alone."""
     from .scale import inline_literal
 
-    if integer:
-        lit3 = inline_literal([[[int(x) for x in c] for c in cb] for cb in codebooks])
-    else:
-        lit3 = inline_literal(
-            [[[float(x) for x in c] for c in cb] for cb in codebooks]
-        )
+    lit3 = inline_literal([[[int(x) for x in c] for c in cb] for cb in codebooks])
     cand = F.element_at(lit3, F.col("__j").cast("int") + 1)
     scored = F.transform(
         cand,
-        lambda c, i: F.struct(
-            _sq_dist(F.col(vec_col), c, integer=integer).alias("d"), i.alias("i")
-        ),
+        lambda c, i: F.struct(_sq_dist(F.col(vec_col), c).alias("d"), i.alias("i")),
     )
     best = F.array_min(scored)  # struct ordering: distance, then index
     return subs.withColumn("cluster", best["i"]).withColumn("__d", best["d"])
@@ -186,16 +173,12 @@ def _pq_assign(
 
 def pq_train(
     vecs: DataFrame,
-    *,
-    m: int,
-    dsub: int,
-    k: int = 8,
-    max_iter: int = 5,
-    quantize: int | None = None,
-) -> tuple[DataFrame, list[list[list[float]]], list[list[float]]]:
-    """Train m product-quantizer sub-codebooks JOINTLY — one Spark job per
+) -> tuple[DataFrame, list[list[list[int]]], list[list[float]]]:
+    """Train the ``_PQ_M`` product-quantizer sub-codebooks of ``_PQ_K``
+    codewords each, over ``_PQ_DSUB``-wide slices of the quantized
+    ``vecs``, JOINTLY — one Spark job per
     Lloyd iteration covers ALL m subspaces, instead of m independent
-    kmeans_train calls (m×(max_iter+2) serial jobs, each re-executing the
+    kmeans_train calls (m×(iterations+2) serial jobs, each re-executing the
     caller's upstream chain to build its slice; measured as the trained
     tier's dominant fixed cost in r13 — q_pq_train/q_ann_pq_trained).
 
@@ -205,25 +188,18 @@ def pq_train(
       (the final-codebook assignment, lazy) — a per-subspace SSE is ONE
       ``groupBy("__j")`` aggregate away, where the per-m loop needed m
       full upstream re-executions;
-    - ``codebooks[j][code]`` — in ``quantize`` (integer) mode these are
-      BIT-IDENTICAL to ``kmeans_train`` on slice j of the same input
-      (asserted in tests/test_cluster_ops.py): quantization commutes with
-      slicing (elementwise), the seed ids are the k smallest
-      (token_hash, id) rows — independent of j — and every integer mean /
-      argmin tie-break groups by (__j, cluster) exactly as the per-sub
-      trainer groups by cluster;
+    - ``codebooks[j][code]`` — BIT-IDENTICAL to ``kmeans_train``, given
+      the same k and iteration count, on slice j of the same input
+      (asserted in
+      tests/test_scale_ops.py::test_pq_train_matches_per_subspace_kmeans):
+      quantization commutes with slicing (elementwise), the seed ids are
+      the k smallest (token_hash, id) rows — independent of j — and every
+      integer mean / argmin tie-break groups by (__j, cluster) exactly as
+      the per-sub trainer groups by cluster;
     - ``sse_histories[j]`` — kmeans_train's sse_history per subspace.
-
-    Float (non-quantized) mode is supported but only integer mode carries
-    the bit-exactness claim (float means depend on summation order, which
-    the joint plan partitions differently).
     """
-    if quantize is not None:
-        q = F.lit(float(quantize))
-        vecs = vecs.withColumn(
-            _VEC_COL,
-            F.transform(F.col(_VEC_COL), lambda x: F.round(x * q, 0).cast("long")),
-        )
+    m, dsub, k = _PQ_M, _PQ_DSUB, _PQ_K
+    vecs = vecs.withColumn(_VEC_COL, quantize(F.col(_VEC_COL)))
     h = dedup_hash.token_hash(F.col(_ID_COL).cast("string"))
     # Explode to (id, __h, __j, sub) and materialize ONCE — m×|train| rows,
     # bounded by the trainer-sample contract. Every later job (seeds, each
@@ -256,7 +232,7 @@ def pq_train(
         .limit(k * m)
         .collect()
     )
-    codebooks: list[list[list[float]]] = [[None] * k for _ in range(m)]  # type: ignore[list-item]
+    codebooks: list[list[list[int]]] = [[None] * k for _ in range(m)]  # type: ignore[list-item]
     per_j_seen = [0] * m
     for r in seed_rows:  # rows arrive (h, id, j)-sorted: k ids × m subspaces
         codebooks[r["__j"]][per_j_seen[r["__j"]]] = list(r[_VEC_COL])
@@ -265,11 +241,10 @@ def pq_train(
         # same as kmeans_train's seeds-limit(k) on a small input
         codebooks = [cb[: per_j_seen[j]] for j, cb in enumerate(codebooks)]
 
-    integer = quantize is not None
-    mean = F.round(F.avg("x"), 0).cast("long") if integer else F.avg("x")
+    mean = F.round(F.avg("x"), 0).cast("long")
     sse_histories: list[list[float]] = [[] for _ in range(m)]
-    for _ in range(max_iter):
-        assigned = _pq_assign(cp, _VEC_COL, codebooks, integer=integer)
+    for _ in range(_PQ_TRAIN_ITERS):
+        assigned = _pq_assign(cp, _VEC_COL, codebooks)
         stats = (
             assigned.select(
                 "__j", "cluster", F.col("__d"), F.posexplode(_VEC_COL).alias("pos", "x")
@@ -290,5 +265,5 @@ def pq_train(
             codebooks[r["__j"]][r.cluster] = [p.m for p in r.pm]
         for j in range(m):
             sse_histories[j].append(per_j_sse[j])
-    final = _pq_assign(cp, _VEC_COL, codebooks, integer=integer).drop("__h")
+    final = _pq_assign(cp, _VEC_COL, codebooks).drop("__h")
     return final, codebooks, sse_histories

@@ -15,8 +15,8 @@ Scale design:
   no per-row Python overhead; batch size is bounded by
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` so executor memory
   stays flat regardless of corpus size;
-- repartition BEFORE decode by target parallelism, because decode is
-  CPU-bound and upstream partitioning reflects IO, not compute.
+- repartition BEFORE decode (8 tasks), because decode is CPU-bound and
+  upstream partitioning reflects IO, not compute.
 """
 
 from __future__ import annotations
@@ -151,7 +151,6 @@ def extract_image_features(
     media: DataFrame,
     *,
     decoder: Callable[[pd.Series], pd.DataFrame] | str | None = None,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Decode + featurize images via mapInPandas (Arrow-batched).
 
@@ -168,11 +167,9 @@ def extract_image_features(
     elif decoder == "raw_rgb":
         decoder = raw_rgb_decode
 
-    src = media.select("media_id", "payload")
-    if parallelism is not None:
-        # Decode is CPU-bound: spread batches across the target core count
-        # instead of inheriting IO-shaped partitioning.
-        src = src.repartition(parallelism)
+    # Decode is CPU-bound: spread batches across 8 tasks instead of
+    # inheriting IO-shaped partitioning.
+    src = media.select("media_id", "payload").repartition(8)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -657,7 +657,10 @@ def q_blocklist_filter(spark: SparkSession, sf_dir: str):
     )
 
 
-def _jl_signs(k: int = 8, dim: int = 64) -> list[list[int]]:
+_JL_K, _JL_DIM = 8, 64
+
+
+def _jl_signs() -> list[list[int]]:
     """Deterministic ±1 sign matrix for the Johnson-Lindenstrauss random
     projection — md5-seeded so both engines inline the identical
     literals (no RNG state, reproducible across sessions and rounds)."""
@@ -666,14 +669,13 @@ def _jl_signs(k: int = 8, dim: int = 64) -> list[list[int]]:
     return [
         [
             1 if hashlib.md5(f"jl:{j}:{i}".encode()).digest()[0] % 2 == 0 else -1
-            for i in range(dim)
+            for i in range(_JL_DIM)
         ]
-        for j in range(k)
+        for j in range(_JL_K)
     ]
 
 
-_JL_K, _JL_DIM = 8, 64
-_JL_SIGNS = _jl_signs(_JL_K, _JL_DIM)
+_JL_SIGNS = _jl_signs()
 #: 1/sqrt(k) — the JL scale keeping expected norms unchanged. Written as
 #: one literal so both engines multiply by the identical double.
 _JL_SCALE = "0.35355339059327373"

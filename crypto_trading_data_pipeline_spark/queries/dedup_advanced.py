@@ -16,6 +16,15 @@ from pyspark.sql import functions as F
 
 from ..io import parquet_row_count, read_table
 from ..operators import dedup_hash as dh
+from ..operators.cluster import (
+    _KMEANS_IVF_ITERS,
+    _KMEANS_IVF_K,
+    _KMEANS_IVF_SCALE,
+    _PQ_DSUB,
+    _PQ_K,
+    _PQ_M,
+    _PQ_TRAIN_ITERS,
+)
 from ..operators.scale import (
     configured_shuffle_partitions,
     fan_out,
@@ -866,12 +875,8 @@ def _ivf_topk(assign):
     )
 
 
-#: PQ geometry: 64-dim vectors -> 4 subspaces x 16 dims, 8 codewords per
-#: subspace (vec_id < 8's subvectors — same deterministic-codebook move as
-#: q_kmeans_assign). A vector compresses to 4 codes (3 bits each): the
-#: memory-side ANN answer — 64 floats -> half a byte, distances served
-#: from an 8-entry lookup table per (query, subspace).
-_PQ_M, _PQ_DSUB, _PQ_K = 4, 16, 8
+# The untrained PQ queries serve from a literal codebook: vec_id < _PQ_K's
+# subvectors (same deterministic-codebook move as q_kmeans_assign).
 _PQ_N_QUERIES = 5
 
 
@@ -2487,7 +2492,9 @@ def q_neardup_components(spark: SparkSession, sf_dir: str):
 
     docs = read_table(spark, sf_dir, "documents")
     ver = _verified_neardup_pairs(docs)
-    comp = connected_components(ver, src="doc_a", dst="doc_b")
+    comp = connected_components(
+        ver.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    )
     return docs.join(comp, docs.doc_id == comp.node, "left").select(
         "doc_id", F.coalesce("component", "doc_id").alias("component")
     )
@@ -2513,15 +2520,12 @@ def q_neardup_components_star(spark: SparkSession, sf_dir: str):
 
     docs = read_table(spark, sf_dir, "documents")
     ver = _verified_neardup_pairs(docs)
-    comp = connected_components_star(ver, src="doc_a", dst="doc_b")
+    comp = connected_components_star(
+        ver.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    )
     return docs.join(comp, docs.doc_id == comp.node, "left").select(
         "doc_id", F.coalesce("component", "doc_id").alias("component")
     )
-
-
-_KMEANS_IVF_K = 16
-_KMEANS_IVF_ITERS = 3
-_KMEANS_IVF_SCALE = 1_000_000
 
 
 def _kmeans_cte_chain(
@@ -2589,7 +2593,7 @@ _KMEANS_DIST = (
 def _kmeans_ivf_sql(k: int, iters: int, scale: int) -> str:
     """Unrolled Lloyd's k-means as a single DuckDB statement.
 
-    Mirrors operators/cluster.kmeans_train in quantize mode CTE-for-step:
+    Mirrors operators/cluster.kmeans_train CTE-for-step:
     seeds = k smallest (md5-hash, id); each iteration one argmin
     assignment (integer squared distance, ties toward the lower cluster
     index) + one half-up-rounded integer mean update (empty clusters keep
@@ -2693,9 +2697,7 @@ def q_kmeans_ivf(spark: SparkSession, sf_dir: str):
     emb = fan_out(read_table(spark, sf_dir, "embeddings")).select(
         "vec_id", as_double_vec(F.col("embedding")).alias("v")
     )
-    assigned, _cents, _sse = kmeans_train(
-        emb, k=_KMEANS_IVF_K, max_iter=_KMEANS_IVF_ITERS, quantize=_KMEANS_IVF_SCALE
-    )
+    assigned, _cents, _sse = kmeans_train(emb)
     return (
         assigned.groupBy("cluster")
         .agg(F.count(F.lit(1)).alias("n_vectors"))
@@ -3399,9 +3401,7 @@ def _trained_search(spark: SparkSession, sf_dir: str):
     emb = fan_out(read_table(spark, sf_dir, "embeddings")).select(
         "vec_id", as_double_vec(F.col("embedding")).alias("v")
     )
-    assigned, _cents, _sse = kmeans_train(
-        emb, k=_KMEANS_IVF_K, max_iter=_KMEANS_IVF_ITERS, quantize=_KMEANS_IVF_SCALE
-    )
+    assigned, _cents, _sse = kmeans_train(emb)
     # cluster is argmin over a non-empty literal centroid array — never
     # NULL — but the equi-join below would still infer IsNotNull(cluster)
     # and push the ENTIRE inlined k x dim distance expression into the
@@ -3619,29 +3619,16 @@ def _ann_incremental_sql(k: int, iters: int, scale: int) -> str:
     ),
 )
 def q_ann_incremental(spark: SparkSession, sf_dir: str):
-    from ..operators.cluster import _assign, kmeans_train
+    from ..operators.cluster import _assign, kmeans_train, quantize
 
     emb = fan_out(read_table(spark, sf_dir, "embeddings")).select(
         "vec_id", as_double_vec(F.col("embedding")).alias("v")
     )
     train = emb.filter(F.col("vec_id") < _ANN_INC_TRAIN_MAX)
-    _assigned, cents, _sse = kmeans_train(
-        train,
-        k=_KMEANS_IVF_K,
-        max_iter=_KMEANS_IVF_ITERS,
-        quantize=_KMEANS_IVF_SCALE,
-    )
+    _assigned, cents, _sse = kmeans_train(train)
     batch = emb.filter(
         F.col("vec_id") % _ANN_INC_BATCH_MOD == _ANN_INC_BATCH_RES
-    ).withColumn(
-        "v",
-        F.transform(
-            F.col("v"),
-            lambda x: F.round(x * F.lit(float(_KMEANS_IVF_SCALE)), 0).cast(
-                "long"
-            ),
-        ),
-    )
+    ).withColumn("v", quantize(F.col("v")))
     # The delta equi-join below would infer IsNotNull(cluster) and push
     # the ENTIRE inlined k x dim argmin expression into the parquet scan
     # as a DataFilter, re-evaluating it per row inside the scan task (the
@@ -3655,7 +3642,7 @@ def q_ann_incremental(spark: SparkSession, sf_dir: str):
     # q_token_budget_mix precedent). The batch is a bounded slice
     # (vec_id % mod == res), so the checkpoint is small by construction.
     assigned = (
-        _assign(batch, "v", cents, integer=True)
+        _assign(batch, "v", cents)
         .select(
             "vec_id",
             F.coalesce(F.col("cluster"), F.lit(-1)).cast("int").alias("cluster"),
@@ -3671,11 +3658,6 @@ def q_ann_incremental(spark: SparkSession, sf_dir: str):
     )
 
 
-#: q_pq_train: per-subspace trainer iterations. Two Lloyd rounds per
-#: subspace — the PQ codebook refinement plateaus fast at k=8/dsub=16,
-#: and every extra round quadruples the oracle's unrolled-CTE cost
-#: (4 subspaces x rounds).
-_PQ_TRAIN_ITERS = 2
 #: Fixed-size training prefix — the same bounded-sample contract as
 #: q_ann_incremental's coarse quantizer (FAISS ProductQuantizer.train
 #: runs on a sample, never the corpus), so trainer cost is
@@ -3809,16 +3791,10 @@ def q_pq_train(spark: SparkSession, sf_dir: str):
     # subspaces (was _PQ_M independent kmeans_train calls, each
     # re-executing the scan+fan_out chain to build its slice — the
     # trained tier's dominant fixed cost in r13). Codebooks are
-    # bit-identical to the per-subspace loop (integer mode; asserted in
-    # tests/test_cluster_ops.py), so the oracle is unchanged.
-    final, cbs, _hists = pq_train(
-        train,
-        m=_PQ_M,
-        dsub=_PQ_DSUB,
-        k=_PQ_K,
-        max_iter=_PQ_TRAIN_ITERS,
-        quantize=_KMEANS_IVF_SCALE,
-    )
+    # bit-identical to the per-subspace loop (asserted in
+    # tests/test_scale_ops.py::test_pq_train_matches_per_subspace_kmeans),
+    # so the oracle is unchanged.
+    final, cbs, _hists = pq_train(train)
     cb_rows = [
         (j, code, pos, int(cbs[j][code][pos]))
         for j in range(_PQ_M)
@@ -3909,25 +3885,14 @@ _REBALANCE_THRESHOLD_PPM = 2_000_000
     ),
 )
 def q_index_rebalance(spark: SparkSession, sf_dir: str):
-    from ..operators.cluster import _assign, kmeans_train
+    from ..operators.cluster import _assign, kmeans_train, quantize
 
     emb = fan_out(read_table(spark, sf_dir, "embeddings")).select(
         "vec_id", as_double_vec(F.col("embedding")).alias("v")
     )
     train = emb.filter(F.col("vec_id") < _ANN_INC_TRAIN_MAX)
-    _a, cents, _sse = kmeans_train(
-        train,
-        k=_KMEANS_IVF_K,
-        max_iter=_KMEANS_IVF_ITERS,
-        quantize=_KMEANS_IVF_SCALE,
-    )
-    quant = emb.withColumn(
-        "v",
-        F.transform(
-            F.col("v"),
-            lambda x: F.round(x * F.lit(float(_KMEANS_IVF_SCALE)), 0).cast("long"),
-        ),
-    )
+    _a, cents, _sse = kmeans_train(train)
+    quant = emb.withColumn("v", quantize(F.col("v")))
     is_new = F.col("vec_id") % _ANN_INC_BATCH_MOD == _ANN_INC_BATCH_RES
     # coalesce: cluster is argmin over a non-empty literal array — never
     # NULL — but without the guard the left join below infers
@@ -3938,7 +3903,7 @@ def q_index_rebalance(spark: SparkSession, sf_dir: str):
     # scalar and the final report — materializing it runs the O(N x k)
     # corpus assignment once and keeps the downstream plan bounded.
     counts = (
-        _assign(quant, "v", cents, integer=True)
+        _assign(quant, "v", cents)
         .groupBy(
             F.coalesce(F.col("cluster"), F.lit(-1)).cast("int").alias("cluster")
         )
@@ -4070,14 +4035,7 @@ def q_ann_pq_trained(spark: SparkSession, sf_dir: str):
     train = embv.filter(F.col("vec_id") < _PQ_TRAIN_MAX)
     # Joint trainer (see q_pq_train): bit-identical codebooks to the
     # per-subspace kmeans_train loop, ~_PQ_M× fewer serial jobs.
-    _f, cbs, _h = pq_train(
-        train,
-        m=_PQ_M,
-        dsub=_PQ_DSUB,
-        k=_PQ_K,
-        max_iter=_PQ_TRAIN_ITERS,
-        quantize=_KMEANS_IVF_SCALE,
-    )
+    _f, cbs, _h = pq_train(train)
     cb = [
         [[c / _KMEANS_IVF_SCALE for c in cents[code]] for code in range(_PQ_K)]
         for cents in cbs

@@ -229,7 +229,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str):
         kind="image",
         mime="image/fake",
     )
-    return extract_image_features(media, parallelism=8)
+    return extract_image_features(media)
 
 
 # BPE-ish subword pattern: at any position exactly one branch can start

@@ -332,7 +332,7 @@ def q_candle_rollup_5min(spark: SparkSession, sf_dir: str):
         events, ts_col="ts", key_col="event_type", price_col="value",
         qty_col=None, round_digits=4,
     )
-    return rollup_candles(c1, round_digits=4)
+    return rollup_candles(c1)
 
 
 @query(

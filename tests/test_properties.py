@@ -152,7 +152,7 @@ def test_candle_rollup_matches_direct(spark, recs):
     direct = {(c.symbol, c.window_start): c for c in direct_df.collect()}
     rolled = {
         (c.symbol, c.window_start): c
-        for c in rollup_candles(ohlcv(df, round_digits=4), round_digits=4).collect()
+        for c in rollup_candles(ohlcv(df, round_digits=4)).collect()
     }
     assert set(direct) == set(rolled)
     for key, d in direct.items():

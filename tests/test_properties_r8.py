@@ -456,11 +456,6 @@ def test_ann_ivf_trained_search_invariants(spark):
     from crypto_trading_data_pipeline_spark.operators.similarity import (
         as_double_vec,
     )
-    from crypto_trading_data_pipeline_spark.queries.dedup_advanced import (
-        _KMEANS_IVF_ITERS,
-        _KMEANS_IVF_K,
-        _KMEANS_IVF_SCALE,
-    )
 
     sf_dir = "/root/testdata/sf0.001"
     out = {
@@ -474,10 +469,7 @@ def test_ann_ivf_trained_search_invariants(spark):
     emb = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double_vec(F.col("embedding")).alias("v")
     )
-    assigned, _c, _s = kmeans_train(
-        emb, k=_KMEANS_IVF_K, max_iter=_KMEANS_IVF_ITERS,
-        quantize=_KMEANS_IVF_SCALE,
-    )
+    assigned, _c, _s = kmeans_train(emb)
     rows = {r.vec_id: (list(r.v), r.cluster) for r in assigned.collect()}
     for (qid, rnk), (nid, d2) in out.items():
         qv, qc = rows[qid]

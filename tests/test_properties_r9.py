@@ -296,8 +296,6 @@ def test_ann_incremental_replica(spark):
         _ANN_INC_BATCH_MOD,
         _ANN_INC_BATCH_RES,
         _ANN_INC_TRAIN_MAX,
-        _KMEANS_IVF_ITERS,
-        _KMEANS_IVF_K,
         _KMEANS_IVF_SCALE,
     )
 
@@ -305,12 +303,7 @@ def test_ann_incremental_replica(spark):
     emb = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double_vec(F.col("embedding")).alias("v")
     )
-    _a, cents, _s = kmeans_train(
-        emb.filter(F.col("vec_id") < _ANN_INC_TRAIN_MAX),
-        k=_KMEANS_IVF_K,
-        max_iter=_KMEANS_IVF_ITERS,
-        quantize=_KMEANS_IVF_SCALE,
-    )
+    _a, cents, _s = kmeans_train(emb.filter(F.col("vec_id") < _ANN_INC_TRAIN_MAX))
     cents = np.array(cents, dtype=np.int64)
 
     rows = emb.filter(

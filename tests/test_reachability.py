@@ -12,7 +12,8 @@ bare name into the bodies of the top-level package defs they name; see
 ``test_package_names_are_reached_from_an_entry_point``. The option walk
 matches every call in an entry point or the package to the functions of
 its bare name and asks which defaulted parameters it passes a value other
-than the default; see ``test_package_options_are_reached_from_an_entry_point``.
+than the default, and which all calls pass one constant; see
+``test_package_options_are_reached_from_an_entry_point``.
 """
 
 from __future__ import annotations
@@ -262,36 +263,72 @@ def _options(tree: ast.Module, short: str, exempt: set[int]):
             yield f"{short}.{prefix}{fn.name}({p.arg})", bare, fn, skip, p, d
 
 
-def _passes(call: ast.Call, fn: ast.FunctionDef, skip: int, p: ast.arg,
-            default: ast.expr) -> bool:
-    """Whether ``call`` may pass ``p`` a value spelled unlike its default."""
-    differs = lambda v: ast.unparse(v) != ast.unparse(default)  # noqa: E731
+#: ``_bound``'s answer for a call whose ``*args`` or ``**kwargs`` may carry
+#: the parameter.
+_STARRED = ast.Starred()
+
+
+def _bound(call: ast.Call, fn: ast.FunctionDef, skip: int, p: ast.arg):
+    """The expression ``call`` binds ``p`` to, ``None`` where it leaves ``p``
+    at its default, or ``_STARRED`` where a ``*args`` or ``**kwargs`` may
+    carry it."""
     for kw in call.keywords:
-        if kw.arg is None or (kw.arg == p.arg and differs(kw.value)):
-            return True
+        if kw.arg is None:
+            return _STARRED
+        if kw.arg == p.arg:
+            return kw.value
     positional = fn.args.posonlyargs + fn.args.args
     if p not in positional:
-        return False
+        return None
     i = positional.index(p) - skip
     for j, arg in enumerate(call.args[: i + 1]):
         if isinstance(arg, ast.Starred):
-            return True
+            return _STARRED
         if j == i:
-            return differs(arg)
-    return False
+            return arg
+    return None
+
+
+def _module_names(tree: ast.Module) -> set[str]:
+    """The names a module's top-level statements bind, imports included."""
+    out: set[str] = set()
+    for stmt in tree.body:
+        out.update(_bound_names(stmt))
+        if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+            out.update((a.asname or a.name).partition(".")[0] for a in stmt.names)
+    return out
+
+
+#: The nodes a constant spelling is built from besides names: literals, and
+#: the operators and containers that combine them.
+_CONSTANT_NODES = (
+    ast.Constant, ast.BinOp, ast.UnaryOp, ast.Tuple, ast.List,
+    ast.operator, ast.unaryop, ast.expr_context,
+)
+
+
+def _constant(expr: ast.expr, names: set[str]) -> bool:
+    """Whether ``expr`` is built only from literals and ``names``."""
+    return all(
+        n.id in names if isinstance(n, ast.Name) else isinstance(n, _CONSTANT_NODES)
+        for n in ast.walk(expr)
+    )
 
 
 def test_package_options_are_reached_from_an_entry_point():
     """A defaulted parameter of a package function or method is reached when
     a call site in an entry point or in the package passes it, by keyword or
-    by position, a value whose source text differs from the default's.
-    Calls match by bare name, through the name walk's ``as`` aliases; a
-    class name stands for its ``__init__``; a ``*args`` or ``**kwargs`` at a
-    call site reaches every parameter it could carry. The
-    ``UNREACHED_NAMES`` roots are the reference's own runtime, so their
-    parameters are exempt. Every other unreached parameter is one value in
-    use: inline it, or keep it in ``KEPT_OPTIONS`` as a deployment setting
-    or a test seam."""
+    by position, a value whose source text differs from the default's, and
+    the calls do not all pass it one constant. Calls match by bare name,
+    through the name walk's ``as`` aliases; a class name stands for its
+    ``__init__``; a ``*args`` or ``**kwargs`` at a call site reaches every
+    parameter it could carry. The calls pass one constant when every call
+    that matches binds the parameter, all spell it the same way, and that
+    spelling is built only from literals and names the calling module binds
+    at its top level. The ``UNREACHED_NAMES`` roots are the reference's own
+    runtime, so their parameters are exempt. Every other unreached
+    parameter is one value in use: inline it, or keep it in
+    ``KEPT_OPTIONS`` as a deployment setting or a test seam."""
     trees, defs, by_bare, _ = _package()
     exempt = {id(n) for q in UNREACHED_NAMES for s in defs.get(q, []) for n in ast.walk(s)}
     options: dict[str, list] = {}
@@ -307,16 +344,33 @@ def test_package_options_are_reached_from_an_entry_point():
             if name != bare and name in options:
                 spelled.setdefault(bare, set()).add(name)
     sites = [*trees.values(), *(ast.parse(p.read_text()) for p in ENTRY_POINTS)]
-    reached: set[str] = set()
+    # Per parameter: whether some call passes it a value unlike its default,
+    # and the spellings of every call's binding (``None`` for one that binds
+    # it to no constant).
+    differs: set[str] = set()
+    spellings: dict[str, set[str | None]] = {}
     for site in sites:
+        names = _module_names(site)
         for call in ast.walk(site):
             if not isinstance(call, ast.Call):
                 continue
             name = getattr(call.func, "id", None) or getattr(call.func, "attr", None)
             for bare in spelled.get(name, ()):
                 for key, fn, skip, p, default in options[bare]:
-                    if key not in reached and _passes(call, fn, skip, p, default):
-                        reached.add(key)
+                    value = _bound(call, fn, skip, p)
+                    if value is _STARRED or (
+                        value is not None and ast.unparse(value) != ast.unparse(default)
+                    ):
+                        differs.add(key)
+                    spellings.setdefault(key, set()).add(
+                        ast.unparse(value)
+                        if value not in (None, _STARRED) and _constant(value, names)
+                        else None
+                    )
+    reached = {
+        key for key in differs
+        if None in spellings[key] or len(spellings[key]) > 1
+    }
     unreached = {key for opts in options.values() for key, *_ in opts} - reached
     assert unreached == set(KEPT_OPTIONS), (
         f"one value in use, not kept: {sorted(unreached - set(KEPT_OPTIONS))}; "

@@ -52,23 +52,28 @@ def test_connected_components_transitive_chain(spark):
 
 
 def test_kmeans_train_lloyd_invariants(spark):
-    """Deterministic k-means: SSE non-increasing (Lloyd's monotonicity),
-    re-runs identical, final assignment self-consistent (each point sits
-    in its argmin-distance cluster)."""
+    """Deterministic integer k-means: SSE non-increasing (Lloyd's
+    monotonicity — the nearest-integer mean minimises the SSE over integer
+    centroids), re-runs identical, final assignment self-consistent (each
+    point sits in its argmin-distance cluster)."""
     from crypto_trading_data_pipeline_spark.io import read_table
-    from crypto_trading_data_pipeline_spark.operators.cluster import kmeans_train
+    from crypto_trading_data_pipeline_spark.operators.cluster import (
+        _KMEANS_IVF_ITERS,
+        _KMEANS_IVF_K,
+        kmeans_train,
+    )
     from crypto_trading_data_pipeline_spark.operators.similarity import as_double_vec
     from pyspark.sql import functions as F
 
     emb = read_table(spark, "/root/testdata/sf0.001", "embeddings").select(
         "vec_id", as_double_vec(F.col("embedding")).alias("v")
     )
-    out, cents, sse = kmeans_train(emb, k=8, max_iter=4)
-    assert len(sse) == 4 and all(a >= b - 1e-9 for a, b in zip(sse, sse[1:]))
-    assert len(cents) == 8 and all(len(c) == 64 for c in cents)
+    out, cents, sse = kmeans_train(emb)
+    assert len(sse) == _KMEANS_IVF_ITERS and all(a >= b for a, b in zip(sse, sse[1:]))
+    assert len(cents) == _KMEANS_IVF_K and all(len(c) == 64 for c in cents)
 
     rows = out.collect()
-    assert len(rows) == 500 and {r.cluster for r in rows} <= set(range(8))
+    assert len(rows) == 500 and {r.cluster for r in rows} <= set(range(_KMEANS_IVF_K))
 
     def sqd(v, c):
         return sum((a - b) ** 2 for a, b in zip(v, c))
@@ -77,35 +82,31 @@ def test_kmeans_train_lloyd_invariants(spark):
         dists = [sqd(r.v, c) for c in cents]
         assert dists[r.cluster] == min(dists)
 
-    out2, cents2, sse2 = kmeans_train(emb, k=8, max_iter=4)
+    out2, cents2, sse2 = kmeans_train(emb)
     assert cents == cents2 and sse == sse2
 
 
-def test_pq_train_matches_per_subspace_kmeans(spark):
+def test_pq_train_matches_per_subspace_kmeans(spark, monkeypatch):
     """The joint PQ trainer (one job per Lloyd iteration across all m
-    subspaces) must be BIT-IDENTICAL in integer mode to m independent
-    kmeans_train calls on the slices — codebooks, SSE histories, and the
-    final per-(id, subspace) assignment distances. This equality is what
-    lets q_pq_train / q_ann_pq_trained swap trainers without touching
-    their DuckDB oracles."""
+    subspaces) must be BIT-IDENTICAL to m independent kmeans_train calls
+    on the slices, given the PQ codebook size and iteration count —
+    codebooks, SSE histories, and the final per-(id, subspace) assignment
+    distances. This equality is what lets q_pq_train / q_ann_pq_trained
+    swap trainers without touching their DuckDB oracles."""
     from crypto_trading_data_pipeline_spark.io import read_table
-    from crypto_trading_data_pipeline_spark.operators.cluster import (
-        _assign,
-        kmeans_train,
-        pq_train,
-    )
+    from crypto_trading_data_pipeline_spark.operators import cluster
     from crypto_trading_data_pipeline_spark.operators.similarity import as_double_vec
     from pyspark.sql import functions as F
 
-    m, dsub, k, iters, scale = 4, 16, 8, 2, 1_000_000
+    monkeypatch.setattr(cluster, "_KMEANS_IVF_K", cluster._PQ_K)
+    monkeypatch.setattr(cluster, "_KMEANS_IVF_ITERS", cluster._PQ_TRAIN_ITERS)
+    m, dsub, k = cluster._PQ_M, cluster._PQ_DSUB, cluster._PQ_K
     emb = read_table(spark, "/root/testdata/sf0.001", "embeddings").select(
         "vec_id", as_double_vec(F.col("embedding")).alias("v")
     )
     train = emb.filter(F.col("vec_id") < 200)
 
-    final, cbs, hists = pq_train(
-        train, m=m, dsub=dsub, k=k, max_iter=iters, quantize=scale
-    )
+    final, cbs, hists = cluster.pq_train(train)
     assert len(cbs) == m and all(len(cb) == k for cb in cbs)
 
     joint_sse = {
@@ -118,18 +119,11 @@ def test_pq_train_matches_per_subspace_kmeans(spark):
         sub = train.select(
             "vec_id", F.slice(F.col("v"), j * dsub + 1, dsub).alias("v")
         )
-        _a, cents, hist = kmeans_train(sub, k=k, max_iter=iters, quantize=scale)
+        _a, cents, hist = cluster.kmeans_train(sub)
         assert cbs[j] == cents, f"subspace {j}: codebooks diverge"
         assert hists[j] == hist, f"subspace {j}: SSE history diverges"
-        quant = sub.withColumn(
-            "v",
-            F.transform(
-                F.col("v"), lambda x: F.round(x * F.lit(float(scale)), 0).cast("long")
-            ),
-        )
-        (ref_sse,) = (
-            _assign(quant, "v", cents, integer=True).agg(F.sum("__d")).first()
-        )
+        quant = sub.withColumn("v", cluster.quantize(F.col("v")))
+        (ref_sse,) = cluster._assign(quant, "v", cents).agg(F.sum("__d")).first()
         assert joint_sse[j] == ref_sse, f"subspace {j}: final SSE diverges"
 
 

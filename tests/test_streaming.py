@@ -23,7 +23,11 @@ from crypto_trading_data_pipeline_spark.streaming.job import (
     checkpoint_manager,
     start_candle_query,
 )
-from crypto_trading_data_pipeline_spark.streaming.sinks import ParquetUpsertSink, merge_last_wins
+from crypto_trading_data_pipeline_spark.streaming.sinks import (
+    EPOCH_COL,
+    ParquetUpsertSink,
+    merge_last_wins,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BASE_MS = 1_700_000_000_000  # fixed epoch anchor (2023-11-14T22:13:20Z)
@@ -80,13 +84,20 @@ def test_parse_trades_batch(spark):
 
 
 def test_merge_last_wins(spark):
-    old = spark.createDataFrame([("a", 1, 10.0), ("b", 1, 20.0)], ["k", "v", "ord"])
-    new = spark.createDataFrame([("a", 2, 11.0), ("c", 3, 5.0)], ["k", "v", "ord"])
-    out = {r.k: r.v for r in merge_last_wins(old, new, keys=["k"], order_col="ord").collect()}
+    rows = spark.createDataFrame(
+        [("a", 1, 10.0, 0), ("b", 1, 20.0, 0), ("a", 2, 11.0, 1), ("c", 3, 5.0, 1),
+         ("b", 9, 19.0, 2)],
+        ["k", "v", "ord", EPOCH_COL],
+    )
+    # the highest order wins, whatever the epoch
+    out = {r.k: r.v for r in merge_last_wins(rows, keys=["k"], order_col="ord").collect()}
     assert out == {"a": 2, "b": 1, "c": 3}
-    # batch beats existing at EQUAL order (idempotent replay)
-    replay = merge_last_wins(old, old.withColumn("v", F.col("v") + 100), keys=["k"], order_col="ord")
-    assert {r.v for r in replay.collect()} == {101, 101}
+    # at EQUAL order the later epoch wins (a re-delivered row replaces its own)
+    replay = rows.unionByName(
+        rows.withColumn("v", F.col("v") + 100).withColumn(EPOCH_COL, F.col(EPOCH_COL) + 3)
+    )
+    out = {r.k: r.v for r in merge_last_wins(replay, keys=["k"], order_col="ord").collect()}
+    assert out == {"a": 102, "b": 101, "c": 103}
 
 
 def test_streaming_candles_end_to_end(spark, tmp_path):
