@@ -267,7 +267,7 @@ def bench_streaming(spark, sf_dir: str) -> dict:
                     F.col("event_type").alias("symbol"),
                     F.col("value").cast("string").alias("price"),
                     F.lit("1").alias("quantity"),
-                    ts_millis("ts").alias("trade_time"),
+                    ts_millis().alias("trade_time"),
                     F.lit(False).alias("is_buyer_maker"),
                 )
             ).alias("value")
@@ -493,9 +493,7 @@ def warm_up(spark, sf_dir: str, first_query: str | None) -> None:
         tiny = spark.range(8).select(
             F.col("id"), F.encode(F.col("id").cast("string"), "utf-8").alias("b")
         )
-        media = attach_media(
-            tiny, id_col="id", bytes_col="b", kind="image", mime="image/fake"
-        )
+        media = attach_media(tiny, id_col="id", bytes_col="b")
         extract_image_features(media).write.mode("overwrite").format("noop").save()
     except Exception:  # noqa: BLE001 — warm-up must never kill the bench
         pass

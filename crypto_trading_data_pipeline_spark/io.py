@@ -53,19 +53,19 @@ def ts_micros(col: Column | str) -> Column:
     return F.unix_micros(_as_timestamp(col))
 
 
-def ts_millis(col: Column | str) -> Column:
-    """Epoch milliseconds of a TIMESTAMP or TIMESTAMP_NTZ column (UTC)."""
-    return F.unix_millis(_as_timestamp(col))
+def ts_millis() -> Column:
+    """Epoch milliseconds of the timestamp-ish ``ts`` column (UTC)."""
+    return F.unix_millis(_as_timestamp("ts"))
 
 
-def ts_seconds(col: Column | str) -> Column:
-    """Epoch seconds (LONG, truncated) of a timestamp-ish column (UTC)."""
-    return _as_timestamp(col).cast("long")
+def ts_seconds() -> Column:
+    """Epoch seconds (LONG, truncated) of the timestamp-ish ``ts`` column (UTC)."""
+    return _as_timestamp("ts").cast("long")
 
 
-def ts_seconds_d(col: Column | str) -> Column:
-    """Epoch seconds (DOUBLE, fractional) of a timestamp-ish column (UTC)."""
-    return _as_timestamp(col).cast("double")
+def ts_seconds_d() -> Column:
+    """Epoch seconds (DOUBLE, fractional) of the timestamp-ish ``ts`` column (UTC)."""
+    return _as_timestamp("ts").cast("double")
 
 
 def _normalize_ntz(df: DataFrame) -> DataFrame:

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from . import dedup_hash
 
-#: The id and vector columns both trainers read.
+#: The id and vector columns the trainers and assignments read.
 _ID_COL = "vec_id"
 _VEC_COL = "v"
 
@@ -86,11 +86,11 @@ def _cent_literal(centroids: list[list[int]]) -> "F.Column":
     return inline_literal([[int(x) for x in c] for c in centroids])
 
 
-def _assign(vecs: DataFrame, vec_col: str, centroids: list[list[int]]) -> DataFrame:
+def _assign(vecs: DataFrame, centroids: list[list[int]]) -> DataFrame:
     cent_arr = _cent_literal(centroids)
     scored = F.transform(
         cent_arr,
-        lambda c, i: F.struct(_sq_dist(F.col(vec_col), c).alias("d"), i.alias("i")),
+        lambda c, i: F.struct(_sq_dist(F.col(_VEC_COL), c).alias("d"), i.alias("i")),
     )
     best = F.array_min(scored)  # struct ordering: distance, then index
     return vecs.withColumn("cluster", best["i"]).withColumn("__d", best["d"])
@@ -129,7 +129,7 @@ def kmeans_train(vecs: DataFrame) -> tuple[DataFrame, list[list[int]], list[floa
     mean = F.round(F.avg("x"), 0).cast("long")
     sse_history: list[float] = []
     for _ in range(_KMEANS_IVF_ITERS):
-        assigned = _assign(vecs, _VEC_COL, centroids)
+        assigned = _assign(vecs, centroids)
         stats = (
             assigned.select(
                 "cluster", F.col("__d"), F.posexplode(_VEC_COL).alias("pos", "x")
@@ -149,11 +149,11 @@ def kmeans_train(vecs: DataFrame) -> tuple[DataFrame, list[list[int]], list[floa
         sse_history.append(float(sum(r.sse for r in stats)))
         for r in stats:  # empty clusters keep their previous centroid
             centroids[r.cluster] = [p.m for p in r.pm]
-    final = _assign(vecs, _VEC_COL, centroids).drop("__d")
+    final = _assign(vecs, centroids).drop("__d")
     return final, centroids, sse_history
 
 
-def _pq_assign(subs: DataFrame, vec_col: str, codebooks: list[list[list[int]]]) -> DataFrame:
+def _pq_assign(subs: DataFrame, codebooks: list[list[list[int]]]) -> DataFrame:
     """_assign generalized to m codebooks: each (id, __j, sub) row scores
     against ITS subspace's k codewords, selected by ``element_at`` from one
     nested [m][k][dsub] literal (one py4j hop via inline_literal). The
@@ -165,7 +165,7 @@ def _pq_assign(subs: DataFrame, vec_col: str, codebooks: list[list[list[int]]]) 
     cand = F.element_at(lit3, F.col("__j").cast("int") + 1)
     scored = F.transform(
         cand,
-        lambda c, i: F.struct(_sq_dist(F.col(vec_col), c).alias("d"), i.alias("i")),
+        lambda c, i: F.struct(_sq_dist(F.col(_VEC_COL), c).alias("d"), i.alias("i")),
     )
     best = F.array_min(scored)  # struct ordering: distance, then index
     return subs.withColumn("cluster", best["i"]).withColumn("__d", best["d"])
@@ -244,7 +244,7 @@ def pq_train(
     mean = F.round(F.avg("x"), 0).cast("long")
     sse_histories: list[list[float]] = [[] for _ in range(m)]
     for _ in range(_PQ_TRAIN_ITERS):
-        assigned = _pq_assign(cp, _VEC_COL, codebooks)
+        assigned = _pq_assign(cp, codebooks)
         stats = (
             assigned.select(
                 "__j", "cluster", F.col("__d"), F.posexplode(_VEC_COL).alias("pos", "x")
@@ -265,5 +265,5 @@ def pq_train(
             codebooks[r["__j"]][r.cluster] = [p.m for p in r.pm]
         for j in range(m):
             sse_histories[j].append(per_j_sse[j])
-    final = _pq_assign(cp, _VEC_COL, codebooks).drop("__h")
+    final = _pq_assign(cp, codebooks).drop("__h")
     return final, codebooks, sse_histories

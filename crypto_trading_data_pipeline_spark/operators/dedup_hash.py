@@ -84,19 +84,11 @@ def token_hash(c: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def sparksql_token_hash(expr: str) -> str:
-    """Spark-SQL text of ``token_hash`` applied to ``expr``."""
-    return (
-        f"(CAST(conv(substring(md5(CAST({expr} AS binary)), 1, 15), 16, 10) "
-        f"AS bigint) % {MINHASH_P})"
-    )
-
-
-def sparksql_word_shingles(text_expr: str, k: int = 3) -> str:
-    """Distinct k-token shingles (word k-grams) of a whitespace-tokenized
-    text; an empty array when the text has fewer than k tokens. Element
-    indices are 1-based, as in DuckDB."""
-    toks = f"split({text_expr}, ' ')"
+def sparksql_word_shingles(k: int = 3) -> str:
+    """Distinct k-token shingles (word k-grams) of the whitespace-tokenized
+    column ``text``; an empty array when the text has fewer than k tokens.
+    Element indices are 1-based, as in DuckDB."""
+    toks = "split(text, ' ')"
     parts = ", ".join(f"element_at({toks}, i + {j})" for j in range(k))
     return (
         f"CASE WHEN size({toks}) >= {k} THEN "
@@ -129,29 +121,37 @@ def sparksql_minhash_signature() -> list[str]:
 
 
 def sparksql_token_hash_list(toks_expr: str) -> str:
-    """Spark-SQL text of a token-hash array over a token-array expression."""
-    return f"transform({toks_expr}, t -> {sparksql_token_hash('t')})"
+    """Spark-SQL text of ``token_hash`` over each element of a token-array
+    expression."""
+    return (
+        f"transform({toks_expr}, t -> "
+        f"(CAST(conv(substring(md5(CAST(t AS binary)), 1, 15), 16, 10) "
+        f"AS bigint) % {MINHASH_P}))"
+    )
 
 
-def sparksql_simhash(hs_col: str) -> str:
-    """SimHash over a materialized hash-array column: bit j of the result
-    is the majority vote of bit j across all token hashes (ties -> 0).
+def sparksql_simhash() -> str:
+    """SimHash over the materialized hash-array column ``hs``: bit j of the
+    result is the majority vote of bit j across all token hashes (ties -> 0).
     Row-local, no shuffle; like the MinHash signature, it needs the hash
     array as a real column or md5 is recomputed per bit."""
     terms = " + ".join(
-        f"(CASE WHEN size(filter({hs_col}, h -> (h & {1 << j}) != 0)) * 2 "
-        f"> size({hs_col}) THEN {1 << j} ELSE 0 END)"
+        f"(CASE WHEN size(filter(hs, h -> (h & {1 << j}) != 0)) * 2 "
+        f"> size(hs) THEN {1 << j} ELSE 0 END)"
         for j in range(SIMHASH_BITS)
     )
     return f"(CAST(0 AS bigint) + {terms})"
 
 
-def sparksql_band_hashes(sig_cols: list[str]) -> list[str]:
-    """LSH band digests (un-aliased) over the 16 signature columns."""
+def sparksql_band_hashes() -> list[str]:
+    """LSH band digests (un-aliased) over the 16 signature columns m0..m15
+    of sparksql_minhash_signature."""
     out = []
     for band in range(LSH_BANDS):
-        cols = sig_cols[band * LSH_ROWS_PER_BAND : (band + 1) * LSH_ROWS_PER_BAND]
-        cat = ", ".join(f"CAST({c} AS string)" for c in cols)
+        first = band * LSH_ROWS_PER_BAND
+        cat = ", ".join(
+            f"CAST(m{i} AS string)" for i in range(first, first + LSH_ROWS_PER_BAND)
+        )
         out.append(f"md5(CAST(concat_ws(',', {cat}) AS binary))")
     return out
 
@@ -165,8 +165,8 @@ def sql_token_hash(expr: str) -> str:
     return f"(CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT) % {MINHASH_P})"
 
 
-def sql_word_shingles(text_expr: str, k: int = 3) -> str:
-    toks = f"string_split({text_expr}, ' ')"
+def sql_word_shingles(k: int = 3) -> str:
+    toks = "string_split(text, ' ')"
     parts = " || ' ' || ".join(f"{toks}[i+{j}]" for j in range(k))
     return (
         f"CASE WHEN len({toks}) >= {k} THEN "
@@ -175,10 +175,11 @@ def sql_word_shingles(text_expr: str, k: int = 3) -> str:
     )
 
 
-def sql_minhash_values(shingles_expr: str) -> list[str]:
+def sql_minhash_values() -> list[str]:
+    """MinHash values over the shingle-list column ``sh``."""
     th = sql_token_hash("s")
     return [
-        f"list_aggregate(list_transform({shingles_expr}, s -> ({a} * {th} + {b}) % {MINHASH_P}), 'min')"
+        f"list_aggregate(list_transform(sh, s -> ({a} * {th} + {b}) % {MINHASH_P}), 'min')"
         for a, b in MINHASH_PERMS
     ]
 
@@ -192,16 +193,17 @@ def sql_band_hash(sig_exprs: list[str]) -> list[str]:
     return out
 
 
-def sql_token_hash_list(toks_expr: str) -> str:
-    """List of token hashes — bind to a CTE column, then feed sql_simhash_sum."""
+def sql_token_hash_list() -> str:
+    """List of the token hashes of the whitespace-split column ``text`` —
+    bind to a CTE column ``hs``, then feed sql_simhash_sum."""
     th = sql_token_hash("t")
-    return f"list_transform({toks_expr}, t -> {th})"
+    return f"list_transform(string_split(text, ' '), t -> {th})"
 
 
-def sql_simhash_sum(hs_col: str) -> str:
-    """Majority-vote bit sum over a precomputed hash-list column."""
+def sql_simhash_sum() -> str:
+    """Majority-vote bit sum over the precomputed hash-list column ``hs``."""
     terms = []
     for j in range(SIMHASH_BITS):
-        ones = f"len(list_filter({hs_col}, h -> (h & {1 << j}) != 0))"
-        terms.append(f"(CASE WHEN {ones} * 2 > len({hs_col}) THEN {1 << j} ELSE 0 END)")
+        ones = f"len(list_filter(hs, h -> (h & {1 << j}) != 0))"
+        terms.append(f"(CASE WHEN {ones} * 2 > len(hs) THEN {1 << j} ELSE 0 END)")
     return " + ".join(terms)

@@ -38,14 +38,15 @@ IMAGE_FEATURES_SCHEMA = StructType(
 )
 
 
-def attach_media(df: DataFrame, *, id_col: str, bytes_col: str, kind: str, mime: str) -> DataFrame:
+def attach_media(df: DataFrame, *, id_col: str, bytes_col: str) -> DataFrame:
     """Wrap an existing binary column into the media record
-    (media_id, kind, payload, mime, n_bytes)."""
+    (media_id, kind, payload, mime, n_bytes) of kind ``image`` and mime
+    ``image/fake``: a label only, the decoder reads the bytes."""
     return df.select(
         F.col(id_col).cast("long").alias("media_id"),
-        F.lit(kind).alias("kind"),
+        F.lit("image").alias("kind"),
         F.col(bytes_col).cast("binary").alias("payload"),
-        F.lit(mime).alias("mime"),
+        F.lit("image/fake").alias("mime"),
         F.length(F.col(bytes_col).cast("binary")).cast("long").alias("n_bytes"),
     )
 
@@ -190,9 +191,13 @@ AUDIO_FEATURES_SCHEMA = StructType(
 )
 
 
-def encode_wav_pcm16(samples, sample_rate: int) -> bytes:
-    """int16 sample array -> canonical 44-byte-header mono PCM16 WAV
-    (test/ingest helper — the standard RIFF framing, no codec)."""
+#: The sample rate encode_wav_pcm16 writes into its header.
+_WAV_RATE = 8000
+
+
+def encode_wav_pcm16(samples) -> bytes:
+    """int16 sample array -> canonical 44-byte-header mono PCM16 WAV at
+    ``_WAV_RATE`` (ingest helper — the standard RIFF framing, no codec)."""
     import struct
 
     import numpy as np
@@ -203,7 +208,7 @@ def encode_wav_pcm16(samples, sample_rate: int) -> bytes:
         b"RIFF"
         + struct.pack("<I", 36 + len(data))
         + b"WAVEfmt "
-        + struct.pack("<IHHIIHH", 16, 1, 1, sample_rate, sample_rate * 2, 2, 16)
+        + struct.pack("<IHHIIHH", 16, 1, 1, _WAV_RATE, _WAV_RATE * 2, 2, 16)
         + b"data"
         + struct.pack("<I", len(data))
         + data

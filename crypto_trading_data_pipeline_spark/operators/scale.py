@@ -106,37 +106,21 @@ def configured_shuffle_partitions(spark) -> int:
     return max(n, 16)
 
 
-def with_salt(df: DataFrame, *, buckets: int) -> DataFrame:
-    """Add a deterministic-per-row salt column ``__salt`` in [0, buckets).
+#: Salt buckets of with_salt: the first shuffle of a salted aggregate
+#: spreads each hot key over this many reducers.
+_SALT_BUCKETS = 16
+
+
+def with_salt(df: DataFrame) -> DataFrame:
+    """Add a deterministic-per-row salt column ``__salt`` in [0, _SALT_BUCKETS).
 
     Use for hot-key aggregation: groupBy(key, salt) -> partial agg ->
     groupBy(key) -> final agg. Two small shuffles instead of one skewed one.
     The salt derives from a hash of the whole row (monotonically_increasing_id
     would break determinism under retries).
     """
-    return df.withColumn(
-        "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(buckets))
-    )
-
-
-def salted_group_sum(
-    df: DataFrame, *, keys: list[str], agg_cols: dict[str, str]
-) -> DataFrame:
-    """Two-phase salted sum/count aggregation for skewed keys, over 16 salt
-    buckets.
-
-    agg_cols: {output_name: input_col} summed exactly (sums and counts
-    re-aggregate losslessly; avg/min_by need their own decomposition).
-    """
-    salted = with_salt(df, buckets=16)
-    partial = salted.groupBy(*keys, "__salt").agg(
-        *[F.sum(src).alias(out) for out, src in agg_cols.items()],
-        F.count(F.lit(1)).alias("__n"),
-    )
-    return partial.groupBy(*keys).agg(
-        *[F.sum(out).alias(out) for out in agg_cols],
-        F.sum("__n").alias("n"),
-    )
+    h = F.xxhash64(*[F.col(c) for c in df.columns])
+    return df.withColumn("__salt", F.pmod(h, F.lit(_SALT_BUCKETS)))
 
 
 #: Bits per dimension of a Z-order key.
@@ -167,13 +151,14 @@ def zorder_key(x, y):
     return z
 
 
-def zorder_key_sql(x: str, y: str) -> str:
-    """DuckDB/ANSI twin of zorder_key — textually generated from the same
-    bit layout so both engines compute the identical key."""
+def zorder_key_sql() -> str:
+    """DuckDB/ANSI twin of zorder_key over the columns ``px`` and ``sx`` —
+    textually generated from the same bit layout so both engines compute
+    the identical key."""
     terms = []
     for b in range(_ZORDER_BITS):
-        terms.append(f"(((CAST({x} AS BIGINT) >> {b}) & 1) << {2 * b})")
-        terms.append(f"(((CAST({y} AS BIGINT) >> {b}) & 1) << {2 * b + 1})")
+        terms.append(f"(((CAST(px AS BIGINT) >> {b}) & 1) << {2 * b})")
+        terms.append(f"(((CAST(sx AS BIGINT) >> {b}) & 1) << {2 * b + 1})")
     return " | ".join(terms)
 
 

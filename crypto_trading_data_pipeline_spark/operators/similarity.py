@@ -1,11 +1,5 @@
-"""Similarity search over embedding columns (array<float>).
-
-Brute-force cosine top-k is the exact baseline: broadcast the (small) query
-side against the candidate corpus, compute the dot product with array
-higher-order functions (zip_with + aggregate — JVM-side, no Python), rank
-per query. At 100 TB the candidate side streams through executors once; the
-cost is O(|queries| * |corpus| * dim) FLOPs with zero shuffle of the corpus
-(the only shuffle is the final per-query top-k, |queries|*k rows).
+"""Vector primitives over embedding columns (array<float>): JVM-side
+array higher-order functions (zip_with + aggregate), no Python.
 
 Floats are cast to double BEFORE multiplication so results are reproducible
 across engines to ~1e-15 (float32 accumulation differs at ~1e-7, which would
@@ -14,10 +8,8 @@ break oracle hash-matching even after rounding).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from .scale import fan_out
 
 
 def as_double_vec(c: Column) -> Column:
@@ -31,103 +23,3 @@ def dot(a: Column, b: Column) -> Column:
 
 def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
-
-
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    k: int,
-) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
-
-    Returns (query_id, neighbor_id, sim, rnk). Ranking uses the similarity
-    ROUNDED to 6 decimals, with a neighbor-id tie-break, so results are
-    reproducible.
-    """
-    # FLOP cost dominates the scan — spread the corpus across all cores even
-    # when it arrives as one split (no-op when the scan is already parallel).
-    c = fan_out(corpus).select(
-        F.col(id_col).alias("neighbor_id"), as_double_vec(F.col(vec_col)).alias("cv")
-    ).withColumn("cn", l2_norm(F.col("cv")))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double_vec(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", l2_norm(F.col("qv")))
-
-    pairs = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "sim",
-            F.round(dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6),
-        )
-        .select("query_id", "neighbor_id", "sim")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return pairs.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
-
-
-def cosine_topk_pandas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    k: int,
-) -> DataFrame:
-    """Arrow/NumPy variant of cosine_topk: queries are collected (they are
-    top-k-small by construction), L2-normalized, broadcast as one matrix;
-    each Arrow batch of the corpus scores against ALL queries with a single
-    BLAS matmul inside mapInPandas.
-
-    When to prefer which (measured at sf0.1, 64-dim):
-    - few queries (<~100): the JVM higher-order-function path wins — no
-      Python hop, whole-stage codegen, same wall-clock;
-    - many queries: this path wins increasingly — the |batch| x |queries|
-      matmul amortizes the Arrow transfer, while the HOF path pays a
-      per-(row x query) expression evaluation with no SIMD reuse.
-
-    Output and determinism contract identical to cosine_topk (rounded sim,
-    neighbor-id tie-break), so the two are drop-in interchangeable.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from .scale import fan_out
-
-    qrows = queries.select(
-        F.col(id_col).alias("qid"), as_double_vec(F.col(vec_col)).alias("qv")
-    ).collect()
-    qids = np.array([r.qid for r in qrows], dtype=np.int64)
-    Q = np.array([r.qv for r in qrows], dtype=np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    bq = corpus.sparkSession.sparkContext.broadcast((qids, Qn))
-
-    def score(batches):
-        ids, Qm = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            M = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-            S = Mn @ Qm.T
-            n = len(pdf)
-            out = pd.DataFrame(
-                {
-                    "neighbor_id": np.repeat(pdf[id_col].values, len(ids)),
-                    "query_id": np.tile(ids, n),
-                    "sim": np.round(S.ravel(), 6),
-                }
-            )
-            yield out[out.neighbor_id != out.query_id]
-
-    scored = fan_out(corpus.select(id_col, vec_col)).mapInPandas(
-        score, "neighbor_id long, query_id long, sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rnk")
-    )

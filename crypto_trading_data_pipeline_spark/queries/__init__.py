@@ -335,8 +335,9 @@ def _compute_window() -> list[str]:
     return (head + never + rest)[:_WINDOW_SIZE]
 
 
-def _rotate_window(priority: list[str]) -> None:
-    head = [n for n in priority if n in REGISTRY]
+def _rotate_window() -> None:
+    """Move the ``_DRIVER_WINDOW`` queries to the head of ``REGISTRY``."""
+    head = [n for n in _DRIVER_WINDOW if n in REGISTRY]
     ordered = {n: REGISTRY[n] for n in head}
     ordered.update({n: s for n, s in REGISTRY.items() if n not in ordered})
     REGISTRY.clear()
@@ -344,4 +345,4 @@ def _rotate_window(priority: list[str]) -> None:
 
 
 _DRIVER_WINDOW = _compute_window()
-_rotate_window(_DRIVER_WINDOW)
+_rotate_window()

@@ -1088,8 +1088,8 @@ _BLOOM_CUTOFF = 400
 _SQL_NORM_FP = "md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))"
 
 
-def _bloom_sql_pos(fp_expr: str, seed: int) -> str:
-    seeded = fp_expr + " || '#" + str(seed) + "'"
+def _bloom_sql_pos(seed: int) -> str:
+    seeded = "fp || '#" + str(seed) + "'"
     return f"({dedup_hash.sql_token_hash(seeded)} % {_BLOOM_BITS})"
 
 
@@ -1101,7 +1101,7 @@ def _bloom_sql_pos(fp_expr: str, seed: int) -> str:
     ), bench AS (
       SELECT DISTINCT fp FROM fps WHERE doc_id < {_BLOOM_CUTOFF}
     ), bpos AS (
-      {" UNION ALL ".join(f"SELECT {_bloom_sql_pos('fp', i)} AS pos FROM bench" for i in range(_BLOOM_K))}
+      {" UNION ALL ".join(f"SELECT {_bloom_sql_pos(i)} AS pos FROM bench" for i in range(_BLOOM_K))}
     ), filt AS (
       SELECT CAST(pos // {_BLOOM_WORD_BITS} AS INTEGER) AS word,
              bit_or(CAST(1 AS BIGINT) << (pos % {_BLOOM_WORD_BITS})) AS bits
@@ -1109,7 +1109,7 @@ def _bloom_sql_pos(fp_expr: str, seed: int) -> str:
     ), probe AS (
       SELECT doc_id, source, fp FROM fps WHERE doc_id >= {_BLOOM_CUTOFF}
     ), ppos AS (
-      {" UNION ALL ".join(f"SELECT doc_id, source, fp, {_bloom_sql_pos('fp', i)} AS pos FROM probe" for i in range(_BLOOM_K))}
+      {" UNION ALL ".join(f"SELECT doc_id, source, fp, {_bloom_sql_pos(i)} AS pos FROM probe" for i in range(_BLOOM_K))}
     ), checks AS (
       SELECT p.doc_id, p.source, p.fp,
              CASE WHEN f.bits IS NOT NULL
@@ -2202,6 +2202,42 @@ _HH_K = 200  # report items with frequency > n/200 (0.5% of the token stream)
 _HH_M = 800  # Misra-Gries counters per partition (4x headroom over _HH_K)
 
 
+def _misra_gries_candidates(toks):
+    """Per-partition Misra-Gries(m) candidate tokens of ``toks.tok``, with
+    m = ``_HH_M``.
+
+    The full-vocabulary ``groupBy(tok).count()`` that answers "which items
+    exceed phi*n frequency" shuffles EVERY distinct item — at 100 TB a
+    vocabulary-sized exchange to answer a question whose output is a
+    handful of rows. Each partition here keeps at most m counters and ships
+    at most m candidates, and the candidate set PROVABLY contains every
+    token whose PARTITION count exceeds n_partition/(m+1), and therefore
+    (pigeonhole over partitions) every token whose GLOBAL count exceeds
+    n_total/(m+1) (Misra & Gries 1982; mergeability per Agarwal et al.,
+    "Mergeable Summaries", PODS 2012).
+
+    Arrow-batched (mapInPandas): each batch folds in via value_counts, and
+    the summary prunes back to m counters by subtracting the (m+1)-th
+    largest counter from all and dropping non-positives — the standard
+    mergeable-summaries reduction, vectorized.
+    """
+    import numpy as np
+    import pandas as pd
+
+    def mg(batches):
+        counts: dict = {}
+        for pdf in batches:
+            for tok, c in pdf["tok"].value_counts().items():
+                counts[tok] = counts.get(tok, 0) + int(c)
+            if len(counts) > _HH_M:
+                vals = np.sort(np.fromiter(counts.values(), dtype=np.int64))
+                thresh = int(vals[-(_HH_M + 1)])
+                counts = {t: c - thresh for t, c in counts.items() if c > thresh}
+        yield pd.DataFrame({"tok": pd.Series(list(counts.keys()), dtype="object")})
+
+    return toks.mapInPandas(mg, schema="tok string")
+
+
 @query(
     "q_heavy_hitters",
     oracle=f"""
@@ -2219,7 +2255,7 @@ _HH_M = 800  # Misra-Gries counters per partition (4x headroom over _HH_K)
     doc=(
         "Exact phi-frequent items (tokens above 1/200 of the stream) "
         "WITHOUT the full-vocabulary shuffle: per-partition Misra-Gries "
-        "summaries (operators/sketches.py) ship at most 800 candidate "
+        "summaries (_misra_gries_candidates) ship at most 800 candidate "
         "tokens per partition — provably a superset of every token above "
         "the threshold (pigeonhole: a globally-frequent token is "
         "locally frequent in at least one partition) — then an exact "
@@ -2235,11 +2271,9 @@ _HH_M = 800  # Misra-Gries counters per partition (4x headroom over _HH_K)
     ),
 )
 def q_heavy_hitters(spark: SparkSession, sf_dir: str):
-    from ..operators.sketches import misra_gries_candidates
-
     docs = read_table(spark, sf_dir, "documents")
     toks = docs.select(F.explode(F.split(F.col("text"), " ")).alias("tok"))
-    cand = misra_gries_candidates(toks, "tok", _HH_M).distinct()
+    cand = _misra_gries_candidates(toks).distinct()
     tot = toks.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     return (
         toks.join(F.broadcast(cand), "tok", "left_semi")

@@ -38,8 +38,8 @@ _SIG_COLS = [f"m{i}" for i in range(len(dh.MINHASH_PERMS))]
 
 # Shared oracle fragments ---------------------------------------------------
 
-_SQL_SHINGLES = dh.sql_word_shingles("text", k=3)
-_SQL_SIG = dh.sql_minhash_values("sh")
+_SQL_SHINGLES = dh.sql_word_shingles(k=3)
+_SQL_SIG = dh.sql_minhash_values()
 _SQL_SIG_SELECT = ",\n             ".join(
     f"{expr} AS m{i}" for i, expr in enumerate(_SQL_SIG)
 )
@@ -60,9 +60,9 @@ def _shingle_hashes(docs):
     return (
         fan_out(docs.select("doc_id", "text"))
         .filter(F.size(F.split(F.col("text"), " ")) >= 3)
-        .selectExpr("doc_id", f"{dh.sparksql_word_shingles('text', 3)} AS sh")
+        .selectExpr("doc_id", f"{dh.sparksql_word_shingles(3)} AS sh")
         .selectExpr(
-            "doc_id", f"transform(sh, t -> {dh.sparksql_token_hash('t')}) AS hs"
+            "doc_id", f"{dh.sparksql_token_hash_list('sh')} AS hs"
         )
     )
 
@@ -148,7 +148,7 @@ def _lsh_candidate_pairs(docs, observation=None, sig=None):
     bands = sig.selectExpr(
         "doc_id",
         "posexplode(array("
-        + ", ".join(dh.sparksql_band_hashes(_SIG_COLS))
+        + ", ".join(dh.sparksql_band_hashes())
         + ")) AS (band_id, band_hash)",
     )
     buckets = (
@@ -193,7 +193,7 @@ def _candidate_pair_overlap(docs):
     sh = (
         fan_out(docs.select("doc_id", "text"))
         .filter(F.size(F.split(F.col("text"), " ")) >= 3)
-        .selectExpr("doc_id", f"{dh.sparksql_word_shingles('text', 3)} AS sh")
+        .selectExpr("doc_id", f"{dh.sparksql_word_shingles(3)} AS sh")
     )
     sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
@@ -316,7 +316,7 @@ def q_lsh_bucket_stats(spark: SparkSession, sf_dir: str):
     bands = sig.selectExpr(
         "doc_id",
         "posexplode(array("
-        + ", ".join(dh.sparksql_band_hashes(_SIG_COLS))
+        + ", ".join(dh.sparksql_band_hashes())
         + ")) AS (band_id, band_hash)",
     )
     b = bands.groupBy("band_id", "band_hash").agg(F.count(F.lit(1)).alias("n"))
@@ -374,6 +374,11 @@ def _length_blocked_join(df, *, payload: dict[str, str], tol: int):
     )
 
 
+#: q_neardup_incremental's batch boundary: docs at or above this id are the
+#: new batch, those below it the existing corpus.
+_NEARDUP_INCR_CUTOFF = 400
+
+
 @query(
     "q_neardup_incremental",
     oracle=f"""
@@ -393,7 +398,7 @@ def _length_blocked_join(df, *, payload: dict[str, str], tol: int):
       SELECT DISTINCT b.doc_id AS batch_id, c.doc_id AS corpus_id
       FROM bands b JOIN bands c
         ON b.band_id = c.band_id AND b.band_hash = c.band_hash
-      WHERE b.doc_id >= 400 AND c.doc_id < 400
+      WHERE b.doc_id >= {_NEARDUP_INCR_CUTOFF} AND c.doc_id < {_NEARDUP_INCR_CUTOFF}
     ), ver AS (
       SELECT cand.batch_id, cand.corpus_id,
              round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
@@ -406,12 +411,12 @@ def _length_blocked_join(df, *, payload: dict[str, str], tol: int):
              arg_min(jac, corpus_id) AS jac
       FROM ver WHERE jac >= 0.8 GROUP BY batch_id
     ), bsz AS (
-      SELECT band_id, band_hash FROM bands WHERE doc_id < 400
+      SELECT band_id, band_hash FROM bands WHERE doc_id < {_NEARDUP_INCR_CUTOFF}
       GROUP BY band_id, band_hash HAVING count(*) > {_LSH_BUCKET_CAP}
     ), tflag AS (
       SELECT DISTINCT b.doc_id AS batch_id
       FROM bands b JOIN bsz ON b.band_id = bsz.band_id AND b.band_hash = bsz.band_hash
-      WHERE b.doc_id >= 400
+      WHERE b.doc_id >= {_NEARDUP_INCR_CUTOFF}
     )
     SELECT d.doc_id,
            CAST(CASE WHEN best.batch_id IS NULL THEN 1 ELSE 0 END AS INTEGER) AS keep,
@@ -421,7 +426,7 @@ def _length_blocked_join(df, *, payload: dict[str, str], tol: int):
     FROM documents d
     LEFT JOIN best ON best.batch_id = d.doc_id
     LEFT JOIN tflag tf ON tf.batch_id = d.doc_id
-    WHERE d.doc_id >= 400
+    WHERE d.doc_id >= {_NEARDUP_INCR_CUTOFF}
     """,
     doc=(
         "Incremental NEAR-dup screen: the fuzzy twin of q_dedup_incremental "
@@ -440,10 +445,10 @@ def _length_blocked_join(df, *, payload: dict[str, str], tol: int):
 )
 def q_neardup_incremental(spark: SparkSession, sf_dir: str):
     docs = read_table(spark, sf_dir, "documents")
-    return neardup_incremental(docs, cutoff=400)
+    return neardup_incremental(docs)
 
 
-def neardup_incremental(docs, cutoff: int, observation=None):
+def neardup_incremental(docs, observation=None):
     """Core of q_neardup_incremental, callable with an ``Observation``.
 
     The corpus side is materialized as a capped bucket INDEX — per
@@ -475,14 +480,14 @@ def neardup_incremental(docs, cutoff: int, observation=None):
     bands = sig.selectExpr(
         "doc_id",
         "posexplode(array("
-        + ", ".join(dh.sparksql_band_hashes(_SIG_COLS))
+        + ", ".join(dh.sparksql_band_hashes())
         + ")) AS (band_id, band_hash)",
     )
-    bb = bands.filter(F.col("doc_id") >= cutoff).select(
+    bb = bands.filter(F.col("doc_id") >= _NEARDUP_INCR_CUTOFF).select(
         F.col("doc_id").alias("batch_id"), "band_id", "band_hash"
     )
     corpus_index = (
-        bands.filter(F.col("doc_id") < cutoff)
+        bands.filter(F.col("doc_id") < _NEARDUP_INCR_CUTOFF)
         .groupBy("band_id", "band_hash")
         .agg(F.sort_array(F.collect_set("doc_id")).alias("all_ids"))
         .withColumn("ids", F.slice(F.col("all_ids"), 1, _LSH_BUCKET_CAP))
@@ -510,7 +515,7 @@ def neardup_incremental(docs, cutoff: int, observation=None):
     sh = (
         fan_out(docs.select("doc_id", "text"))
         .filter(F.size(F.split(F.col("text"), " ")) >= 3)
-        .selectExpr("doc_id", f"{dh.sparksql_word_shingles('text', 3)} AS sh")
+        .selectExpr("doc_id", f"{dh.sparksql_word_shingles(3)} AS sh")
     )
     sa = sh.select(F.col("doc_id").alias("batch_id"), F.col("sh").alias("sh_a"))
     sb = sh.select(F.col("doc_id").alias("corpus_id"), F.col("sh").alias("sh_b"))
@@ -528,7 +533,7 @@ def neardup_incremental(docs, cutoff: int, observation=None):
         F.min("corpus_id").alias("match_id"),
         F.min_by("jac", "corpus_id").alias("jac"),
     )
-    batch = docs.filter(F.col("doc_id") >= cutoff).select("doc_id")
+    batch = docs.filter(F.col("doc_id") >= _NEARDUP_INCR_CUTOFF).select("doc_id")
     return (
         batch.join(best, batch.doc_id == best.batch_id, "left")
         .join(flags, batch.doc_id == flags.flag_id, "left")
@@ -563,7 +568,7 @@ def neardup_incremental(docs, cutoff: int, observation=None):
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str):
     docs = fan_out(read_table(spark, sf_dir, "documents"))
     sh = docs.filter(F.size(F.split(F.col("text"), " ")) >= 3).selectExpr(
-        "doc_id", "lang", "n_chars", f"{dh.sparksql_word_shingles('text', 3)} AS sh"
+        "doc_id", "lang", "n_chars", f"{dh.sparksql_word_shingles(3)} AS sh"
     )
     joined = _length_blocked_join(sh, payload={"sh": "sh"}, tol=5)
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
@@ -578,10 +583,10 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str):
     "q_simhash",
     oracle=f"""
     WITH h AS (
-      SELECT doc_id, {dh.sql_token_hash_list("string_split(text, ' ')")} AS hs
+      SELECT doc_id, {dh.sql_token_hash_list()} AS hs
       FROM documents
     )
-    SELECT doc_id, {dh.sql_simhash_sum('hs')} AS simhash
+    SELECT doc_id, {dh.sql_simhash_sum()} AS simhash
     FROM h
     """,
     doc="32-bit SimHash fingerprint: per-bit majority vote over token hashes. Row-local (no shuffle); hamming-distance joins find near-dups.",
@@ -590,7 +595,7 @@ def q_simhash(spark: SparkSession, sf_dir: str):
     docs = fan_out(read_table(spark, sf_dir, "documents").select("doc_id", "text"))
     _hs = dh.sparksql_token_hash_list("split(text, ' ')")
     hashed = docs.selectExpr("doc_id", f"{_hs} AS hs")
-    return hashed.selectExpr("doc_id", f"{dh.sparksql_simhash('hs')} AS simhash")
+    return hashed.selectExpr("doc_id", f"{dh.sparksql_simhash()} AS simhash")
 
 
 #: q_embed_neardup is an exact O(n^2) baseline for validating the ANN
@@ -2269,10 +2274,10 @@ _SH_BANDS, _SH_BITS_PER_BAND, _SH_MAX_HAMMING = 4, 8, 3
     "q_simhash_pairs",
     oracle=f"""
     WITH h AS (
-      SELECT doc_id, {dh.sql_token_hash_list("string_split(text, ' ')")} AS hs
+      SELECT doc_id, {dh.sql_token_hash_list()} AS hs
       FROM documents
     ), s AS (
-      SELECT doc_id, {dh.sql_simhash_sum('hs')} AS sh FROM h
+      SELECT doc_id, {dh.sql_simhash_sum()} AS sh FROM h
     ), bands AS (
       {" UNION ALL ".join(
         f"SELECT doc_id, sh, (sh // {(1 << (_SH_BITS_PER_BAND * j))}) % {1 << _SH_BITS_PER_BAND} AS band_val, {j} AS band_id FROM s"
@@ -2301,7 +2306,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str):
     docs = fan_out(read_table(spark, sf_dir, "documents").select("doc_id", "text"))
     _hs = dh.sparksql_token_hash_list("split(text, ' ')")
     hashed = docs.selectExpr("doc_id", f"{_hs} AS hs")
-    s = hashed.selectExpr("doc_id", f"{dh.sparksql_simhash('hs')} AS sh")
+    s = hashed.selectExpr("doc_id", f"{dh.sparksql_simhash()} AS sh")
     bands = s.select(
         "doc_id",
         "sh",
@@ -2528,9 +2533,7 @@ def q_neardup_components_star(spark: SparkSession, sf_dir: str):
     )
 
 
-def _kmeans_cte_chain(
-    k: int, iters: int, scale: int, where: str = ""
-) -> tuple[str, str]:
+def _kmeans_cte_chain(where: str = "") -> tuple[str, str]:
     """Shared unrolled-Lloyd's CTE prefix for the trained-centroid oracles
     (q_kmeans_ivf counts, q_ann_ivf_trained search, q_ann_incremental
     append): quantize -> hash seeds -> iters x (argmin assignment +
@@ -2550,16 +2553,16 @@ def _kmeans_cte_chain(
     WITH e AS MATERIALIZED (
       SELECT vec_id,
              list_transform(CAST(embedding AS DOUBLE[]),
-                            x -> CAST(round(x * {scale}.0, 0) AS BIGINT)) AS v
+                            x -> CAST(round(x * {_KMEANS_IVF_SCALE}.0, 0) AS BIGINT)) AS v
       FROM embeddings {where}
     ), c0 AS (
       SELECT rn - 1 AS cluster, v AS cv FROM (
         SELECT v, row_number() OVER (ORDER BY {h}, vec_id) AS rn FROM e
-      ) WHERE rn <= {k}
+      ) WHERE rn <= {_KMEANS_IVF_K}
     )"""
     ]
     prev = "c0"
-    for it in range(1, iters + 1):
+    for it in range(1, _KMEANS_IVF_ITERS + 1):
         parts.append(
             f""", a{it} AS (
       SELECT vec_id, v, cluster FROM (
@@ -2590,7 +2593,7 @@ _KMEANS_DIST = (
 )
 
 
-def _kmeans_ivf_sql(k: int, iters: int, scale: int) -> str:
+def _kmeans_ivf_sql() -> str:
     """Unrolled Lloyd's k-means as a single DuckDB statement.
 
     Mirrors operators/cluster.kmeans_train CTE-for-step:
@@ -2601,7 +2604,7 @@ def _kmeans_ivf_sql(k: int, iters: int, scale: int) -> str:
     feeds the per-cluster counts. Exact integer arithmetic end-to-end is
     what makes the iterative loop hash-matchable at all — float means
     would drift between engines by summation order."""
-    prefix, prev = _kmeans_cte_chain(k, iters, scale)
+    prefix, prev = _kmeans_cte_chain()
     return (
         prefix
         + f""", af AS (
@@ -2646,13 +2649,13 @@ def _trained_af_cte(prev: str) -> str:
     )"""
 
 
-def _ann_ivf_trained_sql(k: int, iters: int, scale: int) -> str:
+def _ann_ivf_trained_sql() -> str:
     """The q_kmeans_ivf refinement chain, finished as an ANN SEARCH: final
     assignment keeps (vec_id, v, cluster), probe queries (vec_id < 5) scan
     only their own trained cluster, rank by EXACT integer squared distance
     with vec_id tie-break — no rounding anywhere, so the top-k cut cannot
     disagree between engines."""
-    prefix, prev = _kmeans_cte_chain(k, iters, scale)
+    prefix, prev = _kmeans_cte_chain()
     return (
         prefix
         + _trained_af_cte(prev)
@@ -2675,7 +2678,7 @@ def _ann_ivf_trained_sql(k: int, iters: int, scale: int) -> str:
 
 @query(
     "q_kmeans_ivf",
-    oracle=_kmeans_ivf_sql(_KMEANS_IVF_K, _KMEANS_IVF_ITERS, _KMEANS_IVF_SCALE),
+    oracle=_kmeans_ivf_sql(),
     doc=(
         "IVF index build with TRAINED centroids: deterministic Lloyd's "
         "k-means (operators/cluster.py — driver-coordinated loop, each "
@@ -2790,7 +2793,7 @@ def q_kmeans_assign(spark: SparkSession, sf_dir: str):
     )
 
 
-_SQL_SHINGLES5 = dh.sql_word_shingles("text", k=5)
+_SQL_SHINGLES5 = dh.sql_word_shingles(k=5)
 
 
 @query(
@@ -2825,7 +2828,7 @@ _SQL_SHINGLES5 = dh.sql_word_shingles("text", k=5)
 def q_containment(spark: SparkSession, sf_dir: str):
     docs = fan_out(read_table(spark, sf_dir, "documents"))
     sh = docs.filter(F.size(F.split(F.col("text"), " ")) >= 3).selectExpr(
-        "doc_id", "lang", "n_chars", f"{dh.sparksql_word_shingles('text', 3)} AS sh"
+        "doc_id", "lang", "n_chars", f"{dh.sparksql_word_shingles(3)} AS sh"
     )
     joined = _length_blocked_join(sh, payload={"sh": "sh"}, tol=5)
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
@@ -2872,7 +2875,7 @@ def q_containment(spark: SparkSession, sf_dir: str):
 def q_contamination(spark: SparkSession, sf_dir: str):
     docs = fan_out(read_table(spark, sf_dir, "documents"))
     sh = docs.filter(F.size(F.split(F.col("text"), " ")) >= 5).selectExpr(
-        "doc_id", f"{dh.sparksql_word_shingles('text', 5)} AS sh"
+        "doc_id", f"{dh.sparksql_word_shingles(5)} AS sh"
     )
     # explode_outer, NOT explode: plain explode makes Catalyst infer
     # size(sh) > 0 and push it into the parquet scan's filter — which
@@ -3367,7 +3370,7 @@ def q_silhouette(spark: SparkSession, sf_dir: str):
 
 @query(
     "q_ann_ivf_trained",
-    oracle=_ann_ivf_trained_sql(_KMEANS_IVF_K, _KMEANS_IVF_ITERS, _KMEANS_IVF_SCALE),
+    oracle=_ann_ivf_trained_sql(),
     doc=(
         "ANN search over the TRAINED IVF index — the production "
         "composition the verdict's X3 story builds to: q_kmeans_ivf's "
@@ -3442,12 +3445,12 @@ def _trained_search(spark: SparkSession, sf_dir: str):
     return assigned, topk
 
 
-def _ann_recall_trained_sql(k: int, iters: int, scale: int) -> str:
+def _ann_recall_trained_sql() -> str:
     """Recall@3 of the TRAINED index vs the exact integer-L2 top-3 — the
     q_ann_recall_eval audit re-aimed at the kmeans-trained quantizer.
     Assignment CTE and distance text shared verbatim with
     _ann_ivf_trained_sql (_trained_af_cte / _PAIR_D2)."""
-    prefix, prev = _kmeans_cte_chain(k, iters, scale)
+    prefix, prev = _kmeans_cte_chain()
     pair_d2 = _PAIR_D2
     return (
         prefix
@@ -3487,9 +3490,7 @@ def _ann_recall_trained_sql(k: int, iters: int, scale: int) -> str:
 
 @query(
     "q_ann_recall_trained",
-    oracle=_ann_recall_trained_sql(
-        _KMEANS_IVF_K, _KMEANS_IVF_ITERS, _KMEANS_IVF_SCALE
-    ),
+    oracle=_ann_recall_trained_sql(),
     doc=(
         "Recall@3 audit of the TRAINED IVF index (q_ann_ivf_trained) "
         "against the exact integer-L2 top-3 — completing the production "
@@ -3558,22 +3559,20 @@ def q_ann_recall_trained(spark: SparkSession, sf_dir: str):
 _ANN_INC_TRAIN_MAX = 500
 
 
-def _ann_incremental_sql(k: int, iters: int, scale: int) -> str:
+def _ann_incremental_sql() -> str:
     """Append-batch maintenance of the trained IVF index: the unrolled
     Lloyd chain runs on the FIXED-SIZE training prefix only, then the
     batch rows are assigned to the FROZEN final centroids (argmin exact
     integer L2, cluster-index tie-break — the _assign contract) and the
     per-cluster delta counts ride along via a window-free aggregate
     join."""
-    prefix, prev = _kmeans_cte_chain(
-        k, iters, scale, where=f"WHERE vec_id < {_ANN_INC_TRAIN_MAX}"
-    )
+    prefix, prev = _kmeans_cte_chain(where=f"WHERE vec_id < {_ANN_INC_TRAIN_MAX}")
     return (
         prefix
         + f""", eb AS MATERIALIZED (
       SELECT vec_id,
              list_transform(CAST(embedding AS DOUBLE[]),
-                            x -> CAST(round(x * {scale}.0, 0) AS BIGINT)) AS v
+                            x -> CAST(round(x * {_KMEANS_IVF_SCALE}.0, 0) AS BIGINT)) AS v
       FROM embeddings
       WHERE vec_id % {_ANN_INC_BATCH_MOD} = {_ANN_INC_BATCH_RES}
     ), asg AS (
@@ -3594,9 +3593,7 @@ def _ann_incremental_sql(k: int, iters: int, scale: int) -> str:
 
 @query(
     "q_ann_incremental",
-    oracle=_ann_incremental_sql(
-        _KMEANS_IVF_K, _KMEANS_IVF_ITERS, _KMEANS_IVF_SCALE
-    ),
+    oracle=_ann_incremental_sql(),
     doc=(
         "Incremental maintenance of the TRAINED IVF index — the piece a "
         "production embedding store exercises daily (FAISS add_with_ids): "
@@ -3642,7 +3639,7 @@ def q_ann_incremental(spark: SparkSession, sf_dir: str):
     # q_token_budget_mix precedent). The batch is a bounded slice
     # (vec_id % mod == res), so the checkpoint is small by construction.
     assigned = (
-        _assign(batch, "v", cents)
+        _assign(batch, cents)
         .select(
             "vec_id",
             F.coalesce(F.col("cluster"), F.lit(-1)).cast("int").alias("cluster"),
@@ -3665,9 +3662,7 @@ def q_ann_incremental(spark: SparkSession, sf_dir: str):
 _PQ_TRAIN_MAX = 500
 
 
-def _pq_train_cte_chain(
-    m: int, dsub: int, k: int, iters: int, scale: int, train_max: int
-) -> tuple[str, str]:
+def _pq_train_cte_chain() -> tuple[str, str]:
     """Per-subspace unrolled Lloyd's — the q_kmeans_ivf chain generalized
     with a subspace dimension j: one materialized sliced/quantized corpus
     CTE, seeds per j are the SAME k smallest (hash, vec_id) rows (the
@@ -3683,21 +3678,21 @@ def _pq_train_cte_chain(
         f"""
     WITH e0 AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS fv
-      FROM embeddings WHERE vec_id < {train_max}
+      FROM embeddings WHERE vec_id < {_PQ_TRAIN_MAX}
     ), e AS MATERIALIZED (
       SELECT vec_id, j,
-             list_transform(fv[1 + {dsub}*j : {dsub}*(j+1)],
-                            x -> CAST(round(x * {scale}.0, 0) AS BIGINT)) AS v
-      FROM e0 CROSS JOIN (SELECT unnest(range({m})) AS j)
+             list_transform(fv[1 + {_PQ_DSUB}*j : {_PQ_DSUB}*(j+1)],
+                            x -> CAST(round(x * {_KMEANS_IVF_SCALE}.0, 0) AS BIGINT)) AS v
+      FROM e0 CROSS JOIN (SELECT unnest(range({_PQ_M})) AS j)
     ), c0 AS (
       SELECT j, rn - 1 AS cluster, v AS cv FROM (
         SELECT j, v, row_number() OVER (
                  PARTITION BY j ORDER BY {h}, vec_id) AS rn FROM e
-      ) WHERE rn <= {k}
+      ) WHERE rn <= {_PQ_K}
     )"""
     ]
     prev = "c0"
-    for it in range(1, iters + 1):
+    for it in range(1, _PQ_TRAIN_ITERS + 1):
         parts.append(
             f""", a{it} AS (
       SELECT j, vec_id, v, cluster FROM (
@@ -3723,14 +3718,12 @@ def _pq_train_cte_chain(
     return "".join(parts), prev
 
 
-def _pq_train_sql(
-    m: int, dsub: int, k: int, iters: int, scale: int, train_max: int
-) -> str:
+def _pq_train_sql() -> str:
     """Codebook-training oracle: the shared chain's final codebook,
     exploded to (j, code, pos, cw) rows, plus each subspace's
     exact-integer final assignment SSE — no float division anywhere, so
     the full training run hash-matches."""
-    prefix, prev = _pq_train_cte_chain(m, dsub, k, iters, scale, train_max)
+    prefix, prev = _pq_train_cte_chain()
     dist = _KMEANS_DIST
     return (
         prefix
@@ -3749,16 +3742,14 @@ def _pq_train_sql(
            CAST(c.cv[p.pos + 1] AS BIGINT) AS cw,
            s.sse_j
     FROM {prev} c
-    CROSS JOIN (SELECT unnest(range({dsub})) AS pos) p
+    CROSS JOIN (SELECT unnest(range({_PQ_DSUB})) AS pos) p
     JOIN sse s ON s.j = c.j"""
     )
 
 
 @query(
     "q_pq_train",
-    oracle=_pq_train_sql(
-        _PQ_M, _PQ_DSUB, _PQ_K, _PQ_TRAIN_ITERS, _KMEANS_IVF_SCALE, _PQ_TRAIN_MAX
-    ),
+    oracle=_pq_train_sql(),
     doc=(
         "PQ codebook TRAINING — the faiss.ProductQuantizer.train step, "
         "closing the one index-lifecycle gap left after IVF got "
@@ -3822,12 +3813,7 @@ _REBALANCE_THRESHOLD_PPM = 2_000_000
     "q_index_rebalance",
     oracle=(
         lambda: (
-            _kmeans_cte_chain(
-                _KMEANS_IVF_K,
-                _KMEANS_IVF_ITERS,
-                _KMEANS_IVF_SCALE,
-                where=f"WHERE vec_id < {_ANN_INC_TRAIN_MAX}",
-            )[0]
+            _kmeans_cte_chain(where=f"WHERE vec_id < {_ANN_INC_TRAIN_MAX}")[0]
             + f""", ec AS MATERIALIZED (
       SELECT vec_id,
              list_transform(CAST(embedding AS DOUBLE[]),
@@ -3903,7 +3889,7 @@ def q_index_rebalance(spark: SparkSession, sf_dir: str):
     # scalar and the final report — materializing it runs the O(N x k)
     # corpus assignment once and keeps the downstream plan bounded.
     counts = (
-        _assign(quant, "v", cents)
+        _assign(quant, cents)
         .groupBy(
             F.coalesce(F.col("cluster"), F.lit(-1)).cast("int").alias("cluster")
         )
@@ -3950,33 +3936,31 @@ def q_index_rebalance(spark: SparkSession, sf_dir: str):
     )
 
 
-def _ann_pq_trained_sql(
-    m: int, dsub: int, k: int, iters: int, scale: int, train_max: int, nq: int
-) -> str:
+def _ann_pq_trained_sql() -> str:
     """Serving oracle for the TRAINED PQ index: the shared training chain
     produces the codebook in integer microunits; dividing by the scale
     (exact binary64 both engines) yields the double codewords, and the
     encode/ADC arithmetic is textually the same as _pq_oracle_core's —
     only the codebook source differs (trained CTE vs the vec_id<k
     literal)."""
-    prefix, prev = _pq_train_cte_chain(m, dsub, k, iters, scale, train_max)
+    prefix, prev = _pq_train_cte_chain()
     return (
         prefix
         + f""", ef AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
     ), subf AS (
-      SELECT vec_id, j, v[1+{dsub}*j : {dsub}*(j+1)] AS sv
-      FROM ef, (SELECT unnest(range({m})) AS j)
+      SELECT vec_id, j, v[1+{_PQ_DSUB}*j : {_PQ_DSUB}*(j+1)] AS sv
+      FROM ef, (SELECT unnest(range({_PQ_M})) AS j)
     ), cbt AS (
       SELECT j, cluster AS code,
-             list_transform(cv, c -> c / {scale}.0) AS cw
+             list_transform(cv, c -> c / {_KMEANS_IVF_SCALE}.0) AS cw
       FROM {prev}
     ), enc AS (
       SELECT vec_id, j, code FROM (
         SELECT s.vec_id, s.j, cbt.code,
                row_number() OVER (
                  PARTITION BY s.vec_id, s.j
-                 ORDER BY round(list_aggregate(list_transform(range(1,{dsub + 1}),
+                 ORDER BY round(list_aggregate(list_transform(range(1,{_PQ_DSUB + 1}),
                            i -> (s.sv[i]-cbt.cw[i])*(s.sv[i]-cbt.cw[i])), 'sum'), 6),
                           cbt.code
                ) AS rc
@@ -3984,12 +3968,12 @@ def _ann_pq_trained_sql(
       ) WHERE rc = 1
     ), adc AS (
       SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
-             round(sum(round(list_aggregate(list_transform(range(1,{dsub + 1}),
+             round(sum(round(list_aggregate(list_transform(range(1,{_PQ_DSUB + 1}),
                    i -> (q.sv[i]-cbt.cw[i])*(q.sv[i]-cbt.cw[i])), 'sum'), 6)), 6) AS adist
       FROM subf q
       JOIN enc x ON q.j = x.j AND x.vec_id <> q.vec_id
       JOIN cbt ON cbt.j = x.j AND cbt.code = x.code
-      WHERE q.vec_id < {nq}
+      WHERE q.vec_id < {_PQ_N_QUERIES}
       GROUP BY q.vec_id, x.vec_id
     )
     SELECT query_id, neighbor_id, adist, CAST(rn AS INTEGER) AS rnk FROM (
@@ -4002,15 +3986,7 @@ def _ann_pq_trained_sql(
 
 @query(
     "q_ann_pq_trained",
-    oracle=_ann_pq_trained_sql(
-        _PQ_M,
-        _PQ_DSUB,
-        _PQ_K,
-        _PQ_TRAIN_ITERS,
-        _KMEANS_IVF_SCALE,
-        _PQ_TRAIN_MAX,
-        _PQ_N_QUERIES,
-    ),
+    oracle=_ann_pq_trained_sql(),
     doc=(
         "ADC search served FROM the q_pq_train codebooks — the PQ family's "
         "train->serve composition, mirroring what q_ann_ivf_trained did "

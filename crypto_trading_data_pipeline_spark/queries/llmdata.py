@@ -16,7 +16,6 @@ from ..io import read_table
 from ..operators import dedup_hash
 from ..operators.dedup import exact_dedup, normalize_text
 from ..operators.scale import fan_out
-from ..operators.similarity import cosine_topk
 from ..operators.text import token_stats_cols
 from . import query
 
@@ -154,6 +153,51 @@ def q_quality_score(spark: SparkSession, sf_dir: str):
 # ---------------------------------------------------------------------------
 
 
+#: The embeddings table's id and vector columns, and the neighbours kept
+#: per query vector.
+_EMB_ID_COL = "vec_id"
+_EMB_VEC_COL = "embedding"
+_COSINE_K = 5
+
+
+def _cosine_topk(corpus, queries):
+    """Exact top-``_COSINE_K`` cosine neighbors for each query vector.
+
+    Returns (query_id, neighbor_id, sim, rnk). Ranking uses the similarity
+    ROUNDED to 6 decimals, with a neighbor-id tie-break, so results are
+    reproducible.
+
+    Brute force is the exact baseline: broadcast the (small) query side
+    against the corpus and compute the dot products with array higher-order
+    functions. The corpus streams through executors once; the cost is
+    O(|queries| * |corpus| * dim) FLOPs with zero shuffle of the corpus (the
+    only shuffle is the final per-query top-k, |queries|*k rows).
+    """
+    from ..operators.similarity import as_double_vec, dot, l2_norm
+
+    # FLOP cost dominates the scan — spread the corpus across all cores even
+    # when it arrives as one split (no-op when the scan is already parallel).
+    c = fan_out(corpus).select(
+        F.col(_EMB_ID_COL).alias("neighbor_id"),
+        as_double_vec(F.col(_EMB_VEC_COL)).alias("cv"),
+    ).withColumn("cn", l2_norm(F.col("cv")))
+    q = queries.select(
+        F.col(_EMB_ID_COL).alias("query_id"),
+        as_double_vec(F.col(_EMB_VEC_COL)).alias("qv"),
+    ).withColumn("qn", l2_norm(F.col("qv")))
+
+    pairs = (
+        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
+        .withColumn(
+            "sim",
+            F.round(dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6),
+        )
+        .select("query_id", "neighbor_id", "sim")
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
+    return pairs.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= _COSINE_K)
+
+
 @query(
     "q_cosine_topk",
     oracle="""
@@ -177,9 +221,7 @@ def q_quality_score(spark: SparkSession, sf_dir: str):
 )
 def q_cosine_topk(spark: SparkSession, sf_dir: str):
     emb = read_table(spark, sf_dir, "embeddings")
-    return cosine_topk(
-        emb, emb.filter(F.col("vec_id") < 5), id_col="vec_id", vec_col="embedding", k=5
-    )
+    return _cosine_topk(emb, emb.filter(F.col("vec_id") < 5))
 
 
 @query(
@@ -226,8 +268,6 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str):
         docs.withColumn("payload", F.encode("text", "utf-8")),
         id_col="doc_id",
         bytes_col="payload",
-        kind="image",
-        mime="image/fake",
     )
     return extract_image_features(media)
 
@@ -401,6 +441,64 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str):
     )
 
 
+def _cosine_topk_pandas(corpus, queries):
+    """Arrow/NumPy variant of _cosine_topk: queries are collected (they are
+    top-k-small by construction), L2-normalized, broadcast as one matrix;
+    each Arrow batch of the corpus scores against ALL queries with a single
+    BLAS matmul inside mapInPandas.
+
+    When to prefer which (measured at sf0.1, 64-dim):
+    - few queries (<~100): the JVM higher-order-function path wins — no
+      Python hop, whole-stage codegen, same wall-clock;
+    - many queries: this path wins increasingly — the |batch| x |queries|
+      matmul amortizes the Arrow transfer, while the HOF path pays a
+      per-(row x query) expression evaluation with no SIMD reuse.
+
+    Output and determinism contract identical to _cosine_topk (rounded sim,
+    neighbor-id tie-break), so the two are drop-in interchangeable.
+    """
+    import numpy as np
+    import pandas as pd
+
+    from ..operators.similarity import as_double_vec
+
+    qrows = queries.select(
+        F.col(_EMB_ID_COL).alias("qid"), as_double_vec(F.col(_EMB_VEC_COL)).alias("qv")
+    ).collect()
+    qids = np.array([r.qid for r in qrows], dtype=np.int64)
+    Q = np.array([r.qv for r in qrows], dtype=np.float64)
+    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+    bq = corpus.sparkSession.sparkContext.broadcast((qids, Qn))
+
+    def score(batches):
+        ids, Qm = bq.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            M = np.array(pdf[_EMB_VEC_COL].tolist(), dtype=np.float64)
+            Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
+            S = Mn @ Qm.T
+            n = len(pdf)
+            out = pd.DataFrame(
+                {
+                    "neighbor_id": np.repeat(pdf[_EMB_ID_COL].values, len(ids)),
+                    "query_id": np.tile(ids, n),
+                    "sim": np.round(S.ravel(), 6),
+                }
+            )
+            yield out[out.neighbor_id != out.query_id]
+
+    scored = fan_out(corpus.select(_EMB_ID_COL, _EMB_VEC_COL)).mapInPandas(
+        score, "neighbor_id long, query_id long, sim double"
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= _COSINE_K)
+        .select("query_id", "neighbor_id", "sim", "rnk")
+    )
+
+
 @query(
     "q_cosine_topk_pandas",
     oracle="""
@@ -424,16 +522,12 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str):
         "Arrow/NumPy twin of q_cosine_topk: one BLAS matmul per Arrow batch "
         "against the broadcast query matrix (mapInPandas). Same oracle, same "
         "results — the measured crossover vs the JVM HOF path is documented "
-        "in operators/similarity.cosine_topk_pandas."
+        "in _cosine_topk_pandas."
     ),
 )
 def q_cosine_topk_pandas(spark: SparkSession, sf_dir: str):
-    from ..operators.similarity import cosine_topk_pandas
-
     emb = read_table(spark, sf_dir, "embeddings")
-    return cosine_topk_pandas(
-        emb, emb.filter(F.col("vec_id") < 5), id_col="vec_id", vec_col="embedding", k=5
-    )
+    return _cosine_topk_pandas(emb, emb.filter(F.col("vec_id") < 5))
 
 
 _CHUNK, _STRIDE = 32, 24  # 32-token windows, 8-token overlap
@@ -1010,9 +1104,7 @@ def q_media_roundtrip(spark: SparkSession, sf_dir: str):
                 px[..., 0] = c
                 imgs.append(encode_raw_rgb(px))
                 amp, n = 100 + d % 900, 100 + d % 50
-                wavs.append(
-                    encode_wav_pcm16(np.full(n, amp, dtype="int16"), 8000)
-                )
+                wavs.append(encode_wav_pcm16(np.full(n, amp, dtype="int16")))
             img_feats = raw_rgb_decode(pd.Series(imgs))
             wav_feats = wav_audio_decode(pd.Series(wavs))
             yield pd.DataFrame(
@@ -1104,7 +1196,7 @@ def _novelty_shingles(docs):
         .select(
             "doc_id",
             F.explode_outer(
-                F.array_distinct(F.expr(dedup_hash.sparksql_word_shingles("text", 3)))
+                F.array_distinct(F.expr(dedup_hash.sparksql_word_shingles(3)))
             ).alias("sh"),
         )
         .filter(F.col("sh").isNotNull())
@@ -1168,7 +1260,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str):
     )
     per_doc = docs.filter(F.size(toks) >= 3).select(
         "doc_id",
-        F.size(F.array_distinct(F.expr(dedup_hash.sparksql_word_shingles("text", 3))))
+        F.size(F.array_distinct(F.expr(dedup_hash.sparksql_word_shingles(3))))
         .cast("bigint")
         .alias("n_shingles"),
     )

@@ -50,9 +50,9 @@ _SQL_TOKEN_HASH = (
 )
 
 
-def _sql_feat(buckets: int) -> str:
+def _sql_feat() -> str:
     """Per-(doc, bucket) token counts + label + doc token count (DuckDB)."""
-    th = _SQL_TOKEN_HASH.format(t="tok", b=buckets)
+    th = _SQL_TOKEN_HASH.format(t="tok", b=_LR_BUCKETS)
     return f"""
       SELECT doc_id, any_value(y) AS y, any_value(n_tok) AS n_tok,
              bucket, CAST(count(*) AS BIGINT) AS c
@@ -68,7 +68,7 @@ def _sql_feat(buckets: int) -> str:
     """
 
 
-def _feat(labeled, buckets: int):
+def _feat(labeled):
     """Spark twin of _sql_feat: explode -> portable hash -> per-doc counts.
 
     ``labeled`` must carry (doc_id, y, text) — the label is the caller's
@@ -84,7 +84,7 @@ def _feat(labeled, buckets: int):
     )
     return (
         toks.withColumn(
-            "bucket", (dedup_hash.token_hash(F.col("tok")) % buckets).cast("int")
+            "bucket", (dedup_hash.token_hash(F.col("tok")) % _LR_BUCKETS).cast("int")
         )
         .groupBy("doc_id", "bucket")
         .agg(
@@ -101,7 +101,7 @@ def _logreg_oracle() -> str:
     lr = _LR_LR_NUM
     cte = f"""
     WITH feat AS MATERIALIZED (
-      {_sql_feat(_LR_BUCKETS)}
+      {_sql_feat()}
     ), nd AS MATERIALIZED (
       SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n FROM feat
     ), w0 AS MATERIALIZED (
@@ -180,12 +180,12 @@ def q_logreg_train(spark: SparkSession, sf_dir: str):
         "text",
     )
     return spark.createDataFrame(
-        logreg_train(labeled, _LR_BUCKETS, _LR_ITERS, _LR_LR_NUM),
+        logreg_train(labeled),
         schema="iter int, bucket int, w_micro bigint",
     )
 
 
-def logreg_train(labeled, buckets: int, iters: int, lr: int):
+def logreg_train(labeled):
     """Exact-integer batch-GD logistic regression trainer.
 
     ``labeled``: DataFrame with (doc_id, y in {0,1}, text). Returns the
@@ -201,7 +201,7 @@ def logreg_train(labeled, buckets: int, iters: int, lr: int):
     # eager=False + count (r14): the n_docs count reads every partition
     # and materializes the checkpoint — one job instead of two; the GD
     # iterations' aggregates then read the cached blocks sequentially.
-    feat = _feat(fan_out(labeled), buckets).localCheckpoint(eager=False)
+    feat = _feat(fan_out(labeled)).localCheckpoint(eager=False)
     n_docs = feat.select("doc_id").distinct().count()
 
     def fdiv(a: int, n: int) -> int:
@@ -209,10 +209,10 @@ def logreg_train(labeled, buckets: int, iters: int, lr: int):
         # identity as the SQL to make the equivalence inspectable.
         return (a - ((a % n + n) % n)) // n
 
-    w = [0] * buckets
+    w = [0] * _LR_BUCKETS
     b = 0
     trajectory = []
-    for it in range(1, iters + 1):
+    for it in range(1, _LR_ITERS + 1):
         from ..operators.scale import inline_literal
 
         warr = inline_literal([int(x) for x in w])
@@ -270,11 +270,11 @@ def logreg_train(labeled, buckets: int, iters: int, lr: int):
         gmap = {row["bucket"]: row["g"] for row in grad}
         gb = gmap.get(-1, 0)
         w = [
-            w[j] - fdiv(lr * int(gmap.get(j, 0)), n_docs)
-            for j in range(buckets)
+            w[j] - fdiv(_LR_LR_NUM * int(gmap.get(j, 0)), n_docs)
+            for j in range(_LR_BUCKETS)
         ]
-        b = b - fdiv(lr * int(gb), n_docs)
-        trajectory.extend((it, j, w[j]) for j in range(buckets))
+        b = b - fdiv(_LR_LR_NUM * int(gb), n_docs)
+        trajectory.extend((it, j, w[j]) for j in range(_LR_BUCKETS))
         trajectory.append((it, -1, b))
     return trajectory
 

@@ -146,7 +146,7 @@ def q_decimal_cast_arith(spark: SparkSession, sf_dir: str):
 )
 def q_epoch_to_ts(spark: SparkSession, sf_dir: str):
     e = read_table(spark, sf_dir, "events")
-    ms = ts_millis("ts")
+    ms = ts_millis()
     return e.select(
         "event_id",
         ms.alias("epoch_millis"),

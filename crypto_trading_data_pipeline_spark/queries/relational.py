@@ -17,7 +17,6 @@ from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import parquet_row_count, read_table, ts_micros, ts_seconds, ts_seconds_d
-from ..operators.joins import asof_join
 from ..operators.scale import exact_global_rank
 from . import query
 
@@ -137,6 +136,58 @@ def q_join_range(spark: SparkSession, sf_dir: str):
     )
 
 
+_ASOF_TAG = "__asof_is_left"
+_ASOF_TS = "__asof_ts"
+#: The right-hand columns q_join_range_asof carries onto each purchase.
+_ASOF_VALUE_COLS = ["err_ts", "err_id"]
+
+
+def _asof_join(purchases, errors):
+    """Point-in-time (as-of) left join: each purchase takes the
+    ``_ASOF_VALUE_COLS`` of its user's error with the largest ``err_ts`` <=
+    ``ts`` (a backward as-of join; ties on the timestamp match, i.e.
+    inclusive — same semantics as DuckDB/pandas ASOF). Unmatched purchases
+    keep NULLs.
+
+    Spark has no ASOF JOIN operator, and the naive inequality join (l.ts >=
+    r.ts, pick max) is a cross-product-per-key — quadratic and unusable at
+    scale. The union + keyed-window trick instead:
+
+      1. tag left rows (1) and right rows (0), union by name;
+      2. one shuffle: partition by the join key, sort by (ts, tag);
+      3. ``last(right_value, ignorenulls=True)`` over rows UNBOUNDED
+         PRECEDING..CURRENT ROW carries the most recent right-hand value
+         forward;
+      4. keep left rows.
+
+    Cost: ONE shuffle + per-partition sort — identical shape to a sort-merge
+    join, linear in input, no state blowup; survives 100 TB if the key space
+    does (salt hot keys upstream if a single key dominates).
+    """
+    carried = [f"__asof_{c}" for c in _ASOF_VALUE_COLS]
+    l_tagged = purchases.withColumn(_ASOF_TAG, F.lit(1)).withColumn(_ASOF_TS, F.col("ts"))
+    for c, cc in zip(_ASOF_VALUE_COLS, carried):
+        l_tagged = l_tagged.withColumn(cc, F.lit(None).cast(errors.schema[c].dataType))
+    r_tagged = errors.select(
+        "user_id",
+        F.lit(0).alias(_ASOF_TAG),
+        F.col("err_ts").alias(_ASOF_TS),
+        *[F.col(c).alias(cc) for c, cc in zip(_ASOF_VALUE_COLS, carried)],
+    )
+    unioned = l_tagged.unionByName(r_tagged, allowMissingColumns=True)
+
+    # Right rows sort before left rows at an equal timestamp => inclusive.
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy(F.col(_ASOF_TS).asc(), F.col(_ASOF_TAG).asc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    filled = unioned
+    for c, cc in zip(_ASOF_VALUE_COLS, carried):
+        filled = filled.withColumn(c + "_asof", F.last(F.col(cc), ignorenulls=True).over(w))
+    return filled.filter(F.col(_ASOF_TAG) == 1).drop(_ASOF_TAG, _ASOF_TS, *carried)
+
+
 @query(
     "q_join_range_asof",
     oracle="""
@@ -146,7 +197,7 @@ def q_join_range(spark: SparkSession, sf_dir: str):
     ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') e
       ON p.user_id = e.user_id AND p.ts >= e.ts
     """,
-    doc="As-of join: for each purchase, the most recent prior error of the same user (operators/joins.py union+window plan — one shuffle, no inequality cross product).",
+    doc="As-of join: for each purchase, the most recent prior error of the same user (_asof_join's union+window plan — one shuffle, no inequality cross product).",
 )
 def q_join_range_asof(spark: SparkSession, sf_dir: str):
     ev = read_table(spark, sf_dir, "events")
@@ -154,14 +205,7 @@ def q_join_range_asof(spark: SparkSession, sf_dir: str):
     errors = ev.filter(F.col("event_type") == "error").select(
         "user_id", F.col("ts").alias("err_ts"), F.col("event_id").alias("err_id")
     )
-    joined = asof_join(
-        purchases,
-        errors,
-        on=["user_id"],
-        left_ts="ts",
-        right_ts="err_ts",
-        value_cols=["err_ts", "err_id"],
-    )
+    joined = _asof_join(purchases, errors)
     return joined.select(
         "user_id",
         "event_id",
@@ -679,6 +723,22 @@ def q_join_right(spark: SparkSession, sf_dir: str):
     )
 
 
+def _salted_group_sum(events):
+    """Two-phase salted sum of ``value`` (as ``total``) and row count (as
+    ``n``) by the skewed key ``event_type``: groupBy(key, salt) partial,
+    then groupBy(key) final. Sums and counts re-aggregate losslessly."""
+    from ..operators.scale import with_salt
+
+    partial = with_salt(events).groupBy("event_type", "__salt").agg(
+        F.sum("value").alias("total"),
+        F.count(F.lit(1)).alias("__n"),
+    )
+    return partial.groupBy("event_type").agg(
+        F.sum("total").alias("total"),
+        F.sum("__n").alias("n"),
+    )
+
+
 @query(
     "q_group_sum_salted",
     oracle="""
@@ -686,18 +746,16 @@ def q_join_right(spark: SparkSession, sf_dir: str):
     FROM events GROUP BY event_type
     """,
     doc=(
-        "Two-phase salted aggregation (operators/scale.salted_group_sum): "
+        "Two-phase salted aggregation (_salted_group_sum): "
         "groupBy(key, salt) partial then groupBy(key) final. Semantically "
         "identical to the plain sum — the oracle IS the plain sum — but the "
-        "first shuffle spreads a pathologically hot key over `buckets` "
+        "first shuffle spreads a pathologically hot key over 16 "
         "reducers. The defense when AQE skew handling isn't enough."
     ),
 )
 def q_group_sum_salted(spark: SparkSession, sf_dir: str):
-    from ..operators.scale import salted_group_sum
-
     e = read_table(spark, sf_dir, "events").select("event_type", "value")
-    out = salted_group_sum(e, keys=["event_type"], agg_cols={"total": "value"})
+    out = _salted_group_sum(e)
     return out.select("event_type", F.round("total", 2).alias("total"), "n")
 
 
@@ -1270,7 +1328,7 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str):
     events = read_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
-        .orderBy(ts_seconds("ts"))
+        .orderBy(ts_seconds())
         .rangeBetween(-3600, 0)
     )
     return events.select(
@@ -1391,7 +1449,7 @@ def q_scd2_intervals(spark: SparkSession, sf_dir: str):
     FROM lineitem
     """,
     doc=(
-        "Data-quality profile gate (operators/quality.py): per-column "
+        "Data-quality profile gate: per-column "
         "nulls / exact distincts / min / max in ONE aggregation pass — the "
         "batch generalization of the reference monitor DAG's freshness "
         "check. min/max/count are plain declarative aggs; the distincts "
@@ -1399,10 +1457,20 @@ def q_scd2_intervals(spark: SparkSession, sf_dir: str):
     ),
 )
 def q_dq_profile(spark: SparkSession, sf_dir: str):
-    from ..operators.quality import numeric_profile
-
+    # The batch generalization of the reference's freshness gate
+    # (crypto_pipeline_monitor_dag.py:22-28, its only data-quality check):
+    # every metric is a declarative aggregate, so the whole profile is one
+    # partial+final HashAggregate however many columns it covers.
     li = read_table(spark, sf_dir, "lineitem")
-    return numeric_profile(li, ["l_quantity", "l_discount"])
+    aggs = [F.count(F.lit(1)).alias("n_rows")]
+    for c in ["l_quantity", "l_discount"]:
+        aggs += [
+            F.count(F.when(F.col(c).isNull(), F.lit(1))).alias(f"{c}_nulls"),
+            F.count_distinct(F.col(c)).alias(f"{c}_distinct"),
+            F.min(c).alias(f"{c}_min"),
+            F.max(c).alias(f"{c}_max"),
+        ]
+    return li.agg(*aggs)
 
 
 @query(
@@ -1541,7 +1609,7 @@ def q_math_funcs(spark: SparkSession, sf_dir: str):
 )
 def q_regression(spark: SparkSession, sf_dir: str):
     e = read_table(spark, sf_dir, "events")
-    x = (ts_seconds_d("ts") - F.lit(1704067200.0)) / 86400
+    x = (ts_seconds_d() - F.lit(1704067200.0)) / 86400
     v = F.col("value")
     return e.groupBy("event_type").agg(
         F.regr_count(v, x).alias("n"),
@@ -2092,15 +2160,15 @@ _HLL_M = 256
 _HLL_C = 0.7213 / (1.0 + 1.079 / _HLL_M) * _HLL_M * _HLL_M * 2.0**53
 
 
-def hll_bucket_rho(df, text_col: str, *keep_cols: str):
-    """(bucket, rho) rows of the portable HLL for one string column —
+def hll_bucket_rho(df, *keep_cols: str):
+    """(bucket, rho) rows of the portable HLL for the string column ``text`` —
     the algorithmic core of q_hll_portable, factored out so the
     hypothesis property suite can cross-check the md5-prefix/shiftright/
     bin-length arithmetic against a pure-Python replica on arbitrary
     unicode (tests/test_properties.py), independent of both DuckDB and
     the fixtures."""
     h60 = F.conv(
-        F.substring(F.md5(F.col(text_col).cast("binary")), 1, 15), 16, 10
+        F.substring(F.md5(F.col("text").cast("binary")), 1, 15), 16, 10
     ).cast("long")
     hashed = df.select(*keep_cols, h60.alias("h"))
     w = F.shiftright(F.col("h"), 8)
@@ -2168,7 +2236,7 @@ def hll_bucket_rho(df, text_col: str, *keep_cols: str):
 )
 def q_hll_portable(spark: SparkSession, sf_dir: str):
     docs = read_table(spark, sf_dir, "documents")
-    r = hll_bucket_rho(docs, "text", "lang")
+    r = hll_bucket_rho(docs, "lang")
     mx = r.groupBy("lang", "bkt").agg(F.max("rho").alias("mj"))
     merged = mx.unionByName(
         mx.groupBy("bkt")
@@ -2342,7 +2410,7 @@ def q_mode_per_group(spark: SparkSession, sf_dir: str):
     doc=(
         "Nearest-in-time join (BOTH directions): for each purchase, the "
         "closest same-user event within ±5 minutes — the bidirectional "
-        "complement of the backward-only as-of join (operators/joins.py). "
+        "complement of the backward-only as-of join (q_join_range_asof). "
         "The time tolerance makes the join a bounded range join (each "
         "anchor meets O(rate x window) candidates, never the user's full "
         "history); rank on (|gap|, event_id) is engine-reproducible."
@@ -2445,7 +2513,7 @@ from ..operators.scale import zorder_key_sql as _zorder_key_sql  # noqa: E402
              CAST(l_suppkey % 256 AS BIGINT) AS sx
       FROM lineitem
     ), z AS (
-      SELECT px, sx, ({_zorder_key_sql("px", "sx")}) AS zval FROM b
+      SELECT px, sx, ({_zorder_key_sql()}) AS zval FROM b
     )
     SELECT CAST(zval >> 8 AS BIGINT) AS file_id,
            count(*)                  AS n,
@@ -5173,7 +5241,7 @@ def q_late_data_audit(spark: SparkSession, sf_dir: str):
     )
     late = e.select(
         "event_type",
-        (F.max(ts_seconds("ts")).over(w) - ts_seconds("ts")).alias("late_s"),
+        (F.max(ts_seconds()).over(w) - ts_seconds()).alias("late_s"),
     )
     bucket = (
         F.when(F.col("late_s") <= 0, F.lit("on_time"))

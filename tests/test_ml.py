@@ -53,7 +53,7 @@ def test_logreg_learns_separable_signal(spark):
 
     rows = _synth_docs()
     labeled = spark.createDataFrame(rows, "doc_id long, y int, text string")
-    traj = logreg_train(labeled, _LR_BUCKETS, 3, 5)
+    traj = logreg_train(labeled)
     by_iter = {}
     for it, bucket, w in traj:
         by_iter.setdefault(it, {})[bucket] = w
@@ -174,12 +174,8 @@ def test_pq_trained_codebook_beats_literal(spark, sf_dir):
             [trained[j][code][pos] for pos in range(_PQ_DSUB)]
             for code in range(_PQ_K)
         ]
-        lit_sse = (
-            _assign(sub, "v", lit_cb).agg(F.sum("__d")).collect()[0][0]
-        )
-        tr_sse = (
-            _assign(sub, "v", tr_cb).agg(F.sum("__d")).collect()[0][0]
-        )
+        lit_sse = _assign(sub, lit_cb).agg(F.sum("__d")).collect()[0][0]
+        tr_sse = _assign(sub, tr_cb).agg(F.sum("__d")).collect()[0][0]
         # The query's reported per-subspace SSE is exactly the trained
         # assignment SSE (same integer arithmetic).
         assert tr_sse == trained_sse[j]

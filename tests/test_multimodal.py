@@ -18,7 +18,7 @@ def _media(spark):
     df = spark.createDataFrame(
         [(1, b"\x10\x20\x30"), (2, b"\xff" * 100), (3, b"")], ["id", "raw"]
     )
-    return attach_media(df, id_col="id", bytes_col="raw", kind="image", mime="image/png")
+    return attach_media(df, id_col="id", bytes_col="raw")
 
 
 def test_attach_media_schema(spark):
@@ -82,7 +82,7 @@ def test_pil_decoder_gated_without_pil(spark):
     )
 
     df = spark.createDataFrame([(1, b"notanimage")], ["id", "raw"])
-    media = attach_media(df, id_col="id", bytes_col="raw", kind="image", mime="image/png")
+    media = attach_media(df, id_col="id", bytes_col="raw")
     from py4j.protocol import Py4JJavaError
 
     with pytest.raises((NotImplementedError, Py4JJavaError, Exception)) as exc:
@@ -113,7 +113,7 @@ def test_pil_decoder_real_path(spark):
     df = spark.createDataFrame(
         [(1, png(20, 10, 100)), (2, png(7, 7, 255))], ["id", "raw"]
     )
-    media = attach_media(df, id_col="id", bytes_col="raw", kind="image", mime="image/png")
+    media = attach_media(df, id_col="id", bytes_col="raw")
     rows = {r.media_id: r for r in extract_image_features(media, decoder="pil").collect()}
     assert (rows[1].width, rows[1].height, rows[1].mean_luma) == (20, 10, 100)
     assert (rows[2].width, rows[2].height, rows[2].mean_luma) == (7, 7, 255)
@@ -138,7 +138,7 @@ def test_raw_rgb_decode_real_path(spark):
         [(1, encode_raw_rgb(solid)), (2, encode_raw_rgb(grad)), (3, b"\x01\x02")],
         ["id", "raw"],
     )
-    media = attach_media(df, id_col="id", bytes_col="raw", kind="image", mime="image/x-raw-rgb")
+    media = attach_media(df, id_col="id", bytes_col="raw")
     rows = {r.media_id: r for r in extract_image_features(media, decoder="raw_rgb").collect()}
     assert (rows[1].width, rows[1].height) == (20, 10)
     assert rows[1].mean_luma == int(255 * 0.299)  # 76
@@ -148,8 +148,13 @@ def test_raw_rgb_decode_real_path(spark):
 
 def test_wav_audio_decode_real_path():
     """REAL audio decode, numpy-only RIFF parse: a synthesized 440 Hz sine
-    at 16 kHz reports its true sample rate, duration, and RMS (amp/sqrt(2));
-    malformed bytes degrade to zeros."""
+    at 16 kHz, framed by the stdlib ``wave`` writer, reports its true sample
+    rate, duration, and RMS (amp/sqrt(2)); the package encoder's 8 kHz
+    framing is byte-identical to ``wave``'s; malformed bytes degrade to
+    zeros."""
+    import io
+    import wave
+
     import numpy as np
 
     from crypto_trading_data_pipeline_spark.operators.multimodal import (
@@ -157,12 +162,22 @@ def test_wav_audio_decode_real_path():
         wav_audio_decode,
     )
 
+    def stdlib_wav(samples, rate):
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(1)
+            w.setsampwidth(2)
+            w.setframerate(rate)
+            w.writeframes(samples.astype("<i2").tobytes())
+        return buf.getvalue()
+
     rate, secs, amp = 16000, 0.5, 10000
     t = np.arange(int(rate * secs)) / rate
     sine = (amp * np.sin(2 * np.pi * 440 * t)).astype("int16")
     silent = np.zeros(800, dtype="int16")
+    assert encode_wav_pcm16(silent) == stdlib_wav(silent, 8000)
     out = wav_audio_decode(
-        pd.Series([encode_wav_pcm16(sine, rate), encode_wav_pcm16(silent, 8000), b"not a wav"])
+        pd.Series([stdlib_wav(sine, rate), encode_wav_pcm16(silent), b"not a wav"])
     )
     rows = list(out.itertuples(index=False))
     assert rows[0].sample_rate == 16000

@@ -15,7 +15,7 @@ import math
 from datetime import datetime, timezone
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from crypto_trading_data_pipeline_spark.operators import dedup_hash as dh
@@ -59,7 +59,7 @@ def test_minhash_matches_python_mirror(spark, texts):
     import pandas as pd
 
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], ["doc_id", "text"])
-    hs = dh.sparksql_token_hash_list(dh.sparksql_word_shingles("text", 3))
+    hs = dh.sparksql_token_hash_list(dh.sparksql_word_shingles(3))
     sig = [f"m{i}" for i in range(len(dh.MINHASH_PERMS))]
     got = {
         r.doc_id: [r[m] for m in sig]
@@ -69,8 +69,9 @@ def test_minhash_matches_python_mirror(spark, texts):
     }
     con = duckdb.connect()
     con.register("docs", pd.DataFrame({"doc_id": range(len(texts)), "text": texts}))
-    duck_sig = ", ".join(dh.sql_minhash_values(dh.sql_word_shingles("text", 3)))
-    duck = {r[0]: list(r[1:]) for r in con.execute(f"SELECT doc_id, {duck_sig} FROM docs").fetchall()}
+    duck_sig = ", ".join(dh.sql_minhash_values())
+    sh = f"SELECT doc_id, {dh.sql_word_shingles(3)} AS sh FROM docs"
+    duck = {r[0]: list(r[1:]) for r in con.execute(f"SELECT doc_id, {duck_sig} FROM ({sh})").fetchall()}
     con.close()
     for i, t in enumerate(texts):
         assert got[i] == py_minhash(t), (i, t)
@@ -634,7 +635,7 @@ def test_hll_bucket_rho_matches_python_replica(spark, texts):
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     got = sorted(
         (r["bkt"], r["rho"])
-        for r in hll_bucket_rho(df, "text").collect()
+        for r in hll_bucket_rho(df).collect()
     )
 
     def replica(t: str):
@@ -2975,7 +2976,7 @@ def test_token_budget_mix_matches_python_replica(spark, rows):
 # candidate set is a superset of the true phi-frequent items; the SQL oracle
 # cannot see a violated guarantee on data where no token happens to be
 # near the threshold. This drives skewed random streams (Zipf-ish repeats)
-# through misra_gries_candidates at a tiny m over MANY partitions and
+# through _misra_gries_candidates at a tiny m over MANY partitions and
 # asserts the superset property plus the <= m rows-per-partition bound.
 @given(
     st.lists(
@@ -2984,20 +2985,26 @@ def test_token_budget_mix_matches_python_replica(spark, rows):
         max_size=400,
     )
 )
+# All 31 tokens: unless the patched 5 counters reach the workers, more
+# than m * n_part candidates survive and the output bound fails.
+@example([f"t{i}" for i in range(31)] * 2)
 @settings(max_examples=15, deadline=None)
 def test_misra_gries_candidates_superset(spark, stream):
     from collections import Counter
 
-    from crypto_trading_data_pipeline_spark.operators.sketches import (
-        misra_gries_candidates,
-    )
+    from unittest import mock
 
+    from crypto_trading_data_pipeline_spark.queries import corpus_ops
+
+    # At the shipped 800 counters these <= 31-item streams never evict;
+    # 5 counters exercise the pruning.
     m = 5
     n_part = 4
     df = spark.createDataFrame([(t,) for t in stream], "tok string").repartition(
         n_part
     )
-    got = {r.tok for r in misra_gries_candidates(df, "tok", m).collect()}
+    with mock.patch.object(corpus_ops, "_HH_M", m):
+        got = {r.tok for r in corpus_ops._misra_gries_candidates(df).collect()}
     n = len(stream)
     true_heavy = {t for t, c in Counter(stream).items() if c * (m + 1) > n}
     assert true_heavy <= got, (

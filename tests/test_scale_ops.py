@@ -7,7 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from crypto_trading_data_pipeline_spark.io import read_table
-from crypto_trading_data_pipeline_spark.operators.scale import salted_group_sum, with_salt
+from crypto_trading_data_pipeline_spark.operators.scale import with_salt
+from crypto_trading_data_pipeline_spark.queries.relational import _salted_group_sum
 
 
 def test_salted_group_sum_matches_plain(spark, sf_dir):
@@ -20,21 +21,17 @@ def test_salted_group_sum_matches_plain(spark, sf_dir):
     }
     salted = {
         r.event_type: (round(r.total, 6), r.n)
-        for r in salted_group_sum(
-            e.select("event_type", "value"),
-            keys=["event_type"],
-            agg_cols={"total": "value"},
-        ).collect()
+        for r in _salted_group_sum(e.select("event_type", "value")).collect()
     }
     assert plain == salted
 
 
 def test_with_salt_bounded_and_deterministic(spark, sf_dir):
     e = read_table(spark, sf_dir, "events").limit(100)
-    s1 = [r["__salt"] for r in with_salt(e, buckets=4).select("__salt").collect()]
-    s2 = [r["__salt"] for r in with_salt(e, buckets=4).select("__salt").collect()]
+    s1 = [r["__salt"] for r in with_salt(e).select("__salt").collect()]
+    s2 = [r["__salt"] for r in with_salt(e).select("__salt").collect()]
     assert s1 == s2
-    assert set(s1) <= {0, 1, 2, 3}
+    assert 1 < len(set(s1)) and set(s1) <= set(range(16))
 
 
 def test_connected_components_transitive_chain(spark):
@@ -123,7 +120,7 @@ def test_pq_train_matches_per_subspace_kmeans(spark, monkeypatch):
         assert cbs[j] == cents, f"subspace {j}: codebooks diverge"
         assert hists[j] == hist, f"subspace {j}: SSE history diverges"
         quant = sub.withColumn("v", cluster.quantize(F.col("v")))
-        (ref_sse,) = cluster._assign(quant, "v", cents).agg(F.sum("__d")).first()
+        (ref_sse,) = cluster._assign(quant, cents).agg(F.sum("__d")).first()
         assert joint_sse[j] == ref_sse, f"subspace {j}: final SSE diverges"
 
 
@@ -275,27 +272,29 @@ def test_semdedup_cluster_skew_is_observable(spark):
 def test_neardup_incremental_bucket_cap_observable(spark):
     """Same contract as the LSH pair cap, on the incremental screen: a hot
     corpus band bucket is sliced to the cap and the truncation is a metric,
-    not a silent drop. 100 identical corpus docs + 5 batch copies against
-    the cap of 64 -> all 4 band buckets truncated, and every batch doc
-    still matches (the kept 64 lowest-id corpus docs verify at Jaccard
-    1.0)."""
+    not a silent drop. 400 identical corpus docs (every id below the batch
+    cutoff) + 5 batch copies against the cap of 64 -> all 4 band buckets
+    truncated, and every batch doc still matches (the kept 64 lowest-id
+    corpus docs verify at Jaccard 1.0)."""
     from pyspark.sql import Observation
 
     from crypto_trading_data_pipeline_spark.queries.dedup_advanced import (
+        _NEARDUP_INCR_CUTOFF,
         neardup_incremental,
     )
 
-    docs = spark.range(105).select(
+    cutoff = _NEARDUP_INCR_CUTOFF
+    docs = spark.range(cutoff + 5).select(
         F.col("id").alias("doc_id"),
         F.lit("the same exact document body repeated verbatim").alias("text"),
     )
     obs = Observation("neardup_incr_hot")
-    out = neardup_incremental(docs, cutoff=100, observation=obs)
+    out = neardup_incremental(docs, observation=obs)
     rows = {r.doc_id: r for r in out.collect()}
     m = obs.get
     assert m["truncated_buckets"] == 4, m  # all 4 bands hold the one hot bucket
-    assert m["max_bucket_size"] == 100, m
-    assert set(rows) == {100, 101, 102, 103, 104}
+    assert m["max_bucket_size"] == cutoff, m
+    assert set(rows) == set(range(cutoff, cutoff + 5))
     for r in rows.values():
         assert r.keep == 0 and r.match_id == 0 and r.jac == 1.0, r
 
