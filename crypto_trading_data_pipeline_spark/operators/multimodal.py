@@ -181,16 +181,6 @@ def extract_image_features(
     return src.mapInPandas(run, schema=IMAGE_FEATURES_SCHEMA)
 
 
-AUDIO_FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("duration_ms", LongType()),
-        StructField("rms_level", IntegerType()),
-    ]
-)
-
-
 #: The sample rate encode_wav_pcm16 writes into its header.
 _WAV_RATE = 8000
 

@@ -1077,8 +1077,6 @@ def q_media_roundtrip(spark: SparkSession, sf_dir: str):
     import pandas as pd
 
     from ..operators.multimodal import (
-        AUDIO_FEATURES_SCHEMA,
-        IMAGE_FEATURES_SCHEMA,
         encode_raw_rgb,
         encode_wav_pcm16,
         raw_rgb_decode,

@@ -34,8 +34,11 @@ Scale posture (100 TB/day firehose):
   (symbol, window) per input partition per trigger;
 - the update-mode output per trigger is at most the state rows, so the
   parquet sink collects each batch to the driver (``toArrow``, the plan's
-  one execution) and writes it as one file with pyarrow; the watermark
-  bound above is what bounds that driver memory;
+  one execution and the trigger's one Spark job) and writes it as one
+  file with pyarrow; the watermark bound above is what bounds that driver
+  memory. Its fold also merges and writes with pyarrow on the driver, so
+  a folding trigger holds the folded table's rows there, which the
+  table's history, not the watermark, bounds;
 - checkpoint writes: every trigger writes the offset log, the commit log
   and one state-store delta per shuffle partition. Spark's default
   manager goes through Hadoop's FileContext, which on the local

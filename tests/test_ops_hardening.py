@@ -15,8 +15,10 @@ from pyspark.sql import types as T
 from crypto_trading_data_pipeline_spark.monitor import fresh_row_count
 from crypto_trading_data_pipeline_spark.operators.graph import connected_components
 from crypto_trading_data_pipeline_spark.streaming.sinks import (
+    EPOCH_COL,
     JdbcUpsertSink,
     ParquetUpsertSink,
+    merge_last_wins,
     serving_table_ddl,
 )
 
@@ -222,7 +224,7 @@ def test_parquet_upsert_recovers_from_crash_before_commit(spark, tmp_path, monke
 #: delta 2.
 FOLD_CALLS = [(2, [(3, 50), (4, 40), (5, 50)]), (3, [(1, 60)])]
 #: The renames and removes those two calls make: per fold, one rename of
-#: its one base part and one remove each of the old base and the delta.
+#: its base and one remove each of the old base and the delta.
 FOLD_FILE_OPS = 6
 
 
@@ -283,15 +285,58 @@ def test_parquet_upsert_survives_a_crash_inside_a_fold(spark, tmp_path, monkeypa
     files = sorted(os.listdir(path))
     assert files[-1] == "delta-000000000005.parquet"
     assert all(f.startswith("base-000000000004-") for f in files[:-1])
-    assert not [f for f in os.listdir(tmp_path) if ".staging" in f]
     assert served(sink) == set(table.items())
 
 
+@pytest.mark.parametrize("leftover", ["whole", "truncated"])
+def test_parquet_upsert_survives_a_crash_writing_a_fold(spark, tmp_path, monkeypatch, leftover):
+    """``pyarrow.parquet.write_table`` dies inside a fold, once it has
+    written the new base as a hidden ``.tmp`` file, whole or cut short.
+    Every read, even one inferring the schema, skips that file and serves
+    what the committed delta left; the re-delivered call removes it and
+    folds."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "serving")
+    sink = ParquetUpsertSink(path, keys=["k"], order_col="ord")
+
+    def deliver(epoch, rows):
+        sink(spark.createDataFrame(rows, ["k", "ord"]), epoch_id=epoch)
+
+    deliver(0, [(1, 10), (2, 20)])
+    deliver(1, [(2, 30), (3, 30)])
+    write = pq.write_table
+
+    def write_then_die(table, where, **kwargs):
+        write(table, where, **kwargs)
+        if os.path.basename(where).startswith(".base-"):
+            if leftover == "truncated":
+                with open(where, "r+b") as f:
+                    f.truncate(7)
+            _crash()
+
+    monkeypatch.setattr(pq, "write_table", write_then_die)
+    epoch, rows = FOLD_CALLS[0]
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        deliver(epoch, rows)
+    monkeypatch.undo()
+    (hidden,) = [f for f in os.listdir(path) if f.startswith(".")]
+    assert hidden.startswith(".base-") and hidden.endswith(".parquet.tmp")
+    table = {(1, 10), (2, 30), (3, 50), (4, 40), (5, 50)}
+    for reader in (sink, ParquetUpsertSink(path, keys=["k"], order_col="ord")):
+        assert {(r.k, r.ord) for r in reader.read(spark).collect()} == table
+    deliver(epoch, rows)  # the re-delivery
+    files = sorted(os.listdir(path))
+    assert files == ["base-000000000001-000000000002.parquet", "delta-000000000002.parquet"]
+    assert {(r.k, r.ord) for r in sink.read(spark).collect()} == table
+
+
 def test_parquet_upsert_folds_away_a_crashed_folds_leftovers(spark, tmp_path, monkeypatch):
-    """A crash among a fold's removes leaves the old base's parts and the
-    covered delta beside the new base. The re-delivered call counts them
-    with the deltas, not with the base, so it folds again: one base
-    epoch's parts and the newest delta remain."""
+    """A crash among a fold's removes leaves the old base and the covered
+    delta beside the new base. The re-delivered call counts them with the
+    deltas, not with the base, so it folds again, under the crashed fold's
+    base name: its rename replaces that file, its removes leave it out,
+    and one base and the newest delta remain."""
     path = str(tmp_path / "serving")
     sink = ParquetUpsertSink(path, keys=["k"], order_col="ord")
 
@@ -310,8 +355,7 @@ def test_parquet_upsert_folds_away_a_crashed_folds_leftovers(spark, tmp_path, mo
     assert len({f.split("-")[1] for f in os.listdir(path) if f.startswith("base-")}) == 2
     deliver(epoch, rows)  # the re-delivery
     files = sorted(os.listdir(path))
-    assert files[-1] == "delta-000000000003.parquet"
-    assert all(f.startswith("base-000000000002-") for f in files[:-1]), files
+    assert files == ["base-000000000002-000000000003.parquet", "delta-000000000003.parquet"]
     got = {(r.k, r.ord) for r in sink.read(spark).collect()}
     assert got == {(1, 60), (2, 30), (3, 50), (4, 40), (5, 50)}
 
@@ -368,9 +412,9 @@ def test_freshness_after_only_empty_batches_is_false(spark, tmp_path):
 
 def test_cold_read_keeps_the_batch_types(spark, tmp_path):
     """A new sink instance, with no schema of its own, reads a table of a
-    Spark-written base and pyarrow-written deltas with the batch's exact
-    types. The deltas carry Spark's row schema in their footers; without
-    it the NTZ window_start would be inferred as TIMESTAMP."""
+    pyarrow-written base and deltas with the batch's exact types. Every
+    file carries Spark's row schema in its footer; without it the NTZ
+    window_start would be inferred as TIMESTAMP."""
     from decimal import Decimal
 
     path = str(tmp_path / "serving")
@@ -385,7 +429,7 @@ def test_cold_read_keeps_the_batch_types(spark, tmp_path):
     rows = [("BTC", base + timedelta(minutes=m), Decimal("1.5"), m) for m in range(4)]
     writer = ParquetUpsertSink(path, keys=keys, order_col="n_trades")
     writer(spark.createDataFrame(rows, schema), 0)
-    writer(spark.createDataFrame(rows[:1], schema), 1)  # folds epoch 0: Spark base
+    writer(spark.createDataFrame(rows[:1], schema), 1)  # folds epoch 0 into a base
     writer(spark.createDataFrame(rows[1:2], schema), 2)
     files = os.listdir(path)
     assert any(f.startswith("base-") for f in files)
@@ -403,6 +447,54 @@ def test_cold_read_keeps_the_batch_types(spark, tmp_path):
         assert served.count() == 4
     finally:
         spark.conf.set(infer, prior)
+
+
+def test_parquet_upsert_folds_a_spark_written_base(spark, tmp_path):
+    """A table carried over from the Spark fold: its base is Spark's parts
+    (``merge_last_wins(...).write.parquet``, renamed to ``base-{e}-part-…``)
+    with TIMESTAMP, TIMESTAMP_NTZ and DECIMAL(20,8) columns. The pyarrow
+    fold casts it to the deltas' types and merges it, and a read, cold or
+    not, serves the merged rows with the batch's types."""
+    from decimal import Decimal
+
+    path, staging = str(tmp_path / "serving"), str(tmp_path / "staging")
+    keys = ["symbol", "window_start"]
+    schema = T.StructType([
+        T.StructField("symbol", T.StringType()),
+        T.StructField("window_start", T.TimestampNTZType()),
+        T.StructField("window_end", T.TimestampType()),
+        T.StructField("close_price", T.DecimalType(20, 8)),
+        T.StructField("n_trades", T.LongType()),
+    ])
+    base = datetime(2026, 1, 1, 12, 0, 0)
+
+    def rows(minutes, n, price):
+        return [("BTC", base + timedelta(minutes=m), base + timedelta(minutes=m + 1),
+                 Decimal(price), n) for m in minutes]
+
+    old = spark.createDataFrame(rows(range(4), 1, "1.5"), schema)
+    old = old.withColumn(EPOCH_COL, F.lit(0).cast("bigint"))
+    merge_last_wins(old, keys=keys, order_col="n_trades").repartition(2).write.parquet(staging)
+    os.makedirs(path)
+    for f in os.listdir(staging):
+        if f.endswith(".parquet"):
+            os.rename(os.path.join(staging, f), os.path.join(path, f"base-{0:012d}-{f}"))
+    assert len(os.listdir(path)) == 2
+    sink = ParquetUpsertSink(path, keys=keys, order_col="n_trades")
+    sink(spark.createDataFrame(rows(range(2, 6), 2, "2.25"), schema), 1)
+    sink(spark.createDataFrame(rows([0], 3, "3.125"), schema), 2)  # folds base 0, delta 1
+    assert sorted(os.listdir(path)) == [
+        "base-000000000001-000000000002.parquet", "delta-000000000002.parquet"
+    ]
+    want = sorted(rows([0], 3, "3.125") + rows([1], 1, "1.5") + rows(range(2, 6), 2, "2.25"))
+    for reader in (sink, ParquetUpsertSink(path, keys=keys, order_col="n_trades")):
+        served = reader.read(spark)
+        assert served.dtypes == [
+            ("symbol", "string"), ("window_start", "timestamp_ntz"),
+            ("window_end", "timestamp"), ("close_price", "decimal(20,8)"),
+            ("n_trades", "bigint"),
+        ]
+        assert sorted(map(tuple, served.collect())) == want
 
 
 def test_connected_components_strict_raises_on_nonconvergence(spark):

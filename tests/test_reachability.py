@@ -150,18 +150,17 @@ def test_package_modules_are_reached_from_an_entry_point():
 
 
 def _identifiers(node: ast.AST) -> set[str]:
-    """Every ``Name`` and ``Attribute`` identifier, every ``from … import``
-    alias and every identifier-shaped string constant under ``node``.
-    Strings count because callers name things by string: ``bench.py``
-    lists its queries by name."""
+    """Every ``Name`` and ``Attribute`` identifier and every
+    identifier-shaped string constant under ``node``. Strings count because
+    callers name things by string: ``bench.py`` lists its queries by name.
+    A ``from … import`` alias is a binding, not a use, wherever it sits, so
+    a name imported and never used keeps nothing alive."""
     out: set[str] = set()
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
             out.add(n.id)
         elif isinstance(n, ast.Attribute):
             out.add(n.attr)
-        elif isinstance(n, ast.ImportFrom):
-            out.update(a.name for a in n.names)
         elif isinstance(n, ast.Constant) and isinstance(n.value, str) and n.value.isidentifier():
             out.add(n.value)
     return out
@@ -237,9 +236,10 @@ def test_package_names_are_reached_from_an_entry_point():
     """Roots: the whole of each entry point, and in every reached package
     module the statements that bind no name plus the ``@query`` functions,
     because importing the module runs the first and ``REGISTRY`` the second.
-    ``import`` statements inside the package are bindings, not uses, so an
-    unused import keeps nothing alive; an ``as`` alias is followed back to
-    the name it binds."""
+    ``import`` statements, in the package or an entry point, at module
+    level or inside a function, are bindings, not uses, so an unused import
+    keeps nothing alive; an ``as`` alias is followed back to the name it
+    binds."""
     _, defs, by_bare, roots = _package()
     reached = _reach(defs, by_bare, roots)
     kept = [stmt for q in UNREACHED_NAMES for stmt in defs.get(q, [])]

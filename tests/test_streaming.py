@@ -8,6 +8,7 @@ from __future__ import annotations
 import datetime
 import json
 import os
+import random
 import re
 import signal
 import subprocess
@@ -166,7 +167,7 @@ def test_upsert_sink_writes_only_the_batch(spark, tmp_path, n_keys):
     """The files a call adds hold exactly its batch's rows, however many
     keys the table already holds: no whole-table rewrite per trigger. A
     batch is one delta file; an empty batch writes nothing at all. No call
-    leaves a hidden file in the table or a staging directory beside it."""
+    leaves a hidden file in the table."""
     path = str(tmp_path / "t")
     writer = ParquetUpsertSink(path, keys=["k"], order_col="ord")
 
@@ -187,7 +188,6 @@ def test_upsert_sink_writes_only_the_batch(spark, tmp_path, n_keys):
     assert sum(after[f] for f in added) == 2
     sink(batch.limit(0), 3)
     assert _file_rows(path) == after
-    assert not [f for f in os.listdir(tmp_path) if ".staging" in f]
     got = {r.k: r.v for r in writer.read(spark).collect()}
     assert len(got) == n_keys + 1
     assert (got[0], got[1], got[2], got[n_keys]) == (2, 3, 1, 3)
@@ -209,6 +209,58 @@ def test_upsert_sink_replay_replaces_its_own_files(spark, tmp_path):
     assert got == [("a", 2), ("b", 1), ("c", 2)]
     with pytest.raises(ValueError, match="another checkpoint"):
         sink(batch, 0)
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_fold_agrees_with_merge_last_wins(spark, tmp_path, seed):
+    """The fold's pyarrow merge keeps, per key, the row ``merge_last_wins``
+    keeps, on random delta files: keys repeat across files, orders tie so
+    that the epoch must break them, and ``ord`` and ``v`` hold nulls."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = random.Random(seed)
+    path = str(tmp_path / "t")
+    os.makedirs(path)
+    schema = pa.schema([("k", pa.int64()), ("ord", pa.int64()), (EPOCH_COL, pa.int64()),
+                        ("v", pa.string())])
+    n_files = 6
+    for epoch in range(n_files):
+        keys = rng.sample(range(40), rng.randint(1, 25))
+        cols = [keys, [rng.choice([None, 0, 1, 2]) for _ in keys], [epoch] * len(keys),
+                [rng.choice([None, "a", "b"]) for _ in keys]]
+        pq.write_table(pa.table(cols, schema=schema),
+                       os.path.join(path, f"delta-{epoch:012d}.parquet"))
+    merged = merge_last_wins(spark.read.parquet(path), keys=["k"], order_col="ord")
+    want = sorted(map(tuple, merged.select(*schema.names).collect()))
+    ParquetUpsertSink(path, keys=["k"], order_col="ord")._fold(n_files, schema)
+    (base,) = os.listdir(path)
+    assert base == f"base-{n_files - 1:012d}-{n_files:012d}.parquet"
+    got = pq.read_table(os.path.join(path, base))
+    assert got.schema == schema
+    assert sorted(tuple(r.values()) for r in got.to_pylist()) == want
+
+
+def test_folding_call_runs_one_spark_job(spark, tmp_path):
+    """A sink call that folds runs one Spark job, its batch's ``toArrow()``:
+    the fold reads, merges and writes with pyarrow on the driver."""
+    path = str(tmp_path / "t")
+    sink = ParquetUpsertSink(path, keys=["k"], order_col="ord")
+    sink(spark.range(10).selectExpr("id AS k", "1L AS ord"), 0)
+    sink(spark.range(5, 15).selectExpr("id AS k", "2L AS ord"), 1)  # folds epoch 0
+    sc = spark.sparkContext
+    group = "folding-sink-call"
+    sc.setJobGroup(group, "a folding sink call")
+    try:
+        sink(spark.range(1).selectExpr("id AS k", "3L AS ord"), 2)  # folds epochs 0-1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert sorted(os.listdir(path)) == [
+        "base-000000000001-000000000002.parquet", "delta-000000000002.parquet"
+    ]
+    got = {r.k: r.ord for r in sink.read(spark).collect()}
+    assert got == {**{k: 1 for k in range(5)}, **{k: 2 for k in range(5, 15)}, 0: 3}
 
 
 @pytest.mark.parametrize("kind", ["parquet", "jdbc"])
@@ -497,8 +549,8 @@ CRASH_EXIT = 17
 CRASH_CYCLE = 2
 #: Where the job dies: in the sink after its delta's rename, in the sink
 #: before that rename, after a settled cycle and before the next lands, in
-#: a fold after its first base part is renamed in, or in a fold after its
-#: first covered file is removed.
+#: a fold after its new base is renamed in, or in a fold after its first
+#: covered file is removed.
 CRASH_POINTS = (
     "after_commit", "before_rename", "between_triggers", "mid_fold", "after_remove"
 )
@@ -519,7 +571,7 @@ def _crash_child(work: str, point: str, crash: bool) -> None:
     - ``between_triggers``: it dies once the cycle has settled, before the
       next cycle lands;
     - ``mid_fold``: ``os.rename`` dies once it has moved that cycle's
-      first ``base-*`` part into the table, before the fold removes any
+      new ``base-*`` file into the table, before the fold removes any
       file it covered;
     - ``after_remove``: ``os.remove`` dies once it has removed the first
       file that cycle's fold covered, leaving the others beside the new
